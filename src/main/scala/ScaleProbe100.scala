@@ -1,5 +1,7 @@
 package graft
 
+import graft.storage.Dml
+
 /** 100× scale probe for the flagship scale-story operators (r8 VERDICT
   * next-round #1: "10× ratios look clean, but 100× is where driver memos,
   * partition counts, AQE coalescing, and broadcast thresholds actually
@@ -985,17 +987,17 @@ object ScaleProbe100 {
       def block(g: Int) =
         col("o_orderkey") >= g * group * 100000000L &&
           col("o_orderkey") < (g + 1) * group * 100000000L
-      var metaR: graft.storage.SnapshotDml.DmlReceipt = null
+      var metaR: graft.storage.DmlReceipt = null
       time("dml_delete_meta_100x") {
-        metaR = graft.storage.SnapshotStore.deleteWhereDetailed(
-          spark, statsDir, block(5))
+        metaR = graft.storage.SnapshotStore.dml(
+          spark, statsDir, Dml.Delete, block(5))
       }
       require(metaR.rewrittenDirs == 0 && metaR.droppedDirs > 0,
         s"gen-aligned delete must be pure metadata, got $metaR")
-      var cowR: graft.storage.SnapshotDml.DmlReceipt = null
+      var cowR: graft.storage.DmlReceipt = null
       time("dml_delete_cow_100x") {
-        cowR = graft.storage.SnapshotStore.deleteWhereDetailed(
-          spark, plainDir, block(5))
+        cowR = graft.storage.SnapshotStore.dml(
+          spark, plainDir, Dml.Delete, block(5))
       }
       require(cowR.droppedDirs == 0 && cowR.rewrittenDirs > 0,
         s"the stats-less twin must pay copy-on-write, got $cowR")
@@ -1013,15 +1015,15 @@ object ScaleProbe100 {
       // UPDATE rung on the post-delete twins: stats confine the rewrite
       // to gen 7's slices; the stats-less twin rewrites every survivor
       val set = Seq("o_totalprice" -> (col("o_totalprice") * 2))
-      var updStats: graft.storage.SnapshotDml.DmlReceipt = null
+      var updStats: graft.storage.DmlReceipt = null
       time("dml_update_pruned_100x") {
-        updStats = graft.storage.SnapshotStore.updateWhereDetailed(
-          spark, statsDir, set, block(7))
+        updStats = graft.storage.SnapshotStore.dml(
+          spark, statsDir, Dml.Update(set), block(7))
       }
-      var updPlain: graft.storage.SnapshotDml.DmlReceipt = null
+      var updPlain: graft.storage.DmlReceipt = null
       time("dml_update_full_100x") {
-        updPlain = graft.storage.SnapshotStore.updateWhereDetailed(
-          spark, plainDir, set, block(7))
+        updPlain = graft.storage.SnapshotStore.dml(
+          spark, plainDir, Dml.Update(set), block(7))
       }
       // confinement pin: the stats store keeps its untouched slices
       // verbatim (keptDirs > 0); the stats-less twin rewrites EVERY dir
@@ -1199,17 +1201,17 @@ object ScaleProbe100 {
         val multi = buildFiles(split = true)
         val mono = buildFiles(split = false)
         val needle = col("o_orderkey") === 500000007L
-        var fileR: graft.storage.SnapshotDml.DmlReceipt = null
+        var fileR: graft.storage.DmlReceipt = null
         time("dml_delete_filegrain_100x") {
-          fileR = graft.storage.SnapshotStore.deleteWhereDetailed(
-            spark, multi, needle)
+          fileR = graft.storage.SnapshotStore.dml(
+            spark, multi, Dml.Delete, needle)
         }
         require(fileR.keptFiles > 0,
           s"the needle delete must split at file grain, got $fileR")
-        var sliceR: graft.storage.SnapshotDml.DmlReceipt = null
+        var sliceR: graft.storage.DmlReceipt = null
         time("dml_delete_slicegrain_100x") {
-          sliceR = graft.storage.SnapshotStore.deleteWhereDetailed(
-            spark, mono, needle)
+          sliceR = graft.storage.SnapshotStore.dml(
+            spark, mono, Dml.Delete, needle)
         }
         val (nF, nM) = (
           graft.storage.SnapshotStore.read(spark, multi).count(),
@@ -1240,10 +1242,10 @@ object ScaleProbe100 {
         // alongside — the debt compaction exists to collect.
         {
           val dvDir = buildFiles(split = false)
-          var morR: graft.storage.SnapshotDml.DmlReceipt = null
+          var morR: graft.storage.DmlReceipt = null
           time("dml_delete_mor_100x") {
-            morR = graft.storage.SnapshotStore.deleteWhereMorDetailed(
-              spark, dvDir, needle)
+            morR = graft.storage.SnapshotStore.dml(
+              spark, dvDir, Dml.Delete, needle, mode = Dml.MoR)
           }
           require(morR.rewrittenDirs == 0 && morR.dvRows == 1L,
             s"the MoR needle delete must write one position, got $morR")
@@ -1303,7 +1305,7 @@ object ScaleProbe100 {
               (col("o_totalprice") * 2).as("o_totalprice"))
           def reconcile(dir: String)
               : graft.storage.SnapshotMergeInto.MergeIntoReceipt =
-            graft.storage.SnapshotStore.mergeIntoDetailed(spark, dir,
+            graft.storage.SnapshotStore.mergeInto(spark, dir,
               feed, Seq("o_orderkey"),
               matched = Seq(WhenMatched(None,
                 UpdateSet(Seq("o_totalprice" ->
@@ -1354,8 +1356,8 @@ object ScaleProbe100 {
               : graft.storage.SnapshotMergeInto.MergeIntoReceipt = {
             val go =
               if (mor) graft.storage.SnapshotStore
-                .mergeIntoMorDetailed _
-              else graft.storage.SnapshotStore.mergeIntoDetailed _
+                .mergeIntoMor _
+              else graft.storage.SnapshotStore.mergeInto _
             go(spark, dir, feed, Seq("o_orderkey"),
               Seq(WhenMatched(None,
                 UpdateSet(Seq("o_totalprice" ->

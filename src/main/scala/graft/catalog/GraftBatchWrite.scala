@@ -103,8 +103,7 @@ private[catalog] class GraftBatchWrite(path: String,
       fs.delete(new org.apache.hadoop.fs.Path(path, s"data/$gen"), true)
     mode match {
       case GraftWriteMode.Append =>
-        var attempt = 0
-        while (true) {
+        try SnapshotStore.withCasRetry() {
           val h = SnapshotStore.headVersion(spark, path).getOrElse(
             throw new IllegalArgumentException(s"no snapshots at $path"))
           val prior = CatalogBridge.priorFields(spark, path, h,
@@ -113,15 +112,11 @@ private[catalog] class GraftBatchWrite(path: String,
             k -> (prior.getOrElse(k, Nil) ++ fs0) }
           val schema = Some(CatalogBridge.unionSchema(
             CatalogBridge.physicalSchema(spark, path, h), physSchema))
-          try {
-            CatalogBridge.commitDelta(spark, path, h + 1, h, Set.empty,
-              added, Nil, schema, op = "append")
-            return
-          } catch {
-            case e: java.util.ConcurrentModificationException =>
-              attempt += 1
-              if (attempt > 5) { cleanup(); throw e }
-          }
+          CatalogBridge.commitDelta(spark, path, h + 1, h, Set.empty,
+            added, Nil, schema, op = "append")
+        } catch {
+          case e: java.util.ConcurrentModificationException =>
+            cleanup(); throw e
         }
       case GraftWriteMode.Overwrite | GraftWriteMode.ReplaceAll =>
         val h =

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.storage.{Dml, SnapshotStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -277,79 +278,71 @@ object MaintenanceSql {
       (FunctionIdentifier(name), info, builder)
   }
 
-  /** `graft_delete(path, predicate)` — predicate DELETE over a
-    * SnapshotStore (SQL's `DELETE FROM t WHERE p`, carried by a TVF
-    * because Spark routes DML statements to catalog tables): commits
-    * one new version with the matching rows removed, stats-pruned at
-    * (partition, gen) granularity — provably-all-match slices leave the
-    * manifest as PURE METADATA (no file read or written), provably-
-    * no-match slices are untouched, only ambiguous slices pay
-    * copy-on-write. The receipt makes the scan cost observable from
-    * SQL: `dropped_dirs` (metadata deletes) and `rewritten_dirs`
-    * (copy-on-write slices); a provable no-op commits no version.
+  /** The eight predicate-DML TVFs — {delete, update} × {copy-on-write,
+    * merge-on-read} × {head, WAP branch} — one row each in a table over
+    * [[graft.storage.SnapshotStore.dml]]: SQL's `DELETE FROM t WHERE p` /
+    * `UPDATE t SET c = e WHERE p`, carried by a TVF because Spark routes
+    * DML statements to catalog tables.
+    *
+    * {{{
+    *   graft_delete(path, predicate)
+    *   graft_update(path, predicate, col, expr[, col2, expr2 ...])
+    *   graft_delete_branch(path, branch, predicate)
+    *   graft_update_branch(path, branch, predicate, col, expr[, ...])
+    * }}}
+    *
+    * and the same four with a `_mor` suffix (merge-on-read: positions go
+    * to a deletion-vector sidecar, only an update's new images are
+    * written; `graft_compact` materializes the debt). Each returns ONE
+    * receipt row that makes the scan cost observable from SQL.
+    * Copy-on-write: `dropped_dirs` (all-match slices deleted as pure
+    * metadata — always 0 for an update, which writes the rows it
+    * changes) and `rewritten_dirs` (slices or files that paid
+    * copy-on-write). Merge-on-read: `dropped_dirs` for a delete or
+    * `appended_dirs` (new image gens) for an update, then `dv_dirs`
+    * (fields annotated) and `dv_rows` (positions written). The last
+    * column is `head_version`, or `tip_version` (the branch's staged
+    * counter) for a branch; a provable no-op commits no version. Every
+    * update expr sees the PRE-update row and casts to the column's
+    * existing type; the CHECK gate applies.
     */
-  object Delete {
-    val name = "graft_delete"
+  final class DmlTvf private[MaintenanceSql] (val name: String,
+      update: Boolean, mor: Boolean, branch: Boolean, usage: String) {
     val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_delete(path, predicate) - deletes a SnapshotStore's rows " +
-        "matching the predicate as one new version (copy-on-write, " +
-        "stats-pruned; provably-all-match slices delete as pure " +
-        "metadata); returns one receipt row (dropped_dirs, " +
-        "rewritten_dirs, head_version); string-literal arguments", "", "")
+      MaintenanceSql.getClass.getCanonicalName, name, usage, "", "")
     def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size == 2,
-        s"$name takes (path, predicate); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val r = graft.storage.SnapshotStore.deleteWhereDetailed(spark, path,
-        org.apache.spark.sql.functions.expr(str(name, args, 1)))
-      import spark.implicits._
-      Seq(("delete", path, r.droppedDirs.toLong, r.rewrittenDirs.toLong,
-        r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "rewritten_dirs",
-          "head_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_update(path, predicate, col, expr [, col2, expr2 ...])` —
-    * predicate UPDATE over a SnapshotStore (`UPDATE t SET c = e WHERE
-    * p`): rows matching the predicate get each assignment applied (every
-    * RHS sees the PRE-update row and casts to the column's existing
-    * type), provably-no-match slices are untouched. Receipt mirrors
-    * [[Delete]]'s (`dropped_dirs` is always 0 — an update writes the
-    * rows it changes).
-    */
-  object Update {
-    val name = "graft_update"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_update(path, predicate, col, expr[, col2, expr2 ...]) - " +
-        "updates a SnapshotStore's rows matching the predicate as one " +
-        "new version (copy-on-write, stats-pruned; each expr sees the " +
-        "pre-update row); returns one receipt row (dropped_dirs, " +
-        "rewritten_dirs, head_version); string-literal arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size >= 4 && args.size % 2 == 0,
-        s"$name takes (path, predicate, col, expr[, col2, expr2 ...]); " +
+      val lead = if (branch) 3 else 2 // path[, branch], predicate
+      require(
+        if (update) args.size >= lead + 2 && (args.size - lead) % 2 == 0
+        else args.size == lead,
+        s"$name takes (path, ${if (branch) "branch, " else ""}predicate" +
+          s"${if (update) ", col, expr[, col2, expr2 ...]" else ""}); " +
           s"got ${args.size} arguments")
       val spark = SparkSession.active
       val path = str(name, args, 0)
-      val assignments = (2 until args.size by 2).map(i =>
-        str(name, args, i) ->
-          org.apache.spark.sql.functions.expr(str(name, args, i + 1)))
-      val r = graft.storage.SnapshotStore.updateWhereDetailed(spark, path,
-        assignments,
-        org.apache.spark.sql.functions.expr(str(name, args, 1)))
+      val op =
+        if (!update) Dml.Delete
+        else Dml.Update((lead until args.size by 2).map(i =>
+          str(name, args, i) ->
+            org.apache.spark.sql.functions.expr(str(name, args, i + 1))))
+      val target = if (branch) Dml.Branch(str(name, args, 1)) else Dml.Head
+      val r = SnapshotStore.dml(spark, path, op,
+        org.apache.spark.sql.functions.expr(str(name, args, lead - 1)),
+        target, if (mor) Dml.MoR else Dml.CoW)
+      val verb = name.stripPrefix("graft_")
+      val version = if (branch) "tip_version" else "head_version"
       import spark.implicits._
-      Seq(("update", path, r.droppedDirs.toLong, r.rewrittenDirs.toLong,
-        r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "rewritten_dirs",
-          "head_version")
+      (if (mor)
+        Seq((verb, path,
+          if (update) r.rewrittenDirs.toLong else r.droppedDirs.toLong,
+          r.dvDirs.toLong, r.dvRows, r.version.toLong))
+          .toDF("verb", "path",
+            if (update) "appended_dirs" else "dropped_dirs",
+            "dv_dirs", "dv_rows", version)
+      else
+        Seq((verb, path, r.droppedDirs.toLong, r.rewrittenDirs.toLong,
+          r.version.toLong))
+          .toDF("verb", "path", "dropped_dirs", "rewritten_dirs", version))
         .queryExecution.analyzed
     }
     def descriptor: (FunctionIdentifier, ExpressionInfo,
@@ -357,83 +350,63 @@ object MaintenanceSql {
       (FunctionIdentifier(name), info, builder)
   }
 
-  /** `graft_delete_mor(path, predicate)` — MERGE-ON-READ predicate
-    * DELETE (deletion vectors): matching rows' positions land in one
-    * parquet sidecar and the touched manifest fields gain a DV ref — NO
-    * data file rewritten, write cost proportional to the matched rows.
-    * Readers apply DVs transparently; `graft_compact` materializes the
-    * debt. Receipt: `dropped_dirs` (all-match metadata drops), `dv_dirs`
-    * (fields annotated), `dv_rows` (positions written).
-    */
-  object DeleteMor {
-    val name = "graft_delete_mor"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_delete_mor(path, predicate) - merge-on-read DELETE: " +
-        "records matching rows' positions in a deletion-vector sidecar " +
-        "instead of rewriting files (all-match slices still drop as " +
-        "pure metadata); returns one receipt row (dropped_dirs, " +
-        "dv_dirs, dv_rows, head_version); string-literal arguments",
-      "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size == 2,
-        s"$name takes (path, predicate); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val r = graft.storage.SnapshotStore.deleteWhereMorDetailed(spark,
-        path, org.apache.spark.sql.functions.expr(str(name, args, 1)))
-      import spark.implicits._
-      Seq(("delete_mor", path, r.droppedDirs.toLong, r.dvDirs.toLong,
-        r.dvRows, r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "dv_dirs", "dv_rows",
-          "head_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_update_mor(path, predicate, col, expr [, col2, expr2 ...])`
-    * — MERGE-ON-READ predicate UPDATE: matched rows are deletion-
-    * vector'd out of their slices and their updated images appended as
-    * one fresh gen per touched partition — write cost proportional to
-    * the MATCHED rows (the copy-on-write `graft_update` copies the
-    * untouched remainder of every ambiguous slice through). Assignment
-    * semantics and the CHECK gate match `graft_update`.
-    */
-  object UpdateMor {
-    val name = "graft_update_mor"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_update_mor(path, predicate, col, expr[, col2, expr2 ...]) " +
-        "- merge-on-read UPDATE: deletion-vectors the matched rows and " +
-        "appends their updated images (each expr sees the pre-update " +
-        "row); returns one receipt row (appended_dirs, dv_dirs, " +
-        "dv_rows, head_version); string-literal arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size >= 4 && args.size % 2 == 0,
-        s"$name takes (path, predicate, col, expr[, col2, expr2 ...]); " +
-          s"got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val assignments = (2 until args.size by 2).map(i =>
-        str(name, args, i) ->
-          org.apache.spark.sql.functions.expr(str(name, args, i + 1)))
-      val r = graft.storage.SnapshotStore.updateWhereMorDetailed(spark,
-        path, assignments,
-        org.apache.spark.sql.functions.expr(str(name, args, 1)))
-      import spark.implicits._
-      Seq(("update_mor", path, r.rewrittenDirs.toLong, r.dvDirs.toLong,
-        r.dvRows, r.version.toLong))
-        .toDF("verb", "path", "appended_dirs", "dv_dirs", "dv_rows",
-          "head_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
+  val Delete = new DmlTvf("graft_delete",
+    update = false, mor = false, branch = false,
+    "graft_delete(path, predicate) - deletes a SnapshotStore's rows " +
+      "matching the predicate as one new version (copy-on-write, " +
+      "stats-pruned; provably-all-match slices delete as pure " +
+      "metadata); returns one receipt row (dropped_dirs, " +
+      "rewritten_dirs, head_version); string-literal arguments")
+  val Update = new DmlTvf("graft_update",
+    update = true, mor = false, branch = false,
+    "graft_update(path, predicate, col, expr[, col2, expr2 ...]) - " +
+      "updates a SnapshotStore's rows matching the predicate as one " +
+      "new version (copy-on-write, stats-pruned; each expr sees the " +
+      "pre-update row); returns one receipt row (dropped_dirs, " +
+      "rewritten_dirs, head_version); string-literal arguments")
+  val DeleteMor = new DmlTvf("graft_delete_mor",
+    update = false, mor = true, branch = false,
+    "graft_delete_mor(path, predicate) - merge-on-read DELETE: " +
+      "records matching rows' positions in a deletion-vector sidecar " +
+      "instead of rewriting files (all-match slices still drop as " +
+      "pure metadata); returns one receipt row (dropped_dirs, " +
+      "dv_dirs, dv_rows, head_version); string-literal arguments")
+  val UpdateMor = new DmlTvf("graft_update_mor",
+    update = true, mor = true, branch = false,
+    "graft_update_mor(path, predicate, col, expr[, col2, expr2 ...]) " +
+      "- merge-on-read UPDATE: deletion-vectors the matched rows and " +
+      "appends their updated images (each expr sees the pre-update " +
+      "row); returns one receipt row (appended_dirs, dv_dirs, " +
+      "dv_rows, head_version); string-literal arguments")
+  val DeleteBranch = new DmlTvf("graft_delete_branch",
+    update = false, mor = false, branch = true,
+    "graft_delete_branch(path, branch, predicate) - deletes the " +
+      "branch tip's rows matching the predicate, staged as the " +
+      "branch's next version (main untouched); returns one receipt " +
+      "row (dropped_dirs, rewritten_dirs, tip_version); " +
+      "string-literal arguments")
+  val UpdateBranch = new DmlTvf("graft_update_branch",
+    update = true, mor = false, branch = true,
+    "graft_update_branch(path, branch, predicate, col, expr[, col2, " +
+      "expr2 ...]) - updates the branch tip's rows matching the " +
+      "predicate, staged as the branch's next version (each expr sees " +
+      "the pre-update row; main untouched); returns one receipt row " +
+      "(dropped_dirs, rewritten_dirs, tip_version); string-literal " +
+      "arguments")
+  val DeleteBranchMor = new DmlTvf("graft_delete_branch_mor",
+    update = false, mor = true, branch = true,
+    "graft_delete_branch_mor(path, branch, predicate) - merge-on-read " +
+      "DELETE over the branch tip (positions recorded, no file " +
+      "rewritten; main untouched); returns one receipt row " +
+      "(dropped_dirs, dv_dirs, dv_rows, tip_version); string-literal " +
+      "arguments")
+  val UpdateBranchMor = new DmlTvf("graft_update_branch_mor",
+    update = true, mor = true, branch = true,
+    "graft_update_branch_mor(path, branch, predicate, col, expr[, " +
+      "col2, expr2 ...]) - merge-on-read UPDATE over the branch tip " +
+      "(hits deletion-vector'd, updated images appended; main " +
+      "untouched); returns one receipt row (appended_dirs, dv_dirs, " +
+      "dv_rows, tip_version); string-literal arguments")
 
   /** `graft_materialize_dvs(path[, value ...])` — surgical deletion-
     * vector materialization: each partition's DV'd fields rewrite as one
@@ -465,150 +438,6 @@ object MaintenanceSql {
         graft.storage.SnapshotStore.headVersion(spark, path)
           .getOrElse(0).toLong))
         .toDF("verb", "path", "partitions", "head_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_delete_branch_mor(path, branch, predicate)` — merge-on-read
-    * DELETE over a WAP branch tip: positions sidecar'd, staged as the
-    * branch's next version (the audit-fix purge at matched-rows cost).
-    */
-  object DeleteBranchMor {
-    val name = "graft_delete_branch_mor"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_delete_branch_mor(path, branch, predicate) - merge-on-read " +
-        "DELETE over the branch tip (positions recorded, no file " +
-        "rewritten; main untouched); returns one receipt row " +
-        "(dropped_dirs, dv_dirs, dv_rows, tip_version); string-literal " +
-        "arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size == 3,
-        s"$name takes (path, branch, predicate); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val r = graft.storage.SnapshotStore.deleteBranchWhereMorDetailed(
-        spark, path, str(name, args, 1),
-        org.apache.spark.sql.functions.expr(str(name, args, 2)))
-      import spark.implicits._
-      Seq(("delete_branch_mor", path, r.droppedDirs.toLong, r.dvDirs.toLong,
-        r.dvRows, r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "dv_dirs", "dv_rows",
-          "tip_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_update_branch_mor(path, branch, predicate, col, expr [,
-    * ...])` — merge-on-read UPDATE over a WAP branch tip: hits DV'd, the
-    * updated images staged as a fresh gen.
-    */
-  object UpdateBranchMor {
-    val name = "graft_update_branch_mor"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_update_branch_mor(path, branch, predicate, col, expr[, " +
-        "col2, expr2 ...]) - merge-on-read UPDATE over the branch tip " +
-        "(hits deletion-vector'd, updated images appended; main " +
-        "untouched); returns one receipt row (appended_dirs, dv_dirs, " +
-        "dv_rows, tip_version); string-literal arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size >= 5 && args.size % 2 == 1,
-        s"$name takes (path, branch, predicate, col, expr[, col2, " +
-          s"expr2 ...]); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val assignments = (3 until args.size by 2).map(i =>
-        str(name, args, i) ->
-          org.apache.spark.sql.functions.expr(str(name, args, i + 1)))
-      val r = graft.storage.SnapshotStore.updateBranchWhereMorDetailed(
-        spark, path, str(name, args, 1), assignments,
-        org.apache.spark.sql.functions.expr(str(name, args, 2)))
-      import spark.implicits._
-      Seq(("update_branch_mor", path, r.rewrittenDirs.toLong,
-        r.dvDirs.toLong, r.dvRows, r.version.toLong))
-        .toDF("verb", "path", "appended_dirs", "dv_dirs", "dv_rows",
-          "tip_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_delete_branch(path, branch, predicate)` — predicate DELETE
-    * over a WAP branch TIP, staged as the branch's next version (the
-    * audit-fix loop: purge the flagged rows from the candidate and
-    * re-audit, never touching main). Receipt mirrors [[Delete]]'s with
-    * `tip_version` = the branch's staged counter.
-    */
-  object DeleteBranch {
-    val name = "graft_delete_branch"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_delete_branch(path, branch, predicate) - deletes the " +
-        "branch tip's rows matching the predicate, staged as the " +
-        "branch's next version (main untouched); returns one receipt " +
-        "row (dropped_dirs, rewritten_dirs, tip_version); " +
-        "string-literal arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size == 3,
-        s"$name takes (path, branch, predicate); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val r = graft.storage.SnapshotStore.deleteBranchWhereDetailed(spark,
-        path, str(name, args, 1),
-        org.apache.spark.sql.functions.expr(str(name, args, 2)))
-      import spark.implicits._
-      Seq(("delete_branch", path, r.droppedDirs.toLong,
-        r.rewrittenDirs.toLong, r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "rewritten_dirs",
-          "tip_version")
-        .queryExecution.analyzed
-    }
-    def descriptor: (FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan) =
-      (FunctionIdentifier(name), info, builder)
-  }
-
-  /** `graft_update_branch(path, branch, predicate, col, expr [, ...])` —
-    * predicate UPDATE over a WAP branch TIP (the in-place candidate
-    * redaction), staged as the branch's next version. Assignment
-    * semantics and the CHECK gate match [[Update]].
-    */
-  object UpdateBranch {
-    val name = "graft_update_branch"
-    val info: ExpressionInfo = new ExpressionInfo(
-      MaintenanceSql.getClass.getCanonicalName, name,
-      "graft_update_branch(path, branch, predicate, col, expr[, col2, " +
-        "expr2 ...]) - updates the branch tip's rows matching the " +
-        "predicate, staged as the branch's next version (each expr sees " +
-        "the pre-update row; main untouched); returns one receipt row " +
-        "(dropped_dirs, rewritten_dirs, tip_version); string-literal " +
-        "arguments", "", "")
-    def builder(args: Seq[Expression]): LogicalPlan = {
-      require(args.size >= 5 && args.size % 2 == 1,
-        s"$name takes (path, branch, predicate, col, expr[, col2, " +
-          s"expr2 ...]); got ${args.size} arguments")
-      val spark = SparkSession.active
-      val path = str(name, args, 0)
-      val assignments = (3 until args.size by 2).map(i =>
-        str(name, args, i) ->
-          org.apache.spark.sql.functions.expr(str(name, args, i + 1)))
-      val r = graft.storage.SnapshotStore.updateBranchWhereDetailed(spark,
-        path, str(name, args, 1), assignments,
-        org.apache.spark.sql.functions.expr(str(name, args, 2)))
-      import spark.implicits._
-      Seq(("update_branch", path, r.droppedDirs.toLong,
-        r.rewrittenDirs.toLong, r.version.toLong))
-        .toDF("verb", "path", "dropped_dirs", "rewritten_dirs",
-          "tip_version")
         .queryExecution.analyzed
     }
     def descriptor: (FunctionIdentifier, ExpressionInfo,
@@ -776,9 +605,9 @@ object MaintenanceSql {
       val nmbs = parsed.collect { case ("not_matched_by_source", c, a) =>
         WhenNotMatchedBySource(c, a) }
       val r =
-        if (mor) graft.storage.SnapshotStore.mergeIntoMorDetailed(spark,
+        if (mor) graft.storage.SnapshotStore.mergeIntoMor(spark,
           path, source, keys, m, nm, nmbs)
-        else graft.storage.SnapshotStore.mergeIntoDetailed(spark, path,
+        else graft.storage.SnapshotStore.mergeInto(spark, path,
           source, keys, m, nm, nmbs)
       import spark.implicits._
       Seq((verbName.stripPrefix("graft_"), path, r.updated, r.deleted,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
+import graft.storage.Dml
 
 /** Second-ring query surface (R13 "ad-hoc SQL over the log table" generalized
   * + north-star text analytics): grouping sets, full window-function coverage,
@@ -1313,8 +1314,8 @@ object Extended extends QueryModule {
     }),
 
     // Branch DML (r16) — the audit-FIX loop: a WAP audit that flags rows
-    // no longer forces drop-and-restage; deleteBranchWhere purges the
-    // flagged candidate rows and updateBranchWhere redacts in place,
+    // no longer forces drop-and-restage; a Dml.Branch delete purges the
+    // flagged candidate rows and a Dml.Branch update redacts in place,
     // each staged as the branch's next version with the same stats-
     // pruned planner as main-line DML (require-pinned: the fork gens
     // prove NoMatch from their blobs and are never opened; main's head
@@ -1332,16 +1333,17 @@ object Extended extends QueryModule {
         orders.filter(k % 101 === 0)
           .withColumn("o_orderkey", k + lit(10000000L)),
         dir, "fixup", "o_orderpriority")
-      val del = graft.storage.SnapshotStore.deleteBranchWhereDetailed(
-        s, dir, "fixup",
-        k >= 10000000L && col("o_totalprice") < lit(50000.0))
+      val del = graft.storage.SnapshotStore.dml(
+        s, dir, Dml.Delete,
+        k >= 10000000L && col("o_totalprice") < lit(50000.0),
+        Dml.Branch("fixup"))
       require(del.droppedDirs == 0 && del.keptDirs > 0,
         s"q_snapshot_branch_dml: fork slices must prove NoMatch from " +
           s"their blobs and carry forward unread, got $del")
-      val upd = graft.storage.SnapshotStore.updateBranchWhereDetailed(
-        s, dir, "fixup",
-        Seq("o_totalprice" -> (col("o_totalprice") + lit(5.0))),
-        k >= 10000000L && k % 2 === 0)
+      val upd = graft.storage.SnapshotStore.dml(
+        s, dir,
+        Dml.Update(Seq("o_totalprice" -> (col("o_totalprice") + lit(5.0)))),
+        k >= 10000000L && k % 2 === 0, Dml.Branch("fixup"))
       require(upd.version == del.version + 1,
         s"q_snapshot_branch_dml: each fix stages one version, got $upd")
       require(graft.storage.SnapshotStore.headVersion(s, dir).contains(1),
@@ -1468,13 +1470,13 @@ object Extended extends QueryModule {
       graft.storage.SnapshotStore.writeVersions(orders,
         quartileSlices(k, q1, mx / 2, q3), 4,
         dir, "o_orderpriority", statsCols = Seq("o_orderkey"))
-      val aligned = graft.storage.SnapshotStore.deleteWhereDetailed(
-        s, dir, k > q1 && k <= mx / 2)
+      val aligned = graft.storage.SnapshotStore.dml(
+        s, dir, Dml.Delete, k > q1 && k <= mx / 2)
       require(aligned.rewrittenDirs == 0 && aligned.droppedDirs > 0,
         "q_snapshot_delete: the gen-aligned delete must be pure " +
           s"metadata, got $aligned")
-      val straddle = graft.storage.SnapshotStore.deleteWhereDetailed(
-        s, dir, k > q3 + 10)
+      val straddle = graft.storage.SnapshotStore.dml(
+        s, dir, Dml.Delete, k > q3 + 10)
       require(straddle.droppedDirs + straddle.rewrittenDirs <= 5,
         "q_snapshot_delete: the off-boundary delete must touch only " +
           s"the straddled gen's slices, got $straddle")
@@ -1508,9 +1510,9 @@ object Extended extends QueryModule {
       graft.storage.SnapshotStore.writeVersions(orders,
         quartileSlices(k, q1, mx / 2, q3), 4,
         dir, "o_orderpriority", statsCols = Seq("o_orderkey"))
-      val r = graft.storage.SnapshotStore.updateWhereDetailed(s, dir,
-        Seq("o_totalprice" -> (col("o_totalprice") * 2),
-          "o_orderstatus" -> lit("U")),
+      val r = graft.storage.SnapshotStore.dml(s, dir,
+        Dml.Update(Seq("o_totalprice" -> (col("o_totalprice") * 2),
+          "o_orderstatus" -> lit("U"))),
         k > q1 && k <= mx / 2)
       require(r.rewrittenDirs <= 5 && r.droppedDirs == 0,
         "q_snapshot_update: copy-on-write must stay confined to the " +
@@ -1650,7 +1652,7 @@ object Extended extends QueryModule {
         s"q_snapshot_composite: a partition-conjunct count must serve " +
           s"from metadata, got ($cnt, $scanned) want ($cntWant, 0)")
       // partition-aligned delete: pure metadata, zero rewrites
-      val del = graft.storage.SnapshotStore.deleteWhereDetailed(s, dir,
+      val del = graft.storage.SnapshotStore.dml(s, dir, Dml.Delete,
         col("o_orderpriority") === "5-LOW" && col("o_orderstatus") === "O")
       require(del.rewrittenDirs == 0 && del.droppedDirs >= 1,
         s"q_snapshot_composite: the aligned delete must drop as " +
@@ -1685,7 +1687,8 @@ object Extended extends QueryModule {
         orders.select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice")),
         dir, "o_orderpriority", statsCols = Seq("o_orderkey"))
-      graft.storage.SnapshotStore.deleteWhereMor(s, dir, k === mx)
+      graft.storage.SnapshotStore.dml(s, dir, Dml.Delete, k === mx,
+        mode = Dml.MoR)
       val infos = graft.storage.SnapshotStore.partitionInfos(s, dir)
       require(infos.size == 5,
         s"q_snapshot_partitions: five priorities, got ${infos.size}")
@@ -1788,7 +1791,8 @@ object Extended extends QueryModule {
           dir, "o_orderpriority", statsCols = Seq("o_orderkey"))
         // a live DV sidecar + a CoW rewrite + a branch: the report must
         // resolve ALL of it as referenced, not flag it
-        graft.storage.SnapshotStore.deleteWhereMor(s, dir, k === mx)
+        graft.storage.SnapshotStore.dml(s, dir, Dml.Delete, k === mx,
+          mode = Dml.MoR)
         graft.storage.SnapshotStore.updateWhere(s, dir,
           Seq("o_totalprice" -> (col("o_totalprice") + 0.0)), k === 1L)
         graft.storage.SnapshotStore.branchCreate(s, dir, "aud")
@@ -1874,7 +1878,7 @@ object Extended extends QueryModule {
           .select((k + lit(10000000L)).as("o_orderkey"),
             col("o_orderpriority"), lit(123.0).as("o_totalprice")))
       import graft.storage.SnapshotMergeInto._
-      val r = graft.storage.SnapshotStore.mergeIntoDetailed(s, dir, src,
+      val r = graft.storage.SnapshotStore.mergeInto(s, dir, src,
         Seq("o_orderkey"),
         matched = Seq(
           WhenMatched(Some(col("s.o_totalprice") > col("t.o_totalprice")),
@@ -1937,7 +1941,7 @@ object Extended extends QueryModule {
       def gensOnDisk = new java.io.File(s"$dir/data").listFiles()
         .map(_.getName).filter(_.startsWith("gen-")).toSet
       val before = gensOnDisk
-      val r = graft.storage.SnapshotStore.mergeIntoMorDetailed(s, dir,
+      val r = graft.storage.SnapshotStore.mergeIntoMor(s, dir,
         src, Seq("o_orderkey"),
         matched = Seq(
           WhenMatched(Some(col("s.o_totalprice") > col("t.o_totalprice")),
@@ -2096,15 +2100,15 @@ object Extended extends QueryModule {
       def gensOnDisk = new java.io.File(s"$dir/data").listFiles()
         .map(_.getName).filter(_.startsWith("gen-")).toSet
       val before = gensOnDisk
-      val del = graft.storage.SnapshotStore.deleteWhereMorDetailed(
-        s, dir, k > q3 + 10)
+      val del = graft.storage.SnapshotStore.dml(
+        s, dir, Dml.Delete, k > q3 + 10, mode = Dml.MoR)
       require(del.rewrittenDirs == 0 && del.droppedDirs == 0 &&
         del.dvRows > 0 && gensOnDisk == before,
         "q_snapshot_dv: the MoR delete must write NO data file — " +
           s"positions only, got $del")
-      val upd = graft.storage.SnapshotStore.updateWhereMorDetailed(
-        s, dir, Seq("o_totalprice" -> (col("o_totalprice") * 2),
-          "o_orderstatus" -> lit("U")), k <= mx / 8)
+      val upd = graft.storage.SnapshotStore.dml(
+        s, dir, Dml.Update(Seq("o_totalprice" -> (col("o_totalprice") * 2),
+          "o_orderstatus" -> lit("U"))), k <= mx / 8, mode = Dml.MoR)
       val expectHits = orders.filter(k <= mx / 8).count()
       require(upd.dvRows == expectHits && upd.rewrittenDirs <= 5,
         "q_snapshot_dv: the MoR update must DV exactly the matched " +

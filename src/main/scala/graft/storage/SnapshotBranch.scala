@@ -254,8 +254,8 @@ private[storage] object SnapshotBranch {
   }
 
   /** Stages `entries` as the branch's NEXT version (k+1 over the tip the
-    * caller read) — the branch-DML commit step ([[SnapshotDml
-    * .deleteBranchWhere]]/[[SnapshotDml.updateBranchWhere]]): schema and
+    * caller read) — the branch-DML commit step ([[SnapshotDml.dml]]
+    * with a [[Dml.Branch]] target): schema and
     * renames carry, the birth clock carries, the write clock advances.
     * Loses the staged CAS exactly like a branch append (the caller
     * retries against the new tip).
@@ -317,21 +317,19 @@ private[storage] object SnapshotBranch {
       "gen-b" + java.security.MessageDigest.getInstance("MD5")
         .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     }
-    var attempt = 0
-    while (true) {
+    SnapshotStore.withCasRetry() {
       val st = readStaged(spark, path, name)
-      if (genName.exists(g => st.entries.values.flatten
-        .exists(d => dirOf(d).startsWith(s"data/$g/"))))
-        return // keyed replay: the pinned gen is already on the tip
-      val phys = SnapshotStore.toPhysical(df, st.renames)
-      val newEntries = SnapshotStore.writeGen(phys, path,
-        SnapshotStore.physicalPartCol(partCol, st.renames),
-        genName = genName,
-        statsCols = SnapshotStore.statsColsOf(spark, path))
-      val merged = st.entries ++ newEntries.map { case (p, d) =>
-        p -> (st.entries.getOrElse(p, Nil) :+ d)
-      }
-      try {
+      // keyed replay: the pinned gen is already on the tip
+      if (!genName.exists(g => st.entries.values.flatten
+        .exists(d => dirOf(d).startsWith(s"data/$g/")))) {
+        val phys = SnapshotStore.toPhysical(df, st.renames)
+        val newEntries = SnapshotStore.writeGen(phys, path,
+          SnapshotStore.physicalPartCol(partCol, st.renames),
+          genName = genName,
+          statsCols = SnapshotStore.statsColsOf(spark, path))
+        val merged = st.entries ++ newEntries.map { case (p, d) =>
+          p -> (st.entries.getOrElse(p, Nil) :+ d)
+        }
         writeStaged(spark, path, name, Staged(st.base, st.k + 1,
           SnapshotStore.unionSchema(st.schema, phys.schema),
           st.renames, merged,
@@ -340,11 +338,6 @@ private[storage] object SnapshotBranch {
           // chain-walks to the segment start instead
           createdMs = st.createdMs,
           modifiedMs = System.currentTimeMillis()))
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
       }
     }
   }
@@ -537,50 +530,45 @@ private[storage] object SnapshotBranch {
   private[storage] def rebase(spark: SparkSession, path: String,
                               name: String): Int = {
     SnapshotStore.requireAtomicRename(path)
-    var attempt = 0
-    while (true) {
-      val st = readStaged(spark, path, name)
-      val head = SnapshotStore.headVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no snapshots at $path"))
-      if (head == st.base) return head // nothing to rebase onto
-      require(head > st.base,
-        s"head $head behind fork ${st.base} at $path — versions are " +
-          "monotonic; this store is corrupt")
-      val fork = forkSnapshot(spark, path, st, name)
-      val headEntries = readManifest(spark, path, head)
-      def touched(a: Map[String, Seq[String]],
-                  b: Map[String, Seq[String]]): Set[String] =
-        (a.keySet ++ b.keySet).filter(p => a.get(p) != b.get(p))
-      val branchTouched = touched(st.entries, fork)
-      val mainTouched = touched(headEntries, fork)
-      val overlap = branchTouched & mainTouched
-      if (overlap.nonEmpty)
-        throw new IllegalStateException(
-          s"cannot rebase branch '$name' at $path: partitions changed by " +
-            s"BOTH the branch and main since fork version ${st.base}: " +
-            overlap.toSeq.sorted.take(10).mkString("'", "', '", "'") +
-            (if (overlap.size > 10) s" (+${overlap.size - 10} more)"
-             else "") +
-            " — re-stage those partitions against the new head or " +
-            "re-create the branch")
-      val rebased = (headEntries -- branchTouched) ++
-        st.entries.filter { case (p, _) => branchTouched(p) }
-      try {
-        writeStaged(spark, path, name, Staged(head, st.k + 1,
-          SnapshotStore.unionSchema(
-            SnapshotStore.versionSchema(spark, path, head), st.schema),
-          SnapshotStore.readRenames(spark, path, head),
-          rebased, baseEntries = Some(headEntries),
-          createdMs = st.createdMs,
-          modifiedMs = System.currentTimeMillis()))
-        return head
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-      }
-    }
-    -1 // unreachable
+    SnapshotStore.withCasRetry()(rebaseOnce(spark, path, name))
+  }
+
+  private def rebaseOnce(spark: SparkSession, path: String,
+                         name: String): Int = {
+    val st = readStaged(spark, path, name)
+    val head = SnapshotStore.headVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no snapshots at $path"))
+    if (head == st.base) return head // nothing to rebase onto
+    require(head > st.base,
+      s"head $head behind fork ${st.base} at $path — versions are " +
+        "monotonic; this store is corrupt")
+    val fork = forkSnapshot(spark, path, st, name)
+    val headEntries = readManifest(spark, path, head)
+    def touched(a: Map[String, Seq[String]],
+                b: Map[String, Seq[String]]): Set[String] =
+      (a.keySet ++ b.keySet).filter(p => a.get(p) != b.get(p))
+    val branchTouched = touched(st.entries, fork)
+    val mainTouched = touched(headEntries, fork)
+    val overlap = branchTouched & mainTouched
+    if (overlap.nonEmpty)
+      throw new IllegalStateException(
+        s"cannot rebase branch '$name' at $path: partitions changed by " +
+          s"BOTH the branch and main since fork version ${st.base}: " +
+          overlap.toSeq.sorted.take(10).mkString("'", "', '", "'") +
+          (if (overlap.size > 10) s" (+${overlap.size - 10} more)"
+           else "") +
+          " — re-stage those partitions against the new head or " +
+          "re-create the branch")
+    val rebased = (headEntries -- branchTouched) ++
+      st.entries.filter { case (p, _) => branchTouched(p) }
+    writeStaged(spark, path, name, Staged(head, st.k + 1,
+      SnapshotStore.unionSchema(
+        SnapshotStore.versionSchema(spark, path, head), st.schema),
+      SnapshotStore.readRenames(spark, path, head),
+      rebased, baseEntries = Some(headEntries),
+      createdMs = st.createdMs,
+      modifiedMs = System.currentTimeMillis()))
+    head
   }
 
   /** Candidate-corpus COUNT over the branch tip — THE audit question

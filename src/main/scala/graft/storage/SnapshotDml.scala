@@ -1,6 +1,8 @@
 package graft.storage
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
 
 /** The [[SnapshotStore]]'s predicate-DML layer — `DELETE ... WHERE` and
@@ -53,35 +55,16 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
   * commit exactly like a merge's (replaced partition entries diff into
   * delete / update_pre+postimage rows).
   *
-  * BRANCH DML ([[deleteBranchWhere]]/[[updateBranchWhere]], r16): the
-  * same planner runs against a WAP branch TIP, staging the result as the
-  * branch's next version — a failed audit fixes the candidate corpus in
-  * place ("redact the flagged docs", "drop the bad crawl") instead of
-  * drop-and-restage. Staged entries carry the same blobs, so the same
-  * pruning applies; the staged-CAS loser retries like a branch append.
+  * One verb, [[dml]], runs every combination of {delete, update} ×
+  * {copy-on-write, merge-on-read} × {head, WAP branch} through one
+  * pipeline — resolve → [[planDml]] → apply → commit — where each
+  * step varies along one axis only: the resolve and the commit by
+  * target, the read by mode (and target), the apply by op and mode.
   */
 private[graft] object SnapshotDml {
   import SnapshotStore._
   import SnapshotFormat.{dirOf, statsOf, parseStats, StatsSep,
     dvOf, baseOf, withDv, DvRef}
-
-  /** One DML commit's receipt. `version` is the committed head — or, for
-    * the branch verbs, the branch's staged tip counter — (the prior one
-    * when the predicate provably touched nothing: a no-op commits no
-    * version). `droppedDirs` = (partition, gen) slices deleted as pure
-    * metadata (AllMatch); `rewrittenDirs` = ambiguous slices — or, after
-    * the r16 file split, individual FILES — that paid copy-on-write;
-    * `keptDirs` = NoMatch slices inside touched partitions whose fields
-    * copied forward verbatim (slices of untouched partitions are not
-    * counted — they were never resolved). `keptFiles`/`droppedFiles` =
-    * files of ambiguous multi-file slices the footer verdict kept as
-    * manifest FILE fields (never opened) / dropped as pure metadata
-    * (delete only).
-    */
-  case class DmlReceipt(version: Int, droppedDirs: Int,
-                        rewrittenDirs: Int, keptDirs: Int,
-                        keptFiles: Int = 0, droppedFiles: Int = 0,
-                        dvDirs: Int = 0, dvRows: Long = 0L)
 
   /** Analyzes `pred` against the version's logical schema — a zero-row
     * analysis (no I/O): literals arrive typed in Catalyst's internal
@@ -89,8 +72,8 @@ private[graft] object SnapshotDml {
     * loudly as `read().filter` would.
     */
   private def analyzed(spark: SparkSession,
-      logicalSchema: org.apache.spark.sql.types.StructType,
-      pred: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+      logicalSchema: StructType,
+      pred: Column): Expression =
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       logicalSchema).filter(pred)
@@ -108,8 +91,8 @@ private[graft] object SnapshotDml {
     */
   private def touchedEntries(spark: SparkSession, path: String, head: Int,
       renames: Map[String, String],
-      logicalSchema: org.apache.spark.sql.types.StructType,
-      expr: org.apache.spark.sql.catalyst.expressions.Expression)
+      logicalSchema: StructType,
+      expr: Expression)
       : Map[String, Seq[String]] =
     partitionValuesOf(spark, path, renames, logicalSchema, expr) match {
       case Some(values) => forWrite(path, head)(
@@ -138,23 +121,24 @@ private[graft] object SnapshotDml {
       origCount: Map[String, Int],
       dropped: Int, kept: Int, keptFiles: Int, droppedFiles: Int) {
     def touched: Boolean = removed.nonEmpty
-    /** Rebuilds the touched partitions' field lists around the freshly
-      * written per-partition entries.
+    /** The copy-on-write rebuild: the touched partitions' surviving
+      * field lists (NoMatch fields and footer-kept files; the rewrite's
+      * new gens fold in at commit). A partition with none left is absent.
       */
-    def rebuild(newEntries: Map[String, String]): Map[String, Seq[String]] =
+    def rebuild: Map[String, Seq[String]] =
       removed.flatMap { p =>
         val fields = keptByPart.getOrElse(p, Nil) ++
-          fileKept.getOrElse(p, Vector.empty) ++ newEntries.get(p).toSeq
+          fileKept.getOrElse(p, Vector.empty)
         if (fields.isEmpty) None else Some(p -> fields)
       }.toMap
   }
 
   private def planDml(spark: SparkSession, path: String,
       entries: Map[String, Seq[String]],
-      expr: org.apache.spark.sql.catalyst.expressions.Expression,
+      expr: Expression,
       logicalToPhysical: Map[String, String],
       statsCols: Seq[String],
-      physSchema: org.apache.spark.sql.types.StructType,
+      physSchema: StructType,
       metadataDrop: Boolean,
       fileGrain: Boolean = true): DmlPlan = {
     // the needle pass serves DML's pruning too: a gen whose bloom filter
@@ -243,311 +227,247 @@ private[graft] object SnapshotDml {
       dropped, kept, keptFiles, droppedFiles)
   }
 
-  /** DELETE the rows satisfying `pred` (rows where it is FALSE or NULL
-    * survive — SQL DELETE semantics) as one new version. See the object
-    * doc for the three-way slice treatment; a predicate that provably
-    * matches nothing commits NO version and returns the prior head.
-    */
-  def deleteWhere(spark: SparkSession, path: String, pred: Column,
-                  beforeCommit: () => Unit = () => ()): DmlReceipt = {
-    requireAtomicRename(path)
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, head)
-    val physSchema = versionSchema(spark, path, head)
-    val logicalToPhysical = renames.map(_.swap)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    val expr = analyzed(spark, logicalSchema, pred)
-    val entries = touchedEntries(spark, path, head, renames, logicalSchema,
-      expr)
-    // the restricted resolution consumed the partition conjuncts — the
-    // verdict treats them as TRUE ("delete day X" drops as metadata);
-    // only when a restriction actually APPLIED (a blown-out IN-list
-    // falls through both paths and must keep its conjuncts)
-    val vexpr =
-      if (partitionValuesOf(spark, path, renames, logicalSchema,
-          expr).isDefined ||
-        partitionKeyPredOf(spark, path, renames, logicalSchema,
-          expr).isDefined)
-        stripPartConjuncts(expr,
-          consumedPartComps(spark, path, renames, logicalSchema, expr))
-      else expr
-    val statsCols = statsColsOf(spark, path)
-    val plan = planDml(spark, path, entries, vexpr, logicalToPhysical,
-      statsCols, physSchema, metadataDrop = true)
-    if (!plan.touched) return DmlReceipt(head, 0, 0, 0)
-    // copy-on-write for the ambiguous slices: survivors are the rows the
-    // predicate does NOT hold for (NULL survives — three-valued DELETE)
-    val newEntries: Map[String, String] =
-      if (plan.rewrite.isEmpty) Map.empty
-      else {
-        val base = applyRenames(
-          readFields(spark, path, head, plan.rewrite), renames)
-        val survivors = base.filter(not(coalesce(pred, lit(false))))
-        val physPartCol = partColOf(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"store at $path records no partition column"))
-        writeGen(toPhysical(survivors, renames), path, physPartCol,
-          statsCols = statsCols)
-      }
-    beforeCommit() // test seam: a concurrent committer lands here
-    // foldNewEntries: a rewrite gen's key may have MIGRATED eras under
-    // an evolved partition spec — merge it into any untouched entry at
-    // that key; single-spec stores hit the identity path
-    val (removedF, addedF) = foldNewEntries(plan.removed,
-      plan.rebuild(Map.empty), newEntries,
-      cross => forWrite(path, head)(
-        readManifestValues(spark, path, head, cross.toSeq)))
-    commitDelta(spark, path, head + 1, head,
-      removed = removedF, added = addedF,
-      newEntries.values.map(_.split("/").take(2).mkString("/"))
-        .toSeq.distinct,
-      Some(physSchema), renames, op = "delete")
-    DmlReceipt(head + 1, plan.dropped, plan.rewrite.size, plan.kept,
-      keptFiles = plan.keptFiles, droppedFiles = plan.droppedFiles)
-  }
-
-  /** UPDATE: rows satisfying `pred` get `assignments` applied (each RHS
-    * cast to the column's existing logical type — UPDATE never evolves
-    * the schema); all other rows of the touched slices copy through
-    * unchanged. Every RHS sees the PRE-update row (one `select`, not a
-    * chain of `withColumn` — `SET a = b, b = a` swaps), matching SQL
-    * UPDATE semantics. NoMatch slices are untouched (the stats-pruned
-    * copy-on-write argument); there is no metadata-only path — an update
-    * always writes the rows it changes. Assigning the partition column
-    * is refused (moving rows across partitions is [[SnapshotStore.merge]]'s
-    * job: a delete-bearing CDC batch names the moves row by row).
-    */
-  def updateWhere(spark: SparkSession, path: String,
-                  assignments: Seq[(String, Column)], pred: Column,
-                  beforeCommit: () => Unit = () => ()): DmlReceipt = {
-    requireAtomicRename(path)
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, head)
-    val physSchema = versionSchema(spark, path, head)
-    val physPartCol = partColOf(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"store at $path records no partition column"))
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    validateAssignments(assignments, logicalSchema,
-      logicalPartCol(physPartCol, renames), "updateWhere")
-    val logicalToPhysical = renames.map(_.swap)
-    val expr = analyzed(spark, logicalSchema, pred)
-    val entries = touchedEntries(spark, path, head, renames, logicalSchema,
-      expr)
-    // the restricted resolution consumed the partition conjuncts — the
-    // verdict treats them as TRUE ("delete day X" drops as metadata);
-    // only when a restriction actually APPLIED (a blown-out IN-list
-    // falls through both paths and must keep its conjuncts)
-    val vexpr =
-      if (partitionValuesOf(spark, path, renames, logicalSchema,
-          expr).isDefined ||
-        partitionKeyPredOf(spark, path, renames, logicalSchema,
-          expr).isDefined)
-        stripPartConjuncts(expr,
-          consumedPartComps(spark, path, renames, logicalSchema, expr))
-      else expr
-    val statsCols = statsColsOf(spark, path)
-    val plan = planDml(spark, path, entries, vexpr, logicalToPhysical,
-      statsCols, physSchema, metadataDrop = false)
-    if (!plan.touched) return DmlReceipt(head, 0, 0, 0)
-    val base = applyRenames(
-      readFields(spark, path, head, plan.rewrite), renames)
-    val updated = applyAssignments(base, assignments, pred, logicalSchema,
-      spark, path, "update")
-    val newEntries = writeGen(toPhysical(updated, renames), path,
-      physPartCol, statsCols = statsCols)
-    beforeCommit() // test seam: a concurrent committer lands here
-    // foldNewEntries: a rewrite gen's key may have MIGRATED eras under
-    // an evolved partition spec — merge it into any untouched entry at
-    // that key; single-spec stores hit the identity path
-    val (removedF, addedF) = foldNewEntries(plan.removed,
-      plan.rebuild(Map.empty), newEntries,
-      cross => forWrite(path, head)(
-        readManifestValues(spark, path, head, cross.toSeq)))
-    commitDelta(spark, path, head + 1, head,
-      removed = removedF, added = addedF,
-      newEntries.values.map(_.split("/").take(2).mkString("/"))
-        .toSeq.distinct,
-      Some(physSchema), renames, op = "update")
-    DmlReceipt(head + 1, 0, plan.rewrite.size, plan.kept,
-      keptFiles = plan.keptFiles)
-  }
-
-  /** MERGE-ON-READ DELETE (deletion vectors — the Delta/Iceberg DV
-    * concept re-derived on the store's own manifest): rows satisfying
-    * `pred` are deleted by RECORDING THEIR POSITIONS, never rewriting a
-    * data file. The same tri-state plan as [[deleteWhere]] decides per
-    * slice — NoMatch copies forward, AllMatch drops as pure metadata —
-    * but the ambiguous slices, instead of paying copy-on-write, are read
-    * ONCE (through any existing DVs), the matching rows' (file-key,
-    * row-index) pairs land in one parquet sidecar (`data/dv-<hex>`), and
-    * each touched field gains a DV ref carrying its exact deleted count
-    * (so the metadata COUNT stays exact: live = physical − DV'd). The
-    * write cost is proportional to the MATCHED rows, not the touched
-    * slices — the needle delete in a 10 GB slice writes kilobytes.
+  /** Predicate DML: `op` applied to the rows satisfying `pred` on
+    * `target`, paying for the ambiguous slices by `mode`, as ONE new
+    * version (head) or staged version (branch). See the object doc for
+    * the per-slice treatment (NoMatch kept, AllMatch dropped as metadata
+    * by a delete, ambiguous slices pay).
     *
-    * The debt: every later read of a DV'd slice pays one anti-join
-    * against the (tiny) sidecar, and `minMaxWhere` stops serving the
-    * slice from metadata (its physical bounds may be attained only by
-    * deleted rows). [[SnapshotStore.compactPartitions]] is the debt
-    * collector — a DV'd partition qualifies regardless of dir count and
-    * rewrites clean. History is never rewritten (time travel sees
-    * pre-delete rows until expire; the sidecar is swept when no retained
-    * field references it). A provable no-op — or an ambiguous plan whose
-    * scan finds zero matching rows and whose metadata pass dropped
-    * nothing — commits NO version.
+    * Ops:
+    *  - [[Dml.Delete]]: rows where `pred` is TRUE leave; FALSE or NULL
+    *    survive (SQL three-valued DELETE).
+    *  - [[Dml.Update]]: matching rows get the assignments. Every RHS sees
+    *    the PRE-update row (one `select`, not a chain of `withColumn` —
+    *    `SET a = b, b = a` swaps) and casts to the column's existing
+    *    logical type (UPDATE never evolves the schema); CHECK constraints
+    *    gate the rows it changes. There is no metadata-only path — an
+    *    update always writes the rows it changes. Assigning the
+    *    partition column is refused (moving rows across partitions is
+    *    [[SnapshotStore.merge]]'s job: a delete-bearing CDC batch names
+    *    the moves row by row).
+    *
+    * Modes:
+    *  - [[Dml.CoW]]: the ambiguous slices — split to FILE grain first —
+    *    are read, filtered or updated, and rewritten as one fresh gen
+    *    per partition.
+    *  - [[Dml.MoR]] (deletion vectors — the Delta/Iceberg DV concept
+    *    re-derived on the store's own manifest): the ambiguous slices are
+    *    read ONCE (through any existing DVs), the matching rows'
+    *    (file-key, row-index) pairs land in one parquet sidecar
+    *    (`data/dv-<hex>`), and each touched field gains a DV ref carrying
+    *    its exact deleted count (so the metadata COUNT stays exact: live
+    *    = physical − DV'd). An update appends its new images as one fresh
+    *    gen per touched partition (Delta's DV-based UPDATE shape). Write
+    *    cost is proportional to the MATCHED rows, not the touched slices
+    *    — the needle delete in a 10 GB slice writes kilobytes. The debt:
+    *    every later read of a DV'd slice pays one anti-join against the
+    *    (tiny) sidecar, and `minMaxWhere` stops serving the slice from
+    *    metadata (its physical bounds may be attained only by deleted
+    *    rows). [[SnapshotStore.compactPartitions]] is the debt collector
+    *    — a DV'd partition qualifies regardless of dir count and rewrites
+    *    clean; the sidecar is swept when no retained field references it.
+    *
+    * Targets:
+    *  - [[Dml.Head]]: commits head + 1 through the manifest CAS. A lost
+    *    CAS throws `ConcurrentModificationException`; wrap the call in
+    *    [[SnapshotStore.withCasRetry]] to re-run it against the new head
+    *    (the statement is predicate-relative, so a retry is exactly a
+    *    re-run).
+    *  - [[Dml.Branch]]: runs against the WAP branch TIP and stages the
+    *    result as the branch's next version — the audit-fix loop ("the
+    *    profile flagged these rows; purge them from the candidate and
+    *    re-audit") without drop-and-restage. Main is never touched; a
+    *    dropped branch releases the new gens and sidecars to the orphan
+    *    sweep like any staged gen, and published fields carry their DV
+    *    refs into main verbatim. The staged-CAS loser retries against
+    *    the new tip (the branch-append discipline).
+    *
+    * Nothing changed — the predicate provably touches nothing, an
+    * update's file split proved every ambiguous file NoMatch, or a MoR
+    * scan found no matching row and nothing dropped as metadata —
+    * commits NO version and returns the prior version or tip.
+    * `beforeCommit` is a test seam: a concurrent committer lands there.
     */
-  def deleteWhereMor(spark: SparkSession, path: String, pred: Column,
-                     beforeCommit: () => Unit = () => ()): DmlReceipt = {
+  def dml(spark: SparkSession, path: String, op: Dml.Op, pred: Column,
+          target: Dml.Target, mode: Dml.Mode,
+          beforeCommit: () => Unit): DmlReceipt = {
     requireAtomicRename(path)
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, head)
-    val physSchema = versionSchema(spark, path, head)
-    val logicalToPhysical = renames.map(_.swap)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    val expr = analyzed(spark, logicalSchema, pred)
-    val entries = touchedEntries(spark, path, head, renames, logicalSchema,
-      expr)
-    // the restricted resolution consumed the partition conjuncts — the
-    // verdict treats them as TRUE ("delete day X" drops as metadata);
-    // only when a restriction actually APPLIED (a blown-out IN-list
-    // falls through both paths and must keep its conjuncts)
-    val vexpr =
-      if (partitionValuesOf(spark, path, renames, logicalSchema,
-          expr).isDefined ||
-        partitionKeyPredOf(spark, path, renames, logicalSchema,
-          expr).isDefined)
-        stripPartConjuncts(expr,
-          consumedPartComps(spark, path, renames, logicalSchema, expr))
-      else expr
-    val statsCols = statsColsOf(spark, path)
-    // no file-grain split: positions are finer than files, so probing
-    // footers to shrink the slice buys nothing the sidecar doesn't
-    val plan = planDml(spark, path, entries, vexpr, logicalToPhysical,
-      statsCols, physSchema, metadataDrop = true, fileGrain = false)
-    if (!plan.touched) return DmlReceipt(head, 0, 0, 0)
-    val (dvRel, counts) =
-      if (plan.rewrite.isEmpty) (None, Map.empty[String, Long])
-      else {
-        val physPartCol = partColOf(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"store at $path records no partition column"))
-        val tagged = applyRenames(
-          readFieldsTagged(spark, path, plan.rewrite, Some(physSchema)),
-          renames)
-        writeDv(spark, path, tagged.filter(coalesce(pred, lit(false))))
-      }
-    val dvRows = counts.values.sum
-    if (plan.dropped == 0 && counts.isEmpty)
-      return DmlReceipt(head, 0, 0, plan.kept) // scan refuted the stats
-    // rebuild ONLY the partitions something actually happened to: an
-    // AllMatch drop, or an ambiguous field that took positions. A
-    // partition whose ambiguous fields all scanned clean keeps its entry
-    // (identical re-add would be harmless, but the identity diff should
-    // not even have to cancel it). A partition whose EVERY field left
-    // (all-AllMatch delete) maps to Nil — removed, never re-added.
-    val annotated = annotate(plan, dvRel, counts)
-    beforeCommit() // test seam: a concurrent committer lands here
-    commitDelta(spark, path, head + 1, head,
-      removed = annotated.keySet,
-      added = annotated.filter(_._2.nonEmpty),
-      dvRel.toSeq, Some(physSchema), renames, op = "delete")
-    DmlReceipt(head + 1, plan.dropped, 0, plan.kept,
-      dvDirs = dvDirCount(counts), dvRows = dvRows)
+    target match {
+      case Dml.Head =>
+        attempt(spark, path, op, pred, mode, "update", beforeCommit,
+          resolveHead(spark, path))
+      case Dml.Branch(name) =>
+        withCasRetry() {
+          attempt(spark, path, op, pred, mode, "branch update",
+            beforeCommit, resolveBranch(spark, path, name))
+        }
+    }
   }
 
-  /** MERGE-ON-READ UPDATE: rows satisfying `pred` are deletion-vector'd
-    * out of their slices (like [[deleteWhereMor]]) and their UPDATED
-    * images — each RHS evaluated against the pre-update row, cast to the
-    * column's logical type, CHECK-constraint-gated — are APPENDED as one
-    * fresh gen per touched partition. The write cost is proportional to
-    * the MATCHED rows (Delta's DV-based UPDATE shape): the untouched
-    * 99% of an ambiguous slice is never rewritten, where the
-    * copy-on-write [[updateWhere]] copies it through. Same debt and
-    * same compaction story as the MoR delete.
+  /** One attempt's target, resolved: the version it reads, the schema
+    * and renames in force, and the target-specific steps — `scope` (the
+    * entries the plan runs over and the predicate its verdict uses),
+    * `readCoW` (the copy-on-write read, physical names), `priorOf` (the
+    * entries of keys outside the touched set: a new gen's key may have
+    * MIGRATED eras under an evolved partition spec) and `commit`
+    * (removed keys, added entries, new dirs, op).
     */
-  def updateWhereMor(spark: SparkSession, path: String,
-                     assignments: Seq[(String, Column)], pred: Column,
-                     beforeCommit: () => Unit = () => ()): DmlReceipt = {
-    requireAtomicRename(path)
+  private case class Resolved(version: Int, physSchema: StructType,
+      renames: Map[String, String],
+      scope: (StructType, Expression) =>
+        (Map[String, Seq[String]], Expression),
+      readCoW: Seq[String] => DataFrame,
+      priorOf: Set[String] => Map[String, Seq[String]],
+      commit: (Set[String], Map[String, Seq[String]], Seq[String],
+        String) => Unit) {
+    val logicalSchema: StructType = StructType(physSchema.fields.map(f =>
+      f.copy(name = renames.getOrElse(f.name, f.name))))
+  }
+
+  private def resolveHead(spark: SparkSession, path: String): Resolved = {
     val head = headVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no snapshots at $path"))
     val renames = readRenames(spark, path, head)
     val physSchema = versionSchema(spark, path, head)
-    val physPartCol = partColOf(spark, path).getOrElse(
+    Resolved(head, physSchema, renames,
+      scope = (logicalSchema, expr) => {
+        val entries = touchedEntries(spark, path, head, renames,
+          logicalSchema, expr)
+        // the restricted resolution consumed the partition conjuncts —
+        // the verdict treats them as TRUE ("delete day X" drops as
+        // metadata); only when a restriction actually APPLIED (a
+        // blown-out IN-list falls through both paths and must keep its
+        // conjuncts)
+        val vexpr =
+          if (partitionValuesOf(spark, path, renames, logicalSchema,
+              expr).isDefined ||
+            partitionKeyPredOf(spark, path, renames, logicalSchema,
+              expr).isDefined)
+            stripPartConjuncts(expr,
+              consumedPartComps(spark, path, renames, logicalSchema, expr))
+          else expr
+        (entries, vexpr)
+      },
+      readCoW = fields => readFields(spark, path, head, fields),
+      priorOf = keys => forWrite(path, head)(
+        readManifestValues(spark, path, head, keys.toSeq)),
+      commit = (removed, added, newDirs, op) =>
+        commitDelta(spark, path, head + 1, head, removed = removed,
+          added = added, newDirs, Some(physSchema), renames, op = op))
+  }
+
+  /** A branch tip's entries and predicate stay unrestricted:
+    * `readStaged` already loaded the tip's whole (flat) entry map, so a
+    * restricted resolve has nothing to save.
+    */
+  private def resolveBranch(spark: SparkSession, path: String,
+      name: String): Resolved = {
+    val st = SnapshotBranch.readStaged(spark, path, name)
+    Resolved(st.k, st.schema, st.renames,
+      scope = (_, expr) => (st.entries, expr),
+      readCoW = fields => readFieldsPhys(spark, path, fields,
+        Some(st.schema)),
+      priorOf = keys => st.entries.filter { case (k, _) => keys(k) },
+      commit = (removed, added, _, _) =>
+        SnapshotBranch.stageNext(spark, path, name, st,
+          st.entries -- removed ++ added))
+  }
+
+  /** resolve → [[planDml]] → apply → commit over one resolved target.
+    * `verb` names an update in refusals and CHECK-constraint errors.
+    */
+  private def attempt(spark: SparkSession, path: String, op: Dml.Op,
+      pred: Column, mode: Dml.Mode, verb: String,
+      beforeCommit: () => Unit, st: Resolved): DmlReceipt = {
+    def physPartCol: String = partColOf(spark, path).getOrElse(
       throw new IllegalStateException(
         s"store at $path records no partition column"))
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    validateAssignments(assignments, logicalSchema,
-      logicalPartCol(physPartCol, renames), "updateWhereMor")
-    val logicalToPhysical = renames.map(_.swap)
-    val expr = analyzed(spark, logicalSchema, pred)
-    val entries = touchedEntries(spark, path, head, renames, logicalSchema,
-      expr)
-    // the restricted resolution consumed the partition conjuncts — the
-    // verdict treats them as TRUE ("delete day X" drops as metadata);
-    // only when a restriction actually APPLIED (a blown-out IN-list
-    // falls through both paths and must keep its conjuncts)
-    val vexpr =
-      if (partitionValuesOf(spark, path, renames, logicalSchema,
-          expr).isDefined ||
-        partitionKeyPredOf(spark, path, renames, logicalSchema,
-          expr).isDefined)
-        stripPartConjuncts(expr,
-          consumedPartComps(spark, path, renames, logicalSchema, expr))
-      else expr
+    op match {
+      case Dml.Update(assignments) =>
+        validateAssignments(assignments, st.logicalSchema,
+          logicalPartCol(physPartCol, st.renames), verb)
+      case Dml.Delete =>
+    }
+    val isDelete = op == Dml.Delete
+    val expr = analyzed(spark, st.logicalSchema, pred)
+    val (entries, vexpr) = st.scope(st.logicalSchema, expr)
     val statsCols = statsColsOf(spark, path)
-    val plan = planDml(spark, path, entries, vexpr, logicalToPhysical,
-      statsCols, physSchema, metadataDrop = false, fileGrain = false)
-    if (!plan.touched) return DmlReceipt(head, 0, 0, 0)
-    val tagged = applyRenames(
-      readFieldsTagged(spark, path, plan.rewrite, Some(physSchema)),
-      renames)
-    val hits = tagged.filter(coalesce(pred, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val assigned = assignments.toMap
-      val updated = hits.select(logicalSchema.fieldNames.toSeq.map { c =>
-        assigned.get(c) match {
-          case Some(e) => e.cast(logicalSchema(c).dataType).as(c)
-          case None => col(c)
+    // MoR skips the file-grain split: positions are finer than files, so
+    // probing footers to shrink the slice buys nothing the sidecar doesn't
+    val plan = planDml(spark, path, entries, vexpr, st.renames.map(_.swap),
+      statsCols, st.physSchema, metadataDrop = isDelete,
+      fileGrain = mode == Dml.CoW)
+    if (!plan.touched) return DmlReceipt(st.version, 0, 0, 0)
+    // an update whose file split proved every ambiguous file NoMatch
+    // changes nothing (a delete still drops its AllMatch slices or files)
+    if (plan.rewrite.isEmpty && !isDelete)
+      return DmlReceipt(st.version, 0, 0, plan.kept,
+        keptFiles = plan.keptFiles)
+    val hit = coalesce(pred, lit(false))
+    def writeRows(df: DataFrame): Map[String, String] =
+      writeGen(toPhysical(df, st.renames), path, physPartCol,
+        statsCols = statsCols)
+    // apply: (DV sidecar, per-file DV counts, new gen entries)
+    val (dvRel, counts, newEntries) = mode match {
+      case _ if plan.rewrite.isEmpty =>
+        (None, Map.empty[String, Long], Map.empty[String, String])
+      case Dml.CoW =>
+        val rows = applyRenames(st.readCoW(plan.rewrite), st.renames)
+        (None, Map.empty[String, Long], writeRows(op match {
+          case Dml.Delete => rows.filter(not(hit))
+          case Dml.Update(assignments) =>
+            applyAssignments(rows, assignments, pred, st.logicalSchema,
+              spark, path, verb)
+        }))
+      case Dml.MoR =>
+        val hits = applyRenames(readFieldsTagged(spark, path, plan.rewrite,
+          Some(st.physSchema)), st.renames).filter(hit)
+        op match {
+          case Dml.Delete =>
+            val (rel, n) = writeDv(spark, path, hits)
+            (rel, n, Map.empty[String, String])
+          case Dml.Update(assignments) =>
+            hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val assigned = assignments.toMap
+              val images = hits.select(
+                st.logicalSchema.fieldNames.toSeq.map { c =>
+                  assigned.get(c) match {
+                    case Some(e) =>
+                      e.cast(st.logicalSchema(c).dataType).as(c)
+                    case None => col(c)
+                  }
+                }: _*)
+              SnapshotConstraints.enforce(spark, path, images, verb)
+              val (rel, n) = writeDv(spark, path, hits)
+              (rel, n,
+                if (n.isEmpty) Map.empty[String, String] else writeRows(images))
+            } finally hits.unpersist()
         }
-      }: _*)
-      SnapshotConstraints.enforce(spark, path, updated, "update")
-      val (dvRel, counts) = writeDv(spark, path, hits)
-      if (counts.isEmpty)
-        return DmlReceipt(head, 0, 0, plan.kept) // scan refuted the stats
-      val newEntries = writeGen(toPhysical(updated, renames), path,
-        physPartCol, statsCols = statsCols)
-      val annotated = annotate(plan, dvRel, counts)
-      // image gens fold at their OWN keys — on an evolved store an
-      // updated row's current-spec key may differ from its pre-image's
-      // era key (the pre-image stays DV'd in place either way)
-      val (removedF, addedF) = foldNewEntries(annotated.keySet,
-        annotated.filter(_._2.nonEmpty), newEntries,
-        cross => forWrite(path, head)(
-          readManifestValues(spark, path, head, cross.toSeq)))
-      beforeCommit() // test seam: a concurrent committer lands here
-      commitDelta(spark, path, head + 1, head,
-        removed = removedF,
-        added = addedF,
-        dvRel.toSeq ++ newEntries.values
-          .map(_.split("/").take(2).mkString("/")).toSeq.distinct,
-        Some(physSchema), renames, op = "update")
-      DmlReceipt(head + 1, 0, newEntries.size, plan.kept,
-        dvDirs = dvDirCount(counts), dvRows = counts.values.sum)
-    } finally hits.unpersist()
+    }
+    if (mode == Dml.MoR && plan.dropped == 0 && counts.isEmpty)
+      return DmlReceipt(st.version, 0, 0, plan.kept) // scan refuted the stats
+    // CoW rebuilds every touched partition around its rewrite; MoR only
+    // the partitions something happened to ([[annotate]])
+    val (removed, rebuilt) = mode match {
+      case Dml.CoW => (plan.removed, plan.rebuild)
+      case Dml.MoR =>
+        val annotated = annotate(plan, dvRel, counts)
+        (annotated.keySet, annotated)
+    }
+    beforeCommit()
+    // foldNewEntries: a new gen's key may have MIGRATED eras under an
+    // evolved partition spec — merge it into any untouched entry at that
+    // key; single-spec stores hit the identity path
+    val (removedF, addedF) = foldNewEntries(removed, rebuilt, newEntries,
+      st.priorOf)
+    st.commit(removedF, addedF, dvRel.toSeq ++ newEntries.values
+      .map(_.split("/").take(2).mkString("/")).toSeq.distinct,
+      if (isDelete) "delete" else "update")
+    DmlReceipt(st.version + 1, plan.dropped,
+      if (mode == Dml.CoW) plan.rewrite.size else newEntries.size,
+      plan.kept, plan.keptFiles, plan.droppedFiles,
+      dvDirCount(counts), counts.values.sum)
   }
 
   /** Writes `hits`' (file-key, row-index) pairs as ONE deletion-vector
@@ -604,17 +524,6 @@ private[graft] object SnapshotDml {
     } else (Some(rel), counts)
   }
 
-  /** The MoR rebuild: partitions whose entry actually CHANGED — an
-    * AllMatch field dropped as metadata, or an ambiguous field that took
-    * positions — mapped to their new field lists: NoMatch fields
-    * verbatim, hit fields with the new DV ref appended (count exact per
-    * field), clean-scanned ambiguous fields verbatim. A partition whose
-    * every field leaves (all AllMatch, delete) maps to Nil — the caller
-    * removes its entry without re-adding. Partitions where nothing
-    * happened (every ambiguous field scanned clean, nothing dropped) are
-    * absent: their entries stay byte-identical, so the identity diff
-    * never has to cancel a rewrite.
-    */
   /** Distinct slice DIRS among the per-FILE count keys — the receipt's
     * `dvDirs` keeps meaning "slices touched", not "files touched".
     */
@@ -636,6 +545,17 @@ private[graft] object SnapshotDml {
     }
   }
 
+  /** The MoR rebuild: partitions whose entry actually CHANGED — an
+    * AllMatch field dropped as metadata, or an ambiguous field that took
+    * positions — mapped to their new field lists: NoMatch fields
+    * verbatim, hit fields with the new DV ref appended (count exact per
+    * field), clean-scanned ambiguous fields verbatim. A partition whose
+    * every field leaves (all AllMatch, delete) maps to Nil — the caller
+    * removes its entry without re-adding. Partitions where nothing
+    * happened (every ambiguous field scanned clean, nothing dropped) are
+    * absent: their entries stay byte-identical, so the identity diff
+    * never has to cancel a rewrite.
+    */
   private def annotate(plan: DmlPlan, dvRel: Option[String],
       counts: Map[String, Long]): Map[String, Seq[String]] = {
     // counts arrive per FILE; a manifest field collects its share by
@@ -664,7 +584,7 @@ private[graft] object SnapshotDml {
   }
 
   private def validateAssignments(assignments: Seq[(String, Column)],
-      logicalSchema: org.apache.spark.sql.types.StructType,
+      logicalSchema: StructType,
       partSpec: String, verb: String): Unit = {
     require(assignments.nonEmpty, s"$verb needs at least one assignment")
     val partComps = splitPartCols(partSpec)
@@ -694,7 +614,7 @@ private[graft] object SnapshotDml {
     */
   private def applyAssignments(base: DataFrame,
       assignments: Seq[(String, Column)], pred: Column,
-      logicalSchema: org.apache.spark.sql.types.StructType,
+      logicalSchema: StructType,
       spark: SparkSession, path: String, verb: String): DataFrame = {
     val hit = coalesce(pred, lit(false))
     val assigned = assignments.toMap
@@ -712,232 +632,5 @@ private[graft] object SnapshotDml {
     SnapshotConstraints.enforce(spark, path,
       updated.filter(col(hitCol)).drop(hitCol), verb)
     updated.drop(hitCol)
-  }
-
-  /** DELETE over a WAP branch TIP, staged as the branch's next version —
-    * the audit-fix loop's workhorse ("the profile flagged these rows;
-    * purge them from the candidate and re-audit"). Same planner, same
-    * pruning, same three-way treatment as [[deleteWhere]]; main is never
-    * touched, and a dropped branch releases the rewrite gens to the
-    * orphan sweep like any staged gen. The staged-CAS loser retries
-    * against the new tip (branch-append discipline).
-    */
-  def deleteBranchWhere(spark: SparkSession, path: String, name: String,
-                        pred: Column): DmlReceipt = {
-    requireAtomicRename(path)
-    var attempt = 0
-    while (true) {
-      val st = SnapshotBranch.readStaged(spark, path, name)
-      val logicalSchema = org.apache.spark.sql.types.StructType(
-        st.schema.fields.map(f =>
-          f.copy(name = st.renames.getOrElse(f.name, f.name))))
-      val expr = analyzed(spark, logicalSchema, pred)
-      val statsCols = statsColsOf(spark, path)
-      val plan = planDml(spark, path, st.entries, expr,
-        st.renames.map(_.swap), statsCols, st.schema, metadataDrop = true)
-      if (!plan.touched) return DmlReceipt(st.k, 0, 0, 0)
-      val newEntries: Map[String, String] =
-        if (plan.rewrite.isEmpty) Map.empty
-        else {
-          val base = applyRenames(
-            readFieldsPhys(spark, path, plan.rewrite, Some(st.schema)),
-            st.renames)
-          val survivors = base.filter(not(coalesce(pred, lit(false))))
-          val physPartCol = partColOf(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"store at $path records no partition column"))
-          writeGen(toPhysical(survivors, st.renames), path, physPartCol,
-            statsCols = statsCols)
-        }
-      try {
-        SnapshotBranch.stageNext(spark, path, name, st,
-          {
-            val (removedF, addedF) = foldNewEntries(plan.removed,
-              plan.rebuild(Map.empty), newEntries,
-              cross => st.entries.filter { case (k, _) => cross(k) })
-            st.entries -- removedF ++ addedF
-          })
-        return DmlReceipt(st.k + 1, plan.dropped, plan.rewrite.size,
-          plan.kept, keptFiles = plan.keptFiles,
-          droppedFiles = plan.droppedFiles)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** UPDATE over a WAP branch TIP (see [[deleteBranchWhere]]) — the
-    * in-place candidate fix ("redact the flagged field and re-audit").
-    * Pre-update-row assignment semantics and the CHECK-constraint gate
-    * over modified rows match [[updateWhere]] exactly.
-    */
-  def updateBranchWhere(spark: SparkSession, path: String, name: String,
-                        assignments: Seq[(String, Column)],
-                        pred: Column): DmlReceipt = {
-    requireAtomicRename(path)
-    var attempt = 0
-    while (true) {
-      val st = SnapshotBranch.readStaged(spark, path, name)
-      val physPartCol = partColOf(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"store at $path records no partition column"))
-      val logicalSchema = org.apache.spark.sql.types.StructType(
-        st.schema.fields.map(f =>
-          f.copy(name = st.renames.getOrElse(f.name, f.name))))
-      validateAssignments(assignments, logicalSchema,
-        logicalPartCol(physPartCol, st.renames), "updateBranchWhere")
-      val expr = analyzed(spark, logicalSchema, pred)
-      val statsCols = statsColsOf(spark, path)
-      val plan = planDml(spark, path, st.entries, expr,
-        st.renames.map(_.swap), statsCols, st.schema, metadataDrop = false)
-      if (!plan.touched) return DmlReceipt(st.k, 0, 0, 0)
-      val base = applyRenames(
-        readFieldsPhys(spark, path, plan.rewrite, Some(st.schema)),
-        st.renames)
-      val updated = applyAssignments(base, assignments, pred,
-        logicalSchema, spark, path, "branch update")
-      val newEntries = writeGen(toPhysical(updated, st.renames), path,
-        physPartCol, statsCols = statsCols)
-      try {
-        SnapshotBranch.stageNext(spark, path, name, st,
-          {
-            val (removedF, addedF) = foldNewEntries(plan.removed,
-              plan.rebuild(Map.empty), newEntries,
-              cross => st.entries.filter { case (k, _) => cross(k) })
-            st.entries -- removedF ++ addedF
-          })
-        return DmlReceipt(st.k + 1, 0, plan.rewrite.size, plan.kept,
-          keptFiles = plan.keptFiles)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** MERGE-ON-READ DELETE over a WAP branch TIP — [[deleteWhereMor]]'s
-    * semantics staged as the branch's next version: the audit-fix purge
-    * priced at the matched rows ("drop the 400 flagged docs from the
-    * 10 TB candidate") where even the branch CoW delete rewrites the
-    * flagged slices. Fork-snapshot slices prove NoMatch from their blobs
-    * and are never opened; main's head never moves until publish, and
-    * the published fields carry their DV refs into main verbatim (every
-    * reader goes through the central DV-aware reader). A retry-lost
-    * attempt's sidecar is an unreferenced orphan for the age-floored
-    * sweep, like a lost attempt's gens.
-    */
-  def deleteBranchWhereMor(spark: SparkSession, path: String, name: String,
-                           pred: Column): DmlReceipt = {
-    requireAtomicRename(path)
-    var attempt = 0
-    while (true) {
-      val st = SnapshotBranch.readStaged(spark, path, name)
-      val logicalSchema = org.apache.spark.sql.types.StructType(
-        st.schema.fields.map(f =>
-          f.copy(name = st.renames.getOrElse(f.name, f.name))))
-      val expr = analyzed(spark, logicalSchema, pred)
-      val statsCols = statsColsOf(spark, path)
-      val plan = planDml(spark, path, st.entries, expr,
-        st.renames.map(_.swap), statsCols, st.schema,
-        metadataDrop = true, fileGrain = false)
-      if (!plan.touched) return DmlReceipt(st.k, 0, 0, 0)
-      val (dvRel, counts) =
-        if (plan.rewrite.isEmpty) (None, Map.empty[String, Long])
-        else {
-          val physPartCol = partColOf(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"store at $path records no partition column"))
-          val tagged = applyRenames(
-            readFieldsTagged(spark, path, plan.rewrite, Some(st.schema)),
-            st.renames)
-          writeDv(spark, path, tagged.filter(coalesce(pred, lit(false))))
-        }
-      if (plan.dropped == 0 && counts.isEmpty)
-        return DmlReceipt(st.k, 0, 0, plan.kept)
-      val annotated = annotate(plan, dvRel, counts)
-      try {
-        SnapshotBranch.stageNext(spark, path, name, st,
-          st.entries -- annotated.keySet ++ annotated.filter(_._2.nonEmpty))
-        return DmlReceipt(st.k + 1, plan.dropped, 0, plan.kept,
-          dvDirs = dvDirCount(counts), dvRows = counts.values.sum)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** MERGE-ON-READ UPDATE over a WAP branch TIP — [[updateWhereMor]]'s
-    * semantics staged as the branch's next version: hit rows are
-    * deletion-vector'd out of the staged slices and their updated images
-    * (pre-update-row RHS, CHECK-gated) append as one fresh staged gen
-    * per touched partition. The in-place candidate redaction at matched-
-    * rows cost.
-    */
-  def updateBranchWhereMor(spark: SparkSession, path: String, name: String,
-                           assignments: Seq[(String, Column)],
-                           pred: Column): DmlReceipt = {
-    requireAtomicRename(path)
-    var attempt = 0
-    while (true) {
-      val st = SnapshotBranch.readStaged(spark, path, name)
-      val physPartCol = partColOf(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"store at $path records no partition column"))
-      val logicalSchema = org.apache.spark.sql.types.StructType(
-        st.schema.fields.map(f =>
-          f.copy(name = st.renames.getOrElse(f.name, f.name))))
-      validateAssignments(assignments, logicalSchema,
-        logicalPartCol(physPartCol, st.renames),
-        "updateBranchWhereMor")
-      val expr = analyzed(spark, logicalSchema, pred)
-      val statsCols = statsColsOf(spark, path)
-      val plan = planDml(spark, path, st.entries, expr,
-        st.renames.map(_.swap), statsCols, st.schema,
-        metadataDrop = false, fileGrain = false)
-      if (!plan.touched) return DmlReceipt(st.k, 0, 0, 0)
-      val tagged = applyRenames(
-        readFieldsTagged(spark, path, plan.rewrite, Some(st.schema)),
-        st.renames)
-      val hits = tagged.filter(coalesce(pred, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val assigned = assignments.toMap
-        val updated = hits.select(logicalSchema.fieldNames.toSeq.map { c =>
-          assigned.get(c) match {
-            case Some(e) => e.cast(logicalSchema(c).dataType).as(c)
-            case None => col(c)
-          }
-        }: _*)
-        SnapshotConstraints.enforce(spark, path, updated, "branch update")
-        val (dvRel, counts) = writeDv(spark, path, hits)
-        if (counts.isEmpty)
-          return DmlReceipt(st.k, 0, 0, plan.kept)
-        val newEntries = writeGen(toPhysical(updated, st.renames), path,
-          physPartCol, statsCols = statsCols)
-        val annotated = annotate(plan, dvRel, counts)
-        val (removedF, addedF) = foldNewEntries(annotated.keySet,
-          annotated.filter(_._2.nonEmpty), newEntries,
-          cross => st.entries.filter { case (k, _) => cross(k) })
-        try {
-          SnapshotBranch.stageNext(spark, path, name, st,
-            st.entries -- removedF ++ addedF)
-          return DmlReceipt(st.k + 1, 0, newEntries.size, plan.kept,
-            dvDirs = dvDirCount(counts), dvRows = counts.values.sum)
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > 5) throw e
-        }
-      } finally hits.unpersist()
-    }
-    throw new IllegalStateException("unreachable")
   }
 }

@@ -2127,173 +2127,59 @@ object SnapshotStore {
     SnapshotBranch.infos(spark, path).map(i =>
       (i.name, i.tip, i.base, i.createdMs, i.modifiedMs))
 
-  /** Predicate DELETE (`DELETE FROM store WHERE pred` — the Delta/
-    * Iceberg copy-on-write DML shape, re-derived): commits one new
-    * version with the matching rows removed. The tri-state stats
-    * evaluator decides per (partition, gen) slice — provably-no-match
-    * slices copy forward untouched, provably-ALL-match slices leave the
-    * manifest as pure metadata (no file read or written — the "metadata
-    * delete"), only ambiguous slices pay copy-on-write. Rows where
-    * `pred` is NULL survive (SQL three-valued DELETE). A predicate that
-    * provably matches nothing commits no version. History is never
-    * rewritten: time travel sees pre-delete data until [[expire]] ages
-    * the old gens out. See [[SnapshotDml.deleteWhere]].
+  /** Predicate DML — `DELETE FROM store WHERE pred` or `UPDATE store SET
+    * c = e, ... WHERE pred` — over the head or a WAP branch tip,
+    * copy-on-write or merge-on-read (deletion vectors), as one new
+    * version; returns the receipt (slices dropped / rewritten / kept,
+    * positions written). A lost head CAS throws; wrap the call in
+    * [[withCasRetry]] to re-run it against the new head. See
+    * [[SnapshotDml.dml]] for the semantics of every op, mode and target.
     */
+  def dml(spark: SparkSession, path: String, op: Dml.Op,
+          pred: org.apache.spark.sql.Column,
+          target: Dml.Target = Dml.Head, mode: Dml.Mode = Dml.CoW,
+          beforeCommit: () => Unit = () => ()): DmlReceipt =
+    SnapshotDml.dml(spark, path, op, pred, target, mode, beforeCommit)
+
+  /** Runs `body`, re-running it each time it loses a commit CAS
+    * (`ConcurrentModificationException`), at most `maxRetries` times: a
+    * store verb re-reads the NEW head (or branch tip) on every attempt,
+    * so two concurrent writers both land, serialized, instead of the
+    * loser surfacing the exception to the pipeline. Retries exhaust to
+    * the original exception (the store is consistent either way; only
+    * this caller's change is unapplied); any other exception propagates
+    * at once. A losing head commit has already cleaned its gen dirs and
+    * sidecars; a losing branch stage leaves them to the orphan sweep.
+    */
+  @scala.annotation.tailrec
+  def withCasRetry[T](maxRetries: Int = 5)(body: => T): T =
+    scala.util.Try(body) match {
+      case scala.util.Failure(_: java.util.ConcurrentModificationException)
+          if maxRetries > 0 =>
+        withCasRetry(maxRetries - 1)(body)
+      case r => r.get
+    }
+
+  /** [[dml]] deleting the head's rows matching `pred`, copy-on-write. */
   def deleteWhere(spark: SparkSession, path: String,
                   pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.deleteWhere(spark, path, pred)
+    dml(spark, path, Dml.Delete, pred)
 
-  /** [[deleteWhere]] returning the receipt the specs and the declared
-    * query pin scan-cost claims on (dropped / rewritten / kept slices).
-    */
-  private[graft] def deleteWhereDetailed(spark: SparkSession, path: String,
-      pred: org.apache.spark.sql.Column,
-      beforeCommit: () => Unit = () => ()): SnapshotDml.DmlReceipt =
-    SnapshotDml.deleteWhere(spark, path, pred, beforeCommit)
-
-  /** Predicate UPDATE (`UPDATE store SET c = e, ... WHERE pred`): rows
-    * matching `pred` get the assignments applied (each RHS sees the
-    * PRE-update row and casts to the column's existing type — UPDATE
-    * never evolves the schema), everything else copies through.
-    * No-match slices are untouched (stats-pruned copy-on-write);
-    * assigning the partition column is refused. See
-    * [[SnapshotDml.updateWhere]].
-    */
+  /** [[dml]] updating the head's rows matching `pred`, copy-on-write. */
   def updateWhere(spark: SparkSession, path: String,
                   assignments: Seq[(String, org.apache.spark.sql.Column)],
                   pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.updateWhere(spark, path, assignments, pred)
-
-  /** [[updateWhere]] returning the scan-cost receipt. */
-  private[graft] def updateWhereDetailed(spark: SparkSession, path: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column,
-      beforeCommit: () => Unit = () => ()): SnapshotDml.DmlReceipt =
-    SnapshotDml.updateWhere(spark, path, assignments, pred, beforeCommit)
-
-  /** Predicate DELETE over a WAP BRANCH tip, staged as the branch's next
-    * version — the audit-fix loop ("the profile flagged these rows;
-    * purge them from the candidate and re-audit") without drop-and-
-    * restage. Same pruning and three-valued semantics as [[deleteWhere]];
-    * main is never touched. See [[SnapshotDml.deleteBranchWhere]].
-    */
-  def deleteBranchWhere(spark: SparkSession, path: String, name: String,
-                        pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.deleteBranchWhere(spark, path, name, pred)
-
-  /** [[deleteBranchWhere]] returning the scan-cost receipt (`version` is
-    * the branch's staged tip counter).
-    */
-  private[graft] def deleteBranchWhereDetailed(spark: SparkSession,
-      path: String, name: String,
-      pred: org.apache.spark.sql.Column): SnapshotDml.DmlReceipt =
-    SnapshotDml.deleteBranchWhere(spark, path, name, pred)
-
-  /** Predicate UPDATE over a WAP BRANCH tip ("redact the flagged field
-    * and re-audit"), staged as the branch's next version. Pre-update-row
-    * assignment semantics and the CHECK-constraint gate match
-    * [[updateWhere]]. See [[SnapshotDml.updateBranchWhere]].
-    */
-  def updateBranchWhere(spark: SparkSession, path: String, name: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.updateBranchWhere(spark, path, name, assignments, pred)
-
-  /** [[updateBranchWhere]] returning the scan-cost receipt. */
-  private[graft] def updateBranchWhereDetailed(spark: SparkSession,
-      path: String, name: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column): SnapshotDml.DmlReceipt =
-    SnapshotDml.updateBranchWhere(spark, path, name, assignments, pred)
-
-  /** MERGE-ON-READ predicate DELETE (deletion vectors): matching rows'
-    * positions land in one parquet sidecar and the touched manifest
-    * fields gain a DV ref — NO data file rewritten; write cost is
-    * proportional to the matched rows. Readers apply DVs transparently;
-    * [[compactPartitions]] materializes the debt. See
-    * [[SnapshotDml.deleteWhereMor]].
-    */
-  def deleteWhereMor(spark: SparkSession, path: String,
-                     pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.deleteWhereMor(spark, path, pred)
-
-  /** [[deleteWhereMor]] returning the receipt (dropped/kept slices, DV'd
-    * fields, positions written).
-    */
-  private[graft] def deleteWhereMorDetailed(spark: SparkSession,
-      path: String, pred: org.apache.spark.sql.Column,
-      beforeCommit: () => Unit = () => ()): SnapshotDml.DmlReceipt =
-    SnapshotDml.deleteWhereMor(spark, path, pred, beforeCommit)
-
-  /** MERGE-ON-READ predicate UPDATE: matched rows are deletion-vector'd
-    * out of their slices and their updated images appended as one fresh
-    * gen per touched partition — write cost proportional to the matched
-    * rows (the Delta DV-based UPDATE shape). Same assignment semantics
-    * and CHECK gate as [[updateWhere]]. See [[SnapshotDml.updateWhereMor]].
-    */
-  def updateWhereMor(spark: SparkSession, path: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.updateWhereMor(spark, path, assignments, pred)
-
-  /** [[updateWhereMor]] returning the receipt. */
-  private[graft] def updateWhereMorDetailed(spark: SparkSession,
-      path: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column,
-      beforeCommit: () => Unit = () => ()): SnapshotDml.DmlReceipt =
-    SnapshotDml.updateWhereMor(spark, path, assignments, pred, beforeCommit)
-
-  /** Merge-on-read DELETE over a WAP branch tip — the audit-fix purge at
-    * matched-rows cost, staged as the branch's next version. See
-    * [[SnapshotDml.deleteBranchWhereMor]].
-    */
-  def deleteBranchWhereMor(spark: SparkSession, path: String, name: String,
-                           pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.deleteBranchWhereMor(spark, path, name, pred)
-
-  /** [[deleteBranchWhereMor]] returning the receipt. */
-  private[graft] def deleteBranchWhereMorDetailed(spark: SparkSession,
-      path: String, name: String,
-      pred: org.apache.spark.sql.Column): SnapshotDml.DmlReceipt =
-    SnapshotDml.deleteBranchWhereMor(spark, path, name, pred)
-
-  /** Merge-on-read UPDATE over a WAP branch tip — the in-place candidate
-    * redaction at matched-rows cost. See
-    * [[SnapshotDml.updateBranchWhereMor]].
-    */
-  def updateBranchWhereMor(spark: SparkSession, path: String, name: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column): Unit =
-    SnapshotDml.updateBranchWhereMor(spark, path, name, assignments, pred)
-
-  /** [[updateBranchWhereMor]] returning the receipt. */
-  private[graft] def updateBranchWhereMorDetailed(spark: SparkSession,
-      path: String, name: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column): SnapshotDml.DmlReceipt =
-    SnapshotDml.updateBranchWhereMor(spark, path, name, assignments, pred)
+    dml(spark, path, Dml.Update(assignments), pred)
 
   /** General conditional MERGE (the Delta/SQL:2003 `MERGE INTO` shape):
     * first-match-wins `WHEN MATCHED [AND cond]` update/delete clauses,
     * `WHEN NOT MATCHED` insert, `WHEN NOT MATCHED BY SOURCE` update/
     * delete — one full-outer key join, one action-tag pass, one write.
-    * Clause types live on [[SnapshotMergeInto]]. [[merge]] remains the
-    * CDC-batch fast path.
+    * Returns the per-outcome row counts and the NOT-MATCHED-BY-SOURCE
+    * slice-pruning receipt. Clause types live on [[SnapshotMergeInto]].
+    * [[merge]] remains the CDC-batch fast path.
     */
   def mergeInto(spark: SparkSession, path: String,
-      source: DataFrame, keyCols: Seq[String],
-      matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
-      notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
-      notMatchedBySource: Seq[SnapshotMergeInto.WhenNotMatchedBySource] =
-        Nil): Unit =
-    SnapshotMergeInto.mergeInto(spark, path, source, keyCols, matched,
-      notMatched, notMatchedBySource)
-
-  /** [[mergeInto]] returning the per-outcome row counts and the
-    * NOT-MATCHED-BY-SOURCE slice-pruning receipt.
-    */
-  private[graft] def mergeIntoDetailed(spark: SparkSession, path: String,
       source: DataFrame, keyCols: Seq[String],
       matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
       notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
@@ -2308,20 +2194,10 @@ object SnapshotStore {
     * clause semantics, but update/delete pre-images pay DELETION
     * VECTORS and only the changed images (updates' post-images +
     * inserts) append — write cost ∝ changed rows, never the touched
-    * slices. Same debt collectors as the MoR DML verbs.
+    * slices. Same debt collectors as the MoR DML verbs; the receipt
+    * adds `dvDirs`/`dvRows`.
     */
   def mergeIntoMor(spark: SparkSession, path: String,
-      source: DataFrame, keyCols: Seq[String],
-      matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
-      notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
-      notMatchedBySource: Seq[SnapshotMergeInto.WhenNotMatchedBySource] =
-        Nil): Unit =
-    SnapshotMergeInto.mergeIntoMor(spark, path, source, keyCols, matched,
-      notMatched, notMatchedBySource)
-
-  /** [[mergeIntoMor]] returning the receipt (incl. `dvDirs`/`dvRows`). */
-  private[graft] def mergeIntoMorDetailed(spark: SparkSession,
-      path: String,
       source: DataFrame, keyCols: Seq[String],
       matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
       notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
@@ -2332,126 +2208,11 @@ object SnapshotStore {
     SnapshotMergeInto.mergeIntoMor(spark, path, source, keyCols, matched,
       notMatched, notMatchedBySource, beforeCommit)
 
-  /** [[mergeIntoMor]] with the bounded CAS-loser retry loop. */
-  def mergeIntoMorWithRetry(spark: SparkSession, path: String,
-      source: DataFrame, keyCols: Seq[String],
-      matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
-      notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
-      notMatchedBySource: Seq[SnapshotMergeInto.WhenNotMatchedBySource] =
-        Nil,
-      maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotMergeInto.mergeIntoMor(spark, path, source, keyCols,
-              matched, notMatched, notMatchedBySource)
-            return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
-
-  /** [[deleteWhere]] with [[mergeWithRetry]]'s bounded CAS-loser retry
-    * loop: each attempt re-resolves against the NEW head (the delete's
-    * semantics are predicate-relative, so retrying against a moved head
-    * is exactly re-running the statement). Retries exhaust to the
-    * original exception.
-    */
-  def deleteWhereWithRetry(spark: SparkSession, path: String,
-                           pred: org.apache.spark.sql.Column,
-                           maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotDml.deleteWhere(spark, path, pred); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
-
-  /** [[deleteWhereMor]] with the bounded CAS-loser retry loop (a lost
-    * attempt's sidecar was already cleaned by the commit's loser path).
-    */
-  def deleteWhereMorWithRetry(spark: SparkSession, path: String,
-                              pred: org.apache.spark.sql.Column,
-                              maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotDml.deleteWhereMor(spark, path, pred); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
-
-  /** [[updateWhereMor]] with the bounded CAS-loser retry loop. */
-  def updateWhereMorWithRetry(spark: SparkSession, path: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column,
-      maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotDml.updateWhereMor(spark, path, assignments, pred)
-            return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
-
-  /** [[mergeInto]] with the bounded CAS-loser retry loop: each attempt
-    * re-resolves against the NEW head (clause semantics are
-    * source-relative, so retrying is exactly re-running the statement).
-    */
-  def mergeIntoWithRetry(spark: SparkSession, path: String,
-      source: DataFrame, keyCols: Seq[String],
-      matched: Seq[SnapshotMergeInto.WhenMatched] = Nil,
-      notMatched: Option[SnapshotMergeInto.WhenNotMatched] = None,
-      notMatchedBySource: Seq[SnapshotMergeInto.WhenNotMatchedBySource] =
-        Nil,
-      maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotMergeInto.mergeInto(spark, path, source, keyCols,
-              matched, notMatched, notMatchedBySource)
-            return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
-
   /** The field's deletion-vector sidecar dirs (store-relative), for
     * spec-side liveness accounting.
     */
   private[graft] def dvRefsOf(field: String): Seq[String] =
     dvOf(field).map(_.rel)
-
-  /** [[updateWhere]] with the bounded CAS-loser retry loop. */
-  def updateWhereWithRetry(spark: SparkSession, path: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      pred: org.apache.spark.sql.Column,
-      maxRetries: Int = 5): Unit = {
-    var attempt = 0
-    while (true) {
-      try { SnapshotDml.updateWhere(spark, path, assignments, pred); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
 
   /** Declare-later data skipping: adds `statsCols`/`bloomCols` (logical
     * names) to the store's declarations and BACKFILLS every retained
@@ -3846,14 +3607,8 @@ object SnapshotStore {
       renames, op = "merge")
   }
 
-  /** [[merge]] with a bounded CAS-loser retry loop: each attempt re-reads
-    * the NEW head and re-resolves through the same code path, so two
-    * concurrent mergers both land — serialized, one as version v and the
-    * retried one as v+1 — instead of the loser surfacing
-    * `ConcurrentModificationException` to the pipeline. Retries exhaust to
-    * the original exception (the store is consistent either way; only this
-    * caller's batch is unapplied). The loser's aborted attempt has already
-    * cleaned its gen dirs, so retrying leaks nothing.
+  /** [[merge]] inside [[withCasRetry]]: two concurrent mergers both land,
+    * one as version v and the retried one as v+1.
     */
   def mergeWithRetry(spark: SparkSession, path: String, batch: DataFrame,
                      partCol: String, keyCols: Seq[String],
@@ -3861,20 +3616,11 @@ object SnapshotStore {
                      precedenceCol: Option[String] = None,
                      broadcastRowLimit: Long = Joins.BroadcastRowLimit,
                      maxRetries: Int = 5,
-                     beforeCommit: () => Unit = () => ()): Unit = {
-    var attempt = 0
-    while (true) {
-      try {
-        merge(spark, path, batch, partCol, keyCols, deleteCol,
-          precedenceCol, broadcastRowLimit, beforeCommit)
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+                     beforeCommit: () => Unit = () => ()): Unit =
+    withCasRetry(maxRetries) {
+      merge(spark, path, batch, partCol, keyCols, deleteCol,
+        precedenceCol, broadcastRowLimit, beforeCommit)
     }
-  }
 
   /** Insert-only APPEND fast path: writes ONLY the batch's rows as a new
     * gen and commits a manifest where each touched partition keeps its
@@ -3907,22 +3653,15 @@ object SnapshotStore {
   def append(df: DataFrame, path: String, partCol: String,
              idempotencyKey: Option[String] = None,
              maxRetries: Int = 5,
-             beforeCommit: () => Unit = () => ()): Unit = {
-    var attempt = 0
-    while (true) {
-      try { appendOnce(df, path, partCol, idempotencyKey, beforeCommit); return }
-      catch {
-        // append is THE concurrent high-rate path: a CAS loss against a
-        // concurrent merge/compaction retries against the new head by
-        // default (each attempt re-reads it; with an idempotencyKey the
-        // deterministic gen rewrite is safe, and without one the loser's
-        // gen dirs were already cleaned)
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+             beforeCommit: () => Unit = () => ()): Unit =
+    // append is THE concurrent high-rate path: a CAS loss against a
+    // concurrent merge/compaction retries against the new head by
+    // default (each attempt re-reads it; with an idempotencyKey the
+    // deterministic gen rewrite is safe, and without one the loser's
+    // gen dirs were already cleaned)
+    withCasRetry(maxRetries) {
+      appendOnce(df, path, partCol, idempotencyKey, beforeCommit)
     }
-  }
 
   private def appendOnce(df: DataFrame, path: String, partCol: String,
                          idempotencyKey: Option[String],

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** The DSv2 catalog ([[graft.catalog.GraftCatalog]]): snapshot stores
   * addressed as `graft.<ns>.<table>` in PLAIN Spark SQL. Pins: CREATE
@@ -310,7 +310,7 @@ class GraftCatalogSpec extends SparkSpec {
       (1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0), (4, 'b', 4.0)""")
     val path = storePath("db6", "t")
     // a live DV (MoR delete) + a rename: the two staged-path triggers
-    SnapshotStore.deleteWhereMor(spark, path, col("k") === 4L)
+    SnapshotStore.dml(spark, path, Dml.Delete, col("k") === 4L, mode = Dml.MoR)
     SnapshotStore.renameColumn(spark, path, "v", "price")
     spark.sql(s"UPDATE $cat.db6.t SET price = price * 10 WHERE k <= 2")
     val got = spark.sql(s"SELECT k, price FROM $cat.db6.t ORDER BY k")

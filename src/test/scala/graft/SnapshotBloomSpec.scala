@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Needle files — per-gen bloom filters over declared columns, consulted
   * by readWhere after min/max pruning ([[graft.storage.SnapshotBloom]]).
@@ -135,19 +135,20 @@ class SnapshotBloomSpec extends SparkSpec {
   test("DML rides the needle pass: 'delete THIS id' rewrites only the " +
     "gen that holds it; a needle-miss delete is a provable no-op") {
     val dir = newDir("dml"); needleStore(dir)
-    val noop = SnapshotStore.deleteWhereDetailed(spark, dir,
+    val noop = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("needle") === "NOPE")
     assert(noop.version == 3 && noop.rewrittenDirs == 0,
       s"a needle-miss delete commits nothing, got $noop")
-    val r = SnapshotStore.deleteWhereDetailed(spark, dir,
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("needle") === scramble(1042L))
     assert(r.rewrittenDirs <= 2 && r.rewrittenDirs >= 1,
       s"only the holding gen's slice(s) pay copy-on-write, got $r")
     assert(SnapshotStore.read(spark, dir)
       .filter(col("k") === 1042L).count() == 0)
     assert(SnapshotStore.read(spark, dir).count() == 599)
-    val u = SnapshotStore.updateWhereDetailed(spark, dir,
-      Seq("needle" -> lit("REDACTED")), col("needle") === scramble(7L))
+    val u = SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("needle" -> lit("REDACTED"))),
+      col("needle") === scramble(7L))
     assert(u.rewrittenDirs <= 2,
       s"the needle-confined update stays in the holding gen, got $u")
     assert(SnapshotStore.read(spark, dir)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** COMPOSITE partition keys (r17 — MergeTree's `PARTITION BY (a, b)` /
   * Iceberg's multi-field spec): `partCol = "d,t"` partitions by the
@@ -96,7 +96,7 @@ class SnapshotCompositeSpec extends SparkSpec {
     "matching partitions; assigning any component refuses; MoR delete " +
     "works (sidecar dir key from the composite value)") {
     val dir = newDir("dml"); grid(dir)
-    val r = SnapshotStore.deleteWhereDetailed(spark, dir,
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("t") === "b" && col("v") >= 3L)
     assert(SnapshotStore.read(spark, dir).count() == 16)
     assert(SnapshotStore.read(spark, dir)
@@ -106,8 +106,8 @@ class SnapshotCompositeSpec extends SparkSpec {
         col("v") === 0L))
     assert(e.getMessage.contains("partition column"), e.getMessage)
     // MoR positions annotate composite-keyed fields
-    val mor = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("id") === "d2-a-1")
+    val mor = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("id") === "d2-a-1", mode = Dml.MoR)
     assert(mor.dvRows == 1L && mor.rewrittenDirs == 0, s"got $mor")
     assert(SnapshotStore.read(spark, dir).count() == 15)
     val (cnt, scanned) = SnapshotStore.countWhereDetailed(spark, dir,

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Predicate DML over the snapshot store ([[SnapshotStore.deleteWhere]] /
   * [[SnapshotStore.updateWhere]]): stats-pruned copy-on-write at
@@ -35,7 +35,7 @@ class SnapshotDmlSpec extends SparkSpec {
   test("gen-aligned delete is a pure metadata operation: all-match " +
     "slices leave the manifest unread, no-match slices untouched") {
     val dir = newDir("meta"); quartStore(dir)
-    val r = SnapshotStore.deleteWhereDetailed(spark, dir,
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("k") >= 100L && col("k") < 110L)
     assert(r.version == 4)
     assert(r.droppedDirs == 2 && r.rewrittenDirs == 0,
@@ -52,7 +52,7 @@ class SnapshotDmlSpec extends SparkSpec {
     "stats cannot decide; survivors exact; pred-NULL rows survive") {
     val dir = newDir("cow"); quartStore(dir)
     // 205 splits the last gen: its slices are ambiguous, gens 1-2 no-match
-    val r = SnapshotStore.deleteWhereDetailed(spark, dir, col("k") > 205L)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L)
     assert(r.droppedDirs == 0 && r.rewrittenDirs == 2 && r.keptDirs == 4,
       "only the last gen's two slices rewrite (the touched partitions' " +
         s"four earlier slices copy forward verbatim), got $r")
@@ -74,7 +74,7 @@ class SnapshotDmlSpec extends SparkSpec {
     "a provable no-op commits no version") {
     val dir = newDir("dropall"); quartStore(dir)
     val head = SnapshotStore.headVersion(spark, dir).get
-    val noop = SnapshotStore.deleteWhereDetailed(spark, dir,
+    val noop = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("k") > 10000L)
     assert(noop.version == head &&
       SnapshotStore.headVersion(spark, dir).contains(head),
@@ -93,8 +93,8 @@ class SnapshotDmlSpec extends SparkSpec {
     val before = SnapshotStore.read(spark, dir)
       .filter(col("k") < 100L).select("k", "v")
       .as[(Long, Double)].collect().toMap
-    val r = SnapshotStore.updateWhereDetailed(spark, dir,
-      Seq("v" -> col("v") * 2), col("k") >= 100L && col("k") < 110L)
+    val r = SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("v" -> col("v") * 2)), col("k") >= 100L && col("k") < 110L)
     assert(r.rewrittenDirs == 2 && r.droppedDirs == 0,
       s"only the middle gen's two slices rewrite, got $r")
     val after = SnapshotStore.read(spark, dir)
@@ -163,8 +163,8 @@ class SnapshotDmlSpec extends SparkSpec {
     "logical names over the stable physical layout") {
     val dir = newDir("ren"); quartStore(dir)
     SnapshotStore.renameColumn(spark, dir, "v", "score")
-    val r = SnapshotStore.updateWhereDetailed(spark, dir,
-      Seq("score" -> col("score") * 10), col("k") === 200L)
+    val r = SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("score" -> col("score") * 10)), col("k") === 200L)
     assert(r.rewrittenDirs == 1, s"stats prune under the rename, got $r")
     assert(SnapshotStore.read(spark, dir).filter(col("k") === 200L)
       .select("score").as[Double].head() == 2000.0)
@@ -177,13 +177,13 @@ class SnapshotDmlSpec extends SparkSpec {
     "nothing") {
     val dir = newDir("race"); quartStore(dir)
     val e = intercept[java.util.ConcurrentModificationException](
-      SnapshotStore.deleteWhereDetailed(spark, dir, col("k") > 205L,
+      SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L,
         beforeCommit = () => SnapshotStore.append(
           Seq((900L, "p0", 9.0)).toDF("k", "p", "v"), dir, "p")))
     assert(e.getMessage.contains("lost the race"))
     // the loser's staged gen is cleaned; the interloper's append stands
     assert(SnapshotStore.read(spark, dir).count() == 31)
-    val r = SnapshotStore.deleteWhereDetailed(spark, dir, col("k") > 205L)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L)
     assert(r.version == 5 &&
       SnapshotStore.read(spark, dir).count() == 26,
       "retry against the new head lands (900 > 205 deletes too)")
@@ -249,7 +249,7 @@ class SnapshotDmlSpec extends SparkSpec {
         (0 until 100).map(i => (i.toLong, "p0", i * 1.0)).toDF("k", "p", "v"),
         dir, "p", statsCols = Seq("k"), sortCols = Seq("k"))
       // needle delete: only the [40,59] file can match
-      val r = SnapshotStore.deleteWhereDetailed(spark, dir,
+      val r = SnapshotStore.dml(spark, dir, Dml.Delete,
         col("k") === 50L)
       assert(r.rewrittenDirs == 1 && r.keptFiles == 4 &&
         r.droppedFiles == 0 && r.droppedDirs == 0,
@@ -274,7 +274,7 @@ class SnapshotDmlSpec extends SparkSpec {
       SnapshotStore.write(
         (0 until 100).map(i => (i.toLong, "p0", i * 1.0)).toDF("k", "p", "v"),
         dir2, "p", statsCols = Seq("k"), sortCols = Seq("k"))
-      val r2 = SnapshotStore.deleteWhereDetailed(spark, dir2,
+      val r2 = SnapshotStore.dml(spark, dir2, Dml.Delete,
         col("k") < 25L)
       assert(r2.droppedFiles == 1 && r2.rewrittenDirs == 1 &&
         r2.keptFiles == 3, s"[0,19] drops unread, [20,39] rewrites, got $r2")
@@ -283,8 +283,8 @@ class SnapshotDmlSpec extends SparkSpec {
       // UPDATE against the already-split head: the kept FILE fields are
       // ordinary fields now — the field-level verdict keeps two of them
       // unread and rewrites only the one whose range holds the key
-      val r3 = SnapshotStore.updateWhereDetailed(spark, dir2,
-        Seq("v" -> lit(-1.0)), col("k") === 70L)
+      val r3 = SnapshotStore.dml(spark, dir2,
+        Dml.Update(Seq("v" -> lit(-1.0))), col("k") === 70L)
       assert(r3.keptDirs == 3 && r3.rewrittenDirs == 1,
         s"update must touch one file field only, got $r3")
       val after = SnapshotStore.read(spark, dir2)
@@ -312,8 +312,8 @@ class SnapshotDmlSpec extends SparkSpec {
     // audit flagged k in [500,505): purge from the CANDIDATE only.
     // Fork gens carry blobs (quartStore declares stats), so the main-line
     // slices inside the branch tip prove NoMatch and stay unread.
-    val r = SnapshotStore.deleteBranchWhereDetailed(spark, dir, "cand",
-      col("k") >= 500L && col("k") < 505L)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") >= 500L && col("k") < 505L, Dml.Branch("cand"))
     assert(r.version == 2, s"create=0, append=1, delete stages 2, got $r")
     assert(r.rewrittenDirs == 2 && r.droppedDirs == 0 && r.keptDirs == 6,
       s"only the candidate gen's two slices rewrite, got $r")
@@ -321,12 +321,12 @@ class SnapshotDmlSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, dir).count() == 30,
       "main must be untouched by branch DML")
     // no-op predicate stages NO version
-    val noop = SnapshotStore.deleteBranchWhereDetailed(spark, dir, "cand",
-      col("k") === 99999L)
+    val noop = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") === 99999L, Dml.Branch("cand"))
     assert(noop.version == 2 && noop.rewrittenDirs == 0)
     // in-place redaction, pre-update-row semantics
-    SnapshotStore.updateBranchWhere(spark, dir, "cand",
-      Seq("v" -> lit(0.0)), col("k") >= 507L)
+    SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("v" -> lit(0.0))), col("k") >= 507L, Dml.Branch("cand"))
     assert(SnapshotStore.readBranch(spark, dir, "cand")
       .filter(col("v") === 0.0 && col("k") >= 500L)
       .select("k").as[Long].collect().sorted
@@ -334,13 +334,15 @@ class SnapshotDmlSpec extends SparkSpec {
     // the CHECK gate covers branch UPDATE's modified rows too
     SnapshotStore.addConstraint(spark, dir, "v_nonneg", "v >= 0")
     val e = intercept[IllegalArgumentException](
-      SnapshotStore.updateBranchWhere(spark, dir, "cand",
-        Seq("v" -> lit(-5.0)), col("k") === 506L))
+      SnapshotStore.dml(spark, dir,
+        Dml.Update(Seq("v" -> lit(-5.0))), col("k") === 506L,
+        Dml.Branch("cand")))
     assert(e.getMessage.contains("v_nonneg"))
     // assigning the partition column is refused on branches too
     val e2 = intercept[IllegalArgumentException](
-      SnapshotStore.updateBranchWhere(spark, dir, "cand",
-        Seq("p" -> lit("p9")), col("k") === 506L))
+      SnapshotStore.dml(spark, dir,
+        Dml.Update(Seq("p" -> lit("p9"))), col("k") === 506L,
+        Dml.Branch("cand")))
     assert(e2.getMessage.contains("partition column"))
     // publish lands the FIXED corpus
     val v = SnapshotStore.publishBranch(spark, dir, "cand")

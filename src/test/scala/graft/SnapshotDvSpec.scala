@@ -4,10 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Merge-on-read DML over the snapshot store — deletion vectors
-  * ([[SnapshotStore.deleteWhereMor]] / [[SnapshotStore.updateWhereMor]]):
+  * ([[SnapshotStore.dml]] with `mode = Dml.MoR`):
   * matched rows' (file-key, row-index) positions land in one parquet
   * sidecar and the touched manifest fields gain a DV ref; NO data file
   * is rewritten. Pins: zero-rewrite receipts (gen set on disk unchanged),
@@ -51,8 +51,9 @@ class SnapshotDvSpec extends SparkSpec {
     "read exact, time travel intact") {
     val dir = newDir("basic"); quartStore(dir)
     val before = genDirsOnDisk(dir)
-    val r = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("k") > 205L) // splits the last gen: both its slices ambiguous
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") > 205L, // splits the last gen: both its slices ambiguous
+      mode = Dml.MoR)
     assert(r.version == 4 && r.rewrittenDirs == 0 && r.droppedDirs == 0,
       s"MoR must not rewrite or drop, got $r")
     assert(r.dvDirs == 2 && r.dvRows == 4L,
@@ -73,14 +74,14 @@ class SnapshotDvSpec extends SparkSpec {
   test("gen-aligned MoR delete degrades to the pure-metadata drop — " +
     "no sidecar written; a provable no-op commits no version") {
     val dir = newDir("meta"); quartStore(dir)
-    val r = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("k") >= 100L && col("k") < 110L)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") >= 100L && col("k") < 110L, mode = Dml.MoR)
     assert(r.droppedDirs == 2 && r.dvRows == 0L && r.dvDirs == 0, s"got $r")
     assert(dvDirsOnDisk(dir).isEmpty, "an all-match plan needs no sidecar")
     assert(SnapshotStore.read(spark, dir).count() == 20)
     val head = SnapshotStore.headVersion(spark, dir).get
-    val noop = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("k") > 10000L)
+    val noop = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") > 10000L, mode = Dml.MoR)
     assert(noop.version == head, "provable no-op must not commit")
   }
 
@@ -91,7 +92,8 @@ class SnapshotDvSpec extends SparkSpec {
     SnapshotStore.write((0 until 10).map(i => (i.toLong, s"p${i % 2}", 1.0))
       .toDF("k", "p", "v"), dir, "p", statsCols = Seq("k"))
     val head = SnapshotStore.headVersion(spark, dir).get
-    val r = SnapshotStore.deleteWhereMorDetailed(spark, dir, col("v") < 0.0)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete, col("v") < 0.0,
+      mode = Dml.MoR)
     assert(r.version == head && r.dvRows == 0L,
       s"scan refuted the ambiguous stats — no commit, got $r")
     assert(dvDirsOnDisk(dir).isEmpty, "the empty sidecar must be removed")
@@ -100,14 +102,16 @@ class SnapshotDvSpec extends SparkSpec {
   test("metadata COUNT stays exact after MoR deletes (live = physical " +
     "− DV'd), zero dirs scanned; repeated deletes accumulate refs") {
     val dir = newDir("count"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L) // 4 rows
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, // 4 rows
+      mode = Dml.MoR)
     val (c1, scanned1) = SnapshotStore.countWhereDetailed(spark, dir,
       lit(true))
     assert(c1 == 26L && scanned1 == 0,
       s"count must serve from metadata minus DV counts, got ($c1, $scanned1)")
     // second MoR delete over the SAME slices: positions among survivors
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 205L || // 1 row
-      col("k") === 203L) // 1 row — both in the already-DV'd gen
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 205L || // 1 row
+      col("k") === 203L, // 1 row — both in the already-DV'd gen
+      mode = Dml.MoR)
     val (c2, scanned2) = SnapshotStore.countWhereDetailed(spark, dir,
       lit(true))
     assert(c2 == 24L && scanned2 == 0, s"got ($c2, $scanned2)")
@@ -123,7 +127,7 @@ class SnapshotDvSpec extends SparkSpec {
     val dir = newDir("minmax"); quartStore(dir)
     // delete the max row (k=209) merge-on-read; metadata bounds still
     // say hi=209 — serving them would answer 209
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 209L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 209L, mode = Dml.MoR)
     val row = SnapshotStore.minMaxWhere(spark, dir, Seq("k"), lit(true))
       .collect()(0)
     assert(row.getLong(0) == 0L && row.getLong(1) == 208L,
@@ -133,7 +137,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("copy-on-write DML and merge over a DV'd slice never resurrect " +
     "deleted rows") {
     val dir = newDir("interop"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 204L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 204L, mode = Dml.MoR)
     // CoW delete on the same gen: the rewrite reads THROUGH the DV
     SnapshotStore.deleteWhere(spark, dir, col("k") === 207L)
     assert(SnapshotStore.read(spark, dir).select("k").as[Long]
@@ -143,7 +147,8 @@ class SnapshotDvSpec extends SparkSpec {
     // merge an upsert into the DV'd partition: base carry-forward reads
     // through the DV (204 was in p0; upsert touches p0)
     val dir2 = newDir("interop2"); quartStore(dir2)
-    SnapshotStore.deleteWhereMor(spark, dir2, col("k") === 204L)
+    SnapshotStore.dml(spark, dir2, Dml.Delete, col("k") === 204L,
+      mode = Dml.MoR)
     SnapshotStore.merge(spark, dir2,
       Seq((200L, "p0", -1.0)).toDF("k", "p", "v"), "p", Seq("k"))
     val ks = SnapshotStore.read(spark, dir2)
@@ -157,8 +162,9 @@ class SnapshotDvSpec extends SparkSpec {
     "(swap), read exact, CHECK constraints gate the updated images") {
     val dir = newDir("upd"); quartStore(dir)
     val before = genDirsOnDisk(dir)
-    val r = SnapshotStore.updateWhereMorDetailed(spark, dir,
-      Seq("v" -> (col("v") * 2)), col("k") >= 204L && col("k") <= 206L)
+    val r = SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("v" -> (col("v") * 2))),
+      col("k") >= 204L && col("k") <= 206L, mode = Dml.MoR)
     assert(r.dvRows == 3L && r.rewrittenDirs <= 2,
       s"3 matched rows DV'd, at most one fresh gen per partition, got $r")
     assert((genDirsOnDisk(dir) -- before).size == 1,
@@ -171,8 +177,9 @@ class SnapshotDvSpec extends SparkSpec {
     val d2 = newDir("swap")
     SnapshotStore.write(Seq((1L, "p0", 10.0, 20.0)).toDF("k", "p", "a", "b"),
       d2, "p")
-    SnapshotStore.updateWhereMor(spark, d2,
-      Seq("a" -> col("b"), "b" -> col("a")), col("k") === 1L)
+    SnapshotStore.dml(spark, d2,
+      Dml.Update(Seq("a" -> col("b"), "b" -> col("a"))), col("k") === 1L,
+      mode = Dml.MoR)
     val sw = SnapshotStore.read(spark, d2)
       .select("a", "b").as[(Double, Double)].head()
     assert(sw == ((20.0, 10.0)), s"SET a=b, b=a must SWAP, got $sw")
@@ -181,8 +188,9 @@ class SnapshotDvSpec extends SparkSpec {
     SnapshotStore.write(Seq((1L, "p0", 5.0)).toDF("k", "p", "v"), d3, "p")
     SnapshotStore.addConstraint(spark, d3, "v_pos", "v >= 0")
     val e = intercept[IllegalArgumentException] {
-      SnapshotStore.updateWhereMor(spark, d3,
-        Seq("v" -> (col("v") - 100.0)), col("k") === 1L)
+      SnapshotStore.dml(spark, d3,
+        Dml.Update(Seq("v" -> (col("v") - 100.0))), col("k") === 1L,
+        mode = Dml.MoR)
     }
     assert(e.getMessage.contains("v_pos"))
   }
@@ -190,14 +198,14 @@ class SnapshotDvSpec extends SparkSpec {
   test("changes() across MoR commits: the delete feed is exact; a MoR " +
     "update feeds update_pre+postimage pairs") {
     val dir = newDir("cdc"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, mode = Dml.MoR)
     val del = SnapshotStore.changes(spark, dir, 3, 4, Seq("k"))
       .select("_change_type", "k").as[(String, Long)].collect().sorted
     assert(del.toSeq ==
       Seq(206L, 207L, 208L, 209L).map(("delete", _)).sorted,
       s"got ${del.toSeq}")
-    SnapshotStore.updateWhereMor(spark, dir,
-      Seq("v" -> lit(-1.0)), col("k") === 200L)
+    SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("v" -> lit(-1.0))), col("k") === 200L, mode = Dml.MoR)
     val upd = SnapshotStore.changes(spark, dir, 4, 5, Seq("k"))
       .select("_change_type", "k", "v").as[(String, Long, Double)]
       .collect().sortBy(_._1)
@@ -208,7 +216,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("compaction is the debt collector: a DV'd partition qualifies, " +
     "rewrites clean, and the refs leave the manifest") {
     val dir = newDir("compact"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, mode = Dml.MoR)
     val n = SnapshotStore.compactPartitions(spark, dir, "p")
     assert(n == 2, s"both partitions hold DV'd fields, got $n")
     val head = SnapshotStore.headVersion(spark, dir).get
@@ -226,7 +234,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("retention: a sidecar referenced by any retained field survives " +
     "the sweep; one referenced by nothing ages out") {
     val dir = newDir("gc"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, mode = Dml.MoR)
     SnapshotStore.expire(spark, dir, keep = 1, minAgeMs = 0L)
     assert(dvDirsOnDisk(dir).size == 1,
       "the head references the sidecar — the sweep must keep it")
@@ -248,8 +256,8 @@ class SnapshotDvSpec extends SparkSpec {
     SnapshotStore.write(chunk(0L, 10), dir, "p") // NOTHING declared
     SnapshotStore.append(chunk(100L, 10), dir, "p")
     // ambiguous everywhere (no stats): MoR-delete two rows
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 5L ||
-      col("k") === 105L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 5L ||
+      col("k") === 105L, mode = Dml.MoR)
     SnapshotStore.backfillStats(spark, dir, statsCols = Seq("k"))
     val (c, scanned) = SnapshotStore.countWhereDetailed(spark, dir,
       lit(true))
@@ -265,7 +273,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("history() row counts read through DVs; the MoR version carries " +
     "its own committed_at like any commit") {
     val dir = newDir("hist"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, mode = Dml.MoR)
     val rows = SnapshotStore.history(spark, dir)
       .select("version", "operation", "n_rows")
       .as[(Int, String, Long)].collect().sortBy(_._1)
@@ -284,8 +292,8 @@ class SnapshotDvSpec extends SparkSpec {
       (i.toLong, if (i % 2 == 0) "NOT SPECIFIED" else "a%b c", i * 1.0))
       .toDF("k", "p", "v")
     SnapshotStore.write(df, dir, "p", statsCols = Seq("k"))
-    val r = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("k") === 4L || col("k") === 5L)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") === 4L || col("k") === 5L, mode = Dml.MoR)
     assert(r.dvRows == 2L && r.dvDirs == 2,
       s"both escaped partitions must take their annotation, got $r")
     assert(SnapshotStore.read(spark, dir).select("k").as[Long]
@@ -299,7 +307,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("materializeDvs pays ONLY the debt: DV'd fields rewrite clean, " +
     "every other field copies forward verbatim") {
     val dir = newDir("mat"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") > 205L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") > 205L, mode = Dml.MoR)
     val preFields = SnapshotStore.readManifestDirs(spark, dir,
       SnapshotStore.headVersion(spark, dir).get)
     val untouched = preFields.filter(f => !f.contains("\u0003")).toSet
@@ -334,13 +342,14 @@ class SnapshotDvSpec extends SparkSpec {
     // MoR-purge two flagged candidate rows: the fork's 6 slices prove
     // NoMatch from their blobs (kept unread), only the staged gen's
     // slices take positions
-    val del = SnapshotStore.deleteBranchWhereMorDetailed(spark, dir, "aud",
-      col("k") === 304L || col("k") === 305L)
+    val del = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("k") === 304L || col("k") === 305L, Dml.Branch("aud"), Dml.MoR)
     assert(del.dvRows == 2L && del.rewrittenDirs == 0 && del.keptDirs >= 6,
       s"fork slices must prove NoMatch and stay unread, got $del")
     // MoR-redact one candidate field in place
-    val upd = SnapshotStore.updateBranchWhereMorDetailed(spark, dir, "aud",
-      Seq("v" -> lit(-1.0)), col("k") === 306L)
+    val upd = SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("v" -> lit(-1.0))), col("k") === 306L,
+      Dml.Branch("aud"), Dml.MoR)
     assert(upd.dvRows == 1L, s"got $upd")
     assert(SnapshotStore.headVersion(spark, dir).contains(mainHead),
       "main must not move while the branch is audited")
@@ -378,7 +387,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("readWhere prunes DV'd stores normally and never returns a " +
     "deleted row, even when the predicate targets deleted keys") {
     val dir = newDir("probe"); quartStore(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 207L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 207L, mode = Dml.MoR)
     assert(SnapshotStore.readWhere(spark, dir, col("k") === 207L)
       .count() == 0, "the deleted needle must not be readable")
     assert(SnapshotStore.readWhere(spark, dir, col("k") === 206L)
@@ -403,14 +412,14 @@ class SnapshotDvSpec extends SparkSpec {
         (0 until 100).map(i => (i.toLong, "p0", i * 1.0))
           .toDF("k", "p", "v"),
         dir, "p", statsCols = Seq("k"), sortCols = Seq("k"))
-      val cow = SnapshotStore.deleteWhereDetailed(spark, dir,
+      val cow = SnapshotStore.dml(spark, dir, Dml.Delete,
         col("k") === 50L)
       assert(cow.keptFiles == 4, s"fixture needs the file split, got $cow")
       // MoR delete whose ONLY hits live inside one kept FILE field: the
       // dir-keyed count bug left the field un-annotated (dvRows in the
       // receipt, rows resurrected on read, orphan sidecar)
-      val r = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-        col("k") === 7L || col("k") === 12L)
+      val r = SnapshotStore.dml(spark, dir, Dml.Delete,
+        col("k") === 7L || col("k") === 12L, mode = Dml.MoR)
       assert(r.dvRows == 2L && r.dvDirs == 1 && r.rewrittenDirs == 0,
         s"two positions in one slice dir, zero rewrites, got $r")
       val ks = SnapshotStore.read(spark, dir)
@@ -423,8 +432,8 @@ class SnapshotDvSpec extends SparkSpec {
       assert(cnt == 97L && scanned == 0, s"got ($cnt, $scanned)")
       // MoR UPDATE against another kept file field: the pre-image is
       // DV'd out (no duplicate) and the fresh image appends
-      val r2 = SnapshotStore.updateWhereMorDetailed(spark, dir,
-        Seq("v" -> lit(-5.0)), col("k") === 25L)
+      val r2 = SnapshotStore.dml(spark, dir,
+        Dml.Update(Seq("v" -> lit(-5.0))), col("k") === 25L, mode = Dml.MoR)
       assert(r2.dvRows == 1L, s"got $r2")
       val after = SnapshotStore.read(spark, dir)
       assert(after.filter(col("k") === 25L).select("v").as[Double]

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** PARTITION-SPEC EVOLUTION (r17 — Iceberg partition evolution,
   * re-derived): `evolvePartitionSpec` / `graft_evolve_partition` makes
@@ -87,8 +87,8 @@ class SnapshotEvolvePartitionSpec extends SparkSpec {
     assert(got.select("id").distinct().count() == 16,
       "a cross-era rewrite must not duplicate surviving rows")
     // MoR delete hitting ONLY an era-1 slice
-    val mor = SnapshotStore.deleteWhereMorDetailed(spark, dir,
-      col("id") === "d1-3")
+    val mor = SnapshotStore.dml(spark, dir, Dml.Delete,
+      col("id") === "d1-3", mode = Dml.MoR)
     assert(mor.dvRows == 1L && mor.rewrittenDirs == 0, s"got $mor")
     assert(SnapshotStore.read(spark, dir).filter(col("id") === "d1-3")
       .count() == 0, "the old-era MoR position must actually delete")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** The read-only store integrity report ([[SnapshotStore.fsck]] /
   * `graft_fsck`): a healthy store reports zero rows; manual file surgery
@@ -29,7 +29,7 @@ class SnapshotFsckSpec extends SparkSpec {
   test("a healthy store reports ZERO rows — through DML, DVs, branches, " +
     "compaction and expire") {
     val dir = newDir("healthy"); store(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 104L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 104L, mode = Dml.MoR)
     SnapshotStore.branchCreate(spark, dir, "aud")
     SnapshotStore.updateWhere(spark, dir, Seq("v" -> (col("v") + 1)),
       col("k") === 2L)
@@ -44,7 +44,7 @@ class SnapshotFsckSpec extends SparkSpec {
     "dangling_ref, a deleted DV sidecar a dangling_dv, an unreferenced " +
     "dir an orphan — and fsck never mutates") {
     val dir = newDir("broken"); store(dir)
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 104L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 104L, mode = Dml.MoR)
     val data = new java.io.File(s"$dir/data")
     def rmRf(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmRf); f.delete()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 import graft.storage.SnapshotMergeInto.{DeleteRow, UpdateAll, UpdateSet,
   WhenMatched, WhenNotMatched, WhenNotMatchedBySource}
 
@@ -39,7 +39,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     // second clause → delete), k=500 (new → insert)
     val src = Seq((100L, "p0", 1000.0), (101L, "p1", -1.0),
       (500L, "p0", 500.0)).toDF("k", "p", "v")
-    val r = SnapshotStore.mergeIntoDetailed(spark, dir, src, Seq("k"),
+    val r = SnapshotStore.mergeInto(spark, dir, src, Seq("k"),
       matched = Seq(
         WhenMatched(Some(col("s.v") > col("t.v")),
           UpdateSet(Seq("v" -> col("s.v")))),
@@ -87,7 +87,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     // their fields must copy forward unread.
     val src = (0 until 6).map(i => (200L + i, "2", 0.0))
       .toDF("k", "p", "v")
-    val r = SnapshotStore.mergeIntoDetailed(spark, dir, src, Seq("k"),
+    val r = SnapshotStore.mergeInto(spark, dir, src, Seq("k"),
       matched = Seq(WhenMatched(None, UpdateSet(Seq("v" -> lit(-1.0))))),
       notMatchedBySource = Seq(
         WhenNotMatchedBySource(Some(col("k") >= 200L), DeleteRow)))
@@ -139,7 +139,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     assert(e5.getMessage.contains("partition column"))
     // no clause fires: matched cond FALSE on the one matching row
     val head = SnapshotStore.headVersion(spark, dir).get
-    val r = SnapshotStore.mergeIntoDetailed(spark, dir, src, Seq("k"),
+    val r = SnapshotStore.mergeInto(spark, dir, src, Seq("k"),
       matched = Seq(WhenMatched(Some(lit(false)), DeleteRow)))
     assert(r.version == head && r.copied >= 1,
       s"nothing changed — no commit, got $r")
@@ -161,7 +161,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     // NULL condition: t.v is NULL for k=2 -> the clause does NOT apply,
     // the row copies through
     val src = Seq((2L, "p0", 7.0)).toDF("k", "p", "v")
-    val r = SnapshotStore.mergeIntoDetailed(spark, dir, src, Seq("k"),
+    val r = SnapshotStore.mergeInto(spark, dir, src, Seq("k"),
       matched = Seq(WhenMatched(Some(col("t.v") > 0), UpdateAll)))
     assert(r.updated == 0 && r.copied >= 1, s"got $r")
     assert(SnapshotStore.read(spark, dir)
@@ -172,7 +172,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     "inserts; DV'd slices read through their vectors (no resurrection)") {
     val dir = newDir("cdc"); quartStore(dir)
     // DV-delete a row of the slice the merge will touch, then merge
-    SnapshotStore.deleteWhereMor(spark, dir, col("k") === 104L)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 104L, mode = Dml.MoR)
     val src = Seq((100L, "p0", -5.0), (999L, "p1", 9.0))
       .toDF("k", "p", "v")
     val v0 = SnapshotStore.headVersion(spark, dir).get
@@ -218,7 +218,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     val before = gens
     val src = Seq((100L, "p0", 1000.0), (101L, "p1", -1.0),
       (500L, "p0", 500.0)).toDF("k", "p", "v")
-    val r = SnapshotStore.mergeIntoMorDetailed(spark, dir, src, Seq("k"),
+    val r = SnapshotStore.mergeIntoMor(spark, dir, src, Seq("k"),
       matched = Seq(
         WhenMatched(Some(col("s.v") > col("t.v")),
           UpdateSet(Seq("v" -> col("s.v")))),
@@ -250,7 +250,7 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     // a reconcile that provably changes nothing commits NO version and
     // strands no sidecar
     val head = SnapshotStore.headVersion(spark, dir).get
-    val noop = SnapshotStore.mergeIntoMorDetailed(spark, dir,
+    val noop = SnapshotStore.mergeIntoMor(spark, dir,
       Seq((100L, "p0", 1000.0)).toDF("k", "p", "v"), Seq("k"),
       matched = Seq(WhenMatched(Some(col("s.v") > col("t.v")),
         UpdateSet(Seq("v" -> col("s.v"))))))
@@ -340,11 +340,11 @@ class SnapshotMergeIntoSpec extends SparkSpec {
               UpdateSet(Seq("v" -> col("s.v")))),
             WhenMatched(None, DeleteRow))
           val r =
-            if (mor) SnapshotStore.mergeIntoMorDetailed(spark, dir, src,
+            if (mor) SnapshotStore.mergeIntoMor(spark, dir, src,
               Seq("k"), matched = m,
               notMatched = Some(WhenNotMatched(None)),
               notMatchedBySource = nmbs)
-            else SnapshotStore.mergeIntoDetailed(spark, dir, src,
+            else SnapshotStore.mergeInto(spark, dir, src,
               Seq("k"), matched = m,
               notMatched = Some(WhenNotMatched(None)),
               notMatchedBySource = nmbs)

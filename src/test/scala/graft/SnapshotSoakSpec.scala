@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Randomized multi-writer soak over [[SnapshotStore]] — the composition
   * proof on top of the pairwise `beforeCommit` race seams: N concurrent
@@ -198,16 +198,20 @@ class SnapshotSoakSpec extends SparkSpec {
                     .toDF("k", "p", "v"),
                   dir, "p", idempotencyKey = Some(s"w$w-victim$i"),
                   maxRetries = 50)
-                SnapshotStore.deleteWhereWithRetry(spark, dir,
-                  col("k") === victim, maxRetries = 50)
+                SnapshotStore.withCasRetry(50) {
+                  SnapshotStore.dml(spark, dir, Dml.Delete,
+                    col("k") === victim)
+                }
               case 7 => // predicate UPDATE of the writer's OWN merged key
                 // (per-writer sequential, so the final value is the
                 // writer's last merge-or-update — schedule-independent)
                 if (lastMerged(w).isDefined) {
                   val v = i * 100.0 + w
-                  SnapshotStore.updateWhereWithRetry(spark, dir,
-                    Seq("v" -> org.apache.spark.sql.functions.lit(v)),
-                    col("k") === w.toLong, maxRetries = 50)
+                  SnapshotStore.withCasRetry(50) {
+                    SnapshotStore.dml(spark, dir,
+                      Dml.Update(Seq("v" -> lit(v))),
+                      col("k") === w.toLong)
+                  }
                   lastMerged(w) = Some(v)
                 }
               case 9 => // MERGE-ON-READ delete under contention: the
@@ -220,14 +224,18 @@ class SnapshotSoakSpec extends SparkSpec {
                     .toDF("k", "p", "v"),
                   dir, "p", idempotencyKey = Some(s"w$w-morv$i"),
                   maxRetries = 50)
-                SnapshotStore.deleteWhereMorWithRetry(spark, dir,
-                  col("k") === mv, maxRetries = 50)
+                SnapshotStore.withCasRetry(50) {
+                  SnapshotStore.dml(spark, dir, Dml.Delete,
+                    col("k") === mv, mode = Dml.MoR)
+                }
               case 10 => // MERGE-ON-READ update of the writer's OWN key
                 if (lastMerged(w).isDefined) {
                   val v = i * 100.0 + w
-                  SnapshotStore.updateWhereMorWithRetry(spark, dir,
-                    Seq("v" -> org.apache.spark.sql.functions.lit(v)),
-                    col("k") === w.toLong, maxRetries = 50)
+                  SnapshotStore.withCasRetry(50) {
+                    SnapshotStore.dml(spark, dir,
+                      Dml.Update(Seq("v" -> lit(v))),
+                      col("k") === w.toLong, mode = Dml.MoR)
+                  }
                   lastMerged(w) = Some(v)
                 }
               case 8 => // CHECK-constraint lifecycle under contention: a
