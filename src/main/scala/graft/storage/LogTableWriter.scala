@@ -137,10 +137,10 @@ object LogTableWriter {
     * day. Here the compacted generation carries a footer-derived
     * `(min,max) logdatetime` per file in its `_filestats-<genDir>` sidecar,
     * so read planning drops non-overlapping generation files WITHOUT
-    * opening them. The un-compacted root tail has no stats (bounded by the
-    * next compaction) and stays fully listed; the range predicate is also
-    * applied as a filter, so results are exact regardless of stats.
-    * Inclusive bounds.
+    * opening them. The un-compacted root tail is skipped the same way
+    * through the `_tailstats-*` sidecars [[append]] writes; a tail file no
+    * sidecar covers is kept. The range predicate is also applied as a
+    * filter, so results are exact regardless of stats. Inclusive bounds.
     */
   def readRange(spark: SparkSession, path: String,
                 from: java.sql.Timestamp, to: java.sql.Timestamp): DataFrame = {
@@ -157,76 +157,76 @@ object LogTableWriter {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
-    def rootFiles(absorbed: Set[String]): Map[String, String] =
-      dataFiles(fs, root).view
-        .filterKeys(rel => !absorbed.contains(rel))
-        .mapValues(_.toString).toMap
-    // Tail-file skipping: stats from `_tailstats-*` sidecars ([[append]]);
-    // a file no sidecar covers (foreign writer, pre-stats append) is
-    // conservatively kept. The range filter in readRange makes results
-    // exact regardless.
-    def pruneTail(live: Map[String, String]): Seq[String] = rangeUs match {
-      case Some((fromUs, toUs)) =>
-        val stats = readTailStats(fs, root)
-        live.collect {
-          case (rel, p) if stats.get(rel)
-            .forall { case (mn, mx) => mx >= fromUs && mn <= toUs } => p
-        }.toSeq
-      case None => live.values.toSeq
+    def overlaps(mn: Long, mx: Long): Boolean =
+      rangeUs.forall { case (fromUs, toUs) => mx >= fromUs && mn <= toUs }
+    // Every relation gets its schema from footers read here, on the driver,
+    // by the rule Spark's inference applies — so planning runs no Spark job
+    // (inference would launch one per relation, even for a single footer).
+    // `skip`: every file is skipped; keep the view's schema, read no rows.
+    def scan(base: org.apache.hadoop.fs.Path,
+             paths: Seq[org.apache.hadoop.fs.Path],
+             schemaFiles: Seq[org.apache.hadoop.fs.Path],
+             skip: Boolean): DataFrame = {
+      val schema = org.apache.spark.sql.graftshim.StreamingBatchShim
+        .parquetSchema(spark, footers(spark, schemaFiles).map(_.getFileMetaData))
+      val df = spark.read.schema(schema)
+        .option("basePath", base.toString).parquet(paths.map(_.toString): _*)
+      if (skip) df.filter(lit(false)) else df
     }
-    // mergeSchema on the ROOT tail only: the reference's schema-evolution
-    // contract is additive append-at-the-end columns (`README.md:49`), so
-    // un-compacted appends may carry columns older files lack. The tail is
-    // bounded (compaction absorbs it), so the extra footer reads are cheap;
-    // a generation dir is one self-consistent rewrite and needs no merge.
-    def readTail(files: Seq[String]): DataFrame =
-      spark.read.option("basePath", path).option("mergeSchema", "true")
-        .parquet(files: _*)
+    // The root tail (files no manifest absorbed), skipped through the
+    // `_tailstats-*` sidecars of [[append]]; a file no sidecar covers
+    // (foreign writer, pre-stats append) is conservatively kept. Its schema
+    // merges EVERY live file's footer: the reference's evolution contract is
+    // additive append-at-the-end columns (`README.md:49`), so appends may
+    // carry columns older files lack, and the view's shape must not depend
+    // on the window. The tail is bounded (compaction absorbs it).
+    def tail(absorbed: Set[String]): Option[DataFrame] = {
+      val live = dataFiles(fs, root).filter { case (rel, _) => !absorbed(rel) }
+      val stats = if (rangeUs.isEmpty) Map.empty[String, (Long, Long)]
+                  else readTailStats(fs, root)
+      val kept = live.filter { case (rel, _) =>
+        stats.get(rel).forall { case (mn, mx) => overlaps(mn, mx) } }
+      if (live.isEmpty) None
+      else Some(scan(root, (if (kept.isEmpty) live else kept).values.toSeq,
+        live.values.toSeq, skip = kept.isEmpty))
+    }
     newestManifest(fs, root) match {
-      case None =>
-        val live = rootFiles(Set.empty)
-        if (live.isEmpty) spark.read.parquet(path) // empty store: native error
-        else {
-          val kept = pruneTail(live)
-          // all files skipped: keep the full view's schema, read no rows
-          if (kept.isEmpty) readTail(live.values.toSeq).filter(lit(false))
-          else readTail(kept)
-        }
+      case None => tail(Set.empty)
+        .getOrElse(spark.read.parquet(path)) // empty store: native error
       case Some((_, genDir, absorbed)) =>
+        // A generation dir is one self-consistent rewrite: one footer gives
+        // its schema, the one file non-merge inference reads.
         val genPath = new org.apache.hadoop.fs.Path(root, genDir)
-        val fullGen = spark.read.parquet(genPath.toString)
-        val gen = rangeUs match {
-          case Some((fromUs, toUs)) =>
-            readFileStats(fs, root, genDir) match {
-              case Some(stats) =>
-                val overlapping = stats.collect {
-                  case (rel, mn, mx) if mx >= fromUs && mn <= toUs =>
-                    new org.apache.hadoop.fs.Path(genPath, rel).toString
-                }
-                if (overlapping.isEmpty) fullGen.filter(lit(false))
-                else spark.read.option("basePath", genPath.toString)
-                  .parquet(overlapping: _*)
-              case None => fullGen // pre-stats generation: no skipping
-            }
-          case None => fullGen
+        def genFile(rel: String) = new org.apache.hadoop.fs.Path(genPath, rel)
+        val gen = rangeUs.flatMap(_ => readFileStats(fs, root, genDir)) match {
+          case Some(stats) =>
+            val overlapping = stats.collect {
+              case (rel, mn, mx) if overlaps(mn, mx) => genFile(rel) }
+            val files = if (overlapping.nonEmpty) overlapping
+                        else Seq(genFile(stats.head._1))
+            scan(genPath, files, files.take(1), skip = overlapping.isEmpty)
+          // unranged read or pre-stats generation: the whole directory
+          case None => scan(genPath, Seq(genPath),
+            Seq(dataFiles(fs, genPath).minBy(_._1)._2), skip = false)
         }
-        val live = rootFiles(absorbed)
-        if (live.isEmpty) gen
-        else {
-          val kept = pruneTail(live)
-          // allowMissingColumns: pre-evolution generation vs evolved tail
-          // (or vice versa after compaction) — absent columns read as NULL,
-          // the same semantics ClickHouse gives added columns on old parts.
-          // A fully-skipped tail still contributes its SCHEMA (filter-false
-          // costs footer reads at planning, no data IO) so the view's shape
-          // can't depend on the query's time window.
-          val tail =
-            if (kept.isEmpty) readTail(live.values.toSeq).filter(lit(false))
-            else readTail(kept)
-          gen.unionByName(tail, allowMissingColumns = true)
-        }
+        // allowMissingColumns: pre-evolution generation vs evolved tail
+        // (or vice versa after compaction) — absent columns read as NULL,
+        // the same semantics ClickHouse gives added columns on old parts.
+        tail(absorbed).fold(gen)(gen.unionByName(_, allowMissingColumns = true))
     }
   }
+
+  /** Retention (the `ALTER TABLE … DROP PARTITION` / MergeTree-TTL analog,
+    * reference R11): drop every daily partition strictly older than
+    * `cutoff`. Expressed as a compaction that retains only the live range,
+    * so expiry inherits the manifest commit protocol for free — readers see
+    * the old view until the new manifest lands, then the expired days are
+    * gone and their bytes are GC'd with the previous generation.
+    */
+  def expire(spark: SparkSession, path: String,
+             cutoff: java.time.LocalDate): Unit =
+    compact(spark, path,
+      retain = col("logdate") >= lit(java.sql.Date.valueOf(cutoff)))
 
   /** Compacts a streaming-written store: micro-batch appends leave one file
     * per batch per day (the small-file problem — at 100 TB, file-listing and
@@ -252,18 +252,6 @@ object LogTableWriter {
     * real thing (Iceberg/Delta) — the read/commit protocol here is the same
     * shape.
     */
-  /** Retention (the `ALTER TABLE … DROP PARTITION` / MergeTree-TTL analog,
-    * reference R11): drop every daily partition strictly older than
-    * `cutoff`. Expressed as a compaction that retains only the live range,
-    * so expiry inherits the manifest commit protocol for free — readers see
-    * the old view until the new manifest lands, then the expired days are
-    * gone and their bytes are GC'd with the previous generation.
-    */
-  def expire(spark: SparkSession, path: String,
-             cutoff: java.time.LocalDate): Unit =
-    compact(spark, path,
-      retain = col("logdate") >= lit(java.sql.Date.valueOf(cutoff)))
-
   def compact(spark: SparkSession, path: String,
               maxRecordsPerFile: Long = 8L * 1024 * 1024,
               beforeSwap: () => Unit = () => (),
@@ -368,14 +356,6 @@ object LogTableWriter {
     }
   }
 
-  /** Writes `_filestats-<genDir>`: one `relpath\tminUs\tmaxUs` line per data
-    * file of the generation, min/max taken from the parquet footers'
-    * INT64 (TIMESTAMP_MICROS) `logdatetime` column statistics — metadata-only
-    * IO, no row reads. A file whose footer lacks usable stats (absent
-    * column, all-null, non-INT64 encoding) records the FULL range, i.e. is
-    * conservatively never skipped. Stores without a `logdatetime` column
-    * write no sidecar at all, and `readRange` falls back to the plain view.
-    */
   /** One `relpath\tminUs\tmaxUs` line per file, min/max from the parquet
     * footers' INT64 (TIMESTAMP_MICROS) `logdatetime` column statistics —
     * metadata-only IO, no row reads. A file whose footer lacks usable stats
@@ -386,35 +366,53 @@ object LogTableWriter {
                                files: Seq[(String, org.apache.hadoop.fs.Path)])
       : Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { case (rel, p) =>
+    files.zip(footers(spark, files.map(_._2))).map { case ((rel, _), footer) =>
       var mn = Long.MaxValue
       var mx = Long.MinValue
       var usable = true
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        if (blocks.isEmpty) usable = false
-        blocks.foreach { b =>
-          b.getColumns.asScala
-            .find(_.getPath.toDotString == "logdatetime") match {
-            case Some(c) => c.getStatistics match {
-              case st: org.apache.parquet.column.statistics.LongStatistics
-                  if !st.isEmpty && st.hasNonNullValue =>
-                mn = math.min(mn, st.getMin)
-                mx = math.max(mx, st.getMax)
-              case _ => usable = false
-            }
-            case None => usable = false
+      val blocks = footer.getBlocks.asScala
+      if (blocks.isEmpty) usable = false
+      blocks.foreach { b =>
+        b.getColumns.asScala
+          .find(_.getPath.toDotString == "logdatetime") match {
+          case Some(c) => c.getStatistics match {
+            case st: org.apache.parquet.column.statistics.LongStatistics
+                if !st.isEmpty && st.hasNonNullValue =>
+              mn = math.min(mn, st.getMin)
+              mx = math.max(mx, st.getMax)
+            case _ => usable = false
           }
+          case None => usable = false
         }
-      } finally reader.close()
+      }
       if (!usable) { mn = Long.MinValue; mx = Long.MaxValue }
       s"$rel\t$mn\t$mx"
     }
   }
 
+  /** Each file's parquet footer, read on the driver — metadata IO only, no
+    * row reads. The one place this log store opens footers: stats sidecars
+    * and read-time schemas both come from here.
+    */
+  private def footers(spark: SparkSession,
+                      files: Seq[org.apache.hadoop.fs.Path])
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { p =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try reader.getFooter finally reader.close()
+    }
+  }
+
+  /** Writes `_filestats-<genDir>`: one `relpath\tminUs\tmaxUs` line per data
+    * file of the generation, min/max taken from the parquet footers'
+    * INT64 (TIMESTAMP_MICROS) `logdatetime` column statistics — metadata-only
+    * IO, no row reads. A file whose footer lacks usable stats (absent
+    * column, all-null, non-INT64 encoding) records the FULL range, i.e. is
+    * conservatively never skipped. Stores without a `logdatetime` column
+    * write no sidecar at all, and `readRange` falls back to the plain view.
+    */
   private def writeFileStats(spark: SparkSession,
                              fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path,

@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `org.apache.spark.sql` subpackage purely to reach them, the same pattern
   * every out-of-tree source provider uses (Spark's own file/Kafka sources
   * call the equivalent `internalCreateDataFrame(..., isStreaming = true)`).
-  * Nothing else of graft lives outside the `graft` namespace, and nothing
-  * here depends on behavior beyond the public v1 `Source` contract.
+  * Nothing else of graft lives outside the `graft` namespace. The later
+  * members reach the same package's other internals: a Column's
+  * expression, and parquet schema inference for the log store's reads.
   */
 object StreamingBatchShim {
 
@@ -53,5 +54,44 @@ object StreamingBatchShim {
   def expressionOf(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** The data schema Spark's parquet inference derives from `footers`
+    * (`ParquetFileFormat.mergeSchemasInParallel`), computed here from
+    * footers the caller already read on the driver, so no inference job
+    * runs. Same rule: a footer's `org.apache.spark.sql.parquet.row.metadata`
+    * JSON when present, else its parquet schema through
+    * `ParquetToSparkSchemaConverter` under the session conf; the schemas
+    * then fold left with `StructType.merge` under the session's case
+    * sensitivity. The session conf and `merge` are `private[sql]`.
+    */
+  def parquetSchema(
+      session: org.apache.spark.sql.SparkSession,
+      footers: Seq[org.apache.parquet.hadoop.metadata.FileMetaData])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val conf = session.asInstanceOf[SparkSession].sessionState.conf
+    val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation)
+    val metadataKey = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetReadSupport.SPARK_METADATA_KEY
+    footers.map { f =>
+      Option(f.getKeyValueMetaData.get(metadataKey))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+        .getOrElse(converter.convert(f.getSchema))
+    }.reduceLeft { (merged, next) =>
+      try merged.merge(next, conf.caseSensitiveAnalysis)
+      catch {
+        case e: org.apache.spark.SparkException => throw org.apache.spark.sql
+          .errors.QueryExecutionErrors.failedMergingSchemaError(merged, next, e)
+      }
+    }
+  }
 
 }

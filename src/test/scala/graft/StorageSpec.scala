@@ -380,26 +380,125 @@ class StorageSpec extends SparkSpec {
 
   test("additive schema evolution: evolved appends read and compact cleanly") {
     val tmp = Files.createTempDirectory("graft_evolve").toString
-    val one = graft.operators.AccessLog.project(lines.toDF("line"))
-    one.write.mode("append").partitionBy("logdate").parquet(tmp)
+    // `lines` (6-8 Apr) moved to start on day `d`, one day per line date
+    def daysFrom(d: Int) = graft.operators.AccessLog.project(lines.map(l =>
+      Seq(6, 7, 8).foldLeft(l)((s, k) =>
+        s.replace(f"[$k%02d/", f"[${d + k - 6}%02d/"))).toDF("line"))
+    val one = daysFrom(6)
+    LogTableWriter.append(one, tmp)
     // the reference's evolution contract (README.md:49): new columns append
     // at the end; old rows must read them as NULL
-    one.withColumn("geo_country", lit("US"))
-      .write.mode("append").partitionBy("logdate").parquet(tmp)
+    LogTableWriter.append(daysFrom(10).withColumn("geo_country", lit("US")), tmp)
+    // At every stage the view's schema, unranged and under each window,
+    // equals what Spark's own mergeSchema inference gives the view's files
+    // (one read per base dir, composed as the view composes them). Each
+    // window covers one append's days, so every stage has a window that
+    // skips every tail file and one that overlaps no generation file, and
+    // before compaction `apr7` keeps only pre-evolution tail files.
+    val windows = Seq(("07", "07"), ("10", "12"), ("14", "16")).map {
+      case (a, b) => (java.sql.Timestamp.valueOf(s"2020-04-$a 00:00:00"),
+        java.sql.Timestamp.valueOf(s"2020-04-$b 23:59:59")) }
+    def ranged(w: Int) =
+      LogTableWriter.readRange(spark, tmp, windows(w)._1, windows(w)._2)
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => (f.name, f.dataType, f.nullable))
+    def assertInferredSchema(): Unit = {
+      val files = Files.walk(java.nio.file.Paths.get(tmp)).toArray.toSeq
+        .map(_.toString).filter(f => f.endsWith(".parquet") && !f.contains("/."))
+      val (gen, tail) = files.partition(_.contains("/gen-"))
+      def merged(fs: Seq[String], base: String) = spark.read
+        .option("mergeSchema", "true").option("basePath", base).parquet(fs: _*)
+      val want = (gen, tail) match {
+        case (Seq(), t) => merged(t, tmp)
+        case (g, Seq()) => merged(g, g.head.take(g.head.indexOf("/logdate=")))
+        case (g, t) => merged(g, g.head.take(g.head.indexOf("/logdate=")))
+          .unionByName(merged(t, tmp), allowMissingColumns = true)
+      }
+      (LogTableWriter.read(spark, tmp) +: windows.indices.map(ranged))
+        .foreach(v => assert(fields(v.schema) == fields(want.schema)))
+    }
     val before = LogTableWriter.read(spark, tmp)
     assert(before.columns.contains("geo_country"))
     assert(before.filter(col("geo_country").isNull).count() == one.count())
     assert(before.filter(col("geo_country") === "US").count() == one.count())
+    assertInferredSchema()
     // compaction rewrites the union schema into the new generation...
     LogTableWriter.compact(spark, tmp)
     val mid = LogTableWriter.read(spark, tmp)
     assert(mid.count() == 2 * one.count() &&
       mid.columns.contains("geo_country"))
+    assertInferredSchema()
     // ...and a PRE-evolution-shaped append arriving later still reads
-    one.write.mode("append").partitionBy("logdate").parquet(tmp)
+    LogTableWriter.append(daysFrom(14), tmp)
     val after = LogTableWriter.read(spark, tmp)
     assert(after.count() == 3 * one.count())
     assert(after.filter(col("geo_country").isNull).count() == 2 * one.count())
+    assert(Seq(0, 1).forall(w =>
+      ranged(w).inputFiles.forall(_.contains("/gen-"))))
+    assert(ranged(2).inputFiles.forall(!_.contains("/gen-")))
+    assertInferredSchema()
+  }
+
+  test("read and readRange plan without launching a Spark job") {
+    val tmp = Files.createTempDirectory("graft_plan_jobs").toString
+    def slice(startH: Int): org.apache.spark.sql.DataFrame =
+      (0 until 240).map { i =>
+        (java.sql.Date.valueOf("2020-04-06"),
+          java.sql.Timestamp.valueOf(java.time.LocalDateTime
+            .of(2020, 4, 6, 0, 0, 0).plusSeconds(startH * 3600L + i * 90L)),
+          (startH * 240 + i).toLong)
+      }.toDF("logdate", "logdatetime", "v")
+    LogTableWriter.append(slice(0), tmp)
+    LogTableWriter.append(slice(6), tmp)
+    LogTableWriter.compact(spark, tmp, maxRecordsPerFile = 240)
+    LogTableWriter.append(slice(12), tmp)
+    LogTableWriter.append(slice(18), tmp)
+    assert(new java.io.File(tmp).listFiles()
+      .count(_.getName.startsWith("_tailstats-")) == 2)
+    def window(from: String, to: String) = LogTableWriter.readRange(spark,
+      tmp, java.sql.Timestamp.valueOf(from), java.sql.Timestamp.valueOf(to))
+    // Planning builds the DataFrames only: no action runs. Schema inference
+    // would launch one job per relation; footers read on the driver none.
+    val jobs = jobsLaunchedBy {
+      window("2020-04-06 07:00:00", "2020-04-06 13:00:00") // gen + tail file
+      window("2020-04-06 13:00:00", "2020-04-06 14:00:00") // tail only
+      window("2020-04-06 01:00:00", "2020-04-06 02:00:00") // gen only
+      window("2021-01-01 00:00:00", "2021-01-02 00:00:00") // nothing
+      LogTableWriter.read(spark, tmp)
+    }
+    assert(jobs == 0, s"planning launched $jobs Spark job(s)")
+    // and the planned reads are still exact
+    assert(window("2020-04-06 07:00:00", "2020-04-06 13:00:00").count() == 241)
+    assert(LogTableWriter.read(spark, tmp).count() == 960)
+  }
+
+  /** Spark jobs `body` launches from this thread, counted by job group. A
+    * drain job in a second group marks the end: listener events arrive in
+    * order, so once its start is seen every earlier job start has been too.
+    */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"plan-${java.util.UUID.randomUUID}"
+    val count = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => count.incrementAndGet()
+          case Some(g) if g == s"$group-drain" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "planning")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      count.get
+    } finally sc.removeSparkListener(listener)
   }
 
   test("ingest dead-letters corrupt lines instead of storing empty rows") {
