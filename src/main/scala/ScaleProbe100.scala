@@ -10,34 +10,26 @@ import graft.storage.Dml
   * Each flagship runs at 1×, 10×, and 100× sf0.1 IN THAT ORDER (cold JIT
   * inflates the first rung — judge the 10×→100× RATIO, printed per op).
   * Linear-work operators should print ratio ≈ 10; the banded near-dup
-  * candidate pass is pairs-linear by design and is probed in the 10×
-  * sibling only.
+  * candidate pass is pairs-linear by design and is probed at 1× and 10×
+  * only, in the `tenx` section with the other operators that have no 100×
+  * rung.
   *
   * Run with `SPARK_DRIVER_MEM=48g` — the 100× corpus (500k docs, 200k
   * vectors, 60M lineitem) is built in-JVM and written to tmp parquet.
   *
   * Args select sections
   * (`segments lm vidx bucketed spool spoolmulti incr boiler zorder ndstore
-  * merge profile snapshot changes manifest skip dml branch evolve`); no args
-  * runs everything. Corpus dirs build lazily, so a single-section run
-  * only pays for the corpora that section reads.
+  * merge profile snapshot changes manifest skip dml branch evolve tenx`);
+  * no args runs everything. Corpus dirs build lazily, so a single-section
+  * run only pays for the corpora that section reads.
   */
 object ScaleProbe100 {
   def main(args: Array[String]): Unit = {
     val sections = args.map(_.toLowerCase).toSet
     def on(s: String): Boolean = sections.isEmpty || sections(s)
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.{DataFrame, SparkSession}
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    import org.apache.spark.sql.DataFrame
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
     val walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -104,13 +96,14 @@ object ScaleProbe100 {
         ratios(s"${op}_10x_to_100x") = b / a
         println(f"PROBE ${op}_ratio_10x_to_100x ${b / a}%.2f (linear = 10)")
       }
+    def noop(df: DataFrame): Unit =
+      df.write.mode("overwrite").format("noop").save()
     def runQ(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
+      noop(SparkEntry.queries(name)(spark, dir))
 
     // ---- replicated corpora (near-dup version-prefixed copies, ids offset
-    // so every copy is a distinct row; the SAME generator as the 10× probe
-    // so rungs are comparable) ----
+    // so every copy is a distinct row; every section's rungs share this
+    // generator so they are comparable) ----
     val docs = Tables.table(spark, sf, "documents")
     def docsX(n: Int): DataFrame = (0 until n).map { k =>
       docs.select((col("doc_id") + k * 1000000L).as("doc_id"),
@@ -233,9 +226,9 @@ object ScaleProbe100 {
       }
     }
 
-    // 5. durable spool transport at 100× the 10×-probe frame count: 20M
-    // syslog frames over one TCP connection through the hsync'd rolling
-    // spool until every byte is rolled + renamed VISIBLE.
+    // 5. durable spool transport at 1×/10×/100× (200k/2M/20M syslog frames)
+    // over one TCP connection through the hsync'd rolling spool until every
+    // byte is rolled + renamed VISIBLE.
     if (on("spool")) {
       walls("sentinel_spool") = cleanSentinel("spool")
       val spoolDir = java.nio.file.Files
@@ -1743,6 +1736,219 @@ object ScaleProbe100 {
           println(f"PROBE branch_rebase_vs_restage_100k ${a / b}%.2f " +
             "(metadata-only rebase vs one re-staging appendBranch at " +
             "100k partitions — the recovery rebase replaces)")
+        }
+      }
+    }
+
+    // 14. the 1×→10× rungs of operators with no 100× rung above: near-dup
+    // candidates, packing, retrieval, tokenizers, streams, time skipping,
+    // as-of and equi-join skew, and the bucketed join at 10×. Cold JIT
+    // inflates 1×; judge the RATIO.
+    if (on("tenx")) {
+      walls("sentinel_tenx") = cleanSentinel("tenx")
+      val docs10 = docsX(10)
+      time("minhash_pairs_1x") {
+        noop(operators.Dedup.minhashPairs(docs, "doc_id", "text")) }
+      time("minhash_pairs_10x") {
+        noop(operators.Dedup.minhashPairs(docs10, "doc_id", "text")) }
+      time("pack_10x") {
+        noop(operators.Pack.packShards(docs10.select(col("doc_id"),
+            size(split(col("text"), " ")).cast("bigint").as("n_tok")),
+          "doc_id", "n_tok", 4096L, 1000L))
+      }
+      time("lsh_candidates_1x") {
+        noop(queries.SimilarityOps.lshCandidates(emb, 8, 4)) }
+      time("lsh_candidates_10x") {
+        noop(queries.SimilarityOps.lshCandidates(embX(10), 8, 4)) }
+      // components fixpoint on the 10×-denser near-dup graph, and the
+      // composed prep pipeline over the 10× corpus
+      time("components_10x") {
+        noop(operators.Components.connectedComponents(
+          operators.Dedup.minhashPairs(docs10, "doc_id", "text")
+            .select(col("a"), col("b"))))
+      }
+      time("prep_pipeline_10x") { runQ("q_prep_pipeline", docs10dir) }
+      time("bm25_1x") { runQ("q_bm25", sf) }
+      time("bm25_10x") { runQ("q_bm25", docs10dir) }
+      val emb10dir = writeEmb(10)
+      time("sim_quant_1x") { runQ("q_sim_quant", sf) }
+      time("sim_quant_10x") { runQ("q_sim_quant", emb10dir) }
+      // the in-query IVF-PQ re-trains both quantizers on every execution
+      // (the persisted index's searches are the vidx section's rungs)
+      time("ivfpq_inquery_x3_10x") {
+        (1 to 3).foreach(_ => runQ("q_sim_ivfpq", emb10dir))
+      }
+      // the BPE distributed trainer at 10× the distinct vocabulary
+      // (forceDistributed, fixed merge count): the per-round aggregate
+      // dominates and must not go superlinear. The encoder rides the 10×
+      // corpus.
+      def vocabDocs(n: Long) = spark.range(n)
+        .select(concat(lit("tok"), col("id").cast("string")).as("text"))
+      time("bpe_train_dist_1x_10k_vocab") {
+        operators.Bpe.train(vocabDocs(10000), "text", numMerges = 16,
+          forceDistributed = true)
+      }
+      time("bpe_train_dist_10x_100k_vocab") {
+        operators.Bpe.train(vocabDocs(100000), "text", numMerges = 16,
+          forceDistributed = true)
+      }
+      operators.Bpe.register(spark,
+        operators.Bpe.train(docs, "text", numMerges = 48))
+      def enc(df: DataFrame) = noop(df.select(
+          size(operators.Bpe.encode(split(col("text"), " "))).as("n"))
+        .agg(sum(col("n"))))
+      time("bpe_encode_1x") { enc(docs) }
+      time("bpe_encode_10x") { enc(docs10) }
+      // 10× events as month-offset copies (10× windows, so the streaming
+      // aggregate's STATE scales with the data) and as second-offset
+      // copies (10× per-key density in the SAME horizon)
+      val evFull = Tables.table(spark, sf, "events")
+        .select("ts", "user_id", "event_type", "event_id", "value")
+      def evX(offset: Int => String): DataFrame = (0 until 10).map(k =>
+        evFull.select((col("ts") + expr(s"INTERVAL ${offset(k)}")).as("ts"),
+          col("user_id"), col("event_type"),
+          (col("event_id") + k * 1000000000L).as("event_id"), col("value")))
+        .reduce(_ union _)
+      def writeEv(tag: String, df: DataFrame): String = {
+        val dir = java.nio.file.Files
+          .createTempDirectory(s"graft_scale100_ev$tag").toString
+        df.write.mode("overwrite").parquet(s"$dir/events.parquet")
+        dir
+      }
+      val ev10dir = writeEv("10", evX(k => s"$k MONTH"))
+      val evDenseDir = writeEv("dense", evX(k => s"$k SECONDS"))
+      time("tumbling_stream_1x") { runQ("s_tumbling_counts", sf) }
+      time("tumbling_stream_10x") { runQ("s_tumbling_counts", ev10dir) }
+      // interval-join state (the one stateful gate that buffers ROW SETS
+      // per key): bounded by the watermark horizon over 10× the span, so
+      // the peak grows far sub-linearly; ~linear over 10× the per-key
+      // density (the output pair count may blow up, state must not)
+      def interval(tag: String, dir: String): Unit = {
+        time(tag) { runQ("s_join_interval", dir) }
+        queries.StreamGate.statePeaks.get("s_join_interval").foreach {
+          case (r, b) => println(s"PROBE $tag state_rows=$r state_bytes=$b") }
+      }
+      interval("interval_stream_1x", sf)
+      interval("interval_stream_10x_span", ev10dir)
+      interval("interval_stream_10x_density", evDenseDir)
+      // file-level time skipping: the 10× store grows to ~300 daily
+      // partitions (~4k compacted files) while the dashboard window stays
+      // 1.25 days, so planning must open only the overlapping files. The
+      // first 10× touch pays the one-time store build, timed on its own.
+      timeMin2("timeseries_skip_1x") { runQ("q_timeseries_skip", sf) }
+      time("timeseries_skip_10x_store_build") {
+        runQ("q_timeseries_skip", ev10dir) }
+      timeMin2("timeseries_skip_10x") { runQ("q_timeseries_skip", ev10dir) }
+      locally {
+        val files = SparkEntry.queries("q_timeseries_skip")(spark, ev10dir)
+          .inputFiles
+        // an empty pruned window or an uncompacted tail file (no /gen-/
+        // segment) degrades the print instead of aborting the run
+        val total = files.headOption.filter(_.contains("/gen-")).fold(-1L) {
+          f =>
+            import scala.jdk.CollectionConverters._
+            java.nio.file.Files.walk(java.nio.file.Paths.get(
+                new java.net.URI(f.substring(0, f.indexOf("/gen-"))).getPath))
+              .iterator().asScala.count(_.toString.endsWith(".parquet"))
+        }
+        println(s"PROBE timeseries_skip_10x files_opened=${files.length} " +
+          s"of_store_files=$total")
+      }
+      // the native as-of at 10× rows AND 10× per-key density (month-offset
+      // copies share user ids): the merge stays O(n+m) per key
+      time("asof_native_1x") { runQ("q_join_asof_native", sf) }
+      time("asof_native_10x") { runQ("q_join_asof_native", ev10dir) }
+      // as-of under key skew: ONE hot user with 20k purchases and 20k
+      // errors. The composed join+window form materializes every (error,
+      // earlier purchase) pair for the hot key (~2·10^8 rows) before
+      // row_number picks one; the native operator carries one candidate
+      // row through one O(n+m) pass.
+      val hotN = 20000
+      val hot = spark.range(hotN).select(
+        lit(1L).as("user_id"), col("id").as("event_id"),
+        (lit(java.sql.Timestamp.valueOf("2020-04-06 00:00:00")).cast("timestamp")
+          + expr("make_interval(0,0,0,0,0,0,id)")).as("ts"))
+      val errS = hot.select(col("event_id").as("e_id"),
+        col("user_id").as("e_user"), col("ts").as("e_ts"))
+      val purS = hot.select((col("event_id") + 1000000L).as("p_id"),
+        col("user_id").as("p_user"), col("ts").as("p_ts"))
+      time(s"asof_skew_native_${hotN}x$hotN") {
+        noop(plans.AsOf.join(errS, purS, Seq("e_user"), Seq("p_user"),
+            "e_ts", "p_ts", tie = Seq("p_id"))
+          .select(col("e_id"), col("p_id")))
+      }
+      time(s"asof_skew_composed_${hotN}x$hotN") {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("e_id"))
+          .orderBy(col("p_ts").desc_nulls_last, col("p_id").desc_nulls_last)
+        noop(errS.join(purS,
+            col("e_user") === col("p_user") && col("p_ts") <= col("e_ts"),
+            "left")
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+          .select(col("e_id"), col("p_id")))
+      }
+      // salted equi-join under single-hot-key skew (q_skew_join's
+      // operator): a 16M-row hot key + 4M uniform tail joined to a
+      // 100k-key dim too big to broadcast. Three shapes: unsalted with
+      // AQE's skew split off (the stuck plan), salted with it off (the
+      // plan-level fix), unsalted with it on (AQE's runtime rescue, which
+      // streaming joins and non-AQE contexts lack).
+      val hotJoinN = 16000000
+      val tailKeys = 100000
+      val bigSkew = spark.range(hotJoinN + 4000000L).select(
+        when(col("id") < hotJoinN, lit(1L))
+          .otherwise(pmod(col("id"), lit(tailKeys.toLong)) + 2L).as("key"),
+        col("id"))
+      val dimSkew = spark.range(tailKeys.toLong + 2).select(
+        col("id").as("key"), concat(lit("dim"), col("id")).as("attr"))
+      def withConf(pairs: (String, String)*)(f: => Unit): Unit = {
+        val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+        pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try f finally olds.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k) }
+      }
+      withConf("spark.sql.adaptive.skewJoin.enabled" -> "false",
+               "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        time(s"equiskew_unsalted_noSplit_${hotJoinN}hot") {
+          noop(bigSkew.join(dimSkew, Seq("key"))) }
+        time(s"equiskew_salted_noSplit_${hotJoinN}hot") {
+          noop(operators.Skew.saltedJoin(bigSkew, dimSkew, "key",
+            col("id"), 32))
+        }
+      }
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        time(s"equiskew_unsalted_aqeSplit_${hotJoinN}hot") {
+          noop(bigSkew.join(dimSkew, Seq("key"))) }
+      }
+      // the bucketed-layout payoff at 10×: one bucketed write, then x3
+      // recurring fact-fact joins over co-partitioned buckets vs the plain
+      // form's re-shuffle of both sides (the bucketed section's 100× rungs
+      // are the same shape)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_scale100_bucket10").toString
+      Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey").foreach {
+        case (t, key) =>
+          (0 until 10).map(k => Tables.table(spark, sf, t)
+              .withColumn(key, col(key) + k * 1000000000L))
+            .reduce(_ union _)
+            .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
+      graft.storage.BucketedTables.enableSortedBucketScan(spark)
+      time("bucketed_build_10x") {
+        graft.storage.BucketedTables.ensureFactBuckets(spark, dir)
+      }
+      time("bucketed_join_x3_10x") {
+        (1 to 3).foreach(_ => runQ("q_join_bucketed", dir))
+      }
+      time("plain_join_x3_10x") {
+        (1 to 3).foreach { _ =>
+          noop(Tables.table(spark, dir, "lineitem")
+            .join(Tables.table(spark, dir, "orders"),
+              col("l_orderkey") === col("o_orderkey"))
+            .groupBy(col("o_orderpriority"))
+            .agg(count(lit(1)).as("n_items"),
+              round(sum(col("l_extendedprice")), 4).as("revenue")))
         }
       }
     }

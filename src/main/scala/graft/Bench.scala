@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Bench evaluates the FULL query set, so the streaming gates run as one
     // concurrent fleet: the alphabetically-first gate's invocation starts
     // all seven streams together and its timing is the family's WALL clock;
@@ -20,25 +20,7 @@ object Bench {
     // measured inside each gate's future, land in `fleet_per_gate` (each is
     // fleet-start→gate-completion, so their MAX ≈ the fleet wall).
     System.setProperty("graft.streamgate.fleet", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18 (optimization guide §2.2/§3.1/§9), mirrors Verify: real AQE
-      // coalescing of tiny post-shuffle partitions + shuffled-hash join
-      // when its size gates hold. Scale-right (the guide's recommended
-      // baseline), not a local[32] tune — shuffle.partitions itself
-      // stays the driver-chosen core count above.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, parquet footers, shuffle machinery) so the
     // alphabetically-first query doesn't absorb one-time startup cost.
@@ -388,7 +370,7 @@ object Bench {
     // deflates a throughput figure, so max is the least-corrupted estimate
     // of the host's real band (the stable 2.1-2.4M r3-r7 range).
     val ingestBand =
-      if (priorIngest.isEmpty || cpus.toInt < 16) None
+      if (priorIngest.isEmpty || cpus < 16) None
       else Some(priorIngest.max)
     if (ingestBand.exists(b => ingestRate < b / 3)) {
       System.err.println(
@@ -479,22 +461,23 @@ object Bench {
     // clobber happened in r7 — the 99s dirty rerun overwrote the committed
     // 80.9s clean vector in the working tree and got swept into the
     // end-of-round commit).
-    val suffix = if (clean) ".json" else ".dirty.json"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"BENCH_FULL$suffix"), json)
-    val round = {
-      val dir = new java.io.File(".").listFiles()
-      val prev = if (dir == null) Nil else dir.toList
-        .map(_.getName).flatMap { n =>
-          "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt)
-        }
-      (prev :+ 0).max + 1
-    }
-    // Only a run at the driver's per-round bench SF updates the round
+    // Only an sf0.1 run (the per-round bench scale factor) writes either
     // artifact — a smoke run at sf0.001 must not clobber the sf0.1 vector.
-    if (sfDir.endsWith("sf0.1"))
+    if (sfDir.endsWith("sf0.1")) {
+      val suffix = if (clean) ".json" else ".dirty.json"
+      val round = {
+        val dir = new java.io.File(".").listFiles()
+        val prev = if (dir == null) Nil else dir.toList
+          .map(_.getName).flatMap { n =>
+            "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt)
+          }
+        (prev :+ 0).max + 1
+      }
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"BENCH_FULL$suffix"), json)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(f"BENCH_FULL_r$round%02d$suffix"), json)
+    }
     spark.stop()
     if (!clean) sys.exit(1)
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,30 +14,8 @@ object Verify {
     // concurrent fleet (seven real streams started together) instead of
     // paying seven serial stream-start floors — see StreamGate.runFleet.
     System.setProperty("graft.streamgate.fleet", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Classic (non-ANSI) eval: invalid casts/parses yield NULL, matching the
-      // reference's permissive ClickHouse insert-cast semantics (SURVEY R8)
-      // and the TRY_CAST forms used in the DuckDB oracle SQL.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Write µs-precision timestamps (not INT96) so the driver's DuckDB/arrow
-      // readers see the same values Spark computed.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // r18 (optimization guide §2.2/§3.1/§9): let AQE actually coalesce
-      // tiny post-shuffle partitions (parallelismFirst keeps the local
-      // default parallelism otherwise — the docs recommend false), and
-      // let the planner pick a shuffled hash join when its size gates
-      // hold (sort-merge stays the fallback). Result-preserving.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

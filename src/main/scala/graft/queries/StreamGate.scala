@@ -159,7 +159,7 @@ object StreamGate extends QueryModule {
 
   /** Peak stateful-operator footprint (rows, bytes) per gate — max over the
     * gate's micro-batches, keyed by gate name so concurrent fleet runs keep
-    * attribution exact. A ScaleProbe observability surface (state growth
+    * attribution exact. A ScaleProbe100 observability surface (state growth
     * under 10× density), not part of any query result.
     */
   val statePeaks = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
@@ -242,7 +242,7 @@ object StreamGate extends QueryModule {
     * then starts ALL seven streams together — each still a real multi-batch
     * AvailableNow run over its own checkpoint and its own state store — and
     * caches the per-gate results under the input's content fingerprint.
-    * Single-gate callers (ScalaTest, ScaleProbe) leave the flag unset and
+    * Single-gate callers (ScalaTest, ScaleProbe100) leave the flag unset and
     * keep the serial path, so per-gate wall-clock and state-peak
     * attribution stay exact where they are measured.
     */
@@ -298,10 +298,8 @@ object StreamGate extends QueryModule {
       // concurrent streams × 8 was 56 concurrent state tasks on 32 cores —
       // halving the width cut the fleet wall ~15% in a same-window A/B;
       // partition count is physical layout only, results are unaffected
-      // (FleetParitySpec pins fleet ≡ serial rows). Overridable for A/B
-      // probes via -Dgraft.streamgate.fleetWidth.
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.streamgate.fleetWidth", "4"))
+      // (FleetParitySpec pins fleet ≡ serial rows).
+      s.conf.set("spark.sql.shuffle.partitions", "4")
       fleetStartMillis.set(System.currentTimeMillis())
       val futs = runners.map { case (name, fn) =>
         name -> pool.submit(new java.util.concurrent.Callable[DataFrame] {

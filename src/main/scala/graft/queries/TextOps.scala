@@ -22,31 +22,19 @@ object TextOps extends QueryModule {
   private val lmModels = scala.collection.concurrent.TrieMap
     .empty[String, (Map[String, Long], Map[String, Long], Long)]
 
-  /** The one-time LM train pass behind `q_lm_perplexity_bc` (extracted so
-    * `LmTrainProbe` can measure its sub-steps without duplicating the
-    * logic): ONE corpus pass builds the pair counts; the context counts
-    * are the pair counts re-aggregated by w1 (cw(w1) = SUM_w2 cb(w1,w2)
-    * exactly — every bigram occurrence contributes to both), so the
-    * persist makes the model build cost one scan + one
-    * distinct-bigram-sized agg instead of two corpus scans. Caps apply
-    * AFTER the derivation, so cw stays the true context total even where
-    * topB bites. The smoothing denominator is the FULL vocabulary size
-    * (the prune caps the model's ENTRIES, not the smoothing constant).
-    *
-    * `timings` (optional) receives per-sub-step walls: bigram_agg, top_b,
-    * top_v, vocab.
+  /** The one-time LM train pass behind `q_lm_perplexity_bc`: ONE corpus
+    * pass builds the pair counts; the context counts are the pair counts
+    * re-aggregated by w1 (cw(w1) = SUM_w2 cb(w1,w2) exactly — every bigram
+    * occurrence contributes to both), so the persist makes the model build
+    * cost one scan + one distinct-bigram-sized agg instead of two corpus
+    * scans. Caps apply AFTER the derivation, so cw stays the true context
+    * total even where topB bites. The smoothing denominator is the FULL
+    * vocabulary size (the prune caps the model's ENTRIES, not the smoothing
+    * constant).
     */
-  private[graft] def trainLmModel(docs: org.apache.spark.sql.DataFrame,
-      topV: Int, topB: Int,
-      timings: scala.collection.mutable.Map[String, Double] = null)
-      : (Map[String, Long], Map[String, Long], Long) = {
+  private def trainLmModel(docs: org.apache.spark.sql.DataFrame,
+      topV: Int, topB: Int): (Map[String, Long], Map[String, Long], Long) = {
     val sep = "\u0001" // must match LmScore.Sep (the bigram map key join)
-    def step[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (timings != null) timings(name) = (System.nanoTime() - t0) / 1e9
-      r
-    }
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("tk"))
       .filter(size(col("tk")) >= 2)
     val b = toks.select(explode(expr(
@@ -56,22 +44,16 @@ object TextOps extends QueryModule {
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val cbDf = b.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    step("bigram_agg")(cbDf.count()) // materialize the agg once, timed alone
-    val cbM = step("top_b") {
-      cbDf.orderBy(col("cb").desc, col("w1"), col("w2")).limit(topB)
-        .collect().map(r => (r.getString(0) + sep + r.getString(1)) -> r.getLong(2))
-        .toMap
-    }
-    val cwM = step("top_v") {
-      cbDf.groupBy(col("w1")).agg(sum(col("cb")).as("cw"))
-        .orderBy(col("cw").desc, col("w1")).limit(topV)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    cbDf.count() // materialize the agg once
+    val cbM = cbDf.orderBy(col("cb").desc, col("w1"), col("w2")).limit(topB)
+      .collect().map(r => (r.getString(0) + sep + r.getString(1)) -> r.getLong(2))
+      .toMap
+    val cwM = cbDf.groupBy(col("w1")).agg(sum(col("cb")).as("cw"))
+      .orderBy(col("cw").desc, col("w1")).limit(topV)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     cbDf.unpersist(false)
-    val vocab = step("vocab") {
-      docs.select(explode(split(col("text"), " ")).as("tok"))
-        .agg(count_distinct(col("tok"))).collect()(0).getLong(0)
-    }
+    val vocab = docs.select(explode(split(col("text"), " ")).as("tok"))
+      .agg(count_distinct(col("tok"))).collect()(0).getLong(0)
     (cbM, cwM, vocab)
   }
 
@@ -590,9 +572,9 @@ object TextOps extends QueryModule {
     // KenLM-file pattern of a CCNet-style pipeline. The score pass is then
     // SHUFFLE-FREE: one narrow projection computes every document's
     // perplexity in place — no bigram explode, no corpus-sized join, no
-    // per-doc aggregate (ScaleProbe pins zero exchanges upstream of the
-    // presentation sort). A pruned-away bigram scores as unseen
-    // ((0+K)/(0+KV)) — well-defined smoothing semantics; at the fixture
+    // per-doc aggregate (ScaleProbe100's lm section pins zero exchanges
+    // upstream of the presentation sort). A pruned-away bigram scores as
+    // unseen ((0+K)/(0+KV)) — well-defined smoothing semantics; at the fixture
     // scales the corpus fits the caps with 70x headroom (31 tokens / ~931
     // bigrams, caps 65536 / 262144), so the prune is semantics-preserving
     // and the query shares q_lm_perplexity's oracle hash. FP discipline:

@@ -32,9 +32,10 @@ object LogTableWriter {
     * defined" in the footer), which silently disables the `_filestats`/
     * `_tailstats` sidecars and with them every file-skipping tier of
     * [[readRange]] — results stay exact, but a 300-day store opens all ~4k
-    * files for a 1-day window (caught live by ScaleProbe's opened-vs-total
-    * row). The per-write `.option("outputTimestampType", ...)` is NOT
-    * honored by the parquet source, so the session conf is the only lever.
+    * files for a 1-day window (caught live by ScaleProbe100's 10×
+    * opened-vs-total row). The per-write `.option("outputTimestampType",
+    * ...)` is NOT honored by the parquet source, so the session conf is the
+    * only lever.
     */
   private val pinLock = new Object
   private val pinned =

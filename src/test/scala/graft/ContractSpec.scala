@@ -30,6 +30,21 @@ class ContractSpec extends SparkSpec {
       s"unexpectedly empty queries: $empties")
   }
 
+  test("GraftSession: builder(n) is local[n] with n shuffle partitions; " +
+      "the shared test session carries every pinned setting") {
+    // a JVM holds one SparkContext, so builder(3) is inspected, not built
+    // (its option map is protected in Scala, public in bytecode)
+    val b = GraftSession.builder(3)
+    val opts = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.Map[String, String]]
+    assert(opts.get("spark.master").contains("local[3]"))
+    assert(opts.get("spark.sql.shuffle.partitions").contains("3"))
+    assert(spark.sparkContext.master == "local[4]")
+    GraftSession.settings.foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, s"test session drifted on $k")
+    }
+  }
+
   test("entry returns rows under a default-config session contract") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -29,7 +29,7 @@ class FleetParitySpec extends SparkSpec {
   }
 
   test("fleet run records a per-gate state peak for the stateful gates") {
-    // the interval gate's state growth is a ScaleProbe surface; the fleet
+    // the interval gate's state growth is a ScaleProbe100 surface; the fleet
     // must keep its attribution keyed by gate name
     assert(queries.StreamGate.statePeaks.contains("s_join_interval"))
   }
