@@ -1699,7 +1699,7 @@ object ScaleProbe100 {
         SnapshotStore.branchCreate(spark, dir, "wap")
       }
       time(s"branch_append_$n") {
-        SnapshotStore.appendBranch(batch, dir, "wap", "p")
+        SnapshotStore.append(batch, dir, "p", target = Dml.Branch("wap"))
       }
       time(s"branch_publish_$n") {
         SnapshotStore.publishBranch(spark, dir, "wap")
@@ -1715,13 +1715,13 @@ object ScaleProbe100 {
       // be a metadata-only rewrite (two manifest resolutions + diffs +
       // one staged serialize over the 100k-entry map) — the alternative
       // it replaces is re-creating the branch and RE-STAGING the corpus,
-      // so the honest comparison is one appendBranch (the re-staging
+      // so the honest comparison is one branch append (the re-staging
       // unit, which also writes real data).
       {
         SnapshotStore.branchCreate(spark, dir, "reb")
-        SnapshotStore.appendBranch(
+        SnapshotStore.append(
           batch.withColumn("p", concat(lit("cand"), col("k") % 3)),
-          dir, "reb", "p")
+          dir, "p", target = Dml.Branch("reb"))
         SnapshotStore.append( // main moves, disjoint partition
           seed.limit(50).withColumn("p", lit("mainp")), dir, "p")
         time(s"branch_rebase_$n") {
@@ -1734,7 +1734,7 @@ object ScaleProbe100 {
              b <- walls.get(s"branch_append_$n")) {
           ratios("branch_rebase_vs_restage_100k") = a / b
           println(f"PROBE branch_rebase_vs_restage_100k ${a / b}%.2f " +
-            "(metadata-only rebase vs one re-staging appendBranch at " +
+            "(metadata-only rebase vs one re-staging branch append at " +
             "100k partitions — the recovery rebase replaces)")
         }
       }

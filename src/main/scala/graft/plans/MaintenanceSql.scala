@@ -881,7 +881,8 @@ object MaintenanceSql {
       MaintenanceSql.getClass.getCanonicalName, name,
       "graft_branch(path, name) - creates a write-audit-publish staging " +
         "branch forked from the SnapshotStore head; stage with " +
-        "appendBranch, audit via graft_snapshot(path, 'branch:<name>'), " +
+        "graft_append_branch, audit via " +
+        "graft_snapshot(path, 'branch:<name>'), " +
         "then graft_publish_branch or graft_drop_branch; returns one " +
         "status row (detail = fork version); string-literal arguments",
       "", "")
@@ -923,8 +924,8 @@ object MaintenanceSql {
           s"${args.size} arguments")
       val spark = SparkSession.active
       val (path, branch) = (str(name, args, 0), str(name, args, 1))
-      graft.storage.SnapshotStore.appendBranch(
-        spark.table(str(name, args, 2)), path, branch, str(name, args, 3))
+      graft.storage.SnapshotStore.append(spark.table(str(name, args, 2)),
+        path, str(name, args, 3), target = Dml.Branch(branch))
       statusRow(spark, "append_branch", path,
         graft.storage.SnapshotStore.branches(spark, path)
           .getOrElse(branch, 0).toLong)
@@ -953,9 +954,9 @@ object MaintenanceSql {
       val keys = str(name, args, 4).split(",").map(_.trim)
         .filter(_.nonEmpty).toSeq
       val deleteCol = if (args.size == 6) Some(str(name, args, 5)) else None
-      graft.storage.SnapshotStore.mergeBranch(spark, path, branch,
+      graft.storage.SnapshotStore.merge(spark, path,
         spark.table(str(name, args, 2)), str(name, args, 3), keys,
-        deleteCol = deleteCol)
+        deleteCol = deleteCol, target = Dml.Branch(branch))
       statusRow(spark, "merge_branch", path,
         graft.storage.SnapshotStore.branches(spark, path)
           .getOrElse(branch, 0).toLong)

@@ -82,8 +82,9 @@ object SnapshotSql {
           .queryExecution.analyzed
       case b if b.startsWith("branch:") =>
         // the WAP audit surface: read the branch tip from pure SQL
-        graft.storage.SnapshotStore.readBranch(SparkSession.active, path,
-          str(1).trim.substring(7)).queryExecution.analyzed
+        graft.storage.SnapshotStore.read(SparkSession.active, path,
+          target = graft.storage.Dml.Branch(str(1).trim.substring(7)))
+          .queryExecution.analyzed
       case t if t.startsWith("tag:") =>
         // read by immutable named ref (resolved now, at analysis —
         // the same eagerness as an integer version literal)
@@ -185,9 +186,9 @@ object SnapshotWhereSql {
       // the WAP audit's pruned read from pure SQL: same stats + needle
       // pruning as main, over the branch tip's staged entries
       case b if b.startsWith("branch:") =>
-        graft.storage.SnapshotStore.readBranchWhere(SparkSession.active,
-          path, str(1).trim.substring(7),
-          org.apache.spark.sql.functions.expr(str(2)))
+        graft.storage.SnapshotStore.readWhere(SparkSession.active, path,
+          org.apache.spark.sql.functions.expr(str(2)),
+          target = graft.storage.Dml.Branch(str(1).trim.substring(7)))
           .queryExecution.analyzed
       case sel =>
         val version = sel match {
@@ -263,8 +264,8 @@ object CountSql {
         case s if s.toLowerCase == "head" =>
           graft.storage.SnapshotStore.countWhereDetailed(spark, path, pred)
         case s if s.toLowerCase.startsWith("branch:") =>
-          graft.storage.SnapshotStore.countBranchWhereDetailed(
-            spark, path, s.substring(7), pred)
+          graft.storage.SnapshotStore.countWhereDetailed(spark, path, pred,
+            target = graft.storage.Dml.Branch(s.substring(7)))
         case s =>
           val v = try s.toInt catch {
             case _: NumberFormatException =>

@@ -1119,14 +1119,15 @@ object Extended extends QueryModule {
         .toString + "/orders_branch"
       graft.storage.SnapshotStore.write(orders, dir, "o_orderpriority")
       graft.storage.SnapshotStore.branchCreate(s, dir, "staging")
-      graft.storage.SnapshotStore.appendBranch(
+      graft.storage.SnapshotStore.append(
         orders.filter(col("o_orderkey") % 101 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L)),
-        dir, "staging", "o_orderpriority")
+        dir, "o_orderpriority", target = Dml.Branch("staging"))
       require(graft.storage.SnapshotStore.headVersion(s, dir).contains(1),
         "q_snapshot_branch: staged writes must not advance the head")
       val during = graft.storage.SnapshotStore.read(s, dir)
-      val audit = graft.storage.SnapshotStore.readBranch(s, dir, "staging")
+      val audit = graft.storage.SnapshotStore.read(s, dir,
+        target = Dml.Branch("staging"))
       val v = graft.storage.SnapshotStore.publishBranch(s, dir, "staging")
       require(v == 2, s"q_snapshot_branch: publish must fast-forward to 2")
       val after = graft.storage.SnapshotStore.read(s, dir)
@@ -1329,10 +1330,10 @@ object Extended extends QueryModule {
       graft.storage.SnapshotStore.write(orders, dir, "o_orderpriority",
         statsCols = Seq("o_orderkey"))
       graft.storage.SnapshotStore.branchCreate(s, dir, "fixup")
-      graft.storage.SnapshotStore.appendBranch(
+      graft.storage.SnapshotStore.append(
         orders.filter(k % 101 === 0)
           .withColumn("o_orderkey", k + lit(10000000L)),
-        dir, "fixup", "o_orderpriority")
+        dir, "o_orderpriority", target = Dml.Branch("fixup"))
       val del = graft.storage.SnapshotStore.dml(
         s, dir, Dml.Delete,
         k >= 10000000L && col("o_totalprice") < lit(50000.0),
@@ -1348,7 +1349,8 @@ object Extended extends QueryModule {
         s"q_snapshot_branch_dml: each fix stages one version, got $upd")
       require(graft.storage.SnapshotStore.headVersion(s, dir).contains(1),
         "q_snapshot_branch_dml: branch DML must never advance main")
-      val audit = graft.storage.SnapshotStore.readBranch(s, dir, "fixup")
+      val audit = graft.storage.SnapshotStore.read(s, dir,
+        target = Dml.Branch("fixup"))
       val a1 = mergeAgg(audit).withColumn("slice", lit(1))
       graft.storage.SnapshotStore.publishBranch(s, dir, "fixup")
       val a2 = mergeAgg(graft.storage.SnapshotStore.read(s, dir))
@@ -1374,11 +1376,11 @@ object Extended extends QueryModule {
       val k = col("o_orderkey")
       graft.storage.SnapshotStore.write(orders, dir, "o_orderpriority")
       graft.storage.SnapshotStore.branchCreate(s, dir, "staging")
-      graft.storage.SnapshotStore.appendBranch(
+      graft.storage.SnapshotStore.append(
         orders.filter(k % 101 === 0)
           .withColumn("o_orderkey", k + lit(10000000L))
           .withColumn("o_orderpriority", lit("9-CANDIDATE")),
-        dir, "staging", "o_orderpriority")
+        dir, "o_orderpriority", target = Dml.Branch("staging"))
       // main keeps ingesting while the audit runs — the WAP reality
       graft.storage.SnapshotStore.append(
         orders.filter(k % 97 === 0)
@@ -1393,7 +1395,8 @@ object Extended extends QueryModule {
       val during = graft.storage.SnapshotStore.read(s, dir)
       require(graft.storage.SnapshotStore.rebaseBranch(s, dir,
         "staging") == 2, "q_snapshot_rebase: rebase must land on v2")
-      val audit = graft.storage.SnapshotStore.readBranch(s, dir, "staging")
+      val audit = graft.storage.SnapshotStore.read(s, dir,
+        target = Dml.Branch("staging"))
       require(graft.storage.SnapshotStore.publishBranch(s, dir,
         "staging") == 3, "q_snapshot_rebase: publish must commit v3")
       val after = graft.storage.SnapshotStore.read(s, dir)

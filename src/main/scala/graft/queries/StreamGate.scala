@@ -678,7 +678,8 @@ object StreamGate extends QueryModule {
     require(SnapshotStore.headVersion(s, store).contains(1) &&
       SnapshotStore.read(s, store).count() == 0,
       "s_wap_sink: staging must leave the main head at the empty v1")
-    require(SnapshotStore.readBranch(s, store, "cand").count() == total,
+    require(SnapshotStore.read(s, store,
+      target = graft.storage.Dml.Branch("cand")).count() == total,
       "s_wap_sink: the branch tip must hold the whole streamed corpus")
     val v = SnapshotStore.publishBranch(s, store, "cand")
     require(v == 2, "s_wap_sink: publish must fast-forward to v2")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** `spark.read.format("graft-snapshot")` — the BATCH read relation over a
   * [[SnapshotStore]], completing the standard-API triangle (the streaming
@@ -181,10 +181,11 @@ private[sources] class GraftSnapshotRelation(
       .orElse(asOfMillis.map(ts => SnapshotStore.versionAsOf(spark, path, ts)))
       .orElse(version)
 
-  override val schema: StructType = branch match {
-    case Some(b) => SnapshotStore.readBranch(spark, path, b).schema
-    case None => SnapshotStore.read(spark, path, resolvedVersion).schema
-  }
+  private def target: Dml.Target =
+    branch.fold[Dml.Target](Dml.Head)(Dml.Branch(_))
+
+  override val schema: StructType =
+    SnapshotStore.read(spark, path, resolvedVersion, target).schema
 
   /** InternalRow hand-off (see the provider doc): with this false,
     * Spark treats [[buildScan]]'s rows as `InternalRow`s verbatim — no
@@ -196,12 +197,10 @@ private[sources] class GraftSnapshotRelation(
                          filters: Array[Filter]): RDD[Row] = {
     val pred = filters.flatMap(GraftSnapshotSource.translate(_))
       .reduceOption(_ && _)
-    val base = (branch, pred) match {
-      case (Some(b), Some(p)) => SnapshotStore.readBranchWhere(spark, path, b, p)
-      case (Some(b), None) => SnapshotStore.readBranch(spark, path, b)
-      case (None, Some(p)) =>
-        SnapshotStore.readWhere(spark, path, p, resolvedVersion)
-      case (None, None) => SnapshotStore.read(spark, path, resolvedVersion)
+    val base = pred match {
+      case Some(p) =>
+        SnapshotStore.readWhere(spark, path, p, resolvedVersion, target)
+      case None => SnapshotStore.read(spark, path, resolvedVersion, target)
     }
     GraftSnapshotSource.lastScan = Some(base)
     // the inner plan executes NATIVELY (vectorized parquet + codegen up

@@ -1,8 +1,6 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.operators.Joins
+import org.apache.spark.sql.SparkSession
 
 /** The [[SnapshotStore]]'s BRANCH layer — write-audit-publish (WAP), the
   * shape every training-data team runs: stage candidate commits on a
@@ -11,6 +9,14 @@ import graft.operators.Joins
   * drop the branch and nothing ever happened. The Iceberg WAP/audit-
   * branch idea (a public concept), re-derived on the store's own
   * primitives.
+  *
+  * ==Verbs==
+  * The store's data verbs — [[SnapshotStore.append]], `merge`, `dml`,
+  * `read`, `readWhere`, `countWhere` — take a [[Dml.Branch]] target and
+  * run their head bodies over the staged tip ([[Resolved]]), committing
+  * through [[stageNext]]. This object keeps the staged representation
+  * and the lifecycle verbs with no head twin: [[create]], [[rebase]],
+  * [[publish]], [[drop]], [[expireBranches]].
   *
   * ==Representation: staged manifests==
   * A branch is a chain of SELF-CONTAINED staged files
@@ -136,9 +142,9 @@ private[storage] object SnapshotBranch {
 
   /** Every dir referenced by ANY staged file at the store — the retention
     * sweep's branch-protection input. EVERY staged version contributes,
-    * not just tips: [[merge]] REPLACES touched partitions' staged dirs,
-    * so a gen referenced only by a pre-merge staged version would fall
-    * out of a tips-only live set while the chain (and time travel over
+    * not just tips: a branch merge REPLACES touched partitions' staged
+    * dirs, so a gen referenced only by a pre-merge staged version would
+    * fall out of a tips-only live set while the chain (and time travel over
     * it via lower-k reads) still exists. A staged file that VANISHES
     * between the listing and its read was dropped or published by a
     * concurrent actor — it protects nothing, by that actor's own
@@ -253,18 +259,21 @@ private[storage] object SnapshotBranch {
     }
   }
 
-  /** Stages `entries` as the branch's NEXT version (k+1 over the tip the
-    * caller read) — the branch-DML commit step ([[SnapshotDml.dml]]
-    * with a [[Dml.Branch]] target): schema and
-    * renames carry, the birth clock carries, the write clock advances.
-    * Loses the staged CAS exactly like a branch append (the caller
-    * retries against the new tip).
+  /** Stages `entries` under `schema` as the branch's NEXT version (k+1
+    * over the tip the caller read) — the commit step of every verb run
+    * with a [[Dml.Branch]] target ([[Resolved]]): renames carry, the birth
+    * clock carries, the write clock advances. The fork snapshot does NOT
+    * ride along (it would double the deliberately-flat staged serialize;
+    * [[forkSnapshot]] chain-walks to the segment start instead). Two
+    * writers of version k+1 get one winner; the loser's
+    * `ConcurrentModificationException` re-runs the verb against the new
+    * tip.
     */
   private[storage] def stageNext(spark: SparkSession, path: String,
-      name: String, tip: Staged,
-      entries: Map[String, Seq[String]]): Unit =
+      name: String, tip: Staged, entries: Map[String, Seq[String]],
+      schema: org.apache.spark.sql.types.StructType): Unit =
     writeStaged(spark, path, name, Staged(tip.base, tip.k + 1,
-      tip.schema, tip.renames, entries,
+      schema, tip.renames, entries,
       createdMs = tip.createdMs,
       modifiedMs = System.currentTimeMillis()))
 
@@ -286,179 +295,6 @@ private[storage] object SnapshotBranch {
       SnapshotStore.readRenames(spark, path, head),
       readManifest(spark, path, head),
       createdMs = now, modifiedMs = now))
-  }
-
-  /** Insert-only APPEND to the branch (the WAP candidate write): gens
-    * land in the store's own `data/` with the store's declared stats;
-    * only the staged metadata distinguishes them from a main-line
-    * append. Schema evolution follows the store's union rules.
-    *
-    * `idempotencyKey` makes redelivery structural-exactly-once on the
-    * BRANCH (the streaming-WAP contract, mirroring [[SnapshotStore
-    * .append]]): the gen dir name derives from the key, the pinned dir
-    * publishes via the same stage-and-rename CAS (duplicate deliveries
-    * adopt the winner's dir), and an append whose gen is already
-    * referenced by the branch TIP is a no-op. A staged-CAS loss
-    * (concurrent branch writer, or a crash replay racing a live stream)
-    * retries against the new tip, re-running the dedup check — the
-    * keyed gen is deterministic, so the retry re-adopts rather than
-    * re-writes.
-    */
-  private[storage] def append(df: DataFrame, path: String, name: String,
-                              partCol: String,
-                              idempotencyKey: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    SnapshotStore.requireAtomicRename(path)
-    // the store's CHECK constraints gate branch writes too: anything
-    // stageable is publishable (a violating candidate is refused at the
-    // cheap boundary, not discovered at publish)
-    SnapshotConstraints.enforce(spark, path, df, "branch append")
-    val genName = idempotencyKey.map { k =>
-      "gen-b" + java.security.MessageDigest.getInstance("MD5")
-        .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    }
-    SnapshotStore.withCasRetry() {
-      val st = readStaged(spark, path, name)
-      // keyed replay: the pinned gen is already on the tip
-      if (!genName.exists(g => st.entries.values.flatten
-        .exists(d => dirOf(d).startsWith(s"data/$g/")))) {
-        val phys = SnapshotStore.toPhysical(df, st.renames)
-        val newEntries = SnapshotStore.writeGen(phys, path,
-          SnapshotStore.physicalPartCol(partCol, st.renames),
-          genName = genName,
-          statsCols = SnapshotStore.statsColsOf(spark, path))
-        val merged = st.entries ++ newEntries.map { case (p, d) =>
-          p -> (st.entries.getOrElse(p, Nil) :+ d)
-        }
-        writeStaged(spark, path, name, Staged(st.base, st.k + 1,
-          SnapshotStore.unionSchema(st.schema, phys.schema),
-          st.renames, merged,
-          // the fork snapshot does NOT ride on appends (it would double
-          // the deliberately-flat staged serialize); [[forkSnapshot]]
-          // chain-walks to the segment start instead
-          createdMs = st.createdMs,
-          modifiedMs = System.currentTimeMillis()))
-      }
-    }
-  }
-
-  /** MERGE into the branch (upsert + insert + delete — the WAP candidate
-    * write for CDC-shaped batches): the same semantics contract as
-    * [[SnapshotStore.merge]], resolved against the BRANCH TIP's content.
-    * Touched partitions' staged dirs are replaced by freshly-written
-    * gens; untouched entries carry by reference. NOTE for the size-split
-    * changes source: a published merge-bearing branch version is one
-    * commit with replaced dirs, so it stays VERSION-ATOMIC downstream —
-    * exactly the delete+insert pairing contract.
-    */
-  private[storage] def merge(spark: SparkSession, path: String,
-                             name: String, batch: org.apache.spark.sql.DataFrame,
-                             partCol: String, keyCols: Seq[String],
-                             deleteCol: Option[String] = None,
-                             precedenceCol: Option[String] = None): Unit = {
-    SnapshotStore.requireAtomicRename(path)
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val st = readStaged(spark, path, name)
-    val (resolved, upserts) = MergeStore.resolveBatch(batch, keyCols,
-      deleteCol, precedenceCol)
-    SnapshotConstraints.enforce(spark, path, upserts, "branch merge")
-    val keys = resolved.select(keyCols.map(
-      org.apache.spark.sql.functions.col): _*).distinct()
-    val parts = SnapshotStore.residencyKeys(spark, path, resolved,
-      SnapshotStore.splitPartCols(partCol), st.renames,
-      st.entries.keys).toIndexedSeq
-    if (parts.isEmpty) return
-    val touchedDirs = parts.flatMap(st.entries.get).flatten
-    val merged = if (touchedDirs.isEmpty) upserts else {
-      val base = SnapshotStore.applyRenames(
-        SnapshotStore.readFieldsPhys(spark, path, touchedDirs.toSeq,
-          Some(st.schema)),
-        st.renames)
-      upserts.unionByName(
-        base.join(Joins.maybeBroadcast(keys, Joins.BroadcastRowLimit),
-          keyCols, "left_anti"),
-        allowMissingColumns = true)
-    }
-    val phys = SnapshotStore.toPhysical(merged, st.renames)
-    val newEntries = SnapshotStore.writeGen(phys, path,
-      SnapshotStore.physicalPartCol(partCol, st.renames),
-      statsCols = SnapshotStore.statsColsOf(spark, path))
-    // touched partitions whose rows were ALL deleted simply leave the
-    // staged map; their old gens stay for the main line / other refs.
-    // foldNewEntries merges era-migrated gens into untouched entries.
-    val (removedF, addedF) = SnapshotStore.foldNewEntries(parts.toSet,
-      Map.empty, newEntries,
-      cross => st.entries.filter { case (k, _) => cross(k) })
-    val entries2 = st.entries -- removedF ++ addedF
-    writeStaged(spark, path, name, Staged(st.base, st.k + 1,
-      SnapshotStore.unionSchema(st.schema,
-        SnapshotStore.toPhysical(upserts, st.renames).schema),
-      st.renames, entries2,
-      createdMs = st.createdMs,
-      modifiedMs = System.currentTimeMillis()))
-  }
-
-  /** Reads the branch tip (the WAP audit surface). */
-  private[storage] def read(spark: SparkSession, path: String,
-                            name: String): DataFrame = {
-    val st = readStaged(spark, path, name)
-    val fields = st.entries.values.flatten.toSeq.sorted.distinct
-    val base =
-      if (fields.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        st.schema)
-      else SnapshotStore.readFieldsPhys(spark, path, fields, Some(st.schema))
-    SnapshotStore.applyRenames(base, st.renames)
-  }
-
-  /** [[read]] with the store's manifest-level DATA SKIPPING applied to
-    * the STAGED entries — staged dir fields carry the same stats blobs
-    * main-line gens do (the branch append passes `statsCols` through
-    * [[SnapshotStore.writeGen]]), so auditing a huge candidate corpus
-    * (a filter report, a contamination probe over one slice) opens only
-    * the gens the predicate can touch.
-    */
-  private[storage] def readWhere(spark: SparkSession, path: String,
-      name: String, pred: org.apache.spark.sql.Column): DataFrame = {
-    val st = readStaged(spark, path, name)
-    // the branch audit rides the same partition-KEY restriction as main's
-    // readWhere (r15): the staged map is value-keyed, so an equality/IN
-    // conjunct on the partition column filters KEYS before any stats
-    // blob is parsed — auditing one slice of a 100k-partition candidate
-    // corpus never walks the other partitions' entries
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      st.schema.fields.map(f =>
-        f.copy(name = st.renames.getOrElse(f.name, f.name))))
-    val expr = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-    val entries = SnapshotStore.partitionValuesOf(spark, path, st.renames,
-      logicalSchema, expr) match {
-      case Some(values) => st.entries.filter { case (k, _) => values(k) }
-      case None => st.entries
-    }
-    // the needle pass serves the audit too: staged gens carry the same
-    // `_bloom-<col>` sidecars main-line gens do (one writeGen)
-    val byDir = entries.values.flatten.map(f => dirOf(f) -> f).toMap
-    val kept = SnapshotBloom.prune(spark, path,
-      SnapshotStore.survivingDirs(spark,
-        entries.values.flatten.toSeq, st.schema, st.renames, pred),
-      SnapshotBloom.probesOf(expr, st.renames.map(_.swap),
-        SnapshotBloom.bloomColsOf(spark, path).toSet))
-      .map(byDir)
-    val base =
-      if (kept.isEmpty) SnapshotStore.applyRenames(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        st.schema), st.renames)
-      else SnapshotStore.applyRenames(
-        SnapshotStore.readFieldsPhys(spark, path, kept, Some(st.schema)),
-        st.renames)
-    base.filter(pred)
   }
 
   /** The FORK VERSION's full entry map for the chain segment `st` sits
@@ -571,50 +407,6 @@ private[storage] object SnapshotBranch {
     head
   }
 
-  /** Candidate-corpus COUNT over the branch tip — THE audit question
-    * ("how many rows am I about to publish?"), answered from the staged
-    * entries' stats blobs exactly as [[SnapshotStore.countWhere]]
-    * answers it for main: NO-MATCH entries contribute zero, ALL-MATCH
-    * entries their recorded per-gen rows, only ambiguous gens scan; the
-    * partition-KEY restriction filters staged keys first. Returns
-    * (count, scanned dirs).
-    */
-  private[storage] def countWhere(spark: SparkSession, path: String,
-      name: String, pred: org.apache.spark.sql.Column): (Long, Int) = {
-    val st = readStaged(spark, path, name)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      st.schema.fields.map(f =>
-        f.copy(name = st.renames.getOrElse(f.name, f.name))))
-    val expr = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-    val entries = SnapshotStore.partitionValuesOf(spark, path, st.renames,
-      logicalSchema, expr) match {
-      case Some(values) => st.entries.filter { case (k, _) => values(k) }
-      case None => st.entries
-    }
-    val (meta, res0) = SnapshotStore.countOverFields(
-      entries.values.flatten.toSeq, expr, st.renames.map(_.swap))
-    // needle pass on the residual (same as main's countWhere): a
-    // bloom-rejected gen holds zero matching rows
-    val byDir = res0.map(f => dirOf(f) -> f).toMap
-    val kept = SnapshotBloom.prune(spark, path, res0.map(dirOf),
-      SnapshotBloom.probesOf(expr, st.renames.map(_.swap),
-        SnapshotBloom.bloomColsOf(spark, path).toSet))
-      .map(byDir)
-    val scanned =
-      if (kept.isEmpty) 0L
-      else SnapshotStore.applyRenames(
-        SnapshotStore.readFieldsPhys(spark, path, kept, Some(st.schema)),
-        st.renames).filter(pred).count()
-    (meta + scanned, kept.size)
-  }
-
   /** FAST-FORWARD publish: commits the branch tip as version base+1 on
     * the main line and deletes the staged chain. A main head that moved
     * past the fork point makes the manifest CAS lose — surfaced as the
@@ -648,7 +440,7 @@ private[storage] object SnapshotBranch {
     // the audit count rides — conforming data usually REFUTES the
     // violation predicate from the staged blobs alone (bounds prove
     // compliance), so the common publish scans nothing.
-    requireTipSatisfiesConstraints(spark, path, name, st)
+    requireTipSatisfiesConstraints(spark, path, name)
     try SnapshotStore.commit(spark, path, target, st.entries, Nil,
       Some(st.schema), st.renames, op = "publish_branch")
     catch {
@@ -664,35 +456,26 @@ private[storage] object SnapshotBranch {
 
   /** Publish-time constraint gate (see [[publish]]): every current
     * constraint must hold on the branch TIP. The primary path is the
-    * stats-pruned [[countWhere]] over the violation predicate (zero
-    * files opened when staged bounds refute it); a predicate that cannot
-    * resolve against the tip's schema (it references a column the branch
-    * never carried — NULL under the union schema, where CHECK passes by
-    * SQL semantics) falls back to the padded batch gate
-    * [[SnapshotConstraints.enforce]] over the tip read.
+    * stats-pruned [[SnapshotStore.countWhere]] over the violation
+    * predicate (zero files opened when staged bounds refute it); a
+    * predicate that cannot resolve against the tip's schema (it
+    * references a column the branch never carried — NULL under the union
+    * schema, where CHECK passes by SQL semantics) falls back to the
+    * padded batch gate [[SnapshotConstraints.enforce]] over the tip read.
     */
   private def requireTipSatisfiesConstraints(spark: SparkSession,
-      path: String, name: String, st: Staged): Unit = {
+      path: String, name: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val cs = SnapshotConstraints.all(spark, path)
     if (cs.isEmpty) return
-    lazy val tipRead: DataFrame = {
-      val fields = st.entries.values.flatten.toSeq.distinct.sorted
-      if (fields.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          st.schema).drop("_p")
-      else SnapshotStore.applyRenames(
-        SnapshotStore.readFieldsPhys(spark, path, fields, Some(st.schema)),
-        st.renames)
-    }
+    val tip = Dml.Branch(name)
     cs.toSeq.sortBy(_._1).foreach { case (n, p) =>
       val probe =
-        try Left(countWhere(spark, path, name,
-          not(coalesce(expr(p), lit(true)))))
+        try Left(SnapshotStore.countWhere(spark, path,
+          not(coalesce(expr(p), lit(true))), target = tip))
         catch { case _: org.apache.spark.sql.AnalysisException => Right(()) }
       probe match {
-        case Left((viol, _)) =>
+        case Left(viol) =>
           if (viol > 0L)
             throw new IllegalArgumentException(
               s"publish of branch '$name' to $path refused: constraint " +
@@ -700,7 +483,8 @@ private[storage] object SnapshotBranch {
                 s"and the branch tip violates it ($viol rows) — fix the " +
                 "candidate (branch DML / re-stage) or drop the constraint")
         case Right(_) =>
-          SnapshotConstraints.enforce(spark, path, tipRead,
+          SnapshotConstraints.enforce(spark, path,
+            SnapshotStore.read(spark, path, target = tip),
             s"publish of branch '$name'")
       }
     }

@@ -66,47 +66,6 @@ private[graft] object SnapshotDml {
   import SnapshotFormat.{dirOf, statsOf, parseStats, StatsSep,
     dvOf, baseOf, withDv, DvRef}
 
-  /** Analyzes `pred` against the version's logical schema — a zero-row
-    * analysis (no I/O): literals arrive typed in Catalyst's internal
-    * forms, implicit casts land explicitly, unknown columns fail as
-    * loudly as `read().filter` would.
-    */
-  private def analyzed(spark: SparkSession,
-      logicalSchema: StructType,
-      pred: Column): Expression =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-
-  /** Resolves the head's entries, restricted to the partition values an
-    * equality/IN conjunct on the partition column provably confines the
-    * predicate to (partitions outside the set satisfy it for no row —
-    * sound to leave untouched without resolving their fields). On a
-    * segmented head the restricted resolve parses O(touched buckets).
-    */
-  private def touchedEntries(spark: SparkSession, path: String, head: Int,
-      renames: Map[String, String],
-      logicalSchema: StructType,
-      expr: Expression)
-      : Map[String, Seq[String]] =
-    partitionValuesOf(spark, path, renames, logicalSchema, expr) match {
-      case Some(values) => forWrite(path, head)(
-        readManifestValues(spark, path, head, values.toSeq))
-      case None =>
-        // partial composite constraint ("day = X" over day×tenant):
-        // untouched partitions are excluded before any field resolves —
-        // sound for DML exactly like the exact-key restriction; rides
-        // the head's component index where one exists (r18)
-        forWrite(path, head)(
-          partialEntries(spark, path, head, renames, logicalSchema, expr)
-            .getOrElse(readManifest(spark, path, head)))
-    }
-
   /** The shared DML planning pass over `entries`: the field-level
     * tri-state verdict with needle (bloom) demotion, then the r16
     * per-FILE split of ambiguous multi-file slices. `metadataDrop` is
@@ -292,93 +251,17 @@ private[graft] object SnapshotDml {
           target: Dml.Target, mode: Dml.Mode,
           beforeCommit: () => Unit): DmlReceipt = {
     requireAtomicRename(path)
-    target match {
-      case Dml.Head =>
-        attempt(spark, path, op, pred, mode, "update", beforeCommit,
-          resolveHead(spark, path))
-      case Dml.Branch(name) =>
-        withCasRetry() {
-          attempt(spark, path, op, pred, mode, "branch update",
-            beforeCommit, resolveBranch(spark, path, name))
-        }
+    Resolved.retrying(target) {
+      attempt(spark, path, op, pred, mode, beforeCommit,
+        Resolved.of(spark, path, target))
     }
   }
 
-  /** One attempt's target, resolved: the version it reads, the schema
-    * and renames in force, and the target-specific steps — `scope` (the
-    * entries the plan runs over and the predicate its verdict uses),
-    * `readCoW` (the copy-on-write read, physical names), `priorOf` (the
-    * entries of keys outside the touched set: a new gen's key may have
-    * MIGRATED eras under an evolved partition spec) and `commit`
-    * (removed keys, added entries, new dirs, op).
-    */
-  private case class Resolved(version: Int, physSchema: StructType,
-      renames: Map[String, String],
-      scope: (StructType, Expression) =>
-        (Map[String, Seq[String]], Expression),
-      readCoW: Seq[String] => DataFrame,
-      priorOf: Set[String] => Map[String, Seq[String]],
-      commit: (Set[String], Map[String, Seq[String]], Seq[String],
-        String) => Unit) {
-    val logicalSchema: StructType = StructType(physSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
-  }
-
-  private def resolveHead(spark: SparkSession, path: String): Resolved = {
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, head)
-    val physSchema = versionSchema(spark, path, head)
-    Resolved(head, physSchema, renames,
-      scope = (logicalSchema, expr) => {
-        val entries = touchedEntries(spark, path, head, renames,
-          logicalSchema, expr)
-        // the restricted resolution consumed the partition conjuncts —
-        // the verdict treats them as TRUE ("delete day X" drops as
-        // metadata); only when a restriction actually APPLIED (a
-        // blown-out IN-list falls through both paths and must keep its
-        // conjuncts)
-        val vexpr =
-          if (partitionValuesOf(spark, path, renames, logicalSchema,
-              expr).isDefined ||
-            partitionKeyPredOf(spark, path, renames, logicalSchema,
-              expr).isDefined)
-            stripPartConjuncts(expr,
-              consumedPartComps(spark, path, renames, logicalSchema, expr))
-          else expr
-        (entries, vexpr)
-      },
-      readCoW = fields => readFields(spark, path, head, fields),
-      priorOf = keys => forWrite(path, head)(
-        readManifestValues(spark, path, head, keys.toSeq)),
-      commit = (removed, added, newDirs, op) =>
-        commitDelta(spark, path, head + 1, head, removed = removed,
-          added = added, newDirs, Some(physSchema), renames, op = op))
-  }
-
-  /** A branch tip's entries and predicate stay unrestricted:
-    * `readStaged` already loaded the tip's whole (flat) entry map, so a
-    * restricted resolve has nothing to save.
-    */
-  private def resolveBranch(spark: SparkSession, path: String,
-      name: String): Resolved = {
-    val st = SnapshotBranch.readStaged(spark, path, name)
-    Resolved(st.k, st.schema, st.renames,
-      scope = (_, expr) => (st.entries, expr),
-      readCoW = fields => readFieldsPhys(spark, path, fields,
-        Some(st.schema)),
-      priorOf = keys => st.entries.filter { case (k, _) => keys(k) },
-      commit = (removed, added, _, _) =>
-        SnapshotBranch.stageNext(spark, path, name, st,
-          st.entries -- removed ++ added))
-  }
-
-  /** resolve → [[planDml]] → apply → commit over one resolved target.
-    * `verb` names an update in refusals and CHECK-constraint errors.
-    */
+  /** resolve → [[planDml]] → apply → commit over one resolved target. */
   private def attempt(spark: SparkSession, path: String, op: Dml.Op,
-      pred: Column, mode: Dml.Mode, verb: String,
+      pred: Column, mode: Dml.Mode,
       beforeCommit: () => Unit, st: Resolved): DmlReceipt = {
+    val verb = st.verb("update")
     def physPartCol: String = partColOf(spark, path).getOrElse(
       throw new IllegalStateException(
         s"store at $path records no partition column"))
@@ -390,11 +273,12 @@ private[graft] object SnapshotDml {
     }
     val isDelete = op == Dml.Delete
     val expr = analyzed(spark, st.logicalSchema, pred)
-    val (entries, vexpr) = st.scope(st.logicalSchema, expr)
     val statsCols = statsColsOf(spark, path)
     // MoR skips the file-grain split: positions are finer than files, so
     // probing footers to shrink the slice buys nothing the sidecar doesn't
-    val plan = planDml(spark, path, entries, vexpr, st.renames.map(_.swap),
+    val plan = planDml(spark, path, st.entries(st.logicalSchema, expr),
+      verdictExpr(spark, path, st.renames, st.logicalSchema, expr),
+      st.logicalToPhysical,
       statsCols, st.physSchema, metadataDrop = isDelete,
       fileGrain = mode == Dml.CoW)
     if (!plan.touched) return DmlReceipt(st.version, 0, 0, 0)
@@ -412,7 +296,7 @@ private[graft] object SnapshotDml {
       case _ if plan.rewrite.isEmpty =>
         (None, Map.empty[String, Long], Map.empty[String, String])
       case Dml.CoW =>
-        val rows = applyRenames(st.readCoW(plan.rewrite), st.renames)
+        val rows = st.read(plan.rewrite)
         (None, Map.empty[String, Long], writeRows(op match {
           case Dml.Delete => rows.filter(not(hit))
           case Dml.Update(assignments) =>
@@ -461,9 +345,8 @@ private[graft] object SnapshotDml {
     // key; single-spec stores hit the identity path
     val (removedF, addedF) = foldNewEntries(removed, rebuilt, newEntries,
       st.priorOf)
-    st.commit(removedF, addedF, dvRel.toSeq ++ newEntries.values
-      .map(_.split("/").take(2).mkString("/")).toSeq.distinct,
-      if (isDelete) "delete" else "update")
+    st.commit(removedF, addedF, dvRel.toSeq ++ genDirsOf(newEntries),
+      st.physSchema, if (isDelete) "delete" else "update")
     DmlReceipt(st.version + 1, plan.dropped,
       if (mode == Dml.CoW) plan.rewrite.size else newEntries.size,
       plan.kept, plan.keptFiles, plan.droppedFiles,

@@ -315,20 +315,18 @@ object SnapshotMergeInto {
     // save (measured: q_snapshot_merge_mor +1.7 s at 150 k rows), so
     // small merges keep the single-join plan. Applied only when every
     // key column's type matches exactly on both sides (the key hashes
-    // must agree with join equality). graft.merge.bloom.minRows tunes
-    // the threshold (0 forces the split — the parity spec does);
-    // GRAFT_MERGE_BLOOM=false pins the single-join plan.
-    val bloomMinRows: Long = sys.env.get("GRAFT_MERGE_BLOOM_MINROWS")
-      .orElse(Option(System.getProperty("graft.merge.bloom.minRows")))
-      .map(_.toLong).getOrElse(4000000L)
+    // must agree with join equality). The `graft.merge.bloom.minRows`
+    // system property is a TEST-ONLY seam, like `segmentThreshold`:
+    // SnapshotMergeIntoSpec sets it to 0 to force the split on a small
+    // fixture for its parity check.
+    val bloomMinRows: Long =
+      sys.props.get("graft.merge.bloom.minRows")
+        .map(_.toLong).getOrElse(4000000L)
     val touchedRowsEst: Long = touchedFields.iterator.map { f =>
       statsOf(f).map(parseStats).flatMap(
         _.valuesIterator.flatMap(_.rows).maxOption).getOrElse(0L)
     }.sum
-    val bloomSplit = sys.env.get("GRAFT_MERGE_BLOOM")
-      .orElse(Option(System.getProperty("graft.merge.bloom")))
-      .forall(_ != "false") &&
-      touchedRowsEst >= bloomMinRows &&
+    val bloomSplit = touchedRowsEst >= bloomMinRows &&
       keyCols.forall { k =>
         import org.apache.spark.sql.types._
         src.schema(k).dataType == logicalSchema(k).dataType &&

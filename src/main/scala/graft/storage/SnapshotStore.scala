@@ -30,7 +30,7 @@ import graft.operators.Joins
   *     NO window where some partitions are new and others old (the
   *     in-place store's overwrite-then-delete gap), and concurrent
   *     mergers get exactly one winner, the loser aborting with its
-  *     garbage removed. CAS losers retry with [[mergeWithRetry]] (each
+  *     garbage removed. CAS losers retry with [[withCasRetry]] (each
   *     attempt re-reads the new head and re-resolves, so retried merges
   *     serialize instead of clobbering).
   *
@@ -500,22 +500,11 @@ object SnapshotStore {
     * full-scan aggregate, so the blob text never depends on which path
     * ran (SnapshotFooterStatsSpec pins the equality type by type).
     */
-  /** Escape hatch shared by the per-commit and batched stats paths. */
-  private def footerStatsEnabled: Boolean =
-    sys.env.get("GRAFT_STATS_FOOTER")
-      .orElse(Option(System.getProperty("graft.stats.footer")))
-      .forall(_ != "false")
-
   private[graft] def genStats(spark: SparkSession, path: String, gen: String,
-                       statsCols: Seq[String]): Map[String, String] = {
-    if (statsCols.isEmpty) return Map.empty
-    (if (footerStatsEnabled)
-       SnapshotFileStats.genBlobs(spark, path, gen, statsCols)
-     else None) match {
-      case Some(m) => m
-      case None => genStatsAgg(spark, path, gen, statsCols)
-    }
-  }
+                       statsCols: Seq[String]): Map[String, String] =
+    if (statsCols.isEmpty) Map.empty
+    else SnapshotFileStats.genBlobs(spark, path, gen, statsCols)
+      .getOrElse(genStatsAgg(spark, path, gen, statsCols))
 
   /** The full-scan aggregate codec — the fallback (and parity oracle)
     * for [[genStats]]'s footer fast path.
@@ -647,8 +636,7 @@ object SnapshotStore {
     // gens ride the era-batched aggregate below. A store-written
     // backfill then pays no stats-scan job at all.
     val footerProved: Map[String, Map[String, String]] =
-      if (!footerStatsEnabled) Map.empty
-      else byGen.flatMap { case (g, dirs) =>
+      byGen.flatMap { case (g, dirs) =>
         SnapshotFileStats.genBlobs(spark, path, g, statsCols).flatMap { m =>
           // the caller may name a SUBSET of the gen's dirs — serve
           // exactly the requested partition values, all or nothing
@@ -1007,45 +995,45 @@ object SnapshotStore {
     }
   }
 
-  /** [[read]] with manifest-level DATA SKIPPING: gens whose recorded
-    * min/max bounds prove `pred` unsatisfiable are never listed, opened,
-    * or footer-probed — the scan plan's input is decided from the
-    * manifest alone. `pred` is then applied in full on what survives
-    * (stats are conservative, the filter is the semantics), so ANY
-    * predicate is correct here; only its stats-expressible conjuncts
-    * prune. SnapshotStatsSpec pins `inputFiles` ⊆ surviving dirs.
+  /** Analyzes `pred` against `logicalSchema` — a zero-row analysis (no
+    * I/O): literals arrive typed in Catalyst's internal forms (epoch
+    * days/micros — the blob domain), implicit casts land explicitly,
+    * unknown columns fail as loudly as `read().filter` would.
     */
-  /** The store-relative dirs of `fields` surviving `pred` — the shared
-    * pruning core of [[readWhere]] and the branch audit's pruned read
-    * ([[readBranchWhere]]). The predicate is resolved against the
-    * LOGICAL schema (a zero-row analysis, no I/O): literals arrive typed
-    * in Catalyst's internal forms (epoch days/micros — the blob domain),
-    * implicit casts land explicitly, unknown columns fail as loudly as
-    * `read().filter` would.
-    */
-  private[storage] def survivingDirs(spark: SparkSession,
-      fields: Seq[String],
-      physSchema: org.apache.spark.sql.types.StructType,
-      renames: Map[String, String],
-      pred: org.apache.spark.sql.Column): Seq[String] = {
-    val logicalToPhysical = renames.map(_.swap)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    val expr = spark.createDataFrame(
+  private[storage] def analyzed(spark: SparkSession,
+      logicalSchema: org.apache.spark.sql.types.StructType,
+      pred: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       logicalSchema).filter(pred)
       .queryExecution.analyzed match {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
     }
-    fields.filter { field =>
-      statsOf(field) match {
-        case None => true
-        case Some(blob) =>
-          evalPrune(expr, parseStats(blob), logicalToPhysical) != NoMatch
-      }
-    }.map(dirOf).sorted
+
+  /** The `fields` whose stats blobs do not prove the analyzed `expr`
+    * unsatisfiable — [[readWhere]]'s min/max pruning core.
+    */
+  private def survivingFields(fields: Seq[String],
+      expr: org.apache.spark.sql.catalyst.expressions.Expression,
+      logicalToPhysical: Map[String, String]): Seq[String] =
+    fields.filter(f => statsOf(f).forall(blob =>
+      evalPrune(expr, parseStats(blob), logicalToPhysical) != NoMatch))
+
+  /** NEEDLE pass (r15): `fields` minus the gens whose bloom sidecars
+    * prove an equality/IN conjunct on a declared bloom column absent —
+    * the lookup min/max cannot serve (a uniform key overlaps every gen's
+    * range). One tiny sidecar read per gen, none when nothing is
+    * declared or `expr` has no probe.
+    */
+  private def needleKept(spark: SparkSession, path: String,
+      fields: Seq[String],
+      expr: org.apache.spark.sql.catalyst.expressions.Expression,
+      logicalToPhysical: Map[String, String]): Seq[String] = {
+    val kept = SnapshotBloom.prune(spark, path, fields.map(dirOf),
+      SnapshotBloom.probesOf(expr, logicalToPhysical,
+        SnapshotBloom.bloomColsOf(spark, path).toSet)).toSet
+    fields.filter(f => kept(dirOf(f)))
   }
 
   /** The partition VALUES `pred` provably restricts the recorded
@@ -1200,10 +1188,10 @@ object SnapshotStore {
     * component's exact string value), so verdict-side evaluation may
     * treat them as TRUE — which turns "count rows of day X" into a pure
     * metadata read and "delete day X" into a metadata drop. Only sound
-    * over a resolution that WAS restricted (main-line
-    * [[fieldsForExpr]]/touchedEntries); never over a full entry map.
+    * over a resolution that WAS restricted ([[Resolved]]'s `fields` or
+    * `entries`, via [[verdictExpr]]); never over a full entry map.
     */
-  private[storage] def consumedPartComps(spark: SparkSession,
+  private def consumedPartComps(spark: SparkSession,
       path: String, renames: Map[String, String],
       logicalSchema: org.apache.spark.sql.types.StructType,
       expr: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -1245,7 +1233,7 @@ object SnapshotStore {
     * TRUE (top-level And-conjuncts only — a disjunct branch is not a
     * conjunct and stays).
     */
-  private[storage] def stripPartConjuncts(
+  private def stripPartConjuncts(
       expr: org.apache.spark.sql.catalyst.expressions.Expression,
       consumed: Set[String])
       : org.apache.spark.sql.catalyst.expressions.Expression = {
@@ -1343,60 +1331,60 @@ object SnapshotStore {
         }
     }
 
+  /** `expr` for per-field verdicts over a key-restricted resolution
+    * ([[Resolved]]'s `fields` and `entries`): the restriction already
+    * enforced the consumed partition conjuncts, so they evaluate as TRUE
+    * — "count rows of partition X" is a pure metadata read and "delete
+    * day X" drops as metadata, even with no stats on the partition
+    * column. Only when a restriction actually APPLIED (a blown-out
+    * IN-list falls through both paths and must keep its conjuncts).
+    */
+  private[storage] def verdictExpr(spark: SparkSession, path: String,
+      renames: Map[String, String],
+      logicalSchema: org.apache.spark.sql.types.StructType,
+      expr: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    if (partitionValuesOf(spark, path, renames, logicalSchema,
+        expr).isDefined ||
+      partitionKeyPredOf(spark, path, renames, logicalSchema,
+        expr).isDefined)
+      stripPartConjuncts(expr,
+        consumedPartComps(spark, path, renames, logicalSchema, expr))
+    else expr
+
+  /** [[read]] with manifest-level DATA SKIPPING: gens whose recorded
+    * min/max bounds prove `pred` unsatisfiable are never listed, opened,
+    * or footer-probed — the scan plan's input is decided from the
+    * manifest alone. `pred` is then applied in full on what survives
+    * (stats are conservative, the filter is the semantics), so ANY
+    * predicate is correct here; only its stats-expressible conjuncts
+    * prune. SnapshotStatsSpec pins `inputFiles` ⊆ surviving dirs.
+    *
+    * PARTITION-KEY restriction (r15): an equality/IN conjunct on the
+    * partition column restricts the resolution to those values' manifest
+    * entries — O(touched buckets) on a segmented head, no stats needed
+    * (the manifest KEY is the partition value). At a 1M-partition store,
+    * `readWhere(p === 'x' && ts > t)` parses one bucket instead of the
+    * store-wide dir list, then stats-prunes inside the survivors. A
+    * [[Dml.Branch]] target prunes the staged tip the same way (staged
+    * gens carry the same stats blobs and bloom sidecars) — the WAP
+    * audit's pruned read.
+    */
   def readWhere(spark: SparkSession, path: String,
                 pred: org.apache.spark.sql.Column,
-                version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(headVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, v)
-    val physSchema = versionSchema(spark, path, v)
-    // PARTITION-KEY restriction (r15): an equality/IN conjunct on the
-    // partition column restricts the resolution to those values' manifest
-    // entries — O(touched buckets) on a segmented head, no stats needed
-    // (the manifest KEY is the partition value). At a 1M-partition store,
-    // `readWhere(p === 'x' && ts > t)` parses one bucket instead of the
-    // store-wide dir list, then stats-prunes inside the survivors.
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    val expr = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-    // dirs-only resolution (readManifestDirs) when unrestricted, NOT the
-    // value-keyed map: pruning needs each dir field's stats blob, never
-    // the partition value, and at 1M manifest entries the map's
-    // unescape+build constants dominate the whole resolve (the same
-    // argument behind read()'s dirs-only path)
-    val fields = fieldsForExpr(spark, path, v, renames, logicalSchema,
-      expr)
-    // NEEDLE pass (r15): after min/max pruning, equality/IN conjuncts on
-    // declared bloom columns drop whole gens whose needle file proves the
-    // value absent — the lookup min/max cannot serve (a uniform key
-    // overlaps every gen's range). One tiny sidecar read per surviving
-    // gen, zero when nothing is declared or the predicate has no probe.
-    val probes = SnapshotBloom.probesOf(expr, renames.map(_.swap),
-      SnapshotBloom.bloomColsOf(spark, path).toSet)
-    // dirs prune (stats + needle), then map the survivors back to their
-    // FIELD texts so the central reader can apply any deletion vectors
-    val byDir = fields.map(f => dirOf(f) -> f).toMap
-    val kept = SnapshotBloom.prune(spark, path,
-      survivingDirs(spark, fields, physSchema, renames, pred), probes)
-      .map(byDir)
-    // everything-pruned: the empty frame under the version's logical
-    // schema DIRECTLY (read().limit(0) would plan a parquet scan over
-    // every gen dir — the exact listing cost pruning exists to avoid,
-    // paid in the best-case scenario)
-    val base =
-      if (kept.isEmpty) applyRenames(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        versionSchema(spark, path, v)), renames)
-      else applyRenames(readFields(spark, path, v, kept), renames)
-    base.filter(pred)
+                version: Option[Int] = None,
+                target: Dml.Target = Dml.Head): DataFrame = {
+    val st = Resolved.of(spark, path, target, version)
+    val expr = analyzed(spark, st.logicalSchema, pred)
+    val fields = st.fields(st.logicalSchema, expr)
+    // dirs prune (stats + needle), keeping the FIELD texts so the central
+    // reader can apply any deletion vectors; everything pruned reads as
+    // the empty frame directly (read().limit(0) would plan a parquet scan
+    // over every gen dir — the exact listing cost pruning exists to
+    // avoid, paid in the best-case scenario)
+    st.read(needleKept(spark, path,
+      survivingFields(fields, expr, st.logicalToPhysical), expr,
+      st.logicalToPhysical)).filter(pred)
   }
 
   /** COUNT under `pred`, answered from the MANIFEST wherever provable —
@@ -1411,72 +1399,38 @@ object SnapshotStore {
     * the difference between "one manifest resolve" and "list + footer-
     * probe every file the table owns" — even parquet's own footer-count
     * shortcut still pays the full listing. Dirs without v2 counts
-    * (pre-r15 blobs, stats-less stores) fall back to the scan path.
+    * (pre-r15 blobs, stats-less stores) fall back to the scan path. A
+    * [[Dml.Branch]] target counts the staged tip — the WAP audit's "how
+    * many rows am I about to publish?".
     */
   def countWhere(spark: SparkSession, path: String,
                  pred: org.apache.spark.sql.Column,
-                 version: Option[Int] = None): Long =
-    countWhereDetailed(spark, path, pred, version)._1
+                 version: Option[Int] = None,
+                 target: Dml.Target = Dml.Head): Long =
+    countWhereDetailed(spark, path, pred, version, target)._1
 
   /** [[countWhere]] plus the number of dirs the scan fallback opened —
     * the seam specs and the declared query pin metadata-only-ness on.
     */
   private[graft] def countWhereDetailed(spark: SparkSession, path: String,
       pred: org.apache.spark.sql.Column,
-      version: Option[Int] = None): (Long, Int) = {
-    val v = version.orElse(headVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, v)
-    val physSchema = versionSchema(spark, path, v)
-    val logicalToPhysical = renames.map(_.swap)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-    val expr = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-    // the same partition-KEY restriction readWhere rides (an equality/IN
-    // conjunct on the partition column): restricted values resolve
-    // O(touched buckets); every excluded entry counts zero by the same
-    // argument that lets readWhere skip it
-    val fields = fieldsForExpr(spark, path, v, renames, logicalSchema,
-      expr)
-    // the restriction already enforced the partition conjuncts — the
-    // verdict treats them as TRUE, so "count rows of partition X" is a
-    // pure metadata read even with no stats on the partition column.
-    // Only when a restriction actually APPLIED (a blown-out IN-list
-    // falls through both paths and must keep its conjuncts)
-    val vexpr =
-      if (partitionValuesOf(spark, path, renames, logicalSchema,
-          expr).isDefined ||
-        partitionKeyPredOf(spark, path, renames, logicalSchema,
-          expr).isDefined)
-        stripPartConjuncts(expr,
-          consumedPartComps(spark, path, renames, logicalSchema, expr))
-      else expr
-    val (meta, res0) = countOverFields(fields, vexpr, logicalToPhysical)
-    // needle pass on the residual: a gen whose bloom filter proves an
-    // equality probe absent holds zero matching rows — it counts as
-    // NoMatch, never scanned
-    val byDir = res0.map(f => dirOf(f) -> f).toMap
-    val kept = SnapshotBloom.prune(spark, path, res0.map(dirOf),
-      SnapshotBloom.probesOf(expr, logicalToPhysical,
-        SnapshotBloom.bloomColsOf(spark, path).toSet))
-      .map(byDir)
+      version: Option[Int] = None,
+      target: Dml.Target = Dml.Head): (Long, Int) = {
+    val st = Resolved.of(spark, path, target, version)
+    val expr = analyzed(spark, st.logicalSchema, pred)
+    // the same partition-KEY restriction readWhere rides: every excluded
+    // entry counts zero by the same argument that lets readWhere skip it
+    val (meta, res0) = countOverFields(st.fields(st.logicalSchema, expr),
+      verdictExpr(spark, path, st.renames, st.logicalSchema, expr),
+      st.logicalToPhysical)
+    // a bloom-rejected gen holds zero matching rows: never scanned
+    val kept = needleKept(spark, path, res0, expr, st.logicalToPhysical)
     val scanned =
-      if (kept.isEmpty) 0L
-      else applyRenames(readFields(spark, path, v, kept), renames)
-        .filter(pred).count()
+      if (kept.isEmpty) 0L else st.read(kept).filter(pred).count()
     (meta + scanned, kept.size)
   }
 
-  /** The count verdict loop shared by [[countWhere]] and the branch
-    * audit's [[SnapshotBranch]] count: per manifest field, NO-MATCH
+  /** The count verdict loop of [[countWhere]]: per manifest field, NO-MATCH
     * contributes zero, ALL-MATCH its recorded rows MINUS its deletion-
     * vector'd positions (blobs describe the dir's PHYSICAL rows, the DV
     * refs record exactly how many of them are logically deleted — the
@@ -1484,7 +1438,7 @@ object SnapshotStore {
     * cannot serve — it joins the residual), anything else joins the
     * residual. Returns (metadata count, residual FIELDS to scan).
     */
-  private[storage] def countOverFields(fields: Seq[String],
+  private def countOverFields(fields: Seq[String],
       expr: org.apache.spark.sql.catalyst.expressions.Expression,
       logicalToPhysical: Map[String, String]): (Long, Seq[String]) = {
     var meta = 0L
@@ -1533,13 +1487,9 @@ object SnapshotStore {
       version: Option[Int] = None): (DataFrame, Int) = {
     import org.apache.spark.sql.types._
     require(cols.nonEmpty, "minMaxWhere needs at least one column")
-    val v = version.orElse(headVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, v)
-    val physSchema = versionSchema(spark, path, v)
-    val logicalToPhysical = renames.map(_.swap)
-    val logicalSchema = StructType(physSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
+    val st = Resolved.of(spark, path, Dml.Head, version)
+    val logicalSchema = st.logicalSchema
+    val logicalToPhysical = st.logicalToPhysical
     cols.foreach(c => require(logicalSchema.fieldNames.contains(c),
       s"minMaxWhere column '$c' is not in the version's schema " +
         s"(${logicalSchema.fieldNames.mkString(", ")})"))
@@ -1547,16 +1497,8 @@ object SnapshotStore {
     // bound EXACT (grammar v3 flags — an untruncated bound IS the min or
     // max); truncated/legacy string bounds are containing, so their gens
     // go to the scan
-    val expr = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      logicalSchema).filter(pred)
-      .queryExecution.analyzed match {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-      case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
-    }
-    val fields = fieldsForExpr(spark, path, v, renames, logicalSchema,
-      expr)
+    val expr = analyzed(spark, logicalSchema, pred)
+    val fields = st.fields(logicalSchema, expr)
     // blob internal string -> the external JVM value createDataFrame
     // expects for the column's type (the exact inverse of statValue)
     def external(s: String, dt: DataType): Any = dt match {
@@ -1624,20 +1566,15 @@ object SnapshotStore {
     }
     // needle pass on the residual, countWhere's symmetry: a gen whose
     // bloom filter proves an equality probe absent contributes nothing
-    val res0 = residual.result().sorted
-    val byDir = res0.map(f => dirOf(f) -> f).toMap
-    val dirs = SnapshotBloom.prune(spark, path, res0.map(dirOf),
-      SnapshotBloom.probesOf(expr, logicalToPhysical,
-        SnapshotBloom.bloomColsOf(spark, path).toSet))
-      .map(byDir)
+    val dirs = needleKept(spark, path, residual.result().sorted, expr,
+      logicalToPhysical)
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
     val scannedDf =
       if (dirs.isEmpty) spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         outSchema)
-      else applyRenames(readFields(spark, path, v, dirs), renames)
-        .filter(pred).agg(aggs.head, aggs.tail: _*)
+      else st.read(dirs).filter(pred).agg(aggs.head, aggs.tail: _*)
     val metaDf = spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(
         candidates.result()).asJava, outSchema)
@@ -2023,43 +1960,13 @@ object SnapshotStore {
   // ---- branches (write-audit-publish) — see SnapshotBranch ---------------
 
   /** Creates branch `name` forked from the current head — the WAP
-    * staging lever: stage candidate commits, audit, fast-forward publish
-    * or drop. Full design in [[SnapshotBranch]].
+    * staging lever: stage candidate commits ([[append]], [[merge]],
+    * [[dml]] with a [[Dml.Branch]] target), audit them ([[read]],
+    * [[readWhere]], [[countWhere]] with the same target), then
+    * fast-forward publish or drop. Full design in [[SnapshotBranch]].
     */
   def branchCreate(spark: SparkSession, path: String, name: String): Unit =
     SnapshotBranch.create(spark, path, name)
-
-  /** Insert-only append to branch `name` (the WAP candidate write);
-    * with an `idempotencyKey`, redelivery is structural-exactly-once on
-    * the branch — the streaming-WAP contract.
-    */
-  def appendBranch(df: DataFrame, path: String, name: String,
-                   partCol: String,
-                   idempotencyKey: Option[String] = None): Unit =
-    SnapshotBranch.append(df, path, name, partCol, idempotencyKey)
-
-  /** MERGE into branch `name` (upsert + insert + delete candidates — the
-    * CDC-shaped WAP write); same semantics contract as [[merge]],
-    * resolved against the branch tip.
-    */
-  def mergeBranch(spark: SparkSession, path: String, name: String,
-                  batch: DataFrame, partCol: String, keyCols: Seq[String],
-                  deleteCol: Option[String] = None,
-                  precedenceCol: Option[String] = None): Unit =
-    SnapshotBranch.merge(spark, path, name, batch, partCol, keyCols,
-      deleteCol, precedenceCol)
-
-  /** Reads branch `name`'s tip (the WAP audit surface). */
-  def readBranch(spark: SparkSession, path: String, name: String): DataFrame =
-    SnapshotBranch.read(spark, path, name)
-
-  /** [[readBranch]] with manifest-level data skipping over the staged
-    * entries — the pruned audit read ([[readWhere]]'s contract, on a
-    * branch tip).
-    */
-  def readBranchWhere(spark: SparkSession, path: String, name: String,
-                      pred: org.apache.spark.sql.Column): DataFrame =
-    SnapshotBranch.readWhere(spark, path, name, pred)
 
   /** FAST-FORWARD publishes branch `name` as the new main head and drops
     * the branch; refuses (loudly) if main advanced past the fork point.
@@ -2100,20 +2007,6 @@ object SnapshotStore {
   def expireBranches(spark: SparkSession, path: String,
                      olderThanMs: Long): Seq[String] =
     SnapshotBranch.expireBranches(spark, path, olderThanMs)
-
-  /** [[countWhere]] over a branch TIP — the candidate-corpus audit count
-    * ("how many rows am I about to publish?"), metadata-served exactly
-    * like main's.
-    */
-  def countBranchWhere(spark: SparkSession, path: String, name: String,
-                       pred: org.apache.spark.sql.Column): Long =
-    SnapshotBranch.countWhere(spark, path, name, pred)._1
-
-  /** [[countBranchWhere]] plus the scan-fallback dir count. */
-  private[graft] def countBranchWhereDetailed(spark: SparkSession,
-      path: String, name: String,
-      pred: org.apache.spark.sql.Column): (Long, Int) =
-    SnapshotBranch.countWhere(spark, path, name, pred)
 
   /** Branch catalog: name → the branch's own staged version counter. */
   def branches(spark: SparkSession, path: String): Map[String, Int] =
@@ -3126,31 +3019,14 @@ object SnapshotStore {
   private[storage] def residencyKeys(spark: SparkSession, path: String,
       batch: DataFrame, currentSpecLogical: Seq[String],
       renames: Map[String, String],
-      allKeys: => Iterable[String]): Seq[String] = {
-    val specs = allPartSpecs(spark, path) match {
-      case Nil => Seq(currentSpecLogical)
-      case ss => ss.map(s =>
-        splitPartCols(s).map(c => renames.getOrElse(c, c))).distinct
-    }
-    val (computable, blind) =
-      specs.partition(_.forall(batch.columns.contains))
-    val keys = computable.flatMap { cs =>
-      batch.select(partKeyExpr(cs).as("_k")).distinct()
-        .collect().map(_.getString(0))
-    }.distinct
-    if (blind.isEmpty) keys
-    else {
-      val anyOneCol = blind.exists(_.size == 1)
-      val sizes = blind.map(_.size).toSet
-      // shape attribution: a 1-col era's keys never carry the separator
-      // (reserved at write time — [[partKeyExprCols]]), an n-col era's
-      // keys have exactly n parts
-      (keys ++ allKeys.filter { k =>
-        val n = k.split(PartSep, -1).length
-        (anyOneCol && n == 1) || sizes.contains(n)
-      }).distinct
-    }
-  }
+      allKeys: => Iterable[String]): Seq[String] =
+    residency(spark, path, batch, currentSpecLogical, renames, allKeys) {
+      computable =>
+        (computable.flatMap { cs =>
+          batch.select(partKeyExpr(cs).as("_k")).distinct()
+            .collect().map(_.getString(0))
+        }.distinct, ())
+    }._1
 
   /** [[residencyKeys]] fused with the batch's ROW COUNT in ONE
     * aggregation job (§1.2: the merge path used to pay three passes over
@@ -3165,7 +3041,35 @@ object SnapshotStore {
   private[storage] def residencyKeysWithCount(spark: SparkSession,
       path: String, batch: DataFrame, currentSpecLogical: Seq[String],
       renames: Map[String, String], allKeys: => Iterable[String])
-      : (Seq[String], Long) = {
+      : (Seq[String], Long) =
+    residency(spark, path, batch, currentSpecLogical, renames, allKeys) {
+      computable =>
+        // collect_set drops NULL keys (a legal single-column value) — the
+        // max(isNull) flag re-adds them, preserving residencyKeys' exact
+        // key set
+        val aggExprs: Seq[org.apache.spark.sql.Column] =
+          computable.zipWithIndex.flatMap { case (cs, i) =>
+            val k = partKeyExpr(cs)
+            Seq(collect_set(k).as(s"_ks$i"), max(k.isNull).as(s"_kn$i"))
+          } :+ count(lit(1)).as("_n")
+        val row = batch.agg(aggExprs.head, aggExprs.tail: _*).head()
+        (computable.indices.flatMap { i =>
+          val ks = row.getSeq[String](row.fieldIndex(s"_ks$i"))
+          val hadNull = !row.isNullAt(row.fieldIndex(s"_kn$i")) &&
+            row.getBoolean(row.fieldIndex(s"_kn$i"))
+          ks ++ (if (hadNull) Seq(null) else Nil)
+        }.distinct, row.getLong(row.fieldIndex("_n")))
+    }
+
+  /** The era attribution both residency passes share: `keysOf` keys the
+    * batch under the eras it carries every component of (its one batch
+    * pass, plus any by-product); the blind eras add their shape-candidate
+    * keys from `allKeys`.
+    */
+  private def residency[T](spark: SparkSession, path: String,
+      batch: DataFrame, currentSpecLogical: Seq[String],
+      renames: Map[String, String], allKeys: => Iterable[String])(
+      keysOf: Seq[Seq[String]] => (Seq[String], T)): (Seq[String], T) = {
     val specs = allPartSpecs(spark, path) match {
       case Nil => Seq(currentSpecLogical)
       case ss => ss.map(s =>
@@ -3173,33 +3077,19 @@ object SnapshotStore {
     }
     val (computable, blind) =
       specs.partition(_.forall(batch.columns.contains))
-    // collect_set drops NULL keys (a legal single-column value) — the
-    // max(isNull) flag re-adds them, preserving residencyKeys' exact
-    // key set
-    val aggExprs: Seq[org.apache.spark.sql.Column] =
-      computable.zipWithIndex.flatMap { case (cs, i) =>
-        val k = partKeyExpr(cs)
-        Seq(collect_set(k).as(s"_ks$i"), max(k.isNull).as(s"_kn$i"))
-      } :+ count(lit(1)).as("_n")
-    val row = batch.agg(aggExprs.head, aggExprs.tail: _*).head()
-    val n = row.getLong(row.fieldIndex("_n"))
-    val keys = computable.indices.flatMap { i =>
-      val ks = row.getSeq[String](row.fieldIndex(s"_ks$i"))
-      val hadNull = !row.isNullAt(row.fieldIndex(s"_kn$i")) &&
-        row.getBoolean(row.fieldIndex(s"_kn$i"))
-      ks ++ (if (hadNull) Seq(null) else Nil)
-    }.distinct
-    val all =
-      if (blind.isEmpty) keys
-      else {
-        val anyOneCol = blind.exists(_.size == 1)
-        val sizes = blind.map(_.size).toSet
-        (keys ++ allKeys.filter { k =>
-          val nParts = k.split(PartSep, -1).length
-          (anyOneCol && nParts == 1) || sizes.contains(nParts)
-        }).distinct
-      }
-    (all, n)
+    val (keys, extra) = keysOf(computable)
+    if (blind.isEmpty) (keys, extra)
+    else {
+      val anyOneCol = blind.exists(_.size == 1)
+      val sizes = blind.map(_.size).toSet
+      // shape attribution: a 1-col era's keys never carry the separator
+      // (reserved at write time — [[partKeyExprCols]]), an n-col era's
+      // keys have exactly n parts
+      ((keys ++ allKeys.filter { k =>
+        val n = k.split(PartSep, -1).length
+        (anyOneCol && n == 1) || sizes.contains(n)
+      }).distinct, extra)
+    }
   }
 
   // ---- composite partition keys (r17) ---------------------------------
@@ -3511,116 +3401,96 @@ object SnapshotStore {
     partCol.foreach(publishPartCol(spark, path, _))
   }
 
-  /** Reads snapshot `version` (default: head). Untouched partitions are
-    * shared by reference across versions, so old snapshots cost no extra
-    * read work. An EMPTY version (a fresh [[init]], or every row deleted)
-    * reads as zero rows under the version's recorded schema.
+  /** Reads snapshot `version` (default: head), or a [[Dml.Branch]]
+    * target's staged tip (the WAP audit surface). Untouched partitions
+    * are shared by reference across versions, so old snapshots cost no
+    * extra read work. An EMPTY version (a fresh [[init]], or every row
+    * deleted) reads as zero rows under the version's recorded schema.
     */
   def read(spark: SparkSession, path: String,
-           version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(headVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no snapshots at $path"))
-    val fields = readManifestDirs(spark, path, v).sorted
-    if (fields.isEmpty)
-      return applyRenames(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        versionSchema(spark, path, v)), readRenames(spark, path, v))
-    applyRenames(readFields(spark, path, v, fields),
-      readRenames(spark, path, v))
+           version: Option[Int] = None,
+           target: Dml.Target = Dml.Head): DataFrame = {
+    val st = Resolved.of(spark, path, target, version)
+    st.read(st.allFields())
   }
 
   /** MERGE `batch` (upsert + insert + delete, latest-wins via
     * `precedenceCol`) as a NEW snapshot: reads only the touched
     * partitions' directories (manifest lookup, no listing, no filter),
     * writes only the touched partitions, commits one manifest. Same
-    * semantics contract as [[MergeStore.merge]].
+    * semantics contract as [[MergeStore.merge]]. A lost head CAS throws
+    * (wrap the call in [[withCasRetry]] to re-run it against the new
+    * head); a [[Dml.Branch]] target merges into the staged tip — the
+    * CDC-shaped WAP candidate write — and re-runs a lost staged CAS
+    * against the new tip. A published merge-bearing branch version is
+    * one commit with replaced dirs, so it stays VERSION-ATOMIC for the
+    * changes feed.
     */
   def merge(spark: SparkSession, path: String, batch: DataFrame,
             partCol: String, keyCols: Seq[String],
             deleteCol: Option[String] = None,
             precedenceCol: Option[String] = None,
             broadcastRowLimit: Long = Joins.BroadcastRowLimit,
-            beforeCommit: () => Unit = () => ()): Unit = {
+            beforeCommit: () => Unit = () => (),
+            target: Dml.Target = Dml.Head): Unit = {
     requireAtomicRename(path)
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path"))
-    val renames = readRenames(spark, path, head)
-    // one resolution code path with MergeStore — the "same semantics
-    // contract" is shared code, not a manually-synced copy
-    val (resolved, upserts) = MergeStore.resolveBatch(batch, keyCols,
-      deleteCol, precedenceCol)
-    // CHECK constraints gate the batch's surviving upserts (deletes and
-    // the carried-forward base are existing, already-conforming rows)
-    SnapshotConstraints.enforce(spark, path, upserts, "merge")
-    val keys = resolved.select(keyCols.map(col): _*).distinct()
-    // residency across every spec ERA (evolved stores resolve the
-    // batch's keys under each era; the lazy full-manifest fallback only
-    // materializes when an era cannot be keyed from the batch) — fused
-    // with the broadcast-decision row count into one batch pass (§1.2)
-    lazy val allEntries = forWrite(path, head)(
-      readManifest(spark, path, head))
-    val (parts0, batchRows) = residencyKeysWithCount(spark, path, resolved,
-      splitPartCols(partCol), renames, allEntries.keys)
-    val parts = parts0.toIndexedSeq
-    if (parts.isEmpty) return
-    // touched-values manifest lookup: on a segmented head this parses
-    // only the buckets the batch's partitions hash into — the merge
-    // itself never pays the store-wide manifest parse
-    val entries = forWrite(path, head)(
-      readManifestValues(spark, path, head, parts))
-    val touchedDirs = parts.flatMap(entries.get).flatten
-    val merged = if (touchedDirs.isEmpty) upserts else {
-      // the base reads PHYSICAL and joins in LOGICAL space (batch names);
-      // DV'd fields read through the central reader, so a merge over a
-      // merge-on-read-deleted slice never resurrects the deleted rows
-      val base = applyRenames(readFields(spark, path, head,
-        touchedDirs.toSeq), renames)
-      // the broadcast decision rides the fused count — no limit-probe job
-      require(broadcastRowLimit > 0 && broadcastRowLimit < Int.MaxValue,
-        s"broadcast row limit out of range: $broadcastRowLimit")
-      val keysB =
-        if (batchRows <= broadcastRowLimit) broadcast(keys) else keys
-      upserts.unionByName(
-        base.join(keysB, keyCols, "left_anti"),
-        allowMissingColumns = true)
+    require(broadcastRowLimit > 0 && broadcastRowLimit < Int.MaxValue,
+      s"broadcast row limit out of range: $broadcastRowLimit")
+    Resolved.retrying(target) {
+      val st = Resolved.of(spark, path, target)
+      // one resolution code path with MergeStore — the "same semantics
+      // contract" is shared code, not a manually-synced copy
+      val (resolved, upserts) = MergeStore.resolveBatch(batch, keyCols,
+        deleteCol, precedenceCol)
+      // CHECK constraints gate the batch's surviving upserts (deletes and
+      // the carried-forward base are existing, already-conforming rows)
+      SnapshotConstraints.enforce(spark, path, upserts, st.verb("merge"))
+      val keys = resolved.select(keyCols.map(col): _*).distinct()
+      // residency across every spec ERA (evolved stores resolve the
+      // batch's keys under each era; the lazy full-entry fallback only
+      // materializes when an era cannot be keyed from the batch) — fused
+      // with the broadcast-decision row count into one batch pass (§1.2)
+      val (parts, batchRows) = residencyKeysWithCount(spark, path,
+        resolved, splitPartCols(partCol), st.renames,
+        st.entries(st.logicalSchema,
+          org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
+          .keys)
+      if (parts.nonEmpty) {
+        // touched-values lookup: on a segmented head this parses only
+        // the buckets the batch's partitions hash into — the merge itself
+        // never pays the store-wide manifest parse
+        val entries = st.priorOf(parts.toSet)
+        val touchedDirs = parts.flatMap(entries.get).flatten
+        val merged = if (touchedDirs.isEmpty) upserts else {
+          // the base reads PHYSICAL and joins in LOGICAL space (batch
+          // names); DV'd fields read through the central reader, so a
+          // merge over a merge-on-read-deleted slice never resurrects the
+          // deleted rows. The broadcast decision rides the fused count —
+          // no limit-probe job
+          val keysB =
+            if (batchRows <= broadcastRowLimit) broadcast(keys) else keys
+          upserts.unionByName(
+            st.read(touchedDirs).join(keysB, keyCols, "left_anti"),
+            allowMissingColumns = true)
+        }
+        // write boundary: logical names map back to the stable physical
+        val newEntries = writeGen(toPhysical(merged, st.renames), path,
+          physicalPartCol(partCol, st.renames),
+          statsCols = statsColsOf(spark, path))
+        beforeCommit() // test seam: a concurrent committer lands here
+        // touched partitions whose rows were ALL deleted simply leave the
+        // manifest — no directory surgery, the files stay for old
+        // versions. foldNewEntries merges gens whose key MIGRATED eras
+        // (evolved spec) into any untouched entry at that key.
+        val (removed, added) = foldNewEntries(parts.toSet, Map.empty,
+          newEntries, st.priorOf)
+        st.commit(removed, added, genDirsOf(newEntries),
+          unionSchema(st.physSchema, toPhysical(upserts, st.renames).schema),
+          "merge")
+      }
     }
-    // write boundary: logical names map back to the stable physical ones
-    val newEntries = writeGen(toPhysical(merged, renames), path,
-      physicalPartCol(partCol, renames),
-      statsCols = statsColsOf(spark, path))
-    beforeCommit() // test seam: a concurrent committer lands here
-    // touched partitions whose rows were ALL deleted simply leave the
-    // manifest — no directory surgery, the files stay for old versions.
-    // foldNewEntries merges gens whose key MIGRATED eras (evolved spec)
-    // into any untouched entry at that key; single-spec: identity.
-    val (removed2, added2) = foldNewEntries(parts.toSet, Map.empty,
-      newEntries, cross => forWrite(path, head)(
-        readManifestValues(spark, path, head, cross.toSeq)))
-    commitDelta(spark, path, head + 1, head,
-      removed = removed2,
-      added = added2,
-      newEntries.values.map(_.split("/").take(2).mkString("/"))
-        .toSeq.distinct,
-      Some(unionSchema(versionSchema(spark, path, head),
-        toPhysical(upserts, renames).schema)),
-      renames, op = "merge")
   }
-
-  /** [[merge]] inside [[withCasRetry]]: two concurrent mergers both land,
-    * one as version v and the retried one as v+1.
-    */
-  def mergeWithRetry(spark: SparkSession, path: String, batch: DataFrame,
-                     partCol: String, keyCols: Seq[String],
-                     deleteCol: Option[String] = None,
-                     precedenceCol: Option[String] = None,
-                     broadcastRowLimit: Long = Joins.BroadcastRowLimit,
-                     maxRetries: Int = 5,
-                     beforeCommit: () => Unit = () => ()): Unit =
-    withCasRetry(maxRetries) {
-      merge(spark, path, batch, partCol, keyCols, deleteCol,
-        precedenceCol, broadcastRowLimit, beforeCommit)
-    }
 
   /** Insert-only APPEND fast path: writes ONLY the batch's rows as a new
     * gen and commits a manifest where each touched partition keeps its
@@ -3631,141 +3501,147 @@ object SnapshotStore {
     * The caller guarantees appended keys are NEW (insert-only CDC);
     * duplicate keys need [[merge]]. Appends accumulate small per-partition
     * files by design — [[compactPartitions]] (or any merge touching the
-    * partition) collapses them.
+    * partition) collapses them. A [[Dml.Branch]] target appends to the
+    * staged tip — the WAP candidate write; its gens land in the store's
+    * own `data/` with the store's declared stats, so only the staged
+    * metadata distinguishes them from a main-line append.
     *
     * `idempotencyKey` makes redelivery structural-exactly-once (the
     * Iceberg append-by-checkpoint argument, for streaming `foreachBatch`
     * sources whose at-least-once redelivery would otherwise duplicate an
     * insert-only batch): the gen dir name derives from the key, and an
-    * append whose gen is referenced by ANY retained manifest is a no-op.
+    * append whose gen is already on the target is a no-op (the head:
+    * referenced by ANY retained manifest; a branch: by its tip).
     * The pinned dir is published by stage-and-rename (see [[writeGen]]),
     * so concurrent duplicate deliveries — the zombie-writer case — race
     * on the RENAME, never on writes inside one directory; the dir-race
-    * loser adopts the published dir and the manifest CAS then serializes
-    * the two commits, the second collapsing to a no-op (deduped dir
-    * lists). A crash BETWEEN gen publish and commit leaves a complete
-    * unreferenced dir the redelivery adopts and commits — either way
-    * the batch lands exactly once. The guarantee window is the retention
-    * window: once [[expire]] drops every manifest referencing the gen,
-    * the key is forgotten (by then the source's own checkpoint has long
-    * since sealed the batch).
+    * loser adopts the published dir and the CAS then serializes the two
+    * commits, the second collapsing to a no-op (deduped dir lists). A
+    * crash BETWEEN gen publish and commit leaves a complete unreferenced
+    * dir the redelivery adopts and commits — either way the batch lands
+    * exactly once. The guarantee window is the retention window: once
+    * [[expire]] drops every manifest referencing the gen, the key is
+    * forgotten (by then the source's own checkpoint has long since
+    * sealed the batch).
     */
   def append(df: DataFrame, path: String, partCol: String,
              idempotencyKey: Option[String] = None,
              maxRetries: Int = 5,
-             beforeCommit: () => Unit = () => ()): Unit =
-    // append is THE concurrent high-rate path: a CAS loss against a
-    // concurrent merge/compaction retries against the new head by
-    // default (each attempt re-reads it; with an idempotencyKey the
-    // deterministic gen rewrite is safe, and without one the loser's
-    // gen dirs were already cleaned)
-    withCasRetry(maxRetries) {
-      appendOnce(df, path, partCol, idempotencyKey, beforeCommit)
-    }
-
-  private def appendOnce(df: DataFrame, path: String, partCol: String,
-                         idempotencyKey: Option[String],
-                         beforeCommit: () => Unit = () => ()): Unit = {
+             beforeCommit: () => Unit = () => (),
+             target: Dml.Target = Dml.Head): Unit = {
     requireAtomicRename(path)
     val spark = df.sparkSession
-    val head = headVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path; use write"))
     val genName = idempotencyKey.map { k =>
       "gen-b" + java.security.MessageDigest.getInstance("MD5")
         .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     }
-    for (g <- genName) {
-      // O(1) fresh-key fast path: a pinned gen dir exists only fully
-      // written ([[writeGen]]'s stage-and-rename), is NEVER cleaned by a
-      // CAS loser (commit below gets no cleanup list for pinned gens) and
-      // never deleted by [[expire]] while a retained manifest references
-      // it — so "dir absent" PROVES the key was never applied (within the
-      // retention window; after that the dirs are gone AND the key is
-      // documented forgotten). Only when the dir exists (applied, or a
-      // crash between write and commit) do we consult the manifests.
-      val fs = hfs(spark, path)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path, s"data/$g"))) {
-        // retained manifests are a CONTIGUOUS suffix of versions (expire
-        // deletes a prefix), so scan head-downward and stop at the first
-        // MISSING one — probed with fs.exists, so the expired-prefix
-        // boundary is distinguished from a MALFORMED retained manifest,
-        // which must propagate loudly (swallowing it as "not applied"
-        // would permit a duplicate re-append on top of corruption)
-        var v = head
-        var applied = false
-        var exhausted = false
-        while (!applied && !exhausted && v >= 1) {
-          if (!fs.exists(new org.apache.hadoop.fs.Path(path, s"_manifest-$v")))
-            exhausted = true
-          else try applied = readManifestDirs(spark, path, v)
-            .exists(_.startsWith(s"data/$g/"))
-          catch { // swept between the exists probe and the read: boundary
-            case e: IllegalArgumentException if versionVanished(e) =>
-              exhausted = true
-            // the sweep can also land between readHead's OWN exists
-            // probe and its open (or between a seg-ref parse and the
-            // segment read) — the raw not-found is the same boundary
-            case _: java.io.FileNotFoundException =>
-              exhausted = true
-          }
-          v -= 1
+    // append is THE concurrent high-rate path: a CAS loss against a
+    // concurrent writer retries against the new head or tip (each attempt
+    // re-resolves it; with an idempotencyKey the deterministic gen
+    // rewrite is safe, and without one the loser's gen dirs were already
+    // cleaned)
+    withCasRetry(maxRetries) {
+      val st = Resolved.of(spark, path, target)
+      // CHECK constraints gate the batch after the keyed-replay check: a
+      // replayed no-op must stay a no-op even under a constraint added
+      // since the original delivery
+      if (!genName.exists(st.applied)) {
+        SnapshotConstraints.enforce(spark, path, df, st.verb("append"))
+        val newEntries = writeGen(toPhysical(df, st.renames), path,
+          physicalPartCol(partCol, st.renames), genName,
+          statsCols = statsColsOf(spark, path))
+        if (newEntries.nonEmpty) {
+          // touched-values lookup (O(batch buckets) on a segmented head):
+          // the prior dir lists ONLY of the partitions the batch touches
+          val entries = st.priorOf(newEntries.keySet)
+          beforeCommit() // test seam: a concurrent committer lands here
+          // dir lists are deduped: under a concurrent duplicate delivery
+          // the twin may have committed this pinned gen between our
+          // applied-check and the resolve, in which case our commit must
+          // be a content no-op, not a second reference read() would scan
+          // twice
+          st.commit(Set.empty,
+            newEntries.map { case (p, d) =>
+              p -> (entries.getOrElse(p, Nil) :+ d).distinct },
+            // a PINNED gen is never cleaned on CAS loss: the winner of the
+            // race may be a duplicate delivery of the SAME key whose
+            // just-committed manifest references this very dir (deleting
+            // it would dangle the winner's files, and the retry would
+            // re-publish the dir a second time). An abandoned pinned gen
+            // (retries exhausted) is an orphan for expire's age-floored
+            // sweep. Random-named gens stay loser-cleaned.
+            if (genName.isDefined) Nil else genDirsOf(newEntries),
+            unionSchema(st.physSchema, toPhysical(df, st.renames).schema),
+            "append")
         }
-        // TAGGED ISLANDS below the contiguous suffix still pin gen dirs:
-        // a gen whose only retained reference is a tagged old version
-        // (its partition since rewritten, the window since expired) keeps
-        // its dir alive — treating "dir exists but unscanned" as
-        // not-applied would re-commit those rows into the head on top of
-        // the merge that already carried them (duplicate). Rare path:
-        // only reached when the dir exists AND the suffix scan missed it.
-        if (!applied)
-          applied = tags(spark, path).values.toSeq.distinct
-            .filter(_ <= v).exists { tv => // the suffix scan covered > v
-              try readManifestDirs(spark, path, tv)
-                .exists(_.startsWith(s"data/$g/"))
-              catch {
-                case e: IllegalArgumentException if versionVanished(e) =>
-                  false // tag dropped + version swept mid-scan
-              }
-            }
-        if (applied) return
       }
     }
-    // CHECK constraints gate the batch (after the keyed-replay fast path:
-    // a replayed no-op must stay a no-op even under a constraint added
-    // since the original delivery)
-    SnapshotConstraints.enforce(spark, path, df, "append")
-    val renames = readRenames(spark, path, head)
-    val newEntries = writeGen(toPhysical(df, renames), path,
-      physicalPartCol(partCol, renames), genName,
-      statsCols = statsColsOf(spark, path))
-    if (newEntries.isEmpty) return
-    // touched-values lookup (O(batch buckets) on a segmented head): the
-    // append needs the prior dir lists ONLY for the partitions the batch
-    // touches — the store-wide map never materializes on this hot path
-    val entries = forWrite(path, head)(
-      readManifestValues(spark, path, head, newEntries.keys.toSeq))
-    beforeCommit() // test seam: a concurrent committer lands here
-    // dir lists are deduped: under a concurrent duplicate delivery the
-    // twin may have committed this pinned gen between our applied-scan
-    // and the head read, in which case our commit must be a content
-    // no-op, not a second reference that read() would scan twice
-    commitDelta(spark, path, head + 1, head,
-      removed = Set.empty,
-      added = newEntries.map { case (p, d) =>
-        p -> (entries.getOrElse(p, Nil) :+ d).distinct },
-      // a PINNED gen is never cleaned on CAS loss: the winner of the race
-      // may be a duplicate delivery of the SAME key whose just-committed
-      // manifest references this very dir (deleting it would dangle the
-      // winner's files, and the retry would re-publish the dir a second
-      // time). An abandoned pinned gen (retries exhausted) is an orphan
-      // for expire's age-floored sweep. Random-named gens stay
-      // loser-cleaned as before.
-      if (genName.isDefined) Nil
-      else newEntries.values.map(_.split("/").take(2).mkString("/"))
-        .toSeq.distinct,
-      Some(unionSchema(versionSchema(spark, path, head),
-        toPhysical(df, renames).schema)),
-      renames, op = "append")
+  }
+
+  /** The gen dirs (`data/<gen>`) a [[writeGen]] result wrote into. */
+  private[storage] def genDirsOf(newEntries: Map[String, String])
+      : Seq[String] =
+    newEntries.values.map(_.split("/").take(2).mkString("/")).toSeq.distinct
+
+  /** Whether pinned gen `g` is referenced by a retained version at or
+    * below `head` — the head's keyed-append replay check.
+    */
+  private[storage] def genApplied(spark: SparkSession, path: String,
+      head: Int, g: String): Boolean = {
+    // O(1) fresh-key fast path: a pinned gen dir exists only fully
+    // written ([[writeGen]]'s stage-and-rename), is NEVER cleaned by a
+    // CAS loser ([[append]] commits no cleanup list for pinned gens) and
+    // never deleted by [[expire]] while a retained manifest references
+    // it — so "dir absent" PROVES the key was never applied (within the
+    // retention window; after that the dirs are gone AND the key is
+    // documented forgotten). Only when the dir exists (applied, or a
+    // crash between write and commit) do we consult the manifests.
+    val fs = hfs(spark, path)
+    if (fs.exists(new org.apache.hadoop.fs.Path(path, s"data/$g"))) {
+      // retained manifests are a CONTIGUOUS suffix of versions (expire
+      // deletes a prefix), so scan head-downward and stop at the first
+      // MISSING one — probed with fs.exists, so the expired-prefix
+      // boundary is distinguished from a MALFORMED retained manifest,
+      // which must propagate loudly (swallowing it as "not applied"
+      // would permit a duplicate re-append on top of corruption)
+      var v = head
+      var applied = false
+      var exhausted = false
+      while (!applied && !exhausted && v >= 1) {
+        if (!fs.exists(new org.apache.hadoop.fs.Path(path, s"_manifest-$v")))
+          exhausted = true
+        else try applied = readManifestDirs(spark, path, v)
+          .exists(_.startsWith(s"data/$g/"))
+        catch { // swept between the exists probe and the read: boundary
+          case e: IllegalArgumentException if versionVanished(e) =>
+            exhausted = true
+          // the sweep can also land between readHead's OWN exists
+          // probe and its open (or between a seg-ref parse and the
+          // segment read) — the raw not-found is the same boundary
+          case _: java.io.FileNotFoundException =>
+            exhausted = true
+        }
+        v -= 1
+      }
+      // TAGGED ISLANDS below the contiguous suffix still pin gen dirs:
+      // a gen whose only retained reference is a tagged old version
+      // (its partition since rewritten, the window since expired) keeps
+      // its dir alive — treating "dir exists but unscanned" as
+      // not-applied would re-commit those rows into the head on top of
+      // the merge that already carried them (duplicate). Rare path:
+      // only reached when the dir exists AND the suffix scan missed it.
+      if (!applied)
+        applied = tags(spark, path).values.toSeq.distinct
+          .filter(_ <= v).exists { tv => // the suffix scan covered > v
+            try readManifestDirs(spark, path, tv)
+              .exists(_.startsWith(s"data/$g/"))
+            catch {
+              case e: IllegalArgumentException if versionVanished(e) =>
+                false // tag dropped + version swept mid-scan
+            }
+          }
+      applied
+    } else false
   }
 
   /** Per-partition small-file compaction, snapshot-committed — the Iceberg

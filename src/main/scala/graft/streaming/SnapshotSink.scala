@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Structured Streaming SINK into a [[graft.storage.SnapshotStore]] — the
   * declarative form of the `foreachBatch` + idempotency-keyed `append`
@@ -102,7 +102,8 @@ class SnapshotSink(sqlContext: SQLContext,
   /** STREAMING WAP: with `branch` set, every micro-batch stages on that
     * branch instead of committing to the main line — the stream fills a
     * candidate corpus that a human (or a validation job) audits via
-    * `readBranch` / `graft_snapshot(path, 'branch:<name>')` and then
+    * `read(..., target = Dml.Branch(name))` /
+    * `graft_snapshot(path, 'branch:<name>')` and then
     * publishes or drops in one decision. Idempotency rides the same
     * key (`<ingest scope> + batchId`) through the branch's pinned-gen
     * dedup, so engine redelivery stays structural-exactly-once on the
@@ -146,7 +147,7 @@ class SnapshotSink(sqlContext: SQLContext,
   @volatile private var validatedAtHead: Option[Int] = None
 
   /** Branch existence, validated once per sink instance: an externally
-    * dropped/published branch surfaces as appendBranch's loud "no
+    * dropped/published branch surfaces as the branch append's loud "no
     * branch" failure, on which the cache resets and the branch is
     * re-created from the current head (the exact per-batch behavior the
     * uncached sink had, paid only on failure).
@@ -197,8 +198,9 @@ class SnapshotSink(sqlContext: SQLContext,
           branchValidated = true
         }
         ensureBranch()
-        try SnapshotStore.appendBranch(batch, path, br, partCol,
-          idempotencyKey = Some(s"sink-$ingestId-$batchId"))
+        try SnapshotStore.append(batch, path, partCol,
+          idempotencyKey = Some(s"sink-$ingestId-$batchId"),
+          target = Dml.Branch(br))
         catch {
           case e: IllegalArgumentException
             if e.getMessage != null && e.getMessage.contains("no branch") =>
@@ -206,8 +208,9 @@ class SnapshotSink(sqlContext: SQLContext,
             // externally): re-create from the current head and retry once
             branchValidated = false
             ensureBranch()
-            SnapshotStore.appendBranch(batch, path, br, partCol,
-              idempotencyKey = Some(s"sink-$ingestId-$batchId"))
+            SnapshotStore.append(batch, path, partCol,
+              idempotencyKey = Some(s"sink-$ingestId-$batchId"),
+              target = Dml.Branch(br))
         }
       case None =>
         SnapshotStore.append(batch, path, partCol,

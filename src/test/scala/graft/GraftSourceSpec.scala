@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.sources.GraftSnapshotSource
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** The `graft-snapshot` BATCH read relation
   * ([[graft.sources.GraftSnapshotSource]]): plain
@@ -86,8 +86,9 @@ class GraftSourceSpec extends SparkSpec {
     val dir = newDir("refs"); ranged(dir)
     SnapshotStore.tag(spark, dir, "v1", Some(1))
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(
-      Seq((900L, "p0", 9.0)).toDF("k", "p", "v"), dir, "cand", "p")
+    SnapshotStore.append(
+      Seq((900L, "p0", 9.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("cand"))
     def fmt = spark.read.format("graft-snapshot")
     assert(fmt.option("version", "1").load(dir).count() == 10)
     assert(fmt.option("tag", "v1").load(dir).count() == 10)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Declare-later data skipping ([[SnapshotStore.backfillStats]]): stats
   * and needle columns added to an EXISTING store, every retained head
@@ -153,16 +153,18 @@ class SnapshotBackfillSpec extends SparkSpec {
     "prunes on the backfilled column without any staged rewrite") {
     val dir = newDir("br"); bareStore(dir)
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       Seq((5000L, "p0", 5.0, "N5000")).toDF("k", "p", "v", "needle"),
-      dir, "cand", "p")
+      dir, "p", target = Dml.Branch("cand"))
     SnapshotStore.backfillStats(spark, dir, bloomCols = Seq("needle"))
-    val miss = SnapshotStore.readBranchWhere(spark, dir, "cand",
-      col("needle") === "NOPE")
+    val miss = SnapshotStore.readWhere(spark, dir,
+      col("needle") === "NOPE",
+      target = Dml.Branch("cand"))
     assert(miss.count() == 0 && miss.inputFiles.isEmpty,
       "the audit's needle miss opens zero gens — staged ones included")
-    assert(SnapshotStore.readBranchWhere(spark, dir, "cand",
-      col("needle") === "N5000").select("k").as[Long]
+    assert(SnapshotStore.readWhere(spark, dir,
+      col("needle") === "N5000",
+      target = Dml.Branch("cand")).select("k").as[Long]
       .collect().toSeq == Seq(5000L))
   }
 

@@ -175,9 +175,9 @@ class SnapshotBloomSpec extends SparkSpec {
       "a needle-miss min/max is empty without a scan")
     // SQL: the pruned read reaches a branch tip via the selector
     SnapshotStore.branchCreate(spark, dir, "aud")
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       Seq((7777L, "p0", scramble(7777L))).toDF("k", "p", "needle"),
-      dir, "aud", "p")
+      dir, "p", target = Dml.Branch("aud"))
     val viaSql = spark.sql(
       s"SELECT k FROM graft_snapshot_where('$dir', 'branch:aud', " +
         s"'needle = \"${scramble(7777L)}\"')").collect()
@@ -194,17 +194,19 @@ class SnapshotBloomSpec extends SparkSpec {
       SnapshotStore.write(df, dir, "p", bloomCols = Seq("v")))
     val d2 = newDir("branch"); needleStore(d2)
     SnapshotStore.branchCreate(spark, d2, "cand")
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       (0 until 100).map(i => (5000L + i, s"p${i % 2}",
         scramble(5000L + i))).toDF("k", "p", "needle"),
-      d2, "cand", "p")
-    val audit = SnapshotStore.readBranchWhere(spark, d2, "cand",
-      col("needle") === scramble(5042L))
+      d2, "p", target = Dml.Branch("cand"))
+    val audit = SnapshotStore.readWhere(spark, d2,
+      col("needle") === scramble(5042L),
+      target = Dml.Branch("cand"))
     assert(audit.select("k").as[Long].collect().toSeq == Seq(5042L))
     assert(gens(audit.inputFiles).size <= 2,
       "staged gens carry sidecars; the audit prunes like main")
-    val auditMiss = SnapshotStore.readBranchWhere(spark, d2, "cand",
-      col("needle") === "NOPE")
+    val auditMiss = SnapshotStore.readWhere(spark, d2,
+      col("needle") === "NOPE",
+      target = Dml.Branch("cand"))
     assert(auditMiss.count() == 0 && auditMiss.inputFiles.isEmpty)
   }
 }

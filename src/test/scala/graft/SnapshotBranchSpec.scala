@@ -4,13 +4,13 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** Branches (write-audit-publish) over the snapshot store
-  * ([[SnapshotStore.branchCreate]]/appendBranch/readBranch/publishBranch/
-  * dropBranch): staged candidate commits, audit reads, atomic
-  * fast-forward publish enforced by the manifest CAS, and the expire
-  * interplay (staged gens live until publish or drop).
+  * ([[SnapshotStore.branchCreate]], the data verbs with a `Dml.Branch`
+  * target, publishBranch/dropBranch): staged candidate commits, audit
+  * reads, atomic fast-forward publish enforced by the manifest CAS, and
+  * the expire interplay (staged gens live until publish or drop).
   */
 class SnapshotBranchSpec extends SparkSpec {
   import spark.implicits._
@@ -28,12 +28,12 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("wap")
     SnapshotStore.write(chunk(0L), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "staging")
-    SnapshotStore.appendBranch(chunk(100L), dir, "staging", "p")
-    SnapshotStore.appendBranch(chunk(200L), dir, "staging", "p")
+    SnapshotStore.append(chunk(100L), dir, "p", target = Dml.Branch("staging"))
+    SnapshotStore.append(chunk(200L), dir, "p", target = Dml.Branch("staging"))
     assert(SnapshotStore.headVersion(spark, dir).contains(1),
       "staged writes must not advance the main head")
     assert(SnapshotStore.read(spark, dir).count() == 4)
-    val audit = SnapshotStore.readBranch(spark, dir, "staging")
+    val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("staging"))
     assert(audit.select("k").as[Long].collect().sorted.toSeq ==
       ((0L to 3L) ++ (100L to 103L) ++ (200L to 203L)))
     assert(SnapshotStore.branches(spark, dir) == Map("staging" -> 2))
@@ -46,7 +46,7 @@ class SnapshotBranchSpec extends SparkSpec {
     assert(SnapshotStore.branches(spark, dir).isEmpty,
       "publish retires the branch")
     intercept[IllegalArgumentException](
-      SnapshotStore.readBranch(spark, dir, "staging"))
+      SnapshotStore.read(spark, dir, target = Dml.Branch("staging")))
   }
 
   test("fast-forward refusal: a main head that advanced past the fork " +
@@ -55,12 +55,13 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("ff")
     SnapshotStore.write(chunk(0L), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(chunk(100L), dir, "cand", "p")
+    SnapshotStore.append(chunk(100L), dir, "p", target = Dml.Branch("cand"))
     SnapshotStore.append(chunk(500L), dir, "p") // main moves
     val e = intercept[IllegalStateException](
       SnapshotStore.publishBranch(spark, dir, "cand"))
     assert(e.getMessage.contains("main advanced"))
-    assert(SnapshotStore.readBranch(spark, dir, "cand").count() == 8,
+    assert(SnapshotStore.read(spark, dir,
+      target = Dml.Branch("cand")).count() == 8,
       "a refused branch is still auditable")
     assert(SnapshotStore.read(spark, dir).count() == 8,
       "main holds ITS append, not the branch's")
@@ -75,7 +76,7 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("expslot")
     SnapshotStore.write(chunk(0L), dir, "p") // v1
     SnapshotStore.branchCreate(spark, dir, "stale") // fork = 1
-    SnapshotStore.appendBranch(chunk(100L), dir, "stale", "p")
+    SnapshotStore.append(chunk(100L), dir, "p", target = Dml.Branch("stale"))
     SnapshotStore.append(chunk(500L), dir, "p") // v2
     SnapshotStore.append(chunk(600L), dir, "p") // v3
     SnapshotStore.append(chunk(700L), dir, "p") // v4
@@ -88,7 +89,8 @@ class SnapshotBranchSpec extends SparkSpec {
     assert(SnapshotStore.headVersion(spark, dir).contains(4) &&
       SnapshotStore.read(spark, dir).count() == 16,
       "the head is untouched by the refused publish")
-    assert(SnapshotStore.readBranch(spark, dir, "stale").count() == 8,
+    assert(SnapshotStore.read(spark, dir,
+      target = Dml.Branch("stale")).count() == 8,
       "the refused branch is still auditable")
   }
 
@@ -102,13 +104,15 @@ class SnapshotBranchSpec extends SparkSpec {
       .map(i => (lo + i, "p0", (lo + i) * 1.0)).toDF("k", "p", "v")
     SnapshotStore.write(ones(0L), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "chain")
-    SnapshotStore.appendBranch(ones(100L), dir, "chain", "p") // staged k=1
+    SnapshotStore.append(ones(100L), dir, "p",
+      target = Dml.Branch("chain")) // staged k=1
     val dataDir = new java.io.File(s"$dir/data")
     val before = dataDir.listFiles().map(_.getName).toSet
     // staged k=2 REPLACES p0's dirs — the k=1 appended gen now lives only
     // in the non-tip staged file
-    SnapshotStore.mergeBranch(spark, dir, "chain",
-      Seq((100L, "p0", 999.0)).toDF("k", "p", "v"), "p", Seq("k"))
+    SnapshotStore.merge(spark, dir,
+      Seq((100L, "p0", 999.0)).toDF("k", "p", "v"), "p", Seq("k"),
+      target = Dml.Branch("chain"))
     SnapshotStore.expire(spark, dir, keep = 1, minAgeMs = 0L)
     val after = dataDir.listFiles().map(_.getName).toSet
     assert(before.subsetOf(after),
@@ -130,9 +134,9 @@ class SnapshotBranchSpec extends SparkSpec {
     SnapshotStore.merge(spark, dir,
       Seq((0L, "p0", 99.0)).toDF("k", "p", "v"), "p", Seq("k"))
     SnapshotStore.branchCreate(spark, dir, "hold")
-    SnapshotStore.appendBranch(chunk(100L), dir, "hold", "p")
+    SnapshotStore.append(chunk(100L), dir, "p", target = Dml.Branch("hold"))
     SnapshotStore.expire(spark, dir, keep = 1, minAgeMs = 0L)
-    assert(SnapshotStore.readBranch(spark, dir, "hold")
+    assert(SnapshotStore.read(spark, dir, target = Dml.Branch("hold"))
       .select("k").as[Long].collect().sorted.toSeq ==
       ((0L to 3L) ++ (100L to 103L)),
       "staged gens AND the fork point's gens must survive the sweep")
@@ -153,10 +157,10 @@ class SnapshotBranchSpec extends SparkSpec {
     SnapshotStore.write(chunk(0L), dir, "p")
     SnapshotStore.renameColumn(spark, dir, "k", "key")
     SnapshotStore.branchCreate(spark, dir, "evo")
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       Seq((100L, "p0", 1.0, "x")).toDF("key", "p", "v", "note"),
-      dir, "evo", "p")
-    val audit = SnapshotStore.readBranch(spark, dir, "evo")
+      dir, "p", target = Dml.Branch("evo"))
+    val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("evo"))
     assert(audit.columns.contains("key") && audit.columns.contains("note"))
     assert(audit.filter(col("key") < 100L).select("note")
       .collect().forall(_.isNullAt(0)),
@@ -170,38 +174,43 @@ class SnapshotBranchSpec extends SparkSpec {
       .contains("k"))
   }
 
-  test("PRUNED audit (readBranchWhere): staged gens carry stats blobs, " +
-    "so a predicate audit opens only the gens it can touch — parity " +
-    "with the full-filter audit, gens pinned") {
+  test("PRUNED audit (readWhere on a branch): staged gens carry stats " +
+    "blobs, so a predicate audit opens only the gens it can touch — " +
+    "parity with the full-filter audit, gens pinned") {
     val dir = newDir("prune")
     def rchunk(lo: Long) = (0 until 5)
       .map(i => (lo + i, "p0", (lo + i) * 1.0)).toDF("k", "p", "v")
     SnapshotStore.write(rchunk(0L), dir, "p", statsCols = Seq("k"))
     SnapshotStore.branchCreate(spark, dir, "audit")
-    SnapshotStore.appendBranch(rchunk(100L), dir, "audit", "p")
-    SnapshotStore.appendBranch(rchunk(200L), dir, "audit", "p")
+    SnapshotStore.append(rchunk(100L), dir, "p", target = Dml.Branch("audit"))
+    SnapshotStore.append(rchunk(200L), dir, "p", target = Dml.Branch("audit"))
     val pred = col("k") >= 100L && col("k") < 105L
-    val pruned = SnapshotStore.readBranchWhere(spark, dir, "audit", pred)
-    val full = SnapshotStore.readBranch(spark, dir, "audit").filter(pred)
+    val pruned = SnapshotStore.readWhere(spark, dir, pred,
+      target = Dml.Branch("audit"))
+    val full = SnapshotStore.read(spark, dir,
+      target = Dml.Branch("audit")).filter(pred)
     assert(pruned.select("k").as[Long].collect().toSet ==
       full.select("k").as[Long].collect().toSet)
     def gens(files: Array[String]) =
       files.flatMap(_.split("/data/").lift(1)).map(_.split("/").head).toSet
     assert(gens(pruned.inputFiles).size == 1 &&
-      gens(SnapshotStore.readBranch(spark, dir, "audit")
+      gens(SnapshotStore.read(spark, dir, target = Dml.Branch("audit"))
         .inputFiles).size == 3,
       "the audit must open only the middle staged gen of three")
     // everything-pruned: empty frame, no dir listed
-    val none = SnapshotStore.readBranchWhere(spark, dir, "audit",
-      col("k") >= 99999L)
+    val none = SnapshotStore.readWhere(spark, dir,
+      col("k") >= 99999L,
+      target = Dml.Branch("audit"))
     assert(none.count() == 0 && none.inputFiles.isEmpty)
     // partition-KEY restriction (r15) on the audit: equality on the
     // partition column filters staged KEYS before stats parse — a
     // different-partition audit sees nothing, the matching one sees all
-    SnapshotStore.appendBranch(
-      Seq((500L, "p9", 500.0)).toDF("k", "p", "v"), dir, "audit", "p")
-    val slice = SnapshotStore.readBranchWhere(spark, dir, "audit",
-      col("p") === "p9")
+    SnapshotStore.append(
+      Seq((500L, "p9", 500.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("audit"))
+    val slice = SnapshotStore.readWhere(spark, dir,
+      col("p") === "p9",
+      target = Dml.Branch("audit"))
     assert(slice.select("k").as[Long].collect().toSeq == Seq(500L))
     def parts(files: Array[String]) =
       files.flatMap(_.split("/_p=").lift(1)).map(_.split("/").head).toSet
@@ -210,14 +219,17 @@ class SnapshotBranchSpec extends SparkSpec {
     // the AUDIT COUNT ("how many rows am I about to publish?") is
     // metadata-served over the staged blobs: gen-aligned predicates and
     // the unpredicated count touch no file; the SQL selector matches
-    assert(SnapshotStore.countBranchWhereDetailed(spark, dir, "audit",
-      org.apache.spark.sql.functions.lit(true)) == ((16L, 0)),
+    assert(SnapshotStore.countWhereDetailed(spark, dir,
+      org.apache.spark.sql.functions.lit(true),
+      target = Dml.Branch("audit")) == ((16L, 0)),
       "5 + 5 + 5 staged/base rows + the p9 row, zero dirs scanned")
-    assert(SnapshotStore.countBranchWhereDetailed(spark, dir, "audit",
-      col("k") >= 100L && col("k") < 105L) == ((5L, 0)))
-    assert(SnapshotStore.countBranchWhere(spark, dir, "audit",
-      col("k") >= 102L) == SnapshotStore.readBranch(spark, dir, "audit")
-      .filter(col("k") >= 102L).count(),
+    assert(SnapshotStore.countWhereDetailed(spark, dir,
+      col("k") >= 100L && col("k") < 105L,
+      target = Dml.Branch("audit")) == ((5L, 0)))
+    assert(SnapshotStore.countWhere(spark, dir, col("k") >= 102L,
+      target = Dml.Branch("audit")) ==
+      SnapshotStore.read(spark, dir, target = Dml.Branch("audit"))
+        .filter(col("k") >= 102L).count(),
       "ambiguous shapes agree with the scan")
     plans.AsOf.register(spark)
     val sqlCnt = spark.sql(
@@ -233,14 +245,15 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("merge")
     SnapshotStore.write(chunk(0L), dir, "p") // keys 0..3
     SnapshotStore.branchCreate(spark, dir, "cdc")
-    SnapshotStore.appendBranch(chunk(100L), dir, "cdc", "p") // 100..103
+    SnapshotStore.append(chunk(100L), dir, "p",
+      target = Dml.Branch("cdc")) // 100..103
     // merge AGAINST THE TIP: update k=100 (a branch-staged row), insert
     // k=500, delete k=1 (a fork-point row)
-    SnapshotStore.mergeBranch(spark, dir, "cdc",
+    SnapshotStore.merge(spark, dir,
       Seq((100L, "p0", 999.0, false), (500L, "p0", 500.0, false),
         (1L, "p1", 0.0, true)).toDF("k", "p", "v", "_del"),
-      "p", Seq("k"), deleteCol = Some("_del"))
-    val audit = SnapshotStore.readBranch(spark, dir, "cdc")
+      "p", Seq("k"), deleteCol = Some("_del"), target = Dml.Branch("cdc"))
+    val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("cdc"))
     assert(audit.filter(col("k") === 100L).select("v").as[Double]
       .collect().toSeq == Seq(999.0), "tip row updated")
     assert(audit.filter(col("k") === 1L).count() == 0, "fork row deleted")
@@ -265,7 +278,8 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("rebase")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p") // v1
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(pchunk(100L, "b"), dir, "cand", "p")
+    SnapshotStore.append(pchunk(100L, "b"), dir, "p",
+      target = Dml.Branch("cand"))
     val gensBefore = new java.io.File(s"$dir/data")
       .listFiles().map(_.getName).toSet
     SnapshotStore.append(pchunk(500L, "m"), dir, "p") // v2: main moves
@@ -278,7 +292,7 @@ class SnapshotBranchSpec extends SparkSpec {
       .listFiles().map(_.getName).toSet
     assert((gensAfter -- gensBefore).size == 1,
       "rebase must write no gen (only main's v2 append added one)")
-    val audit = SnapshotStore.readBranch(spark, dir, "cand")
+    val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("cand"))
     assert(audit.select("k").as[Long].collect().sorted.toSeq ==
       ((0L to 2L) ++ (100L to 102L) ++ (500L to 502L)),
       "the rebased tip = main head + the staged corpus")
@@ -301,14 +315,16 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("pubreb")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p") // v1
     SnapshotStore.branchCreate(spark, dir, "loop")
-    SnapshotStore.appendBranch(pchunk(100L, "b"), dir, "loop", "p")
+    SnapshotStore.append(pchunk(100L, "b"), dir, "p",
+      target = Dml.Branch("loop"))
     SnapshotStore.append(pchunk(500L, "m"), dir, "p") // v2: head moves
     assert(SnapshotStore.publishBranchRebased(spark, dir, "loop") == 3,
       "one call: rebase onto v2, publish as v3")
     assert(SnapshotStore.read(spark, dir).count() == 9)
     // the SQL flag drives the same loop
     SnapshotStore.branchCreate(spark, dir, "sq")
-    SnapshotStore.appendBranch(pchunk(200L, "b2"), dir, "sq", "p")
+    SnapshotStore.append(pchunk(200L, "b2"), dir, "p",
+      target = Dml.Branch("sq"))
     SnapshotStore.append(pchunk(600L, "m"), dir, "p") // v4
     val r = spark.sql(
       s"SELECT * FROM graft_publish_branch('$dir', 'sq', 'rebase')")
@@ -317,7 +333,8 @@ class SnapshotBranchSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, dir).count() == 15)
     // a REAL conflict refuses through the loop (rebase cannot fix it)
     SnapshotStore.branchCreate(spark, dir, "conf")
-    SnapshotStore.appendBranch(pchunk(300L, "m"), dir, "conf", "p")
+    SnapshotStore.append(pchunk(300L, "m"), dir, "p",
+      target = Dml.Branch("conf"))
     SnapshotStore.append(pchunk(700L, "m"), dir, "p")
     val e = intercept[IllegalStateException](
       SnapshotStore.publishBranchRebased(spark, dir, "conf"))
@@ -333,13 +350,15 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("rebconf")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(pchunk(100L, "m"), dir, "cand", "p")
+    SnapshotStore.append(pchunk(100L, "m"), dir, "p",
+      target = Dml.Branch("cand"))
     SnapshotStore.append(pchunk(500L, "m"), dir, "p")
     val e = intercept[IllegalStateException](
       SnapshotStore.rebaseBranch(spark, dir, "cand"))
     assert(e.getMessage.contains("'m'") &&
       e.getMessage.contains("BOTH the branch and main"))
-    assert(SnapshotStore.readBranch(spark, dir, "cand").count() == 6,
+    assert(SnapshotStore.read(spark, dir,
+      target = Dml.Branch("cand")).count() == 6,
       "a refused rebase leaves the branch intact")
   }
 
@@ -349,12 +368,14 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("rebchain")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p") // v1
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(pchunk(100L, "b"), dir, "cand", "p")
+    SnapshotStore.append(pchunk(100L, "b"), dir, "p",
+      target = Dml.Branch("cand"))
     SnapshotStore.append(pchunk(500L, "m"), dir, "p") // v2
     assert(SnapshotStore.rebaseBranch(spark, dir, "cand") == 2)
     // merge ON the branch between rebases (replaces partition b's dirs)
-    SnapshotStore.mergeBranch(spark, dir, "cand",
-      Seq((100L, "b", 999.0)).toDF("k", "p", "v"), "p", Seq("k"))
+    SnapshotStore.merge(spark, dir,
+      Seq((100L, "b", 999.0)).toDF("k", "p", "v"), "p", Seq("k"),
+      target = Dml.Branch("cand"))
     SnapshotStore.append(pchunk(600L, "m2"), dir, "p") // v3
     // expire the first fork version so only the stored snapshot can
     // serve the second rebase's diff
@@ -377,10 +398,11 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("rebren")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(pchunk(100L, "b"), dir, "cand", "p")
+    SnapshotStore.append(pchunk(100L, "b"), dir, "p",
+      target = Dml.Branch("cand"))
     SnapshotStore.renameColumn(spark, dir, "k", "key") // main moves (v2)
     assert(SnapshotStore.rebaseBranch(spark, dir, "cand") == 2)
-    val audit = SnapshotStore.readBranch(spark, dir, "cand")
+    val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("cand"))
     assert(audit.columns.contains("key") && !audit.columns.contains("k"),
       "the rebased audit reads under the head's logical names")
     SnapshotStore.publishBranch(spark, dir, "cand")
@@ -395,7 +417,8 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("life")
     SnapshotStore.write(pchunk(0L, "m"), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "old")
-    SnapshotStore.appendBranch(pchunk(100L, "b"), dir, "old", "p")
+    SnapshotStore.append(pchunk(100L, "b"), dir, "p",
+      target = Dml.Branch("old"))
     val infos = SnapshotStore.branchInfos(spark, dir)
     assert(infos.map(i => (i._1, i._2, i._3)) == Seq(("old", 1, 1)))
     assert(infos.head._4 > 0 && infos.head._5 >= infos.head._4,
@@ -479,7 +502,7 @@ class SnapshotBranchSpec extends SparkSpec {
     val dir = newDir("sql")
     SnapshotStore.write(chunk(0L), dir, "p")
     SnapshotStore.branchCreate(spark, dir, "gate")
-    SnapshotStore.appendBranch(chunk(100L), dir, "gate", "p")
+    SnapshotStore.append(chunk(100L), dir, "p", target = Dml.Branch("gate"))
     assert(spark.sql(
       s"SELECT * FROM graft_snapshot('$dir', 'branch:gate')").count() == 8)
     val cat = spark.sql(

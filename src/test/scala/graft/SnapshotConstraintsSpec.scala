@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 
 /** CHECK constraints at the snapshot store's write boundary
   * ([[SnapshotStore.addConstraint]]): named SQL predicates every ingested
@@ -104,16 +104,19 @@ class SnapshotConstraintsSpec extends SparkSpec {
     SnapshotStore.addConstraint(spark, dir, "v_pos", "v > 0")
     SnapshotStore.branchCreate(spark, dir, "cand")
     val e = intercept[IllegalArgumentException](
-      SnapshotStore.appendBranch(
-        Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), dir, "cand", "p"))
+      SnapshotStore.append(
+        Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), dir, "p",
+        target = Dml.Branch("cand")))
     assert(e.getMessage.contains("v_pos"),
       "anything stageable must be publishable")
     val e2 = intercept[IllegalArgumentException](
-      SnapshotStore.mergeBranch(spark, dir, "cand",
-        Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), "p", Seq("k")))
+      SnapshotStore.merge(spark, dir,
+        Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), "p", Seq("k"),
+        target = Dml.Branch("cand")))
     assert(e2.getMessage.contains("v_pos"))
-    SnapshotStore.appendBranch(
-      Seq((9L, "p0", 9.0)).toDF("k", "p", "v"), dir, "cand", "p")
+    SnapshotStore.append(
+      Seq((9L, "p0", 9.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("cand"))
     val e3 = intercept[IllegalArgumentException](
       SnapshotStore.updateWhere(spark, dir,
         Seq("v" -> (col("v") - 100.0)), col("k") === 1L))
@@ -155,8 +158,9 @@ class SnapshotConstraintsSpec extends SparkSpec {
     val dir = newDir("latecheck"); base(dir)
     SnapshotStore.branchCreate(spark, dir, "cand")
     // no constraint yet: the violating candidate stages fine
-    SnapshotStore.appendBranch(
-      Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), dir, "cand", "p")
+    SnapshotStore.append(
+      Seq((9L, "p0", -9.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("cand"))
     SnapshotStore.addConstraint(spark, dir, "v_pos", "v > 0") // head: fine
     val e = intercept[IllegalArgumentException](
       SnapshotStore.publishBranch(spark, dir, "cand"))
@@ -169,8 +173,9 @@ class SnapshotConstraintsSpec extends SparkSpec {
     // conforming branch: the late-added constraint is satisfied and the
     // stats-pruned probe proves it without blocking the publish
     SnapshotStore.branchCreate(spark, dir, "ok")
-    SnapshotStore.appendBranch(
-      Seq((9L, "p0", 9.0)).toDF("k", "p", "v"), dir, "ok", "p")
+    SnapshotStore.append(
+      Seq((9L, "p0", 9.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("ok"))
     SnapshotStore.addConstraint(spark, dir, "k_pos", "k > 0")
     val v = SnapshotStore.publishBranch(spark, dir, "ok")
     assert(v == 2 && SnapshotStore.read(spark, dir).count() == 3)

@@ -10,9 +10,10 @@ import graft.storage.{Dml, DmlReceipt, SnapshotStore}
 
 /** The one predicate-DML engine ([[SnapshotStore.dml]]) across its whole
   * {delete, update} × {copy-on-write, merge-on-read} × {head, branch}
-  * table on one seeded fixture, the zero-rewrite update no-op, and the
+  * table on one seeded fixture, the zero-rewrite update no-op, the
   * [[SnapshotStore.withCasRetry]] combinator every store writer retries
-  * through.
+  * through, and the other verbs' head/branch parity: append, merge, read,
+  * readWhere and countWhere run one body over either target.
   */
 class SnapshotDmlEngineSpec extends SparkSpec {
   import spark.implicits._
@@ -80,7 +81,8 @@ class SnapshotDmlEngineSpec extends SparkSpec {
           assert(r.version == 1, s"$tag: stages tip 1, got $r")
           assert(rows(SnapshotStore.read(spark, dir)) == before,
             s"$tag: main untouched")
-          assert(rows(SnapshotStore.readBranch(spark, dir, "b")) == expected,
+          assert(rows(SnapshotStore.read(spark, dir,
+            target = Dml.Branch("b"))) == expected,
             s"$tag: branch tip")
           SnapshotStore.publishBranch(spark, dir, "b")
           (r, rows(SnapshotStore.read(spark, dir)))
@@ -101,6 +103,136 @@ class SnapshotDmlEngineSpec extends SparkSpec {
     for (delete <- Seq(true, false); mode <- Seq[Dml.Mode](Dml.CoW, Dml.MoR))
       assert(got((delete, mode, true)) == got((delete, mode, false)),
         s"branch-then-publish must equal head (delete=$delete, $mode)")
+  }
+
+  private val headT: Dml.Target = Dml.Head
+  private val branchT: Dml.Target = Dml.Branch("b")
+
+  /** `before` after [[mergeBatch]]: k % 5 == 0 rows updated in place,
+    * k % 10 == 1 rows deleted, 400..409 inserted.
+    */
+  private def mergeBatch(before: Seq[Row4]): DataFrame =
+    (before.collect {
+      case (k, p, _, _) if k % 5 == 0 => (k, p, Option(7.0), s"m$k", false)
+      case (k, p, v, s) if k % 10 == 1 => (k, p, v, s, true)
+    } ++ (400L until 410L).map(k =>
+      (k, s"p${k % 3}", Option(k * 0.5), s"i$k", false)))
+      .toDF("k", "p", "v", "s", "del")
+
+  private def mergeModel(before: Seq[Row4]): Seq[Row4] =
+    (before.collect {
+      case (k, p, _, _) if k % 5 == 0 => (k, p, Option(7.0), s"m$k")
+      case r if r._1 % 10 != 1 => r
+    } ++ (400L until 410L).map(k =>
+      (k, s"p${k % 3}", Option(k * 0.5), s"i$k"))).sortBy(_._1)
+
+  test("append (with a keyed replay no-op) and merge: branch-then-publish " +
+    "equals the head verbs") {
+    val batch = (300L until 330L).map(k =>
+      (k, s"p${k % 3}", Option(k * 0.25), s"a$k")).toDF("k", "p", "v", "s")
+    val got = Seq(headT, branchT).map { target =>
+      val dir = newDir(if (target == headT) "verbs_head" else "verbs_branch")
+      seeded(dir)
+      val before = rows(SnapshotStore.read(spark, dir))
+      if (target != headT) SnapshotStore.branchCreate(spark, dir, "b")
+      def version: Int = target match {
+        case Dml.Head => SnapshotStore.headVersion(spark, dir).get
+        case Dml.Branch(b) => SnapshotStore.branches(spark, dir)(b)
+      }
+      SnapshotStore.append(batch, dir, "p", idempotencyKey = Some("batch-1"),
+        target = target)
+      val afterAppend = version
+      SnapshotStore.append(batch, dir, "p", idempotencyKey = Some("batch-1"),
+        target = target)
+      assert(version == afterAppend, s"$target: a keyed replay is a no-op")
+      val appended = rows(SnapshotStore.read(spark, dir, target = target))
+      assert(appended == (before ++ rows(batch)).sortBy(_._1), s"$target")
+      SnapshotStore.merge(spark, dir, mergeBatch(appended), "p", Seq("k"),
+        deleteCol = Some("del"), target = target)
+      assert(version == afterAppend + 1, s"$target: one merge, one version")
+      if (target != headT) {
+        assert(rows(SnapshotStore.read(spark, dir)) == before,
+          "main untouched until publish")
+        SnapshotStore.publishBranch(spark, dir, "b")
+      }
+      val after = rows(SnapshotStore.read(spark, dir))
+      assert(after == mergeModel(appended), s"$target: read-back vs model")
+      after
+    }
+    assert(got(0) == got(1), "branch-then-publish must equal the head")
+  }
+
+  test("branch read, readWhere and countWhere equal a filter over the " +
+    "branch's read") {
+    val dir = newDir("audit")
+    seeded(dir)
+    SnapshotStore.branchCreate(spark, dir, "b")
+    SnapshotStore.append((300L until 330L).map(k =>
+      (k, s"p${k % 3}", Option(k * 0.25), s"a$k")).toDF("k", "p", "v", "s"),
+      dir, "p", target = branchT)
+    SnapshotStore.dml(spark, dir, Dml.Delete, col("k") % 9 === 4, branchT,
+      Dml.MoR)
+    val tip = SnapshotStore.read(spark, dir, target = branchT)
+    assert(rows(tip).exists(_._1 >= 300L) && !rows(tip).exists(_._1 == 4L))
+    for (q <- Seq(pred, col("p") === "p1", col("k") < 50L,
+      col("p").isin("p0", "p2") && col("k") > 100L, col("k") === 305L,
+      col("v") > 2.0)) {
+      assert(rows(SnapshotStore.readWhere(spark, dir, q, target = branchT)) ==
+        rows(tip.filter(q)), s"readWhere($q)")
+      assert(SnapshotStore.countWhere(spark, dir, q, target = branchT) ==
+        tip.filter(q).count(), s"countWhere($q)")
+    }
+    assert(rows(SnapshotStore.read(spark, dir)) ==
+      rows(SnapshotStore.read(spark, dir, Some(3))), "main untouched")
+    intercept[IllegalArgumentException](
+      SnapshotStore.read(spark, dir, Some(3), branchT))
+  }
+
+  test("a branch merge that loses its staged CAS at beforeCommit retries " +
+    "against the new tip and lands") {
+    val dir = newDir("mergecas")
+    seeded(dir)
+    val before = rows(SnapshotStore.read(spark, dir))
+    SnapshotStore.branchCreate(spark, dir, "b")
+    val racer = (500L until 505L).map(k =>
+      (k, "p0", Option(1.0), s"x$k")).toDF("k", "p", "v", "s")
+    var raced = 0
+    SnapshotStore.merge(spark, dir, mergeBatch(before), "p", Seq("k"),
+      deleteCol = Some("del"), target = branchT,
+      beforeCommit = () => if (raced == 0) {
+        raced += 1 // a concurrent branch writer stages tip 1 first
+        SnapshotStore.append(racer, dir, "p", target = branchT)
+      })
+    assert(raced == 1 && SnapshotStore.branches(spark, dir)("b") == 2,
+      "the racer's tip 1, then the retried merge's tip 2")
+    assert(rows(SnapshotStore.read(spark, dir, target = branchT)) ==
+      (mergeModel(before) ++ rows(racer)).sortBy(_._1))
+  }
+
+  test("a branch countWhere over a partition-only predicate is served " +
+    "from metadata, as the head's is") {
+    val dir = newDir("partcount")
+    seeded(dir) // stats on k and v, none on the partition column p
+    SnapshotStore.branchCreate(spark, dir, "b")
+    val q = col("p") === "p1"
+    val want = SnapshotStore.read(spark, dir).filter(q).count()
+    assert(want > 0)
+    assert(SnapshotStore.countWhereDetailed(spark, dir, q) == ((want, 0)))
+    assert(SnapshotStore.countWhereDetailed(spark, dir, q,
+      target = branchT) == ((want, 0)), "the branch scans no dir")
+  }
+
+  test("a branch merge launches no more Spark jobs than the same merge on " +
+    "the head") {
+    val jobs = Seq(headT, branchT).map { target =>
+      val dir = newDir("mergejobs")
+      seeded(dir)
+      if (target != headT) SnapshotStore.branchCreate(spark, dir, "b")
+      val batch = mergeBatch(rows(SnapshotStore.read(spark, dir)))
+      jobsLaunchedBy(SnapshotStore.merge(spark, dir, batch, "p", Seq("k"),
+        deleteCol = Some("del"), target = target))
+    }
+    assert(jobs(1) <= jobs(0), s"head ${jobs(0)} jobs, branch ${jobs(1)}")
   }
 
   test("an update whose file split proves every ambiguous file NoMatch " +

@@ -306,9 +306,9 @@ class SnapshotDmlSpec extends SparkSpec {
     "main untouched, constraints gating, publish landing the fix") {
     val dir = newDir("branch"); quartStore(dir) // main: 30 rows, stats(k,v)
     SnapshotStore.branchCreate(spark, dir, "cand")
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       (0 until 10).map(i => (500L + i, s"p${i % 2}", (500 + i) * 1.0))
-        .toDF("k", "p", "v"), dir, "cand", "p")
+        .toDF("k", "p", "v"), dir, "p", target = Dml.Branch("cand"))
     // audit flagged k in [500,505): purge from the CANDIDATE only.
     // Fork gens carry blobs (quartStore declares stats), so the main-line
     // slices inside the branch tip prove NoMatch and stay unread.
@@ -317,7 +317,8 @@ class SnapshotDmlSpec extends SparkSpec {
     assert(r.version == 2, s"create=0, append=1, delete stages 2, got $r")
     assert(r.rewrittenDirs == 2 && r.droppedDirs == 0 && r.keptDirs == 6,
       s"only the candidate gen's two slices rewrite, got $r")
-    assert(SnapshotStore.readBranch(spark, dir, "cand").count() == 35)
+    assert(SnapshotStore.read(spark, dir,
+      target = Dml.Branch("cand")).count() == 35)
     assert(SnapshotStore.read(spark, dir).count() == 30,
       "main must be untouched by branch DML")
     // no-op predicate stages NO version
@@ -327,7 +328,7 @@ class SnapshotDmlSpec extends SparkSpec {
     // in-place redaction, pre-update-row semantics
     SnapshotStore.dml(spark, dir,
       Dml.Update(Seq("v" -> lit(0.0))), col("k") >= 507L, Dml.Branch("cand"))
-    assert(SnapshotStore.readBranch(spark, dir, "cand")
+    assert(SnapshotStore.read(spark, dir, target = Dml.Branch("cand"))
       .filter(col("v") === 0.0 && col("k") >= 500L)
       .select("k").as[Long].collect().sorted
       .toSeq == Seq(507L, 508L, 509L))

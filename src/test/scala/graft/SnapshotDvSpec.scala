@@ -336,9 +336,9 @@ class SnapshotDvSpec extends SparkSpec {
     val mainHead = SnapshotStore.headVersion(spark, dir).get
     SnapshotStore.branchCreate(spark, dir, "aud")
     // stage a candidate slab (k in 300..309)
-    SnapshotStore.appendBranch(
+    SnapshotStore.append(
       (0 until 10).map(i => (300L + i, s"p${i % 2}", (300 + i) * 1.0))
-        .toDF("k", "p", "v"), dir, "aud", "p")
+        .toDF("k", "p", "v"), dir, "p", target = Dml.Branch("aud"))
     // MoR-purge two flagged candidate rows: the fork's 6 slices prove
     // NoMatch from their blobs (kept unread), only the staged gen's
     // slices take positions
@@ -353,7 +353,7 @@ class SnapshotDvSpec extends SparkSpec {
     assert(upd.dvRows == 1L, s"got $upd")
     assert(SnapshotStore.headVersion(spark, dir).contains(mainHead),
       "main must not move while the branch is audited")
-    val tip = SnapshotStore.readBranch(spark, dir, "aud")
+    val tip = SnapshotStore.read(spark, dir, target = Dml.Branch("aud"))
     assert(tip.count() == 38 &&
       tip.filter(col("k") === 306L).select("v").as[Double].head() == -1.0)
     SnapshotStore.publishBranch(spark, dir, "aud")
@@ -394,9 +394,10 @@ class SnapshotDvSpec extends SparkSpec {
       .count() == 1)
     // branch forked from a DV'd head reads through the fork's DVs
     SnapshotStore.branchCreate(spark, dir, "aud")
-    assert(SnapshotStore.readBranch(spark, dir, "aud")
+    assert(SnapshotStore.read(spark, dir, target = Dml.Branch("aud"))
       .filter(col("k") === 207L).count() == 0)
-    assert(SnapshotStore.readBranch(spark, dir, "aud").count() == 29)
+    assert(SnapshotStore.read(spark, dir,
+      target = Dml.Branch("aud")).count() == 29)
   }
 
   test("MoR DML over FILE-grain manifest fields (r17): positions hitting " +

@@ -304,9 +304,9 @@ class SnapshotSegmentSpec extends SparkSpec {
                 appended.add(row)
               case 1 =>
                 val v = i * 10.0 + w
-                SnapshotStore.mergeWithRetry(spark, dir,
+                SnapshotStore.withCasRetry(50)(SnapshotStore.merge(spark, dir,
                   Seq((w.toLong, s"p$w", v)).toDF("k", "p", "v"),
-                  "p", Seq("k"), maxRetries = 50)
+                  "p", Seq("k")))
                 lastMerged(w) = Some(v)
               case 2 =>
                 try SnapshotStore.compactPartitions(spark, dir, "p")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.storage.SnapshotStore
+import graft.storage.{Dml, SnapshotStore}
 import graft.streaming.{ChangesSourceProvider, SnapshotSinkProvider}
 
 /** The `graft-snapshot` streaming SINK: declarative idempotency-keyed
@@ -125,12 +125,13 @@ class SnapshotSinkSpec extends SparkSpec {
     assert(SnapshotStore.headVersion(spark, store).contains(1),
       "branch mode: the auto-inited empty v1 is the ONLY main commit")
     assert(SnapshotStore.read(spark, store).count() == 0)
-    val audit = SnapshotStore.readBranch(spark, store, "cand")
+    val audit = SnapshotStore.read(spark, store, target = Dml.Branch("cand"))
     assert(audit.count() == 12, "3 chunks x 4 rows staged")
     assert(SnapshotStore.branches(spark, store) == Map("cand" -> 3))
     // restart on the same checkpoint: nothing new, nothing duplicated
     runSink(in, store, checkpoint, Map("branch" -> "cand"))
-    assert(SnapshotStore.readBranch(spark, store, "cand").count() == 12)
+    assert(SnapshotStore.read(spark, store,
+      target = Dml.Branch("cand")).count() == 12)
     assert(SnapshotStore.branches(spark, store) == Map("cand" -> 3),
       "a replayed run must not advance the branch")
     // direct addBatch replay (the engine's crash-redelivery shape)
@@ -141,7 +142,8 @@ class SnapshotSinkSpec extends SparkSpec {
       Nil, org.apache.spark.sql.streaming.OutputMode.Append())
     sink.asInstanceOf[graft.streaming.SnapshotSink].addBatch(1,
       spark.read.parquet(s"$in/chunk-1"))
-    assert(SnapshotStore.readBranch(spark, store, "cand").count() == 12,
+    assert(SnapshotStore.read(spark, store,
+      target = Dml.Branch("cand")).count() == 12,
       "a redelivered batch no-ops on the branch's pinned gen")
     // the WAP decision: publish — the streamed corpus lands as ONE commit
     val v = SnapshotStore.publishBranch(spark, store, "cand")

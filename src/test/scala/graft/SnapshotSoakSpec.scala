@@ -158,9 +158,9 @@ class SnapshotSoakSpec extends SparkSpec {
                 appendedRows.add(row)
               case 1 => // retried upsert of the writer's OWN key
                 val v = i * 10.0 + w
-                SnapshotStore.mergeWithRetry(spark, dir,
+                SnapshotStore.withCasRetry(50)(SnapshotStore.merge(spark, dir,
                   Seq((w.toLong, s"p$w", v)).toDF("k", "p", "v"),
-                  "p", Seq("k"), maxRetries = 50)
+                  "p", Seq("k")))
                 lastMerged(w) = Some(v)
               case 2 => // maintenance: CAS loss is a documented re-call
                 try SnapshotStore.compactPartitions(spark, dir, "p")
@@ -403,10 +403,11 @@ class SnapshotSoakSpec extends SparkSpec {
       try {
         SnapshotStore.branchCreate(spark, dir, "soak")
         stagedKeys.foreach { k =>
-          SnapshotStore.appendBranch(
-            Seq((k, "p0", k * 1.0)).toDF("k", "p", "v"), dir, "soak", "p")
+          SnapshotStore.append(
+            Seq((k, "p0", k * 1.0)).toDF("k", "p", "v"), dir, "p",
+            target = Dml.Branch("soak"))
           // audit mid-race: every staged key so far visible exactly once
-          val seen = SnapshotStore.readBranch(spark, dir, "soak")
+          val seen = SnapshotStore.read(spark, dir, target = Dml.Branch("soak"))
             .filter(col("k") >= 90000L).select("k").as[Long]
             .collect().toSeq
           assert(seen.sorted == stagedKeys.takeWhile(_ <= k),
@@ -439,7 +440,7 @@ class SnapshotSoakSpec extends SparkSpec {
       // THE regression net for the staged-live-set fix: a zero-floor
       // keep=1 sweep with the branch still live must not touch its gens
       SnapshotStore.expire(spark, dir, keep = 1, minAgeMs = 0L)
-      val audit = SnapshotStore.readBranch(spark, dir, "soak")
+      val audit = SnapshotStore.read(spark, dir, target = Dml.Branch("soak"))
         .filter(col("k") >= 90000L).select("k").as[Long].collect().toSeq
       assert(audit.sorted == stagedKeys,
         "staged rows must survive a zero-floor sweep while the branch lives")
@@ -448,8 +449,9 @@ class SnapshotSoakSpec extends SparkSpec {
     // quiet-window WAP: re-branch from the settled head and publish
     val before = headKeys().toSet
     SnapshotStore.branchCreate(spark, dir, "quiet")
-    SnapshotStore.appendBranch(
-      Seq((99999L, "p0", 1.0)).toDF("k", "p", "v"), dir, "quiet", "p")
+    SnapshotStore.append(
+      Seq((99999L, "p0", 1.0)).toDF("k", "p", "v"), dir, "p",
+      target = Dml.Branch("quiet"))
     SnapshotStore.publishBranch(spark, dir, "quiet")
     assert(headKeys().toSet == before + 99999L)
     quiescentSweep(dir)
@@ -487,9 +489,9 @@ class SnapshotSoakSpec extends SparkSpec {
         stagedKeys.foreach { k =>
           // a partition DISJOINT from every main writer: rebase always
           // applies, publish races only on head movement
-          SnapshotStore.appendBranch(
+          SnapshotStore.append(
             Seq((k, "cand", k * 1.0)).toDF("k", "p", "v"),
-            dir, "loop", "p")
+            dir, "p", target = Dml.Branch("loop"))
         }
         // the WAP loop: publish; on "main advanced", rebase and retry
         var done = false
@@ -546,9 +548,9 @@ class SnapshotSoakSpec extends SparkSpec {
                   dir, "p", idempotencyKey = Some(s"w$w-b$i"),
                   maxRetries = 50)
               case 1 =>
-                SnapshotStore.mergeWithRetry(spark, dir,
+                SnapshotStore.withCasRetry(50)(SnapshotStore.merge(spark, dir,
                   Seq((w.toLong, s"p$w", i * 10.0 + w)).toDF("k", "p", "v"),
-                  "p", Seq("k"), maxRetries = 50)
+                  "p", Seq("k")))
               case 2 => // roll back to a RECENT version (within the head's
                 // last 3) — concurrent commits only grow head, so the
                 // target stays <= head; a lost CAS is a documented re-call

@@ -488,17 +488,17 @@ class SnapshotSpec extends SparkSpec {
       pre.head.getAs[String]("w") == null)
   }
 
-  test("mergeWithRetry: the CAS loser re-reads the new head and lands — " +
-    "both concurrent merges applied, serialized") {
+  test("withCasRetry(merge): the CAS loser re-reads the new head and " +
+    "lands — both concurrent merges applied, serialized") {
     val dir = freshDir(); writeBase(dir)
     var raced = false
-    SnapshotStore.mergeWithRetry(spark, dir,
+    SnapshotStore.withCasRetry()(SnapshotStore.merge(spark, dir,
       Seq((1L, "a", 11.0)).toDF("k", "p", "v"), "p", Seq("k"),
       beforeCommit = () => if (!raced) {
         raced = true // the competitor lands BETWEEN our gen write and commit
         SnapshotStore.merge(spark, dir,
           Seq((3L, "b", 33.0)).toDF("k", "p", "v"), "p", Seq("k"))
-      })
+      }))
     assert(SnapshotStore.headVersion(spark, dir).contains(3))
     val head = readV(dir, 3)
     assert(head(1L) == ("a", 11.0) && head(3L) == ("b", 33.0),
@@ -611,19 +611,18 @@ class SnapshotSpec extends SparkSpec {
     assert(!orphan.getParentFile.exists(), "aged-out orphan survived expire")
   }
 
-  test("mergeWithRetry exhausts to the original exception; the store " +
-    "stays consistent") {
+  test("withCasRetry(merge) exhausts to the original exception; the " +
+    "store stays consistent") {
     val dir = freshDir(); writeBase(dir)
     var competitorV = 100.0
     intercept[java.util.ConcurrentModificationException] {
-      SnapshotStore.mergeWithRetry(spark, dir,
+      SnapshotStore.withCasRetry(2)(SnapshotStore.merge(spark, dir,
         Seq((1L, "a", 11.0)).toDF("k", "p", "v"), "p", Seq("k"),
-        maxRetries = 2,
         beforeCommit = () => { // a competitor wins EVERY window
           competitorV += 1
           SnapshotStore.merge(spark, dir,
             Seq((3L, "b", competitorV)).toDF("k", "p", "v"), "p", Seq("k"))
-        })
+        }))
     }
     // 3 attempts, each beaten by one competitor commit: head = 1 + 3
     assert(SnapshotStore.headVersion(spark, dir).contains(4))

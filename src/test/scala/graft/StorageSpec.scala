@@ -472,35 +472,6 @@ class StorageSpec extends SparkSpec {
     assert(LogTableWriter.read(spark, tmp).count() == 960)
   }
 
-  /** Spark jobs `body` launches from this thread, counted by job group. A
-    * drain job in a second group marks the end: listener events arrive in
-    * order, so once its start is seen every earlier job start has been too.
-    */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"plan-${java.util.UUID.randomUUID}"
-    val count = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => count.incrementAndGet()
-          case Some(g) if g == s"$group-drain" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "planning")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      count.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("ingest dead-letters corrupt lines instead of storing empty rows") {
     val in = Files.createTempDirectory("graft_dl_in").toString
     val out = Files.createTempDirectory("graft_dl_out").toString
