@@ -96,7 +96,7 @@ object LogTableWriter {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
-    val before = dataFiles(fs, root).keySet
+    val before = dataFiles(fs, root, listing(fs, root)).keySet
     withMicrosTimestamps(df) {
       df.repartition(col("logdate"))
         .sortWithinPartitions(col("logdate"), col("logdatetime"))
@@ -107,7 +107,7 @@ object LogTableWriter {
         .partitionBy("logdate")
         .parquet(path)
     }
-    val fresh = dataFiles(fs, root).filter { case (rel, _) =>
+    val fresh = dataFiles(fs, root, listing(fs, root)).filter { case (rel, _) =>
       !before.contains(rel) }.toSeq.sortBy(_._1)
     val lines = footerStatsLines(spark, fresh)
     if (lines.exists(!_.endsWith(s"\t${Long.MinValue}\t${Long.MaxValue}"))) {
@@ -155,9 +155,11 @@ object LogTableWriter {
 
   private def readView(spark: SparkSession, path: String,
                        rangeUs: Option[(Long, Long)]): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
     val root = new org.apache.hadoop.fs.Path(path)
+    // the one root listing this call plans from: manifest, sidecars, tail
+    val top = listing(fs, root)
     def overlaps(mn: Long, mx: Long): Boolean =
       rangeUs.forall { case (fromUs, toUs) => mx >= fromUs && mn <= toUs }
     // Every relation gets its schema from footers read here, on the driver,
@@ -166,10 +168,10 @@ object LogTableWriter {
     // `skip`: every file is skipped; keep the view's schema, read no rows.
     def scan(base: org.apache.hadoop.fs.Path,
              paths: Seq[org.apache.hadoop.fs.Path],
-             schemaFiles: Seq[org.apache.hadoop.fs.Path],
+             schemaFooters: Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata],
              skip: Boolean): DataFrame = {
       val schema = org.apache.spark.sql.graftshim.StreamingBatchShim
-        .parquetSchema(spark, footers(spark, schemaFiles).map(_.getFileMetaData))
+        .parquetSchema(spark, schemaFooters.map(_.getFileMetaData))
       val df = spark.read.schema(schema)
         .option("basePath", base.toString).parquet(paths.map(_.toString): _*)
       if (skip) df.filter(lit(false)) else df
@@ -182,16 +184,17 @@ object LogTableWriter {
     // carry columns older files lack, and the view's shape must not depend
     // on the window. The tail is bounded (compaction absorbs it).
     def tail(absorbed: Set[String]): Option[DataFrame] = {
-      val live = dataFiles(fs, root).filter { case (rel, _) => !absorbed(rel) }
+      val live = dataFiles(fs, root, top).filter { case (rel, _) => !absorbed(rel) }
       val stats = if (rangeUs.isEmpty) Map.empty[String, (Long, Long)]
-                  else readTailStats(fs, root)
+                  else readTailStats(fs, top)
       val kept = live.filter { case (rel, _) =>
         stats.get(rel).forall { case (mn, mx) => overlaps(mn, mx) } }
       if (live.isEmpty) None
-      else Some(scan(root, (if (kept.isEmpty) live else kept).values.toSeq,
-        live.values.toSeq, skip = kept.isEmpty))
+      else Some(scan(root,
+        (if (kept.isEmpty) live else kept).values.map(_.getPath).toSeq,
+        live.values.map(Footers.read(conf, _)).toSeq, skip = kept.isEmpty))
     }
-    newestManifest(fs, root) match {
+    newestManifest(fs, root, top) match {
       case None => tail(Set.empty)
         .getOrElse(spark.read.parquet(path)) // empty store: native error
       case Some((_, genDir, absorbed)) =>
@@ -199,16 +202,18 @@ object LogTableWriter {
         // its schema, the one file non-merge inference reads.
         val genPath = new org.apache.hadoop.fs.Path(root, genDir)
         def genFile(rel: String) = new org.apache.hadoop.fs.Path(genPath, rel)
-        val gen = rangeUs.flatMap(_ => readFileStats(fs, root, genDir)) match {
+        val gen = rangeUs.flatMap(_ => readFileStats(fs, top, genDir)) match {
           case Some(stats) =>
             val overlapping = stats.collect {
               case (rel, mn, mx) if overlaps(mn, mx) => genFile(rel) }
             val files = if (overlapping.nonEmpty) overlapping
                         else Seq(genFile(stats.head._1))
-            scan(genPath, files, files.take(1), skip = overlapping.isEmpty)
+            scan(genPath, files, Seq(Footers.read(conf, files.head)),
+              skip = overlapping.isEmpty)
           // unranged read or pre-stats generation: the whole directory
-          case None => scan(genPath, Seq(genPath),
-            Seq(dataFiles(fs, genPath).minBy(_._1)._2), skip = false)
+          case None => scan(genPath, Seq(genPath), Seq(Footers.read(conf,
+            dataFiles(fs, genPath, listing(fs, genPath)).minBy(_._1)._2)),
+            skip = false)
         }
         // allowMissingColumns: pre-evolution generation vs evolved tail
         // (or vice versa after compaction) — absent columns read as NULL,
@@ -260,7 +265,7 @@ object LogTableWriter {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
-    val prev = newestManifest(fs, root)
+    val prev = newestManifest(fs, root, listing(fs, root))
     val gen = prev.map(_._1 + 1).getOrElse(1)
     // Attempt-unique generation dir: two concurrent compactors racing to the
     // same generation number must never write into the SAME directory, or the
@@ -281,7 +286,7 @@ object LogTableWriter {
     // fully-expired store: a partitioned write of 0 rows leaves no
     // schema-bearing file — replace with one plain empty parquet file so
     // the store stays readable (logdate becomes a regular NULL-able column)
-    if (dataFiles(fs, genPath).isEmpty)
+    if (dataFiles(fs, genPath, listing(fs, genPath)).isEmpty)
       input.filter(retain).coalesce(1)
         .write.mode("overwrite").parquet(genPath.toString)
     // Per-file (min,max) logdatetime sidecar for readRange's file skipping:
@@ -335,6 +340,16 @@ object LogTableWriter {
     absorbedNow.foreach { rel =>
       fs.delete(new org.apache.hadoop.fs.Path(root, rel), false)
     }
+    // The day directories the absorbed files leave empty go too, deepest
+    // first: every later root walk would list them again. Non-recursive: a
+    // directory a concurrent append just landed a file in is not empty, so
+    // its delete is refused and the file stays.
+    absorbedNow.toSeq
+      .flatMap(_.split('/').toSeq.init.inits.filter(_.nonEmpty))
+      .distinct.sortBy(-_.size).foreach { dir =>
+        try fs.delete(new org.apache.hadoop.fs.Path(root, dir.mkString("/")), false)
+        catch { case _: java.io.IOException => () }
+      }
     // Tail-stats GC against the LIVE listing (post-absorb): a sidecar is
     // dead when none of its entries names a still-existing root file — not
     // only when THIS compaction absorbed them all. A sidecar whose files
@@ -347,9 +362,9 @@ object LogTableWriter {
     // sidecar this listing sees has its files visible to the LATER
     // dataFiles listing; snapshotting liveTail first would wrongly GC a
     // sidecar that landed in between.
-    val sidecars = fs.listStatus(root).map(_.getPath)
+    val sidecars = listing(fs, root).map(_.getPath)
       .filter(_.getName.startsWith("_tailstats-"))
-    val liveTail = dataFiles(fs, root).keySet
+    val liveTail = dataFiles(fs, root, listing(fs, root)).keySet
     sidecars.foreach { p =>
       if (!parseStatsFile(fs, p).exists { case (rel, _, _) =>
           liveTail.contains(rel) })
@@ -364,10 +379,12 @@ object LogTableWriter {
     * i.e. is conservatively never skipped.
     */
   private def footerStatsLines(spark: SparkSession,
-                               files: Seq[(String, org.apache.hadoop.fs.Path)])
+                               files: Seq[(String, org.apache.hadoop.fs.FileStatus)])
       : Seq[String] = {
     import scala.jdk.CollectionConverters._
-    files.zip(footers(spark, files.map(_._2))).map { case ((rel, _), footer) =>
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { case (rel, st) =>
+      val footer = Footers.read(conf, st)
       var mn = Long.MaxValue
       var mx = Long.MinValue
       var usable = true
@@ -391,21 +408,6 @@ object LogTableWriter {
     }
   }
 
-  /** Each file's parquet footer, read on the driver — metadata IO only, no
-    * row reads. The one place this log store opens footers: stats sidecars
-    * and read-time schemas both come from here.
-    */
-  private def footers(spark: SparkSession,
-                      files: Seq[org.apache.hadoop.fs.Path])
-      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try reader.getFooter finally reader.close()
-    }
-  }
-
   /** Writes `_filestats-<genDir>`: one `relpath\tminUs\tmaxUs` line per data
     * file of the generation, min/max taken from the parquet footers'
     * INT64 (TIMESTAMP_MICROS) `logdatetime` column statistics — metadata-only
@@ -419,7 +421,8 @@ object LogTableWriter {
                              root: org.apache.hadoop.fs.Path,
                              genDir: String): Unit = {
     val genPath = new org.apache.hadoop.fs.Path(root, genDir)
-    val lines = footerStatsLines(spark, dataFiles(fs, genPath).toSeq.sortBy(_._1))
+    val lines = footerStatsLines(spark,
+      dataFiles(fs, genPath, listing(fs, genPath)).toSeq.sortBy(_._1))
     // no logdatetime stats anywhere (e.g. a generic store): skip the sidecar
     if (lines.exists(!_.endsWith(s"\t${Long.MinValue}\t${Long.MaxValue}"))) {
       val out = fs.create(
@@ -443,34 +446,35 @@ object LogTableWriter {
     }
   }
 
-  /** `_filestats-<genDir>` parsed to (relpath, minUs, maxUs), if present. */
+  /** `_filestats-<genDir>` parsed to (relpath, minUs, maxUs), if the root
+    * listing `top` has it.
+    */
   private def readFileStats(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path,
-                            genDir: String): Option[Seq[(String, Long, Long)]] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"_filestats-$genDir")
-    if (fs.exists(p)) Some(parseStatsFile(fs, p)) else None
-  }
+                            top: Seq[org.apache.hadoop.fs.FileStatus],
+                            genDir: String): Option[Seq[(String, Long, Long)]] =
+    top.find(_.getPath.getName == s"_filestats-$genDir")
+      .map(st => parseStatsFile(fs, st.getPath))
 
-  /** Union of every `_tailstats-*` sidecar ([[append]]): live-root relpath →
-    * (minUs, maxUs). Entries for files already absorbed/GC'd are harmless —
-    * lookups key on the CURRENT live listing.
+  /** Union of every `_tailstats-*` sidecar ([[append]]) in the root listing
+    * `top`: live-root relpath → (minUs, maxUs). Entries for files already
+    * absorbed/GC'd are harmless — lookups key on the CURRENT live listing.
     */
   private def readTailStats(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path)
-      : Map[String, (Long, Long)] = {
-    if (!fs.exists(root)) return Map.empty
-    fs.listStatus(root).map(_.getPath)
+                            top: Seq[org.apache.hadoop.fs.FileStatus])
+      : Map[String, (Long, Long)] =
+    top.map(_.getPath)
       .filter(_.getName.startsWith("_tailstats-"))
       .flatMap(p => parseStatsFile(fs, p))
       .map { case (rel, mn, mx) => rel -> (mn, mx) }.toMap
-  }
 
-  /** Newest (generation, genDir, absorbed-root-files) manifest, if any. */
+  /** Newest (generation, genDir, absorbed-root-files) manifest in the root
+    * listing `top`, if any.
+    */
   private def newestManifest(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path)
+                             root: org.apache.hadoop.fs.Path,
+                             top: Seq[org.apache.hadoop.fs.FileStatus])
       : Option[(Int, String, Set[String])] = {
-    if (!fs.exists(root)) return None
-    val manifests = fs.listStatus(root)
+    val manifests = top
       .map(_.getPath.getName)
       .filter(_.matches("_manifest-\\d+"))
       .map(n => n.stripPrefix("_manifest-").toInt)
@@ -486,22 +490,36 @@ object LogTableWriter {
     }
   }
 
-  /** Recursive ROOT data-file listing as store-relative path → absolute path
-    * (metadata files like _SUCCESS/.crc excluded, and generation dirs
-    * skipped — those are only reachable through a committed manifest).
+  /** `dir`'s entries; none when it does not exist. */
+  private def listing(fs: org.apache.hadoop.fs.FileSystem,
+                      dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+
+  /** Recursive ROOT data-file listing, walked down from the root's entries
+    * `top`, as store-relative path → file status (metadata files like
+    * _SUCCESS/.crc excluded, and generation dirs skipped — those are only
+    * reachable through a committed manifest). A directory that vanishes
+    * mid-walk (compaction GC of an emptied day) holds no files.
     */
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        root: org.apache.hadoop.fs.Path): Map[String, org.apache.hadoop.fs.Path] = {
+                        root: org.apache.hadoop.fs.Path,
+                        top: Seq[org.apache.hadoop.fs.FileStatus])
+      : Map[String, org.apache.hadoop.fs.FileStatus] = {
     val base = root.toUri.getPath.stripSuffix("/") + "/"
-    val out = scala.collection.mutable.Map.empty[String, org.apache.hadoop.fs.Path]
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).foreach { st =>
+    val out = scala.collection.mutable.Map.empty[String, org.apache.hadoop.fs.FileStatus]
+    def walk(entries: Seq[org.apache.hadoop.fs.FileStatus]): Unit =
+      entries.foreach { st =>
         val name = st.getPath.getName
-        if (st.isDirectory) { if (!name.startsWith("gen-")) walk(st.getPath) }
+        if (st.isDirectory) {
+          if (!name.startsWith("gen-"))
+            walk(try fs.listStatus(st.getPath).toSeq
+                 catch { case _: java.io.FileNotFoundException => Seq.empty })
+        }
         else if (!name.startsWith("_") && !name.startsWith("."))
-          out(st.getPath.toUri.getPath.stripPrefix(base)) = st.getPath
+          out(st.getPath.toUri.getPath.stripPrefix(base)) = st
       }
-    if (fs.exists(root)) walk(root)
+    walk(top)
     out.toMap
   }
 }

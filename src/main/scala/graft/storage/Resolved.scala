@@ -68,9 +68,16 @@ private[storage] object Resolved {
     */
   def of(spark: SparkSession, path: String, target: Dml.Target,
       version: Option[Int] = None): Resolved = target match {
-    case Dml.Head =>
-      head(spark, path, version.orElse(headVersion(spark, path)).getOrElse(
-        throw new IllegalArgumentException(s"no snapshots at $path")))
+    // time travel to an expired version is the caller's error
+    // (`IllegalArgumentException`); a head that vanishes under the verb is
+    // a lost race (`ConcurrentModificationException`, see `forWrite`)
+    case Dml.Head => version match {
+      case Some(v) => head(spark, path, v, schemaAt(spark, path, v))
+      case None =>
+        val v = headVersion(spark, path).getOrElse(
+          throw new IllegalArgumentException(s"no snapshots at $path"))
+        head(spark, path, v, versionSchema(spark, path, v))
+    }
     case Dml.Branch(name) =>
       require(version.isEmpty, s"branch '$name' reads its tip; version " +
         s"${version.get} selects a head version")
@@ -86,9 +93,10 @@ private[storage] object Resolved {
     case _: Dml.Branch => withCasRetry()(body)
   }
 
-  private def head(spark: SparkSession, path: String, v: Int): Resolved = {
+  private def head(spark: SparkSession, path: String, v: Int,
+      schema: => StructType): Resolved = {
     val renames = readRenames(spark, path, v)
-    new Resolved(spark, Dml.Head, v, versionSchema(spark, path, v), renames,
+    new Resolved(spark, Dml.Head, v, schema, renames,
       // the dirs-only fast path when unrestricted (no value map built)
       allFields = () => readManifestDirs(spark, path, v),
       fields = (logicalSchema, expr) =>

@@ -126,22 +126,18 @@ private[storage] object SnapshotBloom {
     val files =
       try fs.listStatus(new org.apache.hadoop.fs.Path(genPath))
         .filter(_.isDirectory).flatMap(d => fs.listStatus(d.getPath))
-        .filter(_.isFile).map(_.getPath).filter { p =>
+        .filter(_.isFile).filter { st =>
           // every non-hidden file regardless of extension: the filter
           // build below reads the whole gen dir the same way, so a data
           // file without the .parquet suffix must still count toward
           // `expected` or the FPP degrades (ADVICE r18)
-          val n = p.getName
+          val n = st.getPath.getName
           !n.startsWith("_") && !n.startsWith(".")
         }
       catch { case _: java.io.FileNotFoundException => Array.empty }
-    val rows = files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      } finally r.close()
+    val rows = files.map { st =>
+      import scala.jdk.CollectionConverters._
+      Footers.read(conf, st).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
     if (rows == 0) return
     val schema = schemaHint.getOrElse(spark.read.parquet(genPath).schema)

@@ -314,7 +314,7 @@ private[graft] object SnapshotFileStats {
     if (dirs.isEmpty) return None
     if (dirs.exists(_.getName.stripPrefix("_p=") == Esc.DEFAULT_PARTITION_NAME))
       return None
-    val work: Seq[(String, org.apache.hadoop.fs.Path)] = dirs.toSeq.flatMap {
+    val work: Seq[(String, org.apache.hadoop.fs.FileStatus)] = dirs.toSeq.flatMap {
       d =>
         val value = Esc.unescapePathName(d.getName.stripPrefix("_p="))
         val visible = fs.listStatus(d).filter { st =>
@@ -329,7 +329,7 @@ private[graft] object SnapshotFileStats {
         if (visible.exists(st =>
             !st.isFile || !st.getPath.getName.endsWith(".parquet")))
           return None
-        visible.map(st => value -> st.getPath)
+        visible.map(st => value -> st)
     }
     if (work.isEmpty) return None
     // footer reads on a bounded pool: pure metadata, a few KB per file
@@ -339,15 +339,10 @@ private[graft] object SnapshotFileStats {
       value -> pool.submit(
         new java.util.concurrent.Callable[
             Option[(Long, Seq[Either[Long, ColEv]])]] {
-          def call(): Option[(Long, Seq[Either[Long, ColEv]])] = {
-            val reader =
-              try org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(file, conf))
-              catch { case scala.util.control.NonFatal(_) => return None }
+          def call(): Option[(Long, Seq[Either[Long, ColEv]])] =
             try {
               import scala.jdk.CollectionConverters._
-              val footer = reader.getFooter
+              val footer = Footers.read(conf, file)
               // a file written under LEGACY datetime rebase stores
               // Julian-rebased raw date/timestamp values that Spark's
               // reader (hence the aggregate) converts on read — raw
@@ -365,8 +360,6 @@ private[graft] object SnapshotFileStats {
                 })
               Some((rows, evs))
             } catch { case scala.util.control.NonFatal(_) => None }
-            finally reader.close()
-          }
         })
     }
     val perFile: Seq[(String, (Long, Seq[Either[Long, ColEv]]))] =
@@ -434,37 +427,35 @@ private[graft] object SnapshotFileStats {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val dirPath = new org.apache.hadoop.fs.Path(s"$path/$leafDir")
-    val files = fs.listStatus(dirPath).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
+    val files = fs.listStatus(dirPath)
+      .filter { st =>
+        val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
-      }.sortBy(_.getName)
-    files.toSeq.map { p =>
-      s"$leafDir/${p.getName}" -> blobOfFooter(conf, p, statsCols, physSchema)
+      }.sortBy(_.getPath.getName)
+    files.toSeq.map { st =>
+      s"$leafDir/${st.getPath.getName}" ->
+        blobOfFooter(conf, st, statsCols, physSchema)
     }
   }
 
   /** One file's blob (None = unreadable/empty footer — might-match). */
   private def blobOfFooter(conf: org.apache.hadoop.conf.Configuration,
-      file: org.apache.hadoop.fs.Path, statsCols: Seq[String],
+      file: org.apache.hadoop.fs.FileStatus, statsCols: Seq[String],
       physSchema: org.apache.spark.sql.types.StructType): Option[String] = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
-    val reader =
-      try org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      catch { case scala.util.control.NonFatal(_) => return None }
     try {
+      val footer = Footers.read(conf, file)
       // LEGACY datetime rebase: raw footer longs are Julian-rebased —
       // a different domain than what the reader serves (ADVICE r18)
-      if (reader.getFooter.getFileMetaData.getKeyValueMetaData
+      if (footer.getFileMetaData.getKeyValueMetaData
           .containsKey("org.apache.spark.legacyDateTime"))
         return None
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val blocks = footer.getBlocks.asScala.toSeq
       if (blocks.isEmpty) return None
       val rows = blocks.map(_.getRowCount).sum
       if (rows <= 0L) return None
-      val fileCols = reader.getFooter.getFileMetaData.getSchema
+      val fileCols = footer.getFileMetaData.getSchema
         .getFields.asScala.map(_.getName).toSet
       val fields = statsCols.flatMap { c =>
         val key = Esc.escapePathName(c)
@@ -499,7 +490,6 @@ private[graft] object SnapshotFileStats {
       }
       if (fields.isEmpty) None else Some(fields.mkString(";"))
     } catch { case scala.util.control.NonFatal(_) => None }
-    finally reader.close()
   }
 
   /** Merges the blocks' typed statistics into one blob field; None when

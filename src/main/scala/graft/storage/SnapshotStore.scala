@@ -2251,13 +2251,21 @@ object SnapshotStore {
         .map(_.copy(nullable = true)))
   }
 
-  /** The version's effective schema: recorded if available, else inferred
-    * once over the version's dirs via mergeSchema.
+  /** [[schemaAt]] for WRITE paths: a version that vanished surfaces as
+    * the `ConcurrentModificationException` of [[forWrite]].
     */
   private[storage] def versionSchema(spark: SparkSession, path: String, v: Int)
       : org.apache.spark.sql.types.StructType =
+    forWrite(path, v)(schemaAt(spark, path, v))
+
+  /** The version's effective schema: recorded if available, else inferred
+    * once over the version's dirs via mergeSchema. An expired version
+    * throws `IllegalArgumentException` ("no snapshot version").
+    */
+  private[storage] def schemaAt(spark: SparkSession, path: String, v: Int)
+      : org.apache.spark.sql.types.StructType =
     readSchema(spark, path, v).getOrElse {
-      val dirs = forWrite(path, v)(readManifestDirs(spark, path, v))
+      val dirs = readManifestDirs(spark, path, v)
         .sorted
         .map(d => s"$path/${dirOf(d)}")
       org.apache.spark.sql.types.StructType(

@@ -90,39 +90,34 @@ object ZOrderLayout {
     */
   def fileStats(spark: SparkSession, dir: String,
                 colX: String, colY: String): Seq[(String, Double, Double, Double, Double)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(conf)
-    val files = fs.listStatus(d).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.toSeq.map { p =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = rd.getFooter.getBlocks
-        def mm(name: String): (Double, Double) = {
-          var lo = Double.MaxValue; var hi = Double.MinValue
-          blocks.forEach { blk =>
-            blk.getColumns.forEach { c =>
-              if (c.getPath.toDotString == name) {
-                val st = c.getStatistics
-                if (st != null && st.hasNonNullValue) {
-                  val (l, h) = (st.genericGetMin, st.genericGetMax) match {
-                    case (a: java.lang.Number, b: java.lang.Number) =>
-                      (a.doubleValue(), b.doubleValue())
-                    case other => sys.error(s"non-numeric stats for $name: $other")
-                  }
-                  lo = math.min(lo, l); hi = math.max(hi, h)
+    val files = fs.listStatus(d)
+      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+    files.toSeq.map { f =>
+      val blocks = Footers.read(conf, f).getBlocks
+      def mm(name: String): (Double, Double) = {
+        var lo = Double.MaxValue; var hi = Double.MinValue
+        blocks.forEach { blk =>
+          blk.getColumns.forEach { c =>
+            if (c.getPath.toDotString == name) {
+              val st = c.getStatistics
+              if (st != null && st.hasNonNullValue) {
+                val (l, h) = (st.genericGetMin, st.genericGetMax) match {
+                  case (a: java.lang.Number, b: java.lang.Number) =>
+                    (a.doubleValue(), b.doubleValue())
+                  case other => sys.error(s"non-numeric stats for $name: $other")
                 }
+                lo = math.min(lo, l); hi = math.max(hi, h)
               }
             }
           }
-          (lo, hi)
         }
-        val (lx, hx) = mm(colX); val (ly, hy) = mm(colY)
-        (p.getName, lx, hx, ly, hy)
-      } finally rd.close()
+        (lo, hi)
+      }
+      val (lx, hx) = mm(colX); val (ly, hy) = mm(colY)
+      (f.getPath.getName, lx, hx, ly, hy)
     }
   }
 

@@ -21,10 +21,8 @@ class BloomSkipSpec extends SparkSpec {
     assert(parts.length > 1, s"store degenerated to ${parts.length} file(s)")
     var (withBloom, control) = (0, 0)
     parts.foreach { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getFooter.getBlocks.forEach { b =>
+      graft.storage.Footers.read(conf,
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath)).getBlocks.forEach { b =>
         b.getColumns.forEach { c =>
           c.getPath.toDotString match {
             case "event_id" =>
@@ -38,7 +36,7 @@ class BloomSkipSpec extends SparkSpec {
             case _ => ()
           }
         }
-      } finally reader.close()
+      }
     }
     assert(withBloom > 0 && control > 0)
   }

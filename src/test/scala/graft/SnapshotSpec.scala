@@ -104,6 +104,29 @@ class SnapshotSpec extends SparkSpec {
     assert(gens.length == 2, s"expected base gen + final-a gen: ${gens.toSeq}")
   }
 
+  test("time travel to an expired version: every read verb refuses it as " +
+    "a missing version, not a retryable conflict") {
+    val dir = freshDir(); writeBase(dir)
+    SnapshotStore.merge(spark, dir,
+      Seq((1L, "a", 11.0)).toDF("k", "p", "v"), "p", Seq("k"))
+    SnapshotStore.merge(spark, dir,
+      Seq((1L, "a", 12.0)).toDF("k", "p", "v"), "p", Seq("k"))
+    SnapshotStore.expire(spark, dir, keep = 1, minAgeMs = 0L)
+    val pred = col("v") > 0
+    val v1 = Some(1)
+    Seq[(String, () => Any)](
+      "read" -> (() => SnapshotStore.read(spark, dir, v1).collect()),
+      "readWhere" -> (() =>
+        SnapshotStore.readWhere(spark, dir, pred, v1).collect()),
+      "countWhere" -> (() => SnapshotStore.countWhere(spark, dir, pred, v1)),
+      "minMaxWhere" -> (() =>
+        SnapshotStore.minMaxWhere(spark, dir, Seq("v"), pred, v1).collect())
+    ).foreach { case (verb, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("no snapshot version"), s"$verb: $e")
+    }
+  }
+
   test("partition values containing tab/newline round-trip the manifest " +
     "(values are path-escaped — regression)") {
     val dir = freshDir()

@@ -472,6 +472,75 @@ class StorageSpec extends SparkSpec {
     assert(LogTableWriter.read(spark, tmp).count() == 960)
   }
 
+  test("compact removes the day directories it empties; a concurrently " +
+    "appended day survives and later appends read back") {
+    val tmp = Files.createTempDirectory("graft_compact_dirs").toString
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def row(day: String, v: Long) = Seq((java.sql.Date.valueOf(day),
+      ts(s"$day 12:00:00"), v)).toDF("logdate", "logdatetime", "v")
+    LogTableWriter.append(row("2020-04-06", 1L), tmp)
+    LogTableWriter.append(row("2020-04-07", 2L), tmp)
+    LogTableWriter.append(row("2020-04-08", 3L), tmp)
+    // an append lands in an absorbed day after the compaction's listing
+    LogTableWriter.compact(spark, tmp, beforeSwap = () =>
+      LogTableWriter.append(row("2020-04-07", 4L), tmp))
+    def dayDirs = new java.io.File(tmp).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("logdate="))
+    assert(dayDirs.forall(_.listFiles().nonEmpty),
+      s"empty day directories left: ${dayDirs.map(_.getName).toSeq}")
+    assert(dayDirs.map(_.getName).toSeq == Seq("logdate=2020-04-07"))
+    LogTableWriter.append(row("2020-04-06", 5L), tmp)
+    def vs(df: org.apache.spark.sql.DataFrame) =
+      df.select("v").as[Long].collect().sorted.toSeq
+    assert(vs(LogTableWriter.read(spark, tmp)) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(vs(LogTableWriter.readRange(spark, tmp, ts("2020-04-06 00:00:00"),
+      ts("2020-04-06 23:59:59"))) == Seq(1L, 5L))
+    assert(vs(LogTableWriter.readRange(spark, tmp, ts("2020-04-07 00:00:00"),
+      ts("2020-04-07 23:59:59"))) == Seq(2L, 4L))
+  }
+
+  test("the shared footer reader returns the footer a default-options " +
+    "open returns, for log-store and snapshot-store files") {
+    val log = Files.createTempDirectory("graft_footers_log").toString
+    def slice(startH: Int): org.apache.spark.sql.DataFrame =
+      (0 until 240).map { i =>
+        (java.sql.Date.valueOf("2020-04-06"),
+          java.sql.Timestamp.valueOf(java.time.LocalDateTime
+            .of(2020, 4, 6, 0, 0, 0).plusSeconds(startH * 3600L + i * 90L)),
+          (startH * 240 + i).toLong)
+      }.toDF("logdate", "logdatetime", "v")
+    LogTableWriter.append(slice(0), log)
+    LogTableWriter.compact(spark, log, maxRecordsPerFile = 120)
+    LogTableWriter.append(slice(12), log)
+    val snap = Files.createTempDirectory("graft_footers_snap").toString + "/st"
+    graft.storage.SnapshotStore.write((0 until 200).map { i =>
+      (i.toLong, s"p${i % 3}", i * 0.5, s"s$i",
+        java.sql.Timestamp.valueOf("2020-04-06 00:00:00").toInstant
+          .plusSeconds(i * 60L).toEpochMilli)
+    }.toDF("k", "p", "d", "s", "ms")
+      .withColumn("t", timestamp_millis(col("ms"))).drop("ms"),
+      snap, "p", statsCols = Seq("k", "d", "s", "t"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    import scala.jdk.CollectionConverters._
+    val files = Seq(log, snap).flatMap(d => Files.walk(java.nio.file.Paths
+      .get(d)).iterator().asScala.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.contains("/.")).toSeq)
+    assert(files.count(_.contains("/gen-")) >= 2 &&
+      files.count(f => f.startsWith(log) && !f.contains("/gen-")) == 1 &&
+      files.count(_.startsWith(snap)) >= 3, files)
+    files.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      val want = try reader.getFooter finally reader.close()
+      val got = graft.storage.Footers.read(conf, p)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      import org.apache.parquet.hadoop.metadata.ParquetMetadata.toJSON
+      assert(toJSON(got) == toJSON(want), f)
+      assert(toJSON(graft.storage.Footers.read(conf, st)) == toJSON(want), f)
+    }
+  }
+
   test("ingest dead-letters corrupt lines instead of storing empty rows") {
     val in = Files.createTempDirectory("graft_dl_in").toString
     val out = Files.createTempDirectory("graft_dl_out").toString
