@@ -3,12 +3,12 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{call_function, split}
+import org.apache.spark.sql.functions.call_function
 
 /** Native Catalyst expressions for the hot text/vector loops (SURVEY §7.2:
   * "a custom Expression beats a Scala UDF beats anything else").
@@ -55,6 +55,80 @@ object TextHashes {
     override protected def withNewChildInternal(c: Expression): Shingles3 = copy(c)
   }
 
+  /** 3-token shingles of a text split on single spaces, distinct in
+    * first-occurrence order: the same array as `Shingles3(split(text, ' '))`.
+    * Tokens split on single spaces and re-joined by single spaces are the
+    * original bytes, so every shingle is one slice of the text's bytes and
+    * no token or shingle is copied. The bytes are taken once per row with
+    * `getBytes`, which copies unless the string owns its whole array, so no
+    * slice aliases a buffer the input row may reuse. Invalid UTF-8 is
+    * decoded and re-encoded first, as `split` does through `toString`.
+    */
+  case class Shingles3OfText(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    def evalArray(text: UTF8String): ArrayData =
+      nullSafeEval(text).asInstanceOf[ArrayData]
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("shingles3Text", this,
+        classOf[Shingles3OfText].getName)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.evalArray($c);")
+    }
+    override def nullSafeEval(input: Any): Any = {
+      val text = input.asInstanceOf[UTF8String]
+      val bytes =
+        if (text.isValid) text.getBytes
+        else text.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var spaces = 0
+      var p = 0
+      while (p < bytes.length) { if (bytes(p) == ' ') spaces += 1; p += 1 }
+      val n = spaces + 1 // tokens
+      if (n < 3) return new GenericArrayData(Array.empty[Any])
+      // starts(t) is token t's first byte; token t ends at starts(t + 1) - 1
+      val starts = new Array[Int](n + 1)
+      starts(n) = bytes.length + 1
+      var t = 1
+      p = 0
+      while (p < bytes.length) {
+        if (bytes(p) == ' ') { starts(t) = p + 1; t += 1 }
+        p += 1
+      }
+      val seen = new java.util.HashSet[UTF8String](2 * n)
+      val out = new Array[Any](n - 2)
+      var m = 0
+      var i = 0
+      while (i <= n - 3) {
+        val sh = UTF8String.fromBytes(bytes, starts(i), starts(i + 3) - 1 - starts(i))
+        if (seen.add(sh)) { out(m) = sh; m += 1 }
+        i += 1
+      }
+      new GenericArrayData(if (m == out.length) out else out.take(m))
+    }
+    override protected def withNewChildInternal(c: Expression): Shingles3OfText = copy(c)
+  }
+
+  /** Minima over shingles of (a_j·h + b_j) mod p, j < as.length, where h is
+    * the shingle's xxhash64 mod p: the one loop behind [[MinHashSig]] and
+    * [[MinHashBands]].
+    */
+  private def minima(sh: ArrayData, as: Array[Long], bs: Array[Long],
+                     prime: Long): Array[Long] = {
+    val n = sh.numElements()
+    val k = as.length
+    val mins = Array.fill(k)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val h = java.lang.Math.floorMod(hashToken(sh.getUTF8String(i)), prime)
+      var j = 0
+      while (j < k) {
+        val v = java.lang.Math.floorMod(as(j) * h + bs(j), prime)
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    mins
+  }
+
   /** MinHash signature: min over shingles of (a_j·h + b_j) mod p, j < k. */
   case class MinHashSig(child: Expression, as: Array[Long], bs: Array[Long],
                         prime: Long)
@@ -66,25 +140,96 @@ object TextHashes {
       val self = ctx.addReferenceObj("minhash", this, classOf[MinHashSig].getName)
       nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.evalArray($c);")
     }
+    override def nullSafeEval(input: Any): Any =
+      UnsafeArrayData.fromPrimitiveArray(
+        minima(input.asInstanceOf[ArrayData], as, bs, prime))
+    override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
+  }
+
+  /** LSH band keys of a shingle array: the MinHash minima cut into `bands`
+    * bands of as.length / bands rows, each band keyed by xxhash64 (seed 42)
+    * of its minima as comma-joined decimals, i.e.
+    * `xxhash64(concat_ws(',', sig[i], ..., sig[i + rows - 1]))`.
+    */
+  case class MinHashBands(child: Expression, as: Array[Long], bs: Array[Long],
+                          prime: Long, bands: Int)
+      extends UnaryExpression {
+    private val rows = as.length / bands
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    def evalArray(sh: ArrayData): ArrayData =
+      nullSafeEval(sh).asInstanceOf[ArrayData]
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("minhashBands", this, classOf[MinHashBands].getName)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.evalArray($c);")
+    }
     override def nullSafeEval(input: Any): Any = {
-      val sh = input.asInstanceOf[ArrayData]
-      val n = sh.numElements()
-      val k = as.length
-      val mins = Array.fill(k)(Long.MaxValue)
-      var i = 0
-      while (i < n) {
-        val h = java.lang.Math.floorMod(hashToken(sh.getUTF8String(i)), prime)
-        var j = 0
-        while (j < k) {
-          val v = java.lang.Math.floorMod(as(j) * h + bs(j), prime)
-          if (v < mins(j)) mins(j) = v
-          j += 1
+      val mins = minima(input.asInstanceOf[ArrayData], as, bs, prime)
+      val buf = new Array[Byte](rows * 21) // ≤ 19 digits and a comma each
+      val keys = new Array[Long](bands)
+      var b = 0
+      while (b < bands) {
+        var len = 0
+        var r = 0
+        while (r < rows) {
+          if (r > 0) { buf(len) = ','; len += 1 }
+          len = putDecimal(mins(b * rows + r), buf, len)
+          r += 1
         }
+        keys(b) = hashToken(UTF8String.fromBytes(buf, 0, len))
+        b += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(keys)
+    }
+    override protected def withNewChildInternal(c: Expression): MinHashBands =
+      copy(child = c)
+  }
+
+  /** Writes non-negative `v` in decimal at `buf(at)`, returns the end. */
+  private def putDecimal(v: Long, buf: Array[Byte], at: Int): Int = {
+    var digits = 1
+    var x = v / 10
+    while (x > 0) { digits += 1; x /= 10 }
+    x = v
+    var p = at + digits - 1
+    while (p >= at) { buf(p) = ('0' + x % 10).toByte; x /= 10; p -= 1 }
+    at + digits
+  }
+
+  /** Number of distinct elements two string arrays share:
+    * `size(array_intersect(a, b))` without building the intersection.
+    */
+  case class IntersectSize(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = IntegerType
+    def evalInt(a: ArrayData, b: ArrayData): Int =
+      nullSafeEval(a, b).asInstanceOf[java.lang.Integer].intValue()
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("intersectSize", this, classOf[IntersectSize].getName)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $self.evalInt($a, $b);")
+    }
+    override def nullSafeEval(l: Any, r: Any): Any = {
+      val a = l.asInstanceOf[ArrayData]
+      val b = r.asInstanceOf[ArrayData]
+      val inB = new java.util.HashSet[UTF8String](2 * b.numElements())
+      var bNull = false
+      var i = 0
+      while (i < b.numElements()) {
+        if (b.isNullAt(i)) bNull = true else inB.add(b.getUTF8String(i))
         i += 1
       }
-      new GenericArrayData(mins)
+      // removing a match counts each shared value once, as the set
+      // semantics of array_intersect do
+      var common = 0
+      i = 0
+      while (i < a.numElements()) {
+        if (a.isNullAt(i)) { if (bNull) { common += 1; bNull = false } }
+        else if (inB.remove(a.getUTF8String(i))) common += 1
+        i += 1
+      }
+      java.lang.Integer.valueOf(common)
     }
-    override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
+    override protected def withNewChildrenInternal(l: Expression, r: Expression)
+        : IntersectSize = copy(left = l, right = r)
   }
 
   /** 64-bit SimHash of a token array: per-bit signed vote of token hashes. */
@@ -207,15 +352,25 @@ object TextHashes {
   /** Registers the expressions in the session's FunctionRegistry (the public
     * extension point — Column construction from a raw Expression is sealed in
     * Spark 4). Idempotent; callers invoke once per query build.
-    * `minhashAs`/`minhashBs`/`minhashPrime` parameterize `graft_minhash`.
+    * `minhashAs`/`minhashBs`/`minhashPrime` parameterize `graft_minhash`
+    * and `graft_minhash_bands`, which cuts the minima into `minhashBands`
+    * bands.
     */
   def register(spark: SparkSession, minhashAs: Array[Long],
-               minhashBs: Array[Long], minhashPrime: Long): Unit = {
+               minhashBs: Array[Long], minhashPrime: Long,
+               minhashBands: Int): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("graft_shingles3",
       es => Shingles3(es.head), "built-in")
+    reg.createOrReplaceTempFunction("graft_shingles3_text",
+      es => Shingles3OfText(es.head), "built-in")
     reg.createOrReplaceTempFunction("graft_minhash",
       es => MinHashSig(es.head, minhashAs, minhashBs, minhashPrime), "built-in")
+    reg.createOrReplaceTempFunction("graft_minhash_bands",
+      es => MinHashBands(es.head, minhashAs, minhashBs, minhashPrime,
+        minhashBands), "built-in")
+    reg.createOrReplaceTempFunction("graft_intersect_size",
+      es => IntersectSize(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_simhash64",
       es => SimHash64(es.head), "built-in")
     reg.createOrReplaceTempFunction("graft_simhash_md5",
@@ -226,8 +381,13 @@ object TextHashes {
 
   // Column-level wrappers (valid after register())
   def shingles3(tokens: Column): Column = call_function("graft_shingles3", tokens)
-  def shingles3OfText(text: Column): Column = shingles3(split(text, " "))
+  def shingles3OfText(text: Column): Column =
+    call_function("graft_shingles3_text", text)
   def minhashSig(shingles: Column): Column = call_function("graft_minhash", shingles)
+  def minhashBands(shingles: Column): Column =
+    call_function("graft_minhash_bands", shingles)
+  def intersectSize(a: Column, b: Column): Column =
+    call_function("graft_intersect_size", a, b)
   def simhash64(tokens: Column): Column = call_function("graft_simhash64", tokens)
   def simhashMd5(tokens: Column): Column = call_function("graft_simhash_md5", tokens)
   def vecDot(a: Column, b: Column): Column = call_function("graft_vecdot", a, b)

@@ -24,7 +24,6 @@ object Dedup {
   private val Prime = 2038074743L // large prime < 2^31 for (a·x+b) mod p
   val NumHashes = 32
   val Bands = 8
-  val RowsPerBand: Int = NumHashes / Bands
 
   /** Deterministic permutation parameters (fixed seed — no RNG at plan time). */
   private val perms: Seq[(Long, Long)] =
@@ -34,12 +33,10 @@ object Dedup {
 
   /** Registers the native hash expressions with this LSH family's params. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    TextHashes.register(spark, permAs, permBs, Prime)
+    TextHashes.register(spark, permAs, permBs, Prime, Bands)
 
-  /** 3-token shingles of a text column, distinct per doc (native expression:
-    * the SQL HOF formulation re-evaluated `split(text)` per position —
-    * O(tokens²) string scans per row — because LambdaFunction trees are
-    * interpreted without common-subexpression elimination).
+  /** 3-token shingles of a text column, distinct per doc: one native pass
+    * that slices the shingles out of the text's bytes (requires `register`).
     */
   def shingles(text: Column): Column = TextHashes.shingles3OfText(text)
 
@@ -48,6 +45,27 @@ object Dedup {
     */
   def minhashSignature(sh: Column): Column = TextHashes.minhashSig(sh)
 
+  /** The [[Bands]] LSH band keys of a shingle array, from one MinHash pass:
+    * key b is `xxhash64(concat_ws(',', sig[4b+1], ..., sig[4b+4]))` of the
+    * signature. THE band-key definition of [[minhashPairs]] and
+    * [[graft.storage.NearDupIndexStore]]: a collision is only well-defined
+    * because every side computes it here, and a changed key would silently
+    * miss every pair against an index already on disk.
+    */
+  private[graft] def bandKeys(sh: Column): Column = TextHashes.minhashBands(sh)
+
+  /** One (id, band, bh) row per band of each row of `t`, whose `keys`
+    * column holds [[bandKeys]]. The explosion names each element with a
+    * literal index: over `posexplode(keys)` Catalyst infers
+    * `size(keys) > 0 AND isnotnull(keys)` and pushes it below the Project
+    * that computes `keys`, where it evaluates the kernel twice more per row.
+    */
+  private[graft] def bandRows(t: DataFrame, id: String): DataFrame =
+    t.select(col(id), explode(array((0 until Bands).map(b =>
+        struct(lit(b).as("band"), element_at(col("keys"), b + 1).as("bh"))
+      ): _*)).as("bb"))
+      .select(col(id), col("bb.band"), col("bb.bh"))
+
   /** Candidate pairs whose MinHash signatures collide in ≥1 LSH band, verified
     * by exact Jaccard over the shingle sets; returns (a, b, jaccard) with
     * jaccard ≥ `threshold`, ordered.
@@ -55,50 +73,44 @@ object Dedup {
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.5): DataFrame = {
     register(docs.sparkSession)
-    // persist(): three consumers (signature/band pass + two re-attach joins)
-    // would otherwise each recompute the codegen'd shingle pass over the
-    // corpus; MEMORY_AND_DISK spills on executors instead of recomputing.
+    // persist(): three consumers (band pass + two re-attach joins) would
+    // otherwise each recompute the shingles and band keys over the corpus;
+    // MEMORY_AND_DISK spills on executors instead of recomputing.
     val shingleTab = docs
       .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
       .filter(size(col("sh")) > 0)
+      .withColumn("keys", bandKeys(col("sh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Candidate generation moves ONLY (band, bh, doc_id) through the shuffle
-    // — never the shingle arrays. The distinct runs on bare (a, b) pairs;
-    // arrays are re-attached afterwards by two joins against the per-doc
-    // shingle table (one row per doc), so verification cost is
-    // O(candidates · |shingles|) CPU, not O(candidates · |shingles|) shuffle.
-    val bands = shingleTab
-      .withColumn("sig", minhashSignature(col("sh")))
-      .select(col("doc_id"),
-        explode(array((0 until Bands).map { bnd =>
-          struct(lit(bnd).as("band"),
-            xxhash64(concat_ws(",",
-              (0 until RowsPerBand).map(r =>
-                element_at(col("sig"), bnd * RowsPerBand + r + 1)): _*)).as("bh"))
-        }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-    val cand = bands.select(col("band"), col("bh"), col("doc_id").as("a"))
-      .join(bands.select(col("band"), col("bh"), col("doc_id").as("b")),
-        Seq("band", "bh"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    val verified = cand
-      .join(shingleTab.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(shingleTab.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
-      .select(col("a"), col("b"),
-        round(col("inter") / col("uni").cast("double"), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy(col("a"), col("b"))
-    // The verified pair set is tiny next to the corpus: materialize it now
-    // (localCheckpoint) so the shingle cache can be dropped before returning.
-    // persist() entries live in the CacheManager until explicitly released —
-    // without this, every library call grew executor cache forever; the
-    // checkpointed result itself is ContextCleaner-collected on GC.
-    val out = verified.localCheckpoint()
-    shingleTab.unpersist(false)
-    out
+    // The verified pair set is tiny next to the corpus: materialize it
+    // (localCheckpoint) so the shingle cache can be dropped before returning,
+    // whether or not the call succeeds. persist() entries live in the
+    // CacheManager until explicitly released — without this, every library
+    // call grew executor cache forever; the checkpointed result itself is
+    // ContextCleaner-collected on GC.
+    try {
+      // Candidate generation moves ONLY (band, bh, doc_id) through the
+      // shuffle — never the shingle arrays. The distinct runs on bare (a, b)
+      // pairs; arrays are re-attached afterwards by two joins against the
+      // per-doc shingle table (one row per doc), so verification cost is
+      // O(candidates · |shingles|) CPU, not O(candidates · |shingles|)
+      // shuffle.
+      val bands = bandRows(shingleTab, "doc_id")
+      val cand = bands.select(col("band"), col("bh"), col("doc_id").as("a"))
+        .join(bands.select(col("band"), col("bh"), col("doc_id").as("b")),
+          Seq("band", "bh"))
+        .filter(col("a") < col("b"))
+        .select(col("a"), col("b")).distinct()
+      cand
+        .join(shingleTab.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
+        .join(shingleTab.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
+        .withColumn("inter", TextHashes.intersectSize(col("sha"), col("shb")))
+        .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
+        .select(col("a"), col("b"),
+          round(col("inter") / col("uni").cast("double"), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .orderBy(col("a"), col("b"))
+        .localCheckpoint()
+    } finally shingleTab.unpersist(false)
   }
 
   /** Incremental dedup of a NEW batch against a historical corpus: returns

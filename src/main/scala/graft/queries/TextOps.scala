@@ -160,7 +160,7 @@ object TextOps extends QueryModule {
     *
     * Per-doc distinct shingle ARRAYs stay in one row; only (shingle, doc_id)
     * pairs of RARE shingles flow through the candidate join, and exact
-    * Jaccard is computed by array_intersect after re-attaching the arrays —
+    * Jaccard is computed by IntersectSize after re-attaching the arrays —
     * no shuffle ever carries an array, no distinct on arrays. persist(): the
     * shingle table fans out to three consumers (the df aggregate and both
     * re-attach joins); without it the codegen'd Shingles3 pass runs once per
@@ -174,30 +174,32 @@ object TextOps extends QueryModule {
         graft.operators.Dedup.shingles(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exploded = shArr.select(col("doc_id"), explode(col("sh")).as("sh1"))
-    val rare = exploded.groupBy(col("sh1")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, DfCap)).select("sh1")
-    val ra = exploded.join(rare, "sh1")
-    val cand = ra.select(col("sh1"), col("doc_id").as("a"))
-      .join(ra.select(col("sh1"), col("doc_id").as("b")), "sh1")
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-    val verified = cand
-      .join(shArr.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(shArr.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .select(col("a"), col("b"),
-        round(col("inter") /
-          (size(col("sha")) + size(col("shb")) - col("inter")), 4).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
     // Materialize the (small) verified pairs eagerly and release the shingle
-    // cache — CacheManager entries are never GC'd, so returning a lazy plan
-    // over the persisted table leaked executor cache per call. Bonus for
-    // q_dedup_clusters: its label-propagation rounds now iterate on a
-    // checkpointed edge set instead of re-deriving it.
-    val out = verified.localCheckpoint()
-    shArr.unpersist(false)
-    out
+    // cache, also when the call fails — CacheManager entries are never GC'd,
+    // so returning a lazy plan over the persisted table leaked executor
+    // cache per call. Bonus for q_dedup_clusters: its label-propagation
+    // rounds now iterate on a checkpointed edge set instead of re-deriving
+    // it.
+    try {
+      val exploded = shArr.select(col("doc_id"), explode(col("sh")).as("sh1"))
+      val rare = exploded.groupBy(col("sh1")).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, DfCap)).select("sh1")
+      val ra = exploded.join(rare, "sh1")
+      val cand = ra.select(col("sh1"), col("doc_id").as("a"))
+        .join(ra.select(col("sh1"), col("doc_id").as("b")), "sh1")
+        .filter(col("a") < col("b"))
+        .select("a", "b").distinct()
+      cand
+        .join(shArr.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
+        .join(shArr.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
+        .withColumn("inter", graft.expressions.TextHashes
+          .intersectSize(col("sha"), col("shb")))
+        .select(col("a"), col("b"),
+          round(col("inter") /
+            (size(col("sha")) + size(col("shb")) - col("inter")), 4).as("jaccard"))
+        .filter(col("jaccard") >= 0.5)
+        .localCheckpoint()
+    } finally shArr.unpersist(false)
   }
 
   def queries: Seq[(String, QFn)] = Seq(

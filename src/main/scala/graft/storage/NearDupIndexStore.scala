@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.expressions.TextHashes
 import graft.operators.{Dedup, Joins}
 
 /** Persisted banded-LSH index for INCREMENTAL near-duplicate detection:
@@ -59,33 +60,17 @@ object NearDupIndexStore {
   }
 
   /** (band, bh, doc_id) band hashes for every indexable doc — the shared
-    * signature pass of build and probe (identical expressions on both
-    * sides is what makes a collision well-defined).
+    * signature pass of build and append; the probe side keys its batch
+    * through the same [[Dedup.bandKeys]] and [[Dedup.bandRows]].
     */
-  /** Band/hash explosion of a `sig` column — THE shared expression tree of
-    * index build and probe: a collision is only well-defined because both
-    * sides evaluate this one definition (a drifted copy would silently
-    * miss every pair against existing indexes).
-    */
-  private def bandStructs: org.apache.spark.sql.Column =
-    explode(array((0 until Dedup.Bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        xxhash64(concat_ws(",",
-          (0 until Dedup.RowsPerBand).map(r =>
-            element_at(col("sig"),
-              bnd * Dedup.RowsPerBand + r + 1)): _*)).as("bh"))
-    }: _*))
-
   private[graft] def bandTable(docs: DataFrame, idCol: String,
                                textCol: String): DataFrame = {
     Dedup.register(docs.sparkSession)
-    docs
+    Dedup.bandRows(docs
       .select(col(idCol).as("doc_id"),
         Dedup.shingles(col(textCol)).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", Dedup.minhashSignature(col("sh")))
-      .select(col("doc_id"), bandStructs.as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
+      .select(col("doc_id"), Dedup.bandKeys(col("sh")).as("keys")), "doc_id")
   }
 
   /** Near-dup pairs between a NEW batch and the indexed corpus: returns
@@ -106,46 +91,43 @@ object NearDupIndexStore {
     require(meta.contains(s""""numHashes":${Dedup.NumHashes}""") &&
       meta.contains(s""""bands":${Dedup.Bands}"""),
       s"index at $dir was built with a different LSH family: $meta")
-    // the batch's shingle table is reused by the band pass and the final
-    // verify join; it is small by contract (the index exists precisely so
-    // the BIG side never recomputes), so cache it
+    // the batch's shingle table (with its band keys) is reused by the band
+    // pass and the final verify join; it is small by contract (the index
+    // exists precisely so the BIG side never recomputes), so cache it
     val bShingles = batch
       .select(col(idCol).as("b"), Dedup.shingles(col(textCol)).as("shb"))
       .filter(size(col("shb")) > 0)
+      .withColumn("keys", Dedup.bandKeys(col("shb")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bBands = bShingles
-      .withColumn("sig", Dedup.minhashSignature(col("shb")))
-      .select(col("b"), bandStructs.as("bb"))
-      .select(col("b"), col("bb.band"), col("bb.bh"))
-    // broadcast the small batch band set: the index scan joins map-side,
-    // so candidate generation reads the band table once with NO shuffle.
-    // The candidate pair set is bounded (true overlap + band-collision
-    // noise) — checkpoint it so the three consumers below (id-set probe,
-    // semi filter, verify join) don't each re-scan the index.
-    val cand = spark.read.parquet(s"$dir/bands")
-      .join(Joins.maybeBroadcast(bBands, broadcastRowLimit),
-        Seq("band", "bh"))
-      .select(col("doc_id").as("h"), col("b")).distinct()
-      .localCheckpoint()
-    // only colliding history docs are re-shingled: semi-filter the corpus
-    // by the (bounded) candidate id set, then verify exactly
-    val candIds = cand.select(col("h")).distinct()
-    val hShingles = history
-      .join(Joins.maybeBroadcast(candIds, broadcastRowLimit),
-        col(idCol) === col("h"), "left_semi")
-      .select(col(idCol).as("h"), Dedup.shingles(col(textCol)).as("sha"))
-    val out = cand
-      .join(hShingles, "h")
-      .join(bShingles, "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
-      .select(col("b"), col("h"),
-        round(col("inter") / col("uni").cast("double"), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy(col("b"), col("h"))
-      .localCheckpoint()
-    bShingles.unpersist(false)
-    out
+    try {
+      // broadcast the small batch band set: the index scan joins map-side,
+      // so candidate generation reads the band table once with NO shuffle.
+      // The candidate pair set is bounded (true overlap + band-collision
+      // noise) — checkpoint it so the three consumers below (id-set probe,
+      // semi filter, verify join) don't each re-scan the index.
+      val cand = spark.read.parquet(s"$dir/bands")
+        .join(Joins.maybeBroadcast(Dedup.bandRows(bShingles, "b"),
+          broadcastRowLimit), Seq("band", "bh"))
+        .select(col("doc_id").as("h"), col("b")).distinct()
+        .localCheckpoint()
+      // only colliding history docs are re-shingled: semi-filter the corpus
+      // by the (bounded) candidate id set, then verify exactly
+      val candIds = cand.select(col("h")).distinct()
+      val hShingles = history
+        .join(Joins.maybeBroadcast(candIds, broadcastRowLimit),
+          col(idCol) === col("h"), "left_semi")
+        .select(col(idCol).as("h"), Dedup.shingles(col(textCol)).as("sha"))
+      cand
+        .join(hShingles, "h")
+        .join(bShingles.select(col("b"), col("shb")), "b")
+        .withColumn("inter", TextHashes.intersectSize(col("sha"), col("shb")))
+        .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
+        .select(col("b"), col("h"),
+          round(col("inter") / col("uni").cast("double"), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .orderBy(col("b"), col("h"))
+        .localCheckpoint()
+    } finally bShingles.unpersist(false)
   }
 
   /** Extends the index with a new batch's band rows — the admit side of

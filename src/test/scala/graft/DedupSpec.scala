@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.expressions.TextHashes
 import graft.operators.Dedup
+import graft.storage.NearDupIndexStore
 
 /** MinHash/SimHash near-dup: recall on planted duplicates + brute-force
   * cross-checks (SURVEY §7.3: banding params aren't oracle-checkable).
@@ -260,5 +265,162 @@ class DedupSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"incremental dedup degenerated to all-pairs:\n$p")
+  }
+
+  // The SQL formulation the fused kernels replace, kept here as the
+  // reference: shingles from split tokens, the boxed signature, band keys
+  // by concat_ws + xxhash64, and the overlap by array_intersect.
+  private def sqlShingles(text: Column) = TextHashes.shingles3(split(text, " "))
+  private def sqlBandKeys(sig: Column) = {
+    val rows = Dedup.NumHashes / Dedup.Bands
+    array((0 until Dedup.Bands).map(b => xxhash64(concat_ws(",",
+      (0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*))): _*)
+  }
+  private def sqlBandRows(docs: DataFrame) = docs
+    .select(col("doc_id"), sqlShingles(col("text")).as("sh"))
+    .filter(size(col("sh")) > 0)
+    .withColumn("sig", Dedup.minhashSignature(col("sh")))
+    .select(col("doc_id"), posexplode(sqlBandKeys(col("sig"))).as(Seq("band", "bh")))
+    .select(col("band"), col("bh"), col("doc_id"))
+  private def sqlMinhashPairs(docs: DataFrame, threshold: Double) = {
+    val sh = docs.select(col("doc_id"), sqlShingles(col("text")).as("sh"))
+      .filter(size(col("sh")) > 0)
+    val bands = sh.select(col("doc_id"),
+      posexplode(sqlBandKeys(Dedup.minhashSignature(col("sh")))).as(Seq("band", "bh")))
+    bands.select(col("band"), col("bh"), col("doc_id").as("a"))
+      .join(bands.select(col("band"), col("bh"), col("doc_id").as("b")),
+        Seq("band", "bh"))
+      .filter(col("a") < col("b")).select("a", "b").distinct()
+      .join(sh.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
+      .join(sh.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
+      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+      .select(col("a"), col("b"), round(col("inter") /
+        (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"), 4)
+        .as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .orderBy("a", "b")
+  }
+
+  /** A fixed draw of `g`, so a failure reproduces. */
+  private def draw[T](g: Gen[T]): T = g.pureApply(Gen.Parameters.default, Seed(12L))
+
+  /** Generated texts read back through parquet, so the kernels run in
+    * generated code over the vectorized reader's strings: leading, trailing
+    * and repeated spaces (the empty token), multi-byte UTF-8, `""`, NULL,
+    * and one string of invalid UTF-8 bytes.
+    */
+  private lazy val texts: DataFrame = {
+    val tok = Gen.oneOf("", "a", "b", "ab", "é", "日本", "🙂x", "a b")
+    val textG = Gen.frequency(
+      8 -> Gen.listOf(tok).map(_.mkString(" ")),
+      1 -> Gen.const(""), 1 -> Gen.const(null: String))
+    val gen = (draw(Gen.listOfN(400, textG)) ++
+      Seq("a a a a a", " a b c", "a b c ", "a  b  c", "x y"))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_texts").toString
+    gen.toDF("doc_id", "text")
+      .unionByName(spark.range(1).select(lit(-1L).as("doc_id"),
+        unhex(lit("61206220FF20632064C3")).cast("string").as("text")))
+      .write.parquet(s"$dir/t")
+    spark.read.parquet(s"$dir/t")
+  }
+
+  private def mismatches(df: DataFrame, a: Column, b: Column): Long =
+    df.filter(!(a <=> b)).count()
+
+  test("graft_shingles3_text(t) == graft_shingles3(split(t, ' ')), byte for byte") {
+    Dedup.register(spark)
+    assert(mismatches(texts, Dedup.shingles(col("text")),
+      sqlShingles(col("text"))) == 0)
+    assert(texts.filter(col("text").isNull).count() > 0)
+    assert(texts.filter(col("text") === "").count() > 0)
+    assert(texts.filter(col("text") === "a a a a a")
+      .select(Dedup.shingles(col("text"))).head().getSeq[String](0) == Seq("a a a"))
+  }
+
+  test("MinHashBands == the SQL band expression for every band") {
+    Dedup.register(spark)
+    val d = texts.select(Dedup.shingles(col("text")).as("sh"))
+      .unionByName(Tables.table(spark, sf(), "documents")
+        .select(Dedup.shingles(col("text")).as("sh")))
+    // every band of a non-empty signature and of the all-MaxValue
+    // signature of an empty shingle array; a NULL array, which every caller
+    // filters out, has NULL keys (the SQL form hashes the empty string)
+    val nonNull = d.filter(col("sh").isNotNull)
+    assert(mismatches(nonNull, Dedup.bandKeys(col("sh")),
+      sqlBandKeys(Dedup.minhashSignature(col("sh")))) == 0)
+    assert(nonNull.filter(size(col("sh")) === 0).count() > 0)
+    assert(nonNull.filter(size(col("sh")) > 0).count() > 400)
+    assert(d.filter(col("sh").isNull).select(Dedup.bandKeys(col("sh")))
+      .collect().forall(_.isNullAt(0)))
+  }
+
+  test("IntersectSize == size(array_intersect) on string arrays with " +
+    "duplicates and NULL elements") {
+    Dedup.register(spark)
+    val arr = Gen.listOf(Gen.frequency(6 -> Gen.oneOf("a", "b", "c", "é", "日"),
+      1 -> Gen.const(null: String)))
+    val pairs = draw(Gen.listOfN(300, Gen.zip(arr, arr)))
+    val d = pairs.toDF("x", "y").repartition(2)
+    assert(mismatches(d, TextHashes.intersectSize(col("x"), col("y")),
+      size(array_intersect(col("x"), col("y")))) == 0)
+    assert(d.select(TextHashes.intersectSize(col("x"), lit(null)
+      .cast("array<string>"))).head().isNullAt(0))
+  }
+
+  test("minhashPairs rows == the SQL formulation on the testdata slice") {
+    val slice = Tables.table(spark, sf(), "documents").limit(100)
+    // plus near-duplicates of ten of its docs, so some pairs verify
+    val d = slice.select("doc_id", "text").unionByName(slice.limit(10)
+      .select((col("doc_id") + 1000).as("doc_id"),
+        concat(col("text"), lit(" planted")).as("text")))
+    // threshold 0 returns every candidate the bands produced
+    for (t <- Seq(0.5, 0.0)) {
+      val got = Dedup.minhashPairs(d, "doc_id", "text", t).collect().toSeq
+      assert(got == sqlMinhashPairs(d, t).collect().toSeq, s"threshold $t")
+      assert(got.size >= 10, s"threshold $t: planted pairs missed")
+    }
+  }
+
+  test("an index whose band rows the SQL expression wrote probes to the " +
+    "same pairs") {
+    Dedup.register(spark)
+    val d = Tables.table(spark, sf(), "documents")
+    val history = d.filter(col("doc_id") < 100)
+    // planted near-duplicates: one extra leading token
+    val batch = d.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 1000).as("doc_id"),
+        concat(lit("planted "), col("text")).as("text"))
+    def probe(dir: String) = NearDupIndexStore
+      .pairsAgainst(history, batch, "doc_id", "text", dir, 0.5)
+      .collect().toSeq
+    val built = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
+    NearDupIndexStore.build(history, "doc_id", "text", built)
+    val onDisk = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
+    sqlBandRows(history).write.parquet(s"$onDisk/bands")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(built, "_meta.json"),
+      java.nio.file.Paths.get(onDisk, "_meta.json"))
+    def bandRows(dir: String) = spark.read.parquet(s"$dir/bands")
+      .select("band", "bh", "doc_id").collect().map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(bandRows(built) == bandRows(onDisk))
+    val got = probe(built)
+    assert(got == probe(onDisk))
+    assert(got.size >= 20, s"planted pairs missed: $got")
+  }
+
+  test("minhashPairs releases its shingle cache when the call fails") {
+    // spark.range, not a local Seq: over a local relation the UDF would
+    // throw while the plan is optimized, before anything is persisted
+    val boom = udf((id: Long) =>
+      if (id == 2L) throw new IllegalStateException("boom")
+      else s"doc $id says hello to everyone")
+    val in = spark.range(4).select(col("id").as("doc_id"),
+      boom(col("id")).as("text"))
+    spark.catalog.clearCache()
+    intercept[org.apache.spark.SparkException] {
+      Dedup.minhashPairs(in, "doc_id", "text")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }
