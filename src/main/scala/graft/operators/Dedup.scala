@@ -78,7 +78,6 @@ object Dedup {
     // MEMORY_AND_DISK spills on executors instead of recomputing.
     val shingleTab = docs
       .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
-      .filter(size(col("sh")) > 0)
       .withColumn("keys", bandKeys(col("sh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The verified pair set is tiny next to the corpus: materialize it
@@ -94,7 +93,12 @@ object Dedup {
       // per-doc shingle table (one row per doc), so verification cost is
       // O(candidates · |shingles|) CPU, not O(candidates · |shingles|)
       // shuffle.
-      val bands = bandRows(shingleTab, "doc_id")
+      // docs with no shingle (under 3 tokens) never band: their keys all
+      // collide and their Jaccard is NaN. The filter reads the persisted
+      // table — over its input, Catalyst pushes it below the Project that
+      // computes `sh` and the shingle kernel runs twice per doc. The
+      // re-attach joins below are inner joins on banded ids.
+      val bands = bandRows(shingleTab.filter(size(col("sh")) > 0), "doc_id")
       val cand = bands.select(col("band"), col("bh"), col("doc_id").as("a"))
         .join(bands.select(col("band"), col("bh"), col("doc_id").as("b")),
           Seq("band", "bh"))

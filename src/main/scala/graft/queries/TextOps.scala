@@ -170,9 +170,11 @@ object TextOps extends QueryModule {
   private def ngramPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
     graft.operators.Dedup.register(s)
     val docs = t(s, d, "documents")
+    // no empty-shingle filter: a doc with no shingle explodes to no row,
+    // so it never reaches a candidate or a re-attach join (a filter here
+    // would be pushed below the Project and re-run the shingle kernel)
     val shArr = docs.select(col("doc_id"),
         graft.operators.Dedup.shingles(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Materialize the (small) verified pairs eagerly and release the shingle
     // cache, also when the call fails — CacheManager entries are never GC'd,

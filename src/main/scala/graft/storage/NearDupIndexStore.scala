@@ -66,11 +66,16 @@ object NearDupIndexStore {
   private[graft] def bandTable(docs: DataFrame, idCol: String,
                                textCol: String): DataFrame = {
     Dedup.register(docs.sparkSession)
+    // a doc with no shingle keys to NULL and leaves after the explosion: a
+    // filter on `sh` itself is pushed below the Project that computes it
+    // and runs the shingle kernel twice per doc
     Dedup.bandRows(docs
       .select(col(idCol).as("doc_id"),
         Dedup.shingles(col(textCol)).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), Dedup.bandKeys(col("sh")).as("keys")), "doc_id")
+      .select(col("doc_id"),
+        when(size(col("sh")) > 0, Dedup.bandKeys(col("sh"))).as("keys")),
+      "doc_id")
+      .filter(col("bh").isNotNull)
   }
 
   /** Near-dup pairs between a NEW batch and the indexed corpus: returns
@@ -96,7 +101,6 @@ object NearDupIndexStore {
     // exists precisely so the BIG side never recomputes), so cache it
     val bShingles = batch
       .select(col(idCol).as("b"), Dedup.shingles(col(textCol)).as("shb"))
-      .filter(size(col("shb")) > 0)
       .withColumn("keys", Dedup.bandKeys(col("shb")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -106,7 +110,10 @@ object NearDupIndexStore {
       // noise) — checkpoint it so the three consumers below (id-set probe,
       // semi filter, verify join) don't each re-scan the index.
       val cand = spark.read.parquet(s"$dir/bands")
-        .join(Joins.maybeBroadcast(Dedup.bandRows(bShingles, "b"),
+        .join(Joins.maybeBroadcast(Dedup.bandRows(
+          // unindexable docs (no shingle) never band; filtered on the
+          // persisted table, so the shingle kernel runs once per doc
+          bShingles.filter(size(col("shb")) > 0), "b"),
           broadcastRowLimit), Seq("band", "bh"))
         .select(col("doc_id").as("h"), col("b")).distinct()
         .localCheckpoint()

@@ -354,29 +354,18 @@ private[graft] object SnapshotDml {
   }
 
   /** Writes `hits`' (file-key, row-index) pairs as ONE deletion-vector
-    * sidecar dir and returns (its store-relative path, per-DIR deleted
-    * counts keyed like `dirOf`). Zero hits: the empty dir is removed and
-    * nothing is referenced. The counts read back from the just-written
-    * (page-hot) sidecar, not a recompute.
-    *
-    * `partValue` is the partition column (logical name): the dir KEY for
-    * the counts is rebuilt from the VALUE through the same
-    * `getPartitionPathString` discipline the writer's `partitionBy("_p")`
-    * uses — NEVER parsed out of `_gk`, whose `_metadata.file_path`
-    * segments are URI-encoded (a partition value with a space reads
-    * `%20` there but sits escaped-but-unencoded in the manifest; the
-    * anti-join is immune — both of its sides come from `_metadata` — but
-    * a string-matched dir key would silently miss the field, leaving its
-    * positions recorded and unreferenced). The value rides the sidecar
-    * as a third column readers never select (their explicit two-column
-    * schema prunes it at the parquet footer).
+    * sidecar dir and returns (its store-relative path, per-FILE deleted
+    * counts keyed like the manifest's file fields). Zero hits: the empty
+    * dir is removed and nothing is referenced. The counts read back from
+    * the just-written (page-hot) sidecar under the schema it was written
+    * with — no recompute of `hits`, no schema-inference job.
     */
   private[storage] def writeDv(spark: SparkSession, path: String,
       hits: DataFrame): (Option[String], Map[String, Long]) = {
     val rel = "data/dv-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    hits.select(col("_gk"), col("_gi"))
-      .write.mode("overwrite").option("compression", "zstd")
+    val dv = hits.select(col("_gk"), col("_gi"))
+    dv.write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$path/$rel")
     // counts are keyed per FILE (`data/<gen>/<frag>/<file>`), not per
     // dir: manifests may hold FILE-grain fields (a prior copy-on-write's
@@ -391,7 +380,7 @@ private[graft] object SnapshotDml {
     // partition value and ANY spec era (the previous value-rebuild
     // derived the frag from the CURRENT spec's columns, which would
     // mis-key hits in pre-evolution slices).
-    val counts = spark.read.parquet(s"$path/$rel")
+    val counts = spark.read.schema(dv.schema).parquet(s"$path/$rel")
       .groupBy(col("_gk")).count()
       .collect().map { r =>
         val segs = r.getString(0).split("/", 3)

@@ -1,6 +1,6 @@
 package graft.storage
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The [[SnapshotStore]]'s general MERGE — the full conditional-clause
@@ -28,9 +28,12 @@ import org.apache.spark.sql.functions._
   *     not in today's feed AND older than 90 days" reads the old gens,
   *     not the store.
   *   - One full-outer join on the keys (AQE-planned; the source is
-  *     usually the small side), ONE pass computing a per-row action tag,
-  *     one write of the surviving rows — never an action-per-clause
-  *     multi-pass.
+  *     usually the small side) computing a per-row action tag, consumed
+  *     by ONE write of the surviving rows — never an action-per-clause
+  *     multi-pass. The receipt's per-action counts and the duplicate-key
+  *     refusal ride that write as a `Dataset.observe`; the verdict lands
+  *     before the commit, and a refused or no-op merge deletes what it
+  *     wrote.
   *
   * Semantics pinned by spec: first-match-wins across clauses; a matched
   * row no clause accepts copies through unchanged; every update RHS sees
@@ -166,23 +169,6 @@ object SnapshotMergeInto {
         validateSet(as, targetCols, partCol, "WHEN NOT MATCHED BY SOURCE")
       case _ => ()
     })
-    // the source is evaluated three times below (duplicate-key check,
-    // partition collect, full-outer join) — materialize it ONCE, as a
-    // projected copy so a caller's own cache marks are untouched. A
-    // non-deterministic source (rand/uuid, a re-read external table)
-    // must not pass the dup check with one set of rows and then join
-    // with another — the reason Delta materializes its MERGE source.
-    val src = source.select(source.columns.map(col).toIndexedSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // the ambiguity refusal (Delta's MERGE error, re-derived): two source
-    // rows with one key would make "the" matched action nondeterministic
-    val dup = src.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"mergeInto source carries duplicate keys (e.g. " +
-        s"${keyCols.zip(dup.head.toSeq).map { case (k, v) => s"$k=$v" }
-          .mkString(", ")}) — aggregate to one row per key first")
     // matching is partition-confined (the same residency contract as
     // merge(): a key lives in its partition) — a source WITHOUT the
     // partition column could not restrict the resolution and would
@@ -194,14 +180,28 @@ object SnapshotMergeInto {
       s"mergeInto needs the source to carry the partition column(s) " +
         s"'$partCol' for WHEN MATCHED / WHEN NOT MATCHED clauses — " +
         "matching is partition-confined, like merge()")
+    // the source is read twice below (the residency pass, the full-outer
+    // join) — materialize it ONCE, as a projected copy so a caller's own
+    // cache marks are untouched. A non-deterministic source (rand/uuid, a
+    // re-read external table) must not resolve its partitions with one
+    // set of rows and then join with another — the reason Delta
+    // materializes its MERGE source.
+    val src = source.select(source.columns.map(col).toIndexedSeq: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
 
     // ---- which slices participate --------------------------------------
     lazy val allEntriesForEras = forWrite(path, head)(
       readManifest(spark, path, head))
-    val srcParts: Seq[String] =
-      if (!partComps.forall(source.columns.contains)) Nil
-      else residencyKeys(spark, path, src, partComps, renames,
-        allEntriesForEras.keys).toIndexedSeq
+    // the residency pass also counts the source's rows (the Bloom split's
+    // filter size); a source without the partition column skips it
+    val (srcParts, srcRows): (Seq[String], Option[Long]) =
+      if (!partComps.forall(source.columns.contains)) (Nil, None)
+      else {
+        val (parts, n) = residencyKeysWithCount(spark, path, src, partComps,
+          renames, allEntriesForEras.keys)
+        (parts.toIndexedSeq, Some(n))
+      }
     val logicalToPhysical = renames.map(_.swap)
     // NOT-MATCHED-BY-SOURCE conditions analyzed for the tri-state pruner
     // (unqualified/t-qualified target refs; an s. ref fails analysis →
@@ -293,7 +293,16 @@ object SnapshotMergeInto {
           case _ => withCond
         }
     }
+    // the ambiguity refusal (Delta's MERGE error, re-derived: two source
+    // rows with one key would make "the" matched action nondeterministic)
+    // rides the join — each source row carries its key's row count,
+    // computed over the exchange the join already pays (it hash-
+    // partitions the source by the same keys), and the write's
+    // observation records the maximum
     val srcAligned = src
+      .withColumn("_sn", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(keyCols.map(col): _*)))
       .withColumn("_s_present", lit(true)).alias("s")
     val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
       .reduce(_ && _)
@@ -342,9 +351,11 @@ object SnapshotMergeInto {
     val (joinTarget, bypass) =
       if (!bloomSplit) (base, None)
       else {
-        // nKeys is exact (post dup-check every key is unique); the
-        // count is one cheap job over the persisted source
-        val nKeys = math.max(src.count(), 1L)
+        // sized from the residency pass's row count: exact for a unique-
+        // key source; duplicates only oversize it, and the merge refuses
+        // them anyway. A source without the partition column (no
+        // residency pass) pays one count over the persisted source.
+        val nKeys = math.max(srcRows.getOrElse(src.count()), 1L)
         val bf = src.stat.bloomFilter(keyHash, nKeys, 0.03)
         val bfB = spark.sparkContext.broadcast(bf)
         val mightMatch = udf((h: Long) => bfB.value.mightContainLong(h))
@@ -373,13 +384,12 @@ object SnapshotMergeInto {
       case ((tag, cond), rest) => when(cond, lit(tag)).otherwise(rest)
     }
     val tagged = joined.withColumn("_act", act)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the bypass arm's action: only the t-only cases can apply, and
     // they mirror the join arm's clause order exactly (first NMBS
     // marker that holds, else copy). Deliberately NOT persisted: its
     // lineage is a deterministic parquet scan + filter, so recomputing
-    // it (tag counts, then the write) costs two cheap scans — far less
-    // than materializing ~the whole non-matching table.
+    // it for a second pass costs one cheap scan — far less than
+    // materializing ~the whole non-matching table.
     val bypassTagged = bypass.map { b =>
       val bAct = notMatchedBySource.zipWithIndex
         .foldRight(lit(Copy): Column) { case ((_, i), rest) =>
@@ -447,76 +457,137 @@ object SnapshotMergeInto {
       }
       (if (chain == null) col(c) else chain.otherwise(col(c))).as(c)
     }
-    val resultJoin = tagged
-      .filter(!col("_act").isin(deleteTags: _*))
-      .select((outCols :+ col("_act")): _*)
-    val result = bypassTagged.fold(resultJoin)(bt =>
-      resultJoin.union(bt
-        .filter(!col("_act").isin(deleteTags: _*))
-        .select((bypassOutCols :+ col("_act")): _*)))
+    val updTags = (matched.zipWithIndex.collect {
+      case (WhenMatched(_, a), i) if a != DeleteRow => s"m$i" } ++
+      notMatchedBySource.zipWithIndex.collect {
+        case (WhenNotMatchedBySource(_, a), i) if a != DeleteRow =>
+          s"n$i" }).toSet
+    // merge-on-read's deletion-vector hits: the pre-images of the
+    // update/delete arms
+    val removalTags = (updTags ++ deleteTags.filterNot(_ == Drop)).toSeq
+    // both arms in one shape: the merged row, its tag, the source's
+    // per-key count and key (NULL on the bypass arm, which holds no source
+    // row) and, under MoR, the target row's sidecar position and removal
+    // flag. The flag is computed BELOW the observation: a literal-false
+    // hit filter above it (no update/delete arm) would let the optimizer
+    // prune the observed node out of the DV write.
+    def arm(df: DataFrame, cols: Seq[Column], sn: Column,
+        skey: Column): DataFrame =
+      df.select((cols ++ Seq(col("_act"), sn.as("_sn"), skey.as("_skey")) ++
+        (if (!mor) Nil else Seq(col("_gk"), col("_gi"),
+          col("_act").isin(removalTags: _*).as("_rm")))): _*)
+    val joinArm = arm(tagged, outCols, col("_sn"),
+      struct(keyCols.map(k => col(s"s.$k").as(k)): _*))
+    val actions = bypassTagged.fold(joinArm)(bt => joinArm.union(
+      arm(bt, bypassOutCols, lit(null).cast("long"),
+        lit(null).cast(org.apache.spark.sql.types.StructType(
+          keyCols.map(k => org.apache.spark.sql.types.StructField(k,
+            src.schema(k).dataType)))))))
+    // the receipt's counts and the duplicate-key verdict are observed
+    // while the first write consumes the frame (Delta's MergeIntoCommand
+    // counts the same way), never recomputed by a pass of their own
+    val countTags = (matched.indices.map(i => s"m$i") ++
+      notMatched.map(_ => "ins") ++
+      notMatchedBySource.indices.map(i => s"n$i")) :+ Copy
+    val observation = org.apache.spark.sql.Observation()
+    val observed = actions.observe(observation,
+      max(col("_sn")).as("_sn"),
+      (max_by(col("_skey"), col("_sn")).as("_skey") +:
+        countTags.map(t => count(when(col("_act") === t, true)).as(t))): _*)
+    val kept = !col("_act").isin(deleteTags: _*)
+    def rowsOf(df: DataFrame): DataFrame =
+      toPhysical(df.select(targetCols.map(col): _*), renames)
+    val cowInput = observed.filter(kept)
+    // persisted where a second pass reads a frame again. The join: under
+    // merge-on-read (the DV hits, then the changed images) and under
+    // CHECK constraints (the probe, then the write); otherwise the write
+    // is its one reader. The CoW write's input: under a declared sort
+    // order, whose range partitioner samples that input in a pass of its
+    // own — through the observation, which would count every row twice;
+    // persisted, both passes read one materialization and the
+    // observation runs once, as the sampler builds it.
+    val cached =
+      (if (mor || SnapshotConstraints.all(spark, path).nonEmpty) Seq(tagged)
+       else Nil) ++
+      (if (!mor && sortColsOf(spark, path).exists(
+          physSchema.fieldNames.contains)) Seq(cowInput)
+       else Nil)
+    cached.foreach(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-      def tagCounts(df: DataFrame): Map[String, Long] =
-        df.groupBy("_act").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val byTagJoin = tagCounts(tagged)
-      val byTag: Map[String, Long] = bypassTagged.fold(byTagJoin) { bt =>
-        tagCounts(bt).foldLeft(byTagJoin) { case (m, (t, n)) =>
-          m.updated(t, m.getOrElse(t, 0L) + n)
-        }
-      }
-      def sumTags(pred: String => Boolean): Long =
-        byTag.collect { case (t, n) if pred(t) => n }.sum
-      val updTags = (matched.zipWithIndex.collect {
-        case (WhenMatched(_, a), i) if a != DeleteRow => s"m$i" } ++
-        notMatchedBySource.zipWithIndex.collect {
-          case (WhenNotMatchedBySource(_, a), i) if a != DeleteRow =>
-            s"n$i" }).toSet
-      val updated = sumTags(updTags)
-      val deleted = sumTags(t => deleteTags.contains(t) && t != Drop)
-      val inserted = byTag.getOrElse("ins", 0L)
-      val copied = byTag.getOrElse(Copy, 0L)
-      if (updated + deleted + inserted == 0L)
-        return MergeIntoReceipt(head, 0, 0, 0, copied, keptDirs)
       // CHECK constraints gate what the merge CHANGES (updated images +
-      // inserts); copied-through rows are existing, conforming data
-      val changedImages = result.filter(col("_act") =!= Copy)
+      // inserts); copied-through rows are existing, conforming data. The
+      // probe reads the UNOBSERVED frame: its limit(1) over the observed
+      // one would fire the observation with a partial scan's counts.
+      val changedImages = actions.filter(kept && col("_act") =!= Copy)
       SnapshotConstraints.enforce(spark, path,
-        changedImages.drop("_act"), "merge")
+        changedImages.select(targetCols.map(col): _*), "merge")
+      // the one pass over the join: the first write — the CoW rewrite, or
+      // the MoR deletion vectors — carries the observation
+      val (cowEntries, (dvRel, counts)) =
+        if (!mor) (writeGen(rowsOf(cowInput), path,
+          physPartCol, statsCols = statsColsOf(spark, path)),
+          (None, Map.empty[String, Long]))
+        else (Map.empty[String, String],
+          SnapshotDml.writeDv(spark, path, observed.filter(col("_rm"))))
+      // decided after the write, before the commit: a duplicate source
+      // key refuses and a merge no clause fired in commits nothing — both
+      // leave no file behind
+      val written = dvRel.toSeq ++ genDirsOf(cowEntries)
+      def discard(): Unit = {
+        val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+          spark.sparkContext.hadoopConfiguration)
+        written.foreach(d =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
+      }
+      // an empty observation is a node the optimizer pruned because its
+      // input is provably empty (an empty source against no touched
+      // slice): no row, so every count is zero — and nothing was written
+      val seen = observation.get
+      if (seen.isEmpty && written.nonEmpty) {
+        discard()
+        throw new IllegalStateException(
+          s"mergeInto at $path wrote rows its observation did not see")
+      }
+      val maxPerKey = seen.get("_sn").flatMap(Option(_))
+        .fold(0L)(_.asInstanceOf[Long])
+      if (maxPerKey > 1L) discard()
+      require(maxPerKey <= 1L,
+        s"mergeInto source carries duplicate keys (e.g. " +
+          s"${keyCols.zip(seen("_skey").asInstanceOf[Row].toSeq)
+            .map { case (k, v) => s"$k=$v" }.mkString(", ")}) — " +
+          "aggregate to one row per key first")
+      def sumTags(tags: Iterable[String]): Long =
+        tags.iterator.map(t => seen.getOrElse(t, 0L).asInstanceOf[Long]).sum
+      val updated = sumTags(updTags)
+      val deleted = sumTags(deleteTags.filterNot(_ == Drop))
+      val inserted = sumTags(Seq("ins"))
+      val copied = sumTags(Seq(Copy))
+      if (updated + deleted + inserted == 0L) {
+        discard()
+        return MergeIntoReceipt(head, 0, 0, 0, copied, keptDirs)
+      }
       if (!mor) {
-        val newEntries = writeGen(
-          toPhysical(result.drop("_act"), renames), path, physPartCol,
-          statsCols = statsColsOf(spark, path))
         val (removedF, addedF) = foldNewEntries(touchedEntries.keySet,
           touchedEntries.keySet.map(p =>
             p -> keptByPart.getOrElse(p, Nil)).toMap
             .filter(_._2.nonEmpty),
-          newEntries, cross => forWrite(path, head)(
+          cowEntries, cross => forWrite(path, head)(
             readManifestValues(spark, path, head, cross.toSeq)))
         beforeCommit() // test seam
         commitDelta(spark, path, head + 1, head,
           removed = removedF,
           added = addedF,
-          newEntries.values.map(_.split("/").take(2).mkString("/"))
-            .toSeq.distinct,
+          genDirsOf(cowEntries),
           Some(physSchema), renames, op = "merge")
         MergeIntoReceipt(head + 1, updated, deleted, inserted, copied,
           keptDirs)
       } else {
-        // merge-on-read: pre-images of the update/delete arms become
+        // merge-on-read: pre-images of the update/delete arms became
         // sidecar positions; ONLY changed images (updates' post-images
         // + inserts) append as fresh gens; untouched rows of touched
         // slices are never rewritten — write cost ∝ changed rows
-        val removalTags = (updTags ++
-          deleteTags.filterNot(_ == Drop)).toSeq
-        def hitsOf(df: DataFrame) = df.filter(
-          if (removalTags.isEmpty) lit(false)
-          else col("_act").isin(removalTags: _*))
-          .select(col("_gk"), col("_gi"))
-        val hits = bypassTagged.fold(hitsOf(tagged))(bt =>
-          hitsOf(tagged).union(hitsOf(bt)))
-        val (dvRel, counts) = SnapshotDml.writeDv(spark, path, hits)
-        val newEntries = writeGen(
-          toPhysical(changedImages.drop("_act"), renames), path,
+        val newEntries = writeGen(rowsOf(changedImages), path,
           physPartCol, statsCols = statsColsOf(spark, path))
         import SnapshotFormat.{dvOf, baseOf, withDv, DvRef}
         // a touched partition CHANGES iff a field took positions or a
@@ -544,14 +615,13 @@ object SnapshotMergeInto {
         commitDelta(spark, path, head + 1, head,
           removed = removedF,
           added = addedF,
-          dvRel.toSeq ++ newEntries.values
-            .map(_.split("/").take(2).mkString("/")).toSeq.distinct,
+          dvRel.toSeq ++ genDirsOf(newEntries),
           Some(physSchema), renames, op = "merge")
         MergeIntoReceipt(head + 1, updated, deleted, inserted, copied,
           keptDirs, dvDirs = SnapshotDml.dvDirCount(counts),
           dvRows = counts.values.sum)
       }
-    } finally tagged.unpersist()
+    } finally cached.foreach(_.unpersist())
     } finally src.unpersist()
   }
 

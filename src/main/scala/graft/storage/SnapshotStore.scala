@@ -3016,68 +3016,28 @@ object SnapshotStore {
   }
 
   /** The partition KEYS `batch`'s rows may reside under across EVERY
-    * recorded spec era — merge residency on an evolved store. Eras whose
-    * components the batch carries enumerate exact keys; an era the batch
-    * cannot key (a component the batch lacks) falls back to every
-    * shape-candidate key from `allKeys` (a 1-col era is a candidate for
-    * separator-free keys only — single-column keys RESERVE U+0001,
+    * recorded spec era — merge residency on an evolved store — and the
+    * batch's ROW COUNT, in ONE aggregation job (§1.2: the merge path used
+    * to pay three passes over the batch — the residency distinct+collect,
+    * the broadcast limit-probe, and the broadcast build; residency and
+    * probe now share one pass, the build is the only other).
+    *
+    * Eras whose components the batch carries enumerate exact keys; an
+    * era the batch cannot key (a component the batch lacks) falls back to
+    * every shape-candidate key from `allKeys` (a 1-col era is a candidate
+    * for separator-free keys only — single-column keys RESERVE U+0001,
     * [[partKeyExprCols]]; an n-col era only for keys with exactly n
     * components). Single-spec stores never consult `allKeys`.
-    */
-  private[storage] def residencyKeys(spark: SparkSession, path: String,
-      batch: DataFrame, currentSpecLogical: Seq[String],
-      renames: Map[String, String],
-      allKeys: => Iterable[String]): Seq[String] =
-    residency(spark, path, batch, currentSpecLogical, renames, allKeys) {
-      computable =>
-        (computable.flatMap { cs =>
-          batch.select(partKeyExpr(cs).as("_k")).distinct()
-            .collect().map(_.getString(0))
-        }.distinct, ())
-    }._1
-
-  /** [[residencyKeys]] fused with the batch's ROW COUNT in ONE
-    * aggregation job (§1.2: the merge path used to pay three passes over
-    * the batch — the residency distinct+collect, the broadcast
-    * limit-probe, and the broadcast build; residency and probe now share
-    * one pass, the build is the only other). The count is `count(*)` —
-    * an UPPER BOUND on the batch's distinct keys (exact under the merge
-    * contract: the batch is unique per key after resolution), so a
-    * broadcast decision made on it can only err toward NOT broadcasting,
-    * never toward an oversized build side.
+    *
+    * The count is `count(*)` — an UPPER BOUND on the batch's distinct
+    * keys (exact under the merge contract: the batch is unique per key
+    * after resolution), so a broadcast decision or a Bloom filter sized
+    * on it can only err toward NOT broadcasting or an oversized filter.
     */
   private[storage] def residencyKeysWithCount(spark: SparkSession,
       path: String, batch: DataFrame, currentSpecLogical: Seq[String],
       renames: Map[String, String], allKeys: => Iterable[String])
-      : (Seq[String], Long) =
-    residency(spark, path, batch, currentSpecLogical, renames, allKeys) {
-      computable =>
-        // collect_set drops NULL keys (a legal single-column value) — the
-        // max(isNull) flag re-adds them, preserving residencyKeys' exact
-        // key set
-        val aggExprs: Seq[org.apache.spark.sql.Column] =
-          computable.zipWithIndex.flatMap { case (cs, i) =>
-            val k = partKeyExpr(cs)
-            Seq(collect_set(k).as(s"_ks$i"), max(k.isNull).as(s"_kn$i"))
-          } :+ count(lit(1)).as("_n")
-        val row = batch.agg(aggExprs.head, aggExprs.tail: _*).head()
-        (computable.indices.flatMap { i =>
-          val ks = row.getSeq[String](row.fieldIndex(s"_ks$i"))
-          val hadNull = !row.isNullAt(row.fieldIndex(s"_kn$i")) &&
-            row.getBoolean(row.fieldIndex(s"_kn$i"))
-          ks ++ (if (hadNull) Seq(null) else Nil)
-        }.distinct, row.getLong(row.fieldIndex("_n")))
-    }
-
-  /** The era attribution both residency passes share: `keysOf` keys the
-    * batch under the eras it carries every component of (its one batch
-    * pass, plus any by-product); the blind eras add their shape-candidate
-    * keys from `allKeys`.
-    */
-  private def residency[T](spark: SparkSession, path: String,
-      batch: DataFrame, currentSpecLogical: Seq[String],
-      renames: Map[String, String], allKeys: => Iterable[String])(
-      keysOf: Seq[Seq[String]] => (Seq[String], T)): (Seq[String], T) = {
+      : (Seq[String], Long) = {
     val specs = allPartSpecs(spark, path) match {
       case Nil => Seq(currentSpecLogical)
       case ss => ss.map(s =>
@@ -3085,8 +3045,22 @@ object SnapshotStore {
     }
     val (computable, blind) =
       specs.partition(_.forall(batch.columns.contains))
-    val (keys, extra) = keysOf(computable)
-    if (blind.isEmpty) (keys, extra)
+    // collect_set drops NULL keys (a legal single-column value) — the
+    // max(isNull) flag re-adds them
+    val aggExprs: Seq[org.apache.spark.sql.Column] =
+      computable.zipWithIndex.flatMap { case (cs, i) =>
+        val k = partKeyExpr(cs)
+        Seq(collect_set(k).as(s"_ks$i"), max(k.isNull).as(s"_kn$i"))
+      } :+ count(lit(1)).as("_n")
+    val row = batch.agg(aggExprs.head, aggExprs.tail: _*).head()
+    val keys = computable.indices.flatMap { i =>
+      val ks = row.getSeq[String](row.fieldIndex(s"_ks$i"))
+      val hadNull = !row.isNullAt(row.fieldIndex(s"_kn$i")) &&
+        row.getBoolean(row.fieldIndex(s"_kn$i"))
+      ks ++ (if (hadNull) Seq(null) else Nil)
+    }.distinct
+    val n = row.getLong(row.fieldIndex("_n"))
+    if (blind.isEmpty) (keys, n)
     else {
       val anyOneCol = blind.exists(_.size == 1)
       val sizes = blind.map(_.size).toSet
@@ -3094,9 +3068,9 @@ object SnapshotStore {
       // (reserved at write time — [[partKeyExprCols]]), an n-col era's
       // keys have exactly n parts
       ((keys ++ allKeys.filter { k =>
-        val n = k.split(PartSep, -1).length
-        (anyOneCol && n == 1) || sizes.contains(n)
-      }).distinct, extra)
+        val comps = k.split(PartSep, -1).length
+        (anyOneCol && comps == 1) || sizes.contains(comps)
+      }).distinct, n)
     }
   }
 

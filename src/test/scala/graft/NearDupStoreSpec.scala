@@ -84,6 +84,21 @@ class NearDupStoreSpec extends SparkSpec {
       out(0).getLong(0) == 31L && out(0).getLong(1) == 2L, out.mkString(","))
   }
 
+  test("the band pass runs the shingle kernel once per doc, and a doc " +
+    "with no shingle leaves no band row") {
+    val src = java.nio.file.Files.createTempDirectory("graft_ndbands")
+      .toString + "/docs"
+    // a parquet scan, not a local relation the optimizer would fold away
+    docs(1L -> "too short", 2L -> base).write.parquet(src)
+    val bands = NearDupIndexStore.bandTable(spark.read.parquet(src),
+      "doc_id", "text")
+    val plan = bands.queryExecution.optimizedPlan.toString
+    assert("shingles3oftext".r.findAllMatchIn(plan).size == 1, plan)
+    val rows = bands.select("doc_id", "band").as[(Long, Int)].collect()
+    assert(rows.map(_._1).toSet == Set(2L) &&
+      rows.map(_._2).sorted.toSeq == (0 until Dedup.Bands), rows.mkString)
+  }
+
   test("append: after admitting a batch, the NEXT batch dedups against it") {
     val history = docs(1L -> unrelated)
     val dir = freshDir()

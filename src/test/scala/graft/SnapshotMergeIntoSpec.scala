@@ -5,8 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.storage.{Dml, SnapshotStore}
-import graft.storage.SnapshotMergeInto.{DeleteRow, UpdateAll, UpdateSet,
-  WhenMatched, WhenNotMatched, WhenNotMatchedBySource}
+import graft.storage.SnapshotMergeInto.{DeleteRow, MergeIntoReceipt,
+  UpdateAll, UpdateSet, WhenMatched, WhenNotMatched, WhenNotMatchedBySource}
 
 /** General conditional MERGE ([[SnapshotStore.mergeInto]] — the
   * Delta/SQL:2003 `MERGE INTO` shape): first-match-wins WHEN MATCHED
@@ -31,6 +31,27 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     SnapshotStore.append(chunk(100L, 10), dir, "p")
     SnapshotStore.append(chunk(200L, 10), dir, "p")
   }
+
+  /** Every path under the store's `data/` dir, recursively. */
+  private def dataListing(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir, "data")
+    val walk = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(root.relativize(_).toString).toSet
+    } finally walk.close()
+  }
+
+  private def merge(mor: Boolean, dir: String,
+      src: org.apache.spark.sql.DataFrame,
+      matched: Seq[WhenMatched] = Nil,
+      notMatched: Option[WhenNotMatched] = None,
+      notMatchedBySource: Seq[WhenNotMatchedBySource] = Nil)
+      : MergeIntoReceipt =
+    if (mor) SnapshotStore.mergeIntoMor(spark, dir, src, Seq("k"), matched,
+      notMatched, notMatchedBySource)
+    else SnapshotStore.mergeInto(spark, dir, src, Seq("k"), matched,
+      notMatched, notMatchedBySource)
 
   test("conditional matched update + matched delete + not-matched " +
     "insert in ONE pass: first-match-wins, exact rows, exact receipt") {
@@ -370,5 +391,126 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     runBoth(mor = false, nmbs)
     runBoth(mor = true, Nil)
     runBoth(mor = true, nmbs)
+  }
+
+  test("one pass over the join: the duplicate-key refusal and the " +
+    "receipt's counts ride the write — CoW runs 2 root queries, MoR 4, " +
+    "and neither a job outside a query") {
+    val src = Seq((100L, "p0", 1000.0), (101L, "p1", -1.0),
+      (500L, "p0", 500.0)).toDF("k", "p", "v")
+    val m = Seq(
+      WhenMatched(Some(col("s.v") > col("t.v")),
+        UpdateSet(Seq("v" -> col("s.v")))),
+      WhenMatched(None, DeleteRow))
+    for ((mor, queries) <- Seq(false -> 2, true -> 4)) {
+      // long stats columns: the new gens' blobs come from their footers,
+      // with no query of their own
+      val dir = newDir(if (mor) "passmor" else "passcow")
+      SnapshotStore.write((0 until 30).map(i =>
+        (i.toLong / 10 * 100 + i % 10, s"p${i % 2}", i * 1.0))
+        .toDF("k", "p", "v"), dir, "p", statsCols = Seq("k"))
+      var r: MergeIntoReceipt = null
+      val seen = launchedBy {
+        r = merge(mor, dir, src, m, Some(WhenNotMatched(None)))
+      }
+      assert(r.updated == 1 && r.deleted == 1 && r.inserted == 1 &&
+        r.copied == 28, s"mor=$mor: got $r")
+      // the residency pass, the write (CoW) / the DV write, its count
+      // read-back and the changed images' write (MoR)
+      assert(seen.rootQueries == queries && seen.nonSqlJobs == 0,
+        s"mor=$mor: got $seen")
+    }
+  }
+
+  test("a duplicate-key refusal leaves data/ as it was, CoW and MoR: " +
+    "duplicates that match, duplicates that only insert, two NULL keys; " +
+    "one NULL-key row still inserts") {
+    val nullable = "k LONG, p STRING, v DOUBLE"
+    def rows(rs: (java.lang.Long, String, Double)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rs.map { case (k, p, v) =>
+        org.apache.spark.sql.Row(k, p, v) }, 1),
+      org.apache.spark.sql.types.StructType.fromDDL(nullable))
+    val sources = Seq(
+      "matching" -> rows((100L, "p0", 1.0), (100L, "p0", 2.0)),
+      "insert-only" -> rows((900L, "p0", 1.0), (900L, "p0", 2.0)),
+      "null keys" -> rows((null, "p0", 1.0), (null, "p0", 2.0)))
+    for (mor <- Seq(false, true); (what, src) <- sources) {
+      val dir = newDir("dupfiles"); quartStore(dir)
+      val before = dataListing(dir)
+      val e = intercept[IllegalArgumentException](merge(mor, dir, src,
+        Seq(WhenMatched(None, UpdateAll)), Some(WhenNotMatched(None))))
+      assert(e.getMessage.contains("duplicate keys"),
+        s"mor=$mor $what: ${e.getMessage}")
+      assert(dataListing(dir) == before,
+        s"mor=$mor $what: the refused merge left " +
+          s"${dataListing(dir) -- before}")
+      assert(SnapshotStore.headVersion(spark, dir).contains(3))
+    }
+    // an insert-only merge: under MoR no arm takes a deletion vector
+    for (mor <- Seq(false, true)) {
+      val dir = newDir("nullkey"); quartStore(dir)
+      val r = merge(mor, dir, rows((null, "p0", 7.0)),
+        notMatched = Some(WhenNotMatched(None)))
+      assert(r.version == 4 && r.inserted == 1 && r.updated == 0,
+        s"mor=$mor: got $r")
+      assert(SnapshotStore.read(spark, dir).filter(col("k").isNull)
+        .select("v").as[Double].collect().toSeq == Seq(7.0))
+    }
+  }
+
+  test("a merge no clause fires in leaves no file behind, and an empty " +
+    "source returns the receipt at head, with and without NOT MATCHED BY " +
+    "SOURCE — CoW and MoR") {
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "k LONG, p STRING, v DOUBLE"))
+    // v <> v never holds, and no stats verdict can prove it: every slice
+    // is read and copied
+    val neverFires = Seq(WhenNotMatchedBySource(
+      Some(col("v") =!= col("v")), DeleteRow))
+    for (mor <- Seq(false, true)) {
+      val cases = Seq(
+        ("no clause fires", Seq((100L, "p0", 1.0)).toDF("k", "p", "v"),
+          Seq(WhenMatched(Some(lit(false)), DeleteRow)),
+          Option.empty[WhenNotMatched], Nil),
+        ("empty source", empty, Seq(WhenMatched(None, UpdateAll)),
+          Some(WhenNotMatched(None)), Nil),
+        ("empty source, NMBS", empty, Seq(WhenMatched(None, UpdateAll)),
+          Some(WhenNotMatched(None)), neverFires))
+      for ((what, src, m, nm, nmbs) <- cases) {
+        val dir = newDir("noop"); quartStore(dir)
+        val before = dataListing(dir)
+        val r = merge(mor, dir, src, m, nm, nmbs)
+        assert(r.version == 3 && r.updated == 0 && r.deleted == 0 &&
+          r.inserted == 0 && r.dvRows == 0, s"mor=$mor $what: got $r")
+        if (nmbs.nonEmpty) assert(r.copied == 30,
+          s"mor=$mor $what: every read row copies, got $r")
+        assert(dataListing(dir) == before,
+          s"mor=$mor $what: left ${dataListing(dir) -- before}")
+      }
+    }
+  }
+
+  test("a store with a declared sort order (range-partitioned writes, " +
+    "lexicographic and z-order) reports exact counts, CoW and MoR") {
+    val src = Seq((3L, "p1", 30.0), (4L, "p0", -1.0), (90L, "p0", 9.0))
+      .toDF("k", "p", "v")
+    for (zorder <- Seq(false, true); mor <- Seq(false, true)) {
+      val dir = newDir("sorted")
+      SnapshotStore.write(
+        (0 until 40).map(i => (i.toLong, s"p${i % 2}", i * 1.0))
+          .toDF("k", "p", "v"),
+        dir, "p", statsCols = Seq("k"))
+      SnapshotStore.declareSortCols(spark, dir,
+        if (zorder) Seq("k", "v") else Seq("k"), zorder)
+      val r = merge(mor, dir, src,
+        Seq(WhenMatched(Some(col("s.v") > col("t.v")), UpdateAll),
+          WhenMatched(None, DeleteRow)),
+        Some(WhenNotMatched(None)))
+      assert(r.updated == 1 && r.deleted == 1 && r.inserted == 1 &&
+        r.copied == 38, s"zorder=$zorder mor=$mor: got $r")
+      assert(SnapshotStore.read(spark, dir).count() == 40)
+    }
   }
 }
