@@ -54,11 +54,13 @@ import graft.storage.{CatalogBridge, SnapshotStore}
   *     stats-pruned copy-on-write) via `SupportsDeleteV2`.
   *   - MERGE / UPDATE / residual DELETE run as group-based
   *     copy-on-write row-level operations (`SupportsRowLevelOperations`)
-  *     that rewrite the WHOLE table in one pass — correct at any size
-  *     but O(table) per statement BY DESIGN here; the store's own
-  *     `graft_merge_into` / `graft_delete_where` TVFs stay the
-  *     O(touched-partition) fast path. The honest trade is recorded in
-  *     SURVEY §2.B.
+  *     in one pass. When Spark's runtime group filtering fires, the
+  *     scan and the replacing commit cover only the partitions that can
+  *     hold a match (untouched partitions keep their manifest fields);
+  *     when it does not — MERGE with NOT MATCHED BY SOURCE clauses, the
+  *     filter disabled — the statement rewrites the whole table. The
+  *     store's own `graft_merge_into` / `graft_delete_where` TVFs stay
+  *     the O(touched-partition) path for every shape (SURVEY §2.B).
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
 

@@ -7,14 +7,17 @@ import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** DSv1 `Filter` → `Column` for the scan's pruning-only pushdown.
-  * None = inconvertible (the filter simply doesn't prune — Spark
-  * re-evaluates everything post-scan, so exactness never depends on
-  * this).
+/** DSv1 `Filter` → `Column` for pruning-only pushdown: the catalog
+  * table's scan and the `graft-snapshot` format's relation. None =
+  * inconvertible (the filter simply doesn't prune — Spark re-evaluates
+  * everything post-scan, so exactness never depends on this). `And`
+  * converts both sides or neither: keeping one conjunct widens the
+  * `And`, which is sound on its own, but under a `Not` the result
+  * narrows and prunes rows the filter keeps.
   */
-private[catalog] object V1FilterConv {
+private[graft] object V1FilterConv {
 
-  def toColumn(f: Filter, schema: StructType): Option[Column] = f match {
+  def toColumn(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => litOf(v).map(col(a) === _)
     case EqualNullSafe(a, v) => litOf(v).map(col(a) <=> _)
     case GreaterThan(a, v) => litOf(v).map(col(a) > _)
@@ -31,10 +34,10 @@ private[catalog] object V1FilterConv {
     case StringEndsWith(a, p) => Some(col(a).endsWith(p))
     case StringContains(a, p) => Some(col(a).contains(p))
     case And(l, r) =>
-      for (a <- toColumn(l, schema); b <- toColumn(r, schema)) yield a && b
+      for (a <- toColumn(l); b <- toColumn(r)) yield a && b
     case Or(l, r) =>
-      for (a <- toColumn(l, schema); b <- toColumn(r, schema)) yield a || b
-    case Not(c) => toColumn(c, schema).map(not)
+      for (a <- toColumn(l); b <- toColumn(r)) yield a || b
+    case Not(c) => toColumn(c).map(not)
     case _ => None
   }
 
@@ -59,22 +62,19 @@ private[catalog] object V1FilterConv {
   */
 private[catalog] object V2PredicateConv {
 
-  def toColumn(p: Predicate, schema: StructType): Option[Column] = p match {
+  def toColumn(p: Predicate): Option[Column] = p match {
     case _: AlwaysTrue => Some(lit(true))
     case _: AlwaysFalse => Some(lit(false))
     case a: V2And =>
-      for (l <- toColumn(a.left(), schema); r <- toColumn(a.right(), schema))
-        yield l && r
+      for (l <- toColumn(a.left()); r <- toColumn(a.right())) yield l && r
     case o: V2Or =>
-      for (l <- toColumn(o.left(), schema); r <- toColumn(o.right(), schema))
-        yield l || r
-    case n: V2Not => toColumn(n.child(), schema).map(not)
-    case g: GeneralScalarExpression => scalar(g, schema)
+      for (l <- toColumn(o.left()); r <- toColumn(o.right())) yield l || r
+    case n: V2Not => toColumn(n.child()).map(not)
+    case g: GeneralScalarExpression => scalar(g)
     case _ => None
   }
 
-  private def scalar(g: GeneralScalarExpression,
-                     schema: StructType): Option[Column] = {
+  private def scalar(g: GeneralScalarExpression): Option[Column] = {
     val ch = g.children()
     def bin(f: (Column, Column) => Column): Option[Column] =
       if (ch.length != 2) None
@@ -109,7 +109,7 @@ private[catalog] object V2PredicateConv {
     case r: NamedReference if r.fieldNames.length == 1 =>
       Some(col(r.fieldNames.head))
     case l: V2Literal[_] => external(l)
-    case p: Predicate => toColumn(p, new StructType())
+    case p: Predicate => toColumn(p)
     case _ => None
   }
 

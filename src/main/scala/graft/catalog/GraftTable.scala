@@ -71,7 +71,7 @@ private[catalog] class GraftTable(path: String, ident: String)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new GraftScanBuilder(path, schema(), None)
+    new GraftScanBuilder(path, schema())
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(path, info.schema(), GraftWriteMode.Append, None)
@@ -122,13 +122,13 @@ private[catalog] class GraftTable(path: String, ident: String)
 
   override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
     predicates.forall(p =>
-      V2PredicateConv.toColumn(p, schema()).isDefined)
+      V2PredicateConv.toColumn(p).isDefined)
 
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     // empty conjunction = TRUE = delete everything (the default
     // truncateTable also routes here)
     val pred = predicates.foldLeft(org.apache.spark.sql.functions.lit(true)) {
-      (acc, p) => acc && V2PredicateConv.toColumn(p, schema()).getOrElse(
+      (acc, p) => acc && V2PredicateConv.toColumn(p).getOrElse(
         throw new UnsupportedOperationException(
           s"cannot convert $p — canDeleteWhere should have refused"))
     }
@@ -141,8 +141,7 @@ private[catalog] class GraftTable(path: String, ident: String)
   * — every filter is also returned as post-scan, so Spark re-evaluates
   * and exactness never depends on the convert.
   */
-private[catalog] class GraftScanBuilder(path: String, full: StructType,
-    version: Option[Int], pushdown: Boolean = true)
+private[catalog] class GraftScanBuilder(path: String, full: StructType)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -150,9 +149,7 @@ private[catalog] class GraftScanBuilder(path: String, full: StructType,
   private var required: StructType = full
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (pushdown)
-      pushed = filters.filter(f =>
-        V1FilterConv.toColumn(f, full).isDefined)
+    pushed = filters.filter(V1FilterConv.toColumn(_).isDefined)
     filters // all re-applied by Spark — pruning-only pushdown
   }
 
@@ -166,7 +163,7 @@ private[catalog] class GraftScanBuilder(path: String, full: StructType,
 
     override def toV1TableScan[T <: BaseRelation with TableScan](
         context: SQLContext): T = {
-      val pred = pushed.flatMap(V1FilterConv.toColumn(_, full))
+      val pred = pushed.flatMap(V1FilterConv.toColumn(_))
         .reduceOption(_ && _)
       val requiredCols = required.fieldNames.toSeq
       new BaseRelation with TableScan {
@@ -175,15 +172,14 @@ private[catalog] class GraftScanBuilder(path: String, full: StructType,
         override def buildScan(): RDD[Row] = {
           val spark = context.sparkSession
           val base0 = pred match {
-            case Some(c) => SnapshotStore.readWhere(spark, path, c, version)
-            case None => SnapshotStore.read(spark, path, version)
+            case Some(c) => SnapshotStore.readWhere(spark, path, c)
+            case None => SnapshotStore.read(spark, path)
           }
           // `_p` (the partition-key metadata column) computes on demand
           val base =
             if (requiredCols.contains("_p"))
               base0.withColumn("_p", CatalogBridge.partKeyColumn(spark,
-                path, version.getOrElse(
-                  SnapshotStore.headVersion(spark, path).getOrElse(1))))
+                path, SnapshotStore.headVersion(spark, path).getOrElse(1)))
             else base0
           base.select(requiredCols.map(col): _*).rdd
         }

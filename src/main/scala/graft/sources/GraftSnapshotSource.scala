@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
+import graft.catalog.V1FilterConv
 import graft.storage.{Dml, SnapshotStore}
 
 /** `spark.read.format("graft-snapshot")` — the BATCH read relation over a
@@ -138,34 +139,6 @@ object GraftSnapshotSource {
                 s"ISO-8601 instant (e.g. 2026-08-15T10:00:00Z), got '$raw'")
         }
     }
-
-  /** `sources.Filter` → `Column`, None for shapes the store's pruner has
-    * no use for (they stay Spark-side — pruning-only contract).
-    */
-  private[sources] def translate(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, p) => Some(col(a).startsWith(p))
-    case And(l, r) => (translate(l), translate(r)) match {
-      case (Some(cl), Some(cr)) => Some(cl && cr)
-      // one conjunct still prunes soundly: dropping the other only
-      // WIDENS the read set
-      case (Some(cl), None) => Some(cl)
-      case (None, Some(cr)) => Some(cr)
-      case _ => None
-    }
-    case Or(l, r) => for { cl <- translate(l); cr <- translate(r) }
-      yield cl || cr // a disjunction prunes only translated WHOLE
-    case Not(child) => translate(child).map(!_)
-    case _ => None
-  }
 }
 
 private[sources] class GraftSnapshotRelation(
@@ -195,7 +168,7 @@ private[sources] class GraftSnapshotRelation(
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    val pred = filters.flatMap(GraftSnapshotSource.translate(_))
+    val pred = filters.flatMap(V1FilterConv.toColumn(_))
       .reduceOption(_ && _)
     val base = pred match {
       case Some(p) =>

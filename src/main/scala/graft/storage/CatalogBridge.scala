@@ -59,12 +59,6 @@ private[graft] object CatalogBridge {
     "_p=" + (if (key == null) Esc.DEFAULT_PARTITION_NAME
              else Esc.escapePathName(key))
 
-  /** The manifest KEY of a dir name (inverse of [[dirNameOf]] — NULL
-    * keys read back as the sentinel, like the write path's listing).
-    */
-  def keyOfDirName(name: String): String =
-    Esc.unescapePathName(name.stripPrefix("_p="))
-
   /** Driver-side composite-component encoding (for key assembly in the
     * connector's writers — matches [[SnapshotStore.partKeyExprCols]]).
     */
@@ -87,12 +81,6 @@ private[graft] object CatalogBridge {
     SnapshotStore.partKeyExprCols(
       comps.map(org.apache.spark.sql.functions.col))
   }
-
-  /** The store's live partition KEYS at `v` (the overwrite path's
-    * removed set).
-    */
-  def liveKeys(spark: SparkSession, path: String, v: Int): Set[String] =
-    SnapshotStore.readManifest(spark, path, v).keySet
 
   /** Prior manifest fields for `keys` at `v` (pruned-bucket lookup —
     * the append path's fold base).

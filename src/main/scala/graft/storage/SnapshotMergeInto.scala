@@ -193,15 +193,11 @@ object SnapshotMergeInto {
     // ---- which slices participate --------------------------------------
     lazy val allEntriesForEras = forWrite(path, head)(
       readManifest(spark, path, head))
-    // the residency pass also counts the source's rows (the Bloom split's
-    // filter size); a source without the partition column skips it
-    val (srcParts, srcRows): (Seq[String], Option[Long]) =
-      if (!partComps.forall(source.columns.contains)) (Nil, None)
-      else {
-        val (parts, n) = residencyKeysWithCount(spark, path, src, partComps,
-          renames, allEntriesForEras.keys)
-        (parts.toIndexedSeq, Some(n))
-      }
+    // a source without the partition column skips the residency pass
+    val srcParts: Seq[String] =
+      if (!partComps.forall(source.columns.contains)) Nil
+      else residencyKeysWithCount(spark, path, src, partComps, renames,
+        allEntriesForEras.keys)._1.toIndexedSeq
     val logicalToPhysical = renames.map(_.swap)
     // NOT-MATCHED-BY-SOURCE conditions analyzed for the tri-state pruner
     // (unqualified/t-qualified target refs; an s. ref fails analysis →
@@ -306,63 +302,7 @@ object SnapshotMergeInto {
       .withColumn("_s_present", lit(true)).alias("s")
     val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
       .reduce(_ && _)
-    // §3.2 Bloom pre-filter: a FULL OUTER join cannot broadcast, so
-    // every target row of every participating slice is a shuffle row —
-    // even though most match no source key. A Bloom filter over the
-    // source keys routes the provable non-matches AROUND the join: a
-    // bloom miss is a PROOF of no match (no false negatives), and a
-    // t-only row's whole outcome is already computed on the target
-    // frame (the `_nmc` markers) — first NOT-MATCHED-BY-SOURCE clause
-    // that holds, else copy — so those rows resolve join-free, shuffle-
-    // free. False positives just ride the join and come out t-only
-    // there; the clause logic is shared, so the result is identical
-    // either way.
-    //
-    // The split is SIZE-GATED from the manifest's own row counts
-    // (driver-resident, no job): below the threshold the second target
-    // scan + the bloom-build job cost more than the whole shuffle they
-    // save (measured: q_snapshot_merge_mor +1.7 s at 150 k rows), so
-    // small merges keep the single-join plan. Applied only when every
-    // key column's type matches exactly on both sides (the key hashes
-    // must agree with join equality). The `graft.merge.bloom.minRows`
-    // system property is a TEST-ONLY seam, like `segmentThreshold`:
-    // SnapshotMergeIntoSpec sets it to 0 to force the split on a small
-    // fixture for its parity check.
-    val bloomMinRows: Long =
-      sys.props.get("graft.merge.bloom.minRows")
-        .map(_.toLong).getOrElse(4000000L)
-    val touchedRowsEst: Long = touchedFields.iterator.map { f =>
-      statsOf(f).map(parseStats).flatMap(
-        _.valuesIterator.flatMap(_.rows).maxOption).getOrElse(0L)
-    }.sum
-    val bloomSplit = touchedRowsEst >= bloomMinRows &&
-      keyCols.forall { k =>
-        import org.apache.spark.sql.types._
-        src.schema(k).dataType == logicalSchema(k).dataType &&
-          (src.schema(k).dataType match {
-            case _: StringType | _: IntegerType | _: LongType |
-                 _: ShortType | _: ByteType | _: BooleanType |
-                 _: FloatType | _: DoubleType | _: DecimalType |
-                 _: DateType | _: TimestampType | _: BinaryType => true
-            case _ => false
-          })
-      }
-    val keyHash = xxhash64(keyCols.map(col): _*)
-    val (joinTarget, bypass) =
-      if (!bloomSplit) (base, None)
-      else {
-        // sized from the residency pass's row count: exact for a unique-
-        // key source; duplicates only oversize it, and the merge refuses
-        // them anyway. A source without the partition column (no
-        // residency pass) pays one count over the persisted source.
-        val nKeys = math.max(srcRows.getOrElse(src.count()), 1L)
-        val bf = src.stat.bloomFilter(keyHash, nKeys, 0.03)
-        val bfB = spark.sparkContext.broadcast(bf)
-        val mightMatch = udf((h: Long) => bfB.value.mightContainLong(h))
-        (base.filter(mightMatch(keyHash)),
-          Some(base.filter(!mightMatch(keyHash))))
-      }
-    val joined = joinTarget.join(srcAligned, joinCond, "full_outer")
+    val joined = base.join(srcAligned, joinCond, "full_outer")
     val isMatched = col("_t_present").isNotNull &&
       col("_s_present").isNotNull
     val tOnly = col("_t_present").isNotNull && col("_s_present").isNull
@@ -384,20 +324,6 @@ object SnapshotMergeInto {
       case ((tag, cond), rest) => when(cond, lit(tag)).otherwise(rest)
     }
     val tagged = joined.withColumn("_act", act)
-    // the bypass arm's action: only the t-only cases can apply, and
-    // they mirror the join arm's clause order exactly (first NMBS
-    // marker that holds, else copy). Deliberately NOT persisted: its
-    // lineage is a deterministic parquet scan + filter, so recomputing
-    // it for a second pass costs one cheap scan — far less than
-    // materializing ~the whole non-matching table.
-    val bypassTagged = bypass.map { b =>
-      val bAct = notMatchedBySource.zipWithIndex
-        .foldRight(lit(Copy): Column) { case ((_, i), rest) =>
-          when(coalesce(col(s"_nmc$i"), lit(false)), lit(s"n$i"))
-            .otherwise(rest)
-        }
-      b.withColumn("_act", bAct)
-    }
     // per-column value under each action; every RHS sees the PRE-merge
     // row (one select — the DML swap discipline)
     def actionValue(tag: String, action: MergeAction, c: String): Option[Column] =
@@ -442,21 +368,6 @@ object SnapshotMergeInto {
       case (WhenMatched(_, DeleteRow), i) => s"m$i" } ++
       notMatchedBySource.zipWithIndex.collect {
         case (WhenNotMatchedBySource(_, DeleteRow), i) => s"n$i" } :+ Drop
-    // the bypass arm never saw the join, so its columns are unqualified
-    // and only the NMBS assignments can rewrite a value
-    val bypassOutCols = targetCols.map { c =>
-      var chain: Column = null
-      notMatchedBySource.zipWithIndex.foreach { case (cl, i) =>
-        cl.action match {
-          case UpdateSet(as) if as.exists(_._1 == c) =>
-            val branch = when(col("_act") === s"n$i", col(s"_nmv${i}_$c"))
-            chain = if (chain == null) branch
-              else chain.when(col("_act") === s"n$i", col(s"_nmv${i}_$c"))
-          case _ => ()
-        }
-      }
-      (if (chain == null) col(c) else chain.otherwise(col(c))).as(c)
-    }
     val updTags = (matched.zipWithIndex.collect {
       case (WhenMatched(_, a), i) if a != DeleteRow => s"m$i" } ++
       notMatchedBySource.zipWithIndex.collect {
@@ -465,24 +376,15 @@ object SnapshotMergeInto {
     // merge-on-read's deletion-vector hits: the pre-images of the
     // update/delete arms
     val removalTags = (updTags ++ deleteTags.filterNot(_ == Drop)).toSeq
-    // both arms in one shape: the merged row, its tag, the source's
-    // per-key count and key (NULL on the bypass arm, which holds no source
-    // row) and, under MoR, the target row's sidecar position and removal
-    // flag. The flag is computed BELOW the observation: a literal-false
-    // hit filter above it (no update/delete arm) would let the optimizer
-    // prune the observed node out of the DV write.
-    def arm(df: DataFrame, cols: Seq[Column], sn: Column,
-        skey: Column): DataFrame =
-      df.select((cols ++ Seq(col("_act"), sn.as("_sn"), skey.as("_skey")) ++
-        (if (!mor) Nil else Seq(col("_gk"), col("_gi"),
-          col("_act").isin(removalTags: _*).as("_rm")))): _*)
-    val joinArm = arm(tagged, outCols, col("_sn"),
-      struct(keyCols.map(k => col(s"s.$k").as(k)): _*))
-    val actions = bypassTagged.fold(joinArm)(bt => joinArm.union(
-      arm(bt, bypassOutCols, lit(null).cast("long"),
-        lit(null).cast(org.apache.spark.sql.types.StructType(
-          keyCols.map(k => org.apache.spark.sql.types.StructField(k,
-            src.schema(k).dataType)))))))
+    // the merged row, its tag, the source's per-key count and key and,
+    // under MoR, the target row's sidecar position and removal flag. The
+    // flag is computed BELOW the observation: a literal-false hit filter
+    // above it (no update/delete arm) would let the optimizer prune the
+    // observed node out of the DV write.
+    val actions = tagged.select((outCols ++ Seq(col("_act"), col("_sn"),
+      struct(keyCols.map(k => col(s"s.$k").as(k)): _*).as("_skey")) ++
+      (if (!mor) Nil else Seq(col("_gk"), col("_gi"),
+        col("_act").isin(removalTags: _*).as("_rm")))): _*)
     // the receipt's counts and the duplicate-key verdict are observed
     // while the first write consumes the frame (Delta's MergeIntoCommand
     // counts the same way), never recomputed by a pass of their own

@@ -3031,8 +3031,8 @@ object SnapshotStore {
     *
     * The count is `count(*)` — an UPPER BOUND on the batch's distinct
     * keys (exact under the merge contract: the batch is unique per key
-    * after resolution), so a broadcast decision or a Bloom filter sized
-    * on it can only err toward NOT broadcasting or an oversized filter.
+    * after resolution), so a broadcast decision sized on it can only err
+    * toward NOT broadcasting.
     */
   private[storage] def residencyKeysWithCount(spark: SparkSession,
       path: String, batch: DataFrame, currentSpecLogical: Seq[String],

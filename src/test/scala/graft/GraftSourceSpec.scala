@@ -145,4 +145,40 @@ class GraftSourceSpec extends SparkSpec {
       .filter(col("k") >= 500L).count() == 4,
       "redelivered keyed append must not duplicate")
   }
+
+  test("one Filter translator for the relation and the catalog scan: " +
+    "every shape the relation pushes converts, and a NOT over a " +
+    "half-convertible AND converts to nothing") {
+    import org.apache.spark.sql.sources
+    import graft.catalog.V1FilterConv
+    def conv(f: sources.Filter): Option[String] =
+      V1FilterConv.toColumn(f).map(_.toString)
+    Seq[(sources.Filter, org.apache.spark.sql.Column)](
+      sources.EqualTo("k", 5L) -> (col("k") === 5L),
+      sources.EqualNullSafe("k", 5L) -> (col("k") <=> 5L),
+      sources.GreaterThan("k", 5L) -> (col("k") > 5L),
+      sources.GreaterThanOrEqual("k", 5L) -> (col("k") >= 5L),
+      sources.LessThan("k", 5L) -> (col("k") < 5L),
+      sources.LessThanOrEqual("k", 5L) -> (col("k") <= 5L),
+      sources.In("k", Array(5L, 105L)) -> col("k").isin(5L, 105L),
+      sources.IsNull("v") -> col("v").isNull,
+      sources.IsNotNull("v") -> col("v").isNotNull,
+      sources.StringStartsWith("p", "p1") -> col("p").startsWith("p1"),
+      sources.Or(sources.EqualTo("k", 5L), sources.EqualTo("k", 205L)) ->
+        (col("k") === 5L || col("k") === 205L)
+    ).foreach { case (f, want) =>
+      assert(conv(f).contains(want.toString), s"$f converted to ${conv(f)}")
+    }
+    // NOT(k >= 100 AND false) keeps every row; converted as NOT(k >= 100)
+    // it would prune the gens holding k >= 100
+    val half = sources.And(sources.GreaterThanOrEqual("k", 100L),
+      sources.AlwaysFalse())
+    assert(conv(half).isEmpty)
+    assert(conv(sources.Not(half)).isEmpty)
+    // end to end: a negated conjunction stays exact through the format
+    val dir = newDir("not"); ranged(dir)
+    val f = spark.read.format("graft-snapshot").load(dir)
+    assert(f.filter(!(col("k") >= 100L && col("p").endsWith("1")))
+      .count() == 20)
+  }
 }

@@ -338,61 +338,6 @@ class SnapshotMergeIntoSpec extends SparkSpec {
     assert(SnapshotStore.headVersion(spark, dir).contains(3))
   }
 
-  test("bloom-split parity: the two-arm plan (join-free bypass for " +
-    "provable non-matches) produces byte-identical rows, receipt, and " +
-    "DV counts vs the single-join plan — CoW and MoR, with and without " +
-    "NOT MATCHED BY SOURCE") {
-    // the split is size-gated off at test scale; force it on with the
-    // threshold property and compare against the pinned single-join run
-    def runBoth(mor: Boolean, nmbs: Seq[WhenNotMatchedBySource])
-        : Unit = {
-      def merged(forceBloom: Boolean): (String,
-          graft.storage.SnapshotMergeInto.MergeIntoReceipt) = {
-        val dir = newDir(if (forceBloom) "blm1" else "blm0")
-        quartStore(dir)
-        val src = Seq((100L, "p0", 1000.0), (101L, "p1", -1.0),
-          (500L, "p0", 500.0)).toDF("k", "p", "v")
-        val prev = Option(System.getProperty("graft.merge.bloom.minRows"))
-        System.setProperty("graft.merge.bloom.minRows",
-          if (forceBloom) "0" else Long.MaxValue.toString)
-        try {
-          val m = Seq(
-            WhenMatched(Some(col("s.v") > col("t.v")),
-              UpdateSet(Seq("v" -> col("s.v")))),
-            WhenMatched(None, DeleteRow))
-          val r =
-            if (mor) SnapshotStore.mergeIntoMor(spark, dir, src,
-              Seq("k"), matched = m,
-              notMatched = Some(WhenNotMatched(None)),
-              notMatchedBySource = nmbs)
-            else SnapshotStore.mergeInto(spark, dir, src,
-              Seq("k"), matched = m,
-              notMatched = Some(WhenNotMatched(None)),
-              notMatchedBySource = nmbs)
-          (dir, r)
-        } finally prev match {
-          case Some(p) => System.setProperty("graft.merge.bloom.minRows", p)
-          case None => System.clearProperty("graft.merge.bloom.minRows")
-        }
-      }
-      val (d0, r0) = merged(forceBloom = false)
-      val (d1, r1) = merged(forceBloom = true)
-      assert(r1 == r0,
-        s"receipts diverge (mor=$mor, nmbs=${nmbs.nonEmpty}): $r0 vs $r1")
-      val a = SnapshotStore.read(spark, d0).orderBy("k", "p", "v")
-        .collect().toSeq
-      val b = SnapshotStore.read(spark, d1).orderBy("k", "p", "v")
-        .collect().toSeq
-      assert(a == b, s"rows diverge (mor=$mor, nmbs=${nmbs.nonEmpty})")
-    }
-    val nmbs = Seq(WhenNotMatchedBySource(Some(col("k") > 205L),
-      DeleteRow))
-    runBoth(mor = false, Nil)
-    runBoth(mor = false, nmbs)
-    runBoth(mor = true, Nil)
-    runBoth(mor = true, nmbs)
-  }
-
   test("one pass over the join: the duplicate-key refusal and the " +
     "receipt's counts ride the write — CoW runs 2 root queries, MoR 4, " +
     "and neither a job outside a query") {
