@@ -18,24 +18,13 @@ import graft.storage.{CatalogBridge, SnapshotStore}
   *
   *   - Append: touched entries gain the new dir field — an O(touched
   *     buckets) delta commit with a bounded CAS retry loop.
-  *   - Overwrite (INSERT OVERWRITE / TRUNCATE): the new entries REPLACE
-  *     the map — one full commit.
-  *   - ReplaceAll (row-level MERGE/UPDATE/DELETE): same full commit but
-  *     against the statement's PINNED head — a concurrent commit makes
-  *     the CAS lose loudly instead of silently dropping its rows.
+  *   - Overwrite (INSERT OVERWRITE): the new entries REPLACE the map —
+  *     one full commit.
   */
 private[catalog] class GraftBatchWrite(path: String,
     physSchema: StructType, physPartCols: Seq[String],
-    mode: GraftWriteMode.Value, pinnedHead: Int,
-    spark: SparkSession, stagingToClean: Option[String] = None,
-    groupFilter: Option[GroupFilterState] = None)
+    mode: GraftWriteMode.Value, spark: SparkSession)
     extends BatchWrite {
-
-  private def sweepStaging(): Unit = stagingToClean.foreach { st =>
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(st), true)
-  }
 
   private val gen = "gen-" + java.util.UUID.randomUUID.toString
     .replace("-", "").take(12)
@@ -73,11 +62,7 @@ private[catalog] class GraftBatchWrite(path: String,
       physPartCols.size, sc.sessionLocalTimeZone, confMap.toMap)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = try {
-    commitImpl(messages)
-  } finally sweepStaging()
-
-  private def commitImpl(messages: Array[WriterCommitMessage]): Unit = {
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val keys = messages.flatMap {
       case GraftCommitMessage(ks) => ks
       case other => throw new IllegalStateException(s"alien $other")
@@ -118,46 +103,13 @@ private[catalog] class GraftBatchWrite(path: String,
           case e: java.util.ConcurrentModificationException =>
             cleanup(); throw e
         }
-      case GraftWriteMode.Overwrite | GraftWriteMode.ReplaceAll =>
-        val h =
-          if (mode == GraftWriteMode.ReplaceAll) pinnedHead
-          else SnapshotStore.headVersion(spark, path).getOrElse(1)
+      case GraftWriteMode.Overwrite =>
+        val h = SnapshotStore.headVersion(spark, path).getOrElse(1)
         val schema = Some(CatalogBridge.unionSchema(
           CatalogBridge.physicalSchema(spark, path, h), physSchema))
-        val scanned: Option[Set[String]] =
-          if (mode == GraftWriteMode.ReplaceAll)
-            groupFilter.flatMap(_.keptGroups)
-          else None
-        scanned match {
-          case Some(groups) =>
-            // runtime group filtering fired: the scan served EXACTLY
-            // `groups`, so this statement's rewrite is scoped to them —
-            // a delta commit over the pinned head (same loud CAS):
-            //   scanned ∩ written  → fields REPLACED by the new gen's
-            //   written \ scanned  → rows MOVED/INSERTED into a group
-            //                        the scan never read: APPEND to its
-            //                        prior fields
-            //   scanned \ written  → every row deleted: key removed
-            // Untouched groups keep their manifest fields verbatim —
-            // nothing of theirs was read or rewritten.
-            val written = newFields.keySet
-            val appendKeys = (written -- groups).toSeq
-            val prior = CatalogBridge.priorFields(spark, path, h,
-              appendKeys)
-            val added = newFields.map { case (k, fs0) =>
-              if (groups(k)) k -> fs0
-              else k -> (prior.getOrElse(k, Nil) ++ fs0)
-            }
-            try CatalogBridge.commitDelta(spark, path, h + 1, h,
-              groups -- written, added, Nil, schema, op = "replace")
-            catch { case e: Throwable => cleanup(); throw e }
-          case None =>
-            val op = if (mode == GraftWriteMode.ReplaceAll) "replace"
-              else "overwrite"
-            try CatalogBridge.commitFull(spark, path, h + 1, newFields,
-              Nil, schema, op)
-            catch { case e: Throwable => cleanup(); throw e }
-        }
+        try CatalogBridge.commitFull(spark, path, h + 1, newFields, Nil,
+          schema, "overwrite")
+        catch { case e: Throwable => cleanup(); throw e }
     }
   }
 
@@ -165,7 +117,6 @@ private[catalog] class GraftBatchWrite(path: String,
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path, s"data/$gen"), true)
-    sweepStaging()
   }
 }
 

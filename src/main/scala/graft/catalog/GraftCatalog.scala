@@ -2,21 +2,15 @@ package graft.catalog
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.graft.PlanGlue
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.storage.{CatalogBridge, SnapshotStore}
+import graft.storage.SnapshotStore
 
 /** A Spark DSv2 `TableCatalog` over snapshot stores — the catalog
   * surface that lets the engine's tables be addressed as
@@ -49,18 +43,14 @@ import graft.storage.{CatalogBridge, SnapshotStore}
   *   - INSERT INTO appends through a REAL distributed `BatchWrite`
   *     (per-task parquet writers clustered by the partition columns,
   *     manifest delta commit — O(touched buckets)).
-  *   - DELETE with a fully-convertible predicate routes to the store's
-  *     predicate DML ([[SnapshotStore.deleteWhere]] — metadata drops and
-  *     stats-pruned copy-on-write) via `SupportsDeleteV2`.
-  *   - MERGE / UPDATE / residual DELETE run as group-based
-  *     copy-on-write row-level operations (`SupportsRowLevelOperations`)
-  *     in one pass. When Spark's runtime group filtering fires, the
-  *     scan and the replacing commit cover only the partitions that can
-  *     hold a match (untouched partitions keep their manifest fields);
-  *     when it does not — MERGE with NOT MATCHED BY SOURCE clauses, the
-  *     filter disabled — the statement rewrites the whole table. The
-  *     store's own `graft_merge_into` / `graft_delete_where` TVFs stay
-  *     the O(touched-partition) path for every shape (SURVEY §2.B).
+  *   - DELETE / UPDATE / MERGE INTO run the store's own verbs
+  *     ([[SnapshotStore.dml]] / [[SnapshotStore.mergeInto]]), planned by
+  *     [[GraftDmlStrategy]], which [[initialize]] installs in the
+  *     session: the same plan and semantics as the `graft_delete_where`
+  *     / `graft_update_where` / `graft_merge_into` TVFs — partitions
+  *     resolved from the manifest, stats-refuted slices kept verbatim,
+  *     partition-confined MERGE key matching. TRUNCATE deletes every row
+  *     through the same DML verb.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
@@ -73,6 +63,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     root = Option(options.get("root")).getOrElse(
       throw new IllegalArgumentException(
         s"catalog '$name' needs spark.sql.catalog.$name.root"))
+    PlanGlue.addStrategy(SparkSession.active, GraftDmlStrategy)
   }
 
   override def name(): String = catalogName

@@ -1992,11 +1992,10 @@ object Extended extends QueryModule {
     // NATIVE SQL MERGE INTO through the DSv2 catalog (r18): the same
     // conditional reconcile as q_snapshot_merge_into, but the statement
     // is PLAIN Spark SQL against `graft.<ns>.<table>` — parsed by
-    // Spark's own MERGE grammar, routed through the catalog's
-    // row-level-operation plumbing (SupportsRowLevelOperations +
-    // group-based copy-on-write), no TVF mini-grammar involved. A
-    // require pins row-for-row parity against the TVF verb run with
-    // identical clauses on a twin store — one semantics, two surfaces.
+    // Spark's own MERGE grammar, planned by the catalog as the store's
+    // own mergeInto verb, no TVF mini-grammar involved. A require pins
+    // row-for-row parity against the TVF verb run with identical
+    // clauses on a twin store — one semantics, two surfaces.
     "q_snapshot_merge_sql" -> ((s, d) => {
       val orders = t(s, d, "orders")
       val root = java.nio.file.Files.createTempDirectory("graft_msq")

@@ -109,45 +109,4 @@ private[graft] object CatalogBridge {
     */
   def unionSchema(prior: StructType, next: StructType): StructType =
     SnapshotStore.unionSchema(prior, next)
-
-  /** Whether runtime group NARROWING of a row-level-operation scan is
-    * sound for this store: true iff exactly one partition spec was ever
-    * declared. On an evolved store old gens keep their era's manifest
-    * keys while the group-filter subquery computes CURRENT-spec `_p`
-    * values from row data — the two don't compare, so narrowing there
-    * could drop a group that holds matches. One spec = one era = key
-    * and `_p` derive from the same expression, exact by construction.
-    */
-  def groupAddressable(spark: SparkSession, path: String): Boolean =
-    SnapshotStore.allPartSpecs(spark, path).size == 1
-
-  /** The pinned version's data files, for serving a row-level-operation
-    * scan DIRECTLY from the store (no staging materialization): Some of
-    * (partition key, file path, length) triples iff the version carries
-    * no rename layer and no deletion-vector fields — every other shape
-    * needs the central reader's semantics and returns None (the caller
-    * stages through [[SnapshotStore.read]]). Listing is manifest-driven
-    * (the dirs the version references), never a directory walk.
-    */
-  def directScanFiles(spark: SparkSession, path: String, v: Int)
-      : Option[Seq[(String, String, Long)]] = {
-    if (renames(spark, path, v).nonEmpty) return None
-    val entries = SnapshotStore.readManifest(spark, path, v)
-    val fields = entries.toSeq.flatMap { case (k, fs) => fs.map(k -> _) }
-    if (fields.exists { case (_, f) => SnapshotFormat.dvOf(f).nonEmpty })
-      return None
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    Some(fields.flatMap { case (k, f) =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/${SnapshotFormat.dirOf(f)}")
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq((k, p.toString, st.getLen))
-      else fs.listStatus(p).filter(_.isFile)
-        .filter { q =>
-          val n = q.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        .map(q => (k, q.getPath.toString, q.getLen)).toSeq
-    })
-  }
 }

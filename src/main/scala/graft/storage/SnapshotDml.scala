@@ -201,9 +201,9 @@ private[graft] object SnapshotDml {
     *    logical type (UPDATE never evolves the schema); CHECK constraints
     *    gate the rows it changes. There is no metadata-only path — an
     *    update always writes the rows it changes. Assigning the
-    *    partition column is refused (moving rows across partitions is
-    *    [[SnapshotStore.merge]]'s job: a delete-bearing CDC batch names
-    *    the moves row by row).
+    *    partition column MOVES rows: the new images land in the
+    *    partitions their new values key, appended to those partitions'
+    *    fields (the same fold an era-migrated key takes).
     *
     * Modes:
     *  - [[Dml.CoW]]: the ambiguous slices — split to FILE grain first —
@@ -267,8 +267,7 @@ private[graft] object SnapshotDml {
         s"store at $path records no partition column"))
     op match {
       case Dml.Update(assignments) =>
-        validateAssignments(assignments, st.logicalSchema,
-          logicalPartCol(physPartCol, st.renames), verb)
+        validateAssignments(assignments, st.logicalSchema, verb)
       case Dml.Delete =>
     }
     val isDelete = op == Dml.Delete
@@ -456,18 +455,12 @@ private[graft] object SnapshotDml {
   }
 
   private def validateAssignments(assignments: Seq[(String, Column)],
-      logicalSchema: StructType,
-      partSpec: String, verb: String): Unit = {
+      logicalSchema: StructType, verb: String): Unit = {
     require(assignments.nonEmpty, s"$verb needs at least one assignment")
-    val partComps = splitPartCols(partSpec)
     assignments.foreach { case (c, _) =>
       require(logicalSchema.fieldNames.contains(c),
         s"$verb column '$c' is not in the store's schema " +
           s"(${logicalSchema.fieldNames.mkString(", ")})")
-      require(!partComps.contains(c),
-        s"$verb cannot assign the partition column '$c' — moving " +
-          "rows across partitions is a merge (delete + re-insert names " +
-          "the moves row by row)")
     }
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"$verb assigns a column twice: " +

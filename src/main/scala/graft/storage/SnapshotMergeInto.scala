@@ -62,12 +62,16 @@ object SnapshotMergeInto {
     * and `s.` columns; None = always applies.
     */
   case class WhenMatched(cond: Option[Column], action: MergeAction)
-  /** `WHEN NOT MATCHED [AND cond] THEN INSERT *` — the store is
-    * schema-fixed, so insert is always insert-all (source columns the
-    * target lacks are refused; target columns the source lacks insert
-    * NULL, the store's additive-read semantics).
+  /** `WHEN NOT MATCHED [AND cond] THEN INSERT`. An empty `insert` list
+    * is `INSERT *`: the store is schema-fixed, so source columns the
+    * target lacks are refused and target columns the source lacks insert
+    * NULL (the store's additive-read semantics). A non-empty list is
+    * `INSERT (c, ...) VALUES (e, ...)`: each value may reference `s.`
+    * columns and casts to the column's type; unlisted columns insert
+    * NULL.
     */
-  case class WhenNotMatched(cond: Option[Column])
+  case class WhenNotMatched(cond: Option[Column],
+                            insert: Seq[(String, Column)] = Nil)
   /** `WHEN NOT MATCHED BY SOURCE [AND cond] THEN action` (update-set or
     * delete). `cond` should reference target columns (a `s.` column is
     * NULL here — SQL three-valued logic makes such a clause never
@@ -169,6 +173,14 @@ object SnapshotMergeInto {
         validateSet(as, targetCols, partCol, "WHEN NOT MATCHED BY SOURCE")
       case _ => ()
     })
+    notMatched.map(_.insert).filter(_.nonEmpty).foreach { ins =>
+      ins.foreach { case (c, _) => require(targetCols.contains(c),
+        s"WHEN NOT MATCHED INSERT column '$c' is not in the store's " +
+          s"schema (${targetCols.mkString(", ")})") }
+      require(ins.map(_._1).distinct.size == ins.size,
+        "WHEN NOT MATCHED INSERT names a column twice: " +
+          ins.map(_._1).mkString(", "))
+    }
     // matching is partition-confined (the same residency contract as
     // merge(): a key lives in its partition) — a source WITHOUT the
     // partition column could not restrict the resolution and would
@@ -326,7 +338,7 @@ object SnapshotMergeInto {
     val tagged = joined.withColumn("_act", act)
     // per-column value under each action; every RHS sees the PRE-merge
     // row (one select — the DML swap discipline)
-    def actionValue(tag: String, action: MergeAction, c: String): Option[Column] =
+    def actionValue(action: MergeAction, c: String): Option[Column] =
       action match {
         case UpdateAll =>
           if (source.columns.contains(c))
@@ -344,15 +356,15 @@ object SnapshotMergeInto {
           else chain.when(cond, value)
       }
       matched.zipWithIndex.foreach { case (cl, i) =>
-        actionValue(s"m$i", cl.action, c)
+        actionValue(cl.action, c)
           .foreach(value => add(col("_act") === s"m$i", value))
       }
-      if (notMatched.nonEmpty) {
+      notMatched.foreach { cl =>
         val value =
-          if (source.columns.contains(c))
-            col(s"s.$c").cast(logicalSchema(c).dataType)
-          else lit(null).cast(logicalSchema(c).dataType)
-        add(col("_act") === "ins", value)
+          if (cl.insert.nonEmpty) cl.insert.toMap.getOrElse(c, lit(null))
+          else if (source.columns.contains(c)) col(s"s.$c")
+          else lit(null)
+        add(col("_act") === "ins", value.cast(logicalSchema(c).dataType))
       }
       notMatchedBySource.zipWithIndex.foreach { case (cl, i) =>
         cl.action match {
@@ -399,21 +411,14 @@ object SnapshotMergeInto {
     val kept = !col("_act").isin(deleteTags: _*)
     def rowsOf(df: DataFrame): DataFrame =
       toPhysical(df.select(targetCols.map(col): _*), renames)
-    val cowInput = observed.filter(kept)
-    // persisted where a second pass reads a frame again. The join: under
+    // the join is persisted where a second pass reads it again: under
     // merge-on-read (the DV hits, then the changed images) and under
     // CHECK constraints (the probe, then the write); otherwise the write
-    // is its one reader. The CoW write's input: under a declared sort
-    // order, whose range partitioner samples that input in a pass of its
-    // own — through the observation, which would count every row twice;
-    // persisted, both passes read one materialization and the
-    // observation runs once, as the sampler builds it.
+    // is its one reader. (A sorted store's range-partitioned write
+    // persists its own input, so the observation counts each row once.)
     val cached =
-      (if (mor || SnapshotConstraints.all(spark, path).nonEmpty) Seq(tagged)
-       else Nil) ++
-      (if (!mor && sortColsOf(spark, path).exists(
-          physSchema.fieldNames.contains)) Seq(cowInput)
-       else Nil)
+      if (mor || SnapshotConstraints.all(spark, path).nonEmpty) Seq(tagged)
+      else Nil
     cached.foreach(
       _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
@@ -427,7 +432,7 @@ object SnapshotMergeInto {
       // the one pass over the join: the first write — the CoW rewrite, or
       // the MoR deletion vectors — carries the observation
       val (cowEntries, (dvRel, counts)) =
-        if (!mor) (writeGen(rowsOf(cowInput), path,
+        if (!mor) (writeGen(rowsOf(observed.filter(kept)), path,
           physPartCol, statsCols = statsColsOf(spark, path)),
           (None, Map.empty[String, Long]))
         else (Map.empty[String, String],

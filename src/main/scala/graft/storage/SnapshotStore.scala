@@ -269,14 +269,15 @@ object SnapshotStore {
       // per-file bounds stay tight (tighter, even — each file is a range
       // slice), and AQE's partition coalescing keeps tiny batches at few
       // tasks while big ones spread (scale-adaptive, not a local tune).
-      // z-order needs a dim-bounds agg BEFORE the write — run it over a
-      // PERSISTED copy so an expensive input lineage is computed once
-      // (not agg + write = twice) and a non-deterministic input cannot
-      // hand the agg different rows than the write lays out (clamped by
-      // cellOf, so layout-only — but one scan is also simply cheaper).
-      // Non-z-order writes pay nothing.
+      // a range-partitioned write reads its input twice: the range
+      // partitioner samples it in a job of its own (z-order adds a
+      // dim-bounds agg before that), then the shuffle consumes it. Both
+      // read ONE persisted copy, so an expensive input lineage is
+      // computed once, a non-deterministic input cannot hand the sampler
+      // different rows than the write lays out, and an observation in
+      // the input counts each row once. Unsorted writes pay nothing.
       val cached: Option[DataFrame] =
-        if (declZ && effSort.size == 2)
+        if (effSort.nonEmpty)
           Some(withKey.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         else None

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
@@ -21,6 +22,10 @@ object PlanGlue {
   /** The analyzed logical plan of a DataFrame (for embedding as a child of
     * a custom operator). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** A Catalyst expression as a `Column` (the constructor is
+    * `private[sql]` since the 4.x Column/ColumnNode split). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** Idempotently appends a planner strategy to the session's extra
     * strategies (the imperative twin of `injectPlannerStrategy`). */

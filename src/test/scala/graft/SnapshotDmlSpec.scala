@@ -116,14 +116,16 @@ class SnapshotDmlSpec extends SparkSpec {
       "SET k = v, v = k must swap, not chain")
   }
 
-  test("update refusals are loud: partition column, unknown column, " +
-    "duplicate assignment; update never evolves the schema (RHS casts " +
-    "to the column's existing type)") {
+  test("update refusals are loud: unknown column, duplicate " +
+    "assignment; assigning the partition column moves the rows; update " +
+    "never evolves the schema (RHS casts to the column's existing type)") {
     val dir = newDir("refuse"); quartStore(dir)
-    val e1 = intercept[IllegalArgumentException](
-      SnapshotStore.updateWhere(spark, dir, Seq("p" -> lit("px")),
-        lit(true)))
-    assert(e1.getMessage.contains("partition column"))
+    SnapshotStore.updateWhere(spark, dir, Seq("p" -> lit("px")),
+      col("k") >= 200L && col("p") === "p0")
+    assert(SnapshotStore.readPartitions(spark, dir, Seq("px"))
+      .select("k").as[Long].collect().sorted.toSeq ==
+      (200L until 210L by 2L), "the matched rows move to 'px'")
+    assert(SnapshotStore.read(spark, dir).count() == 30)
     val e2 = intercept[IllegalArgumentException](
       SnapshotStore.updateWhere(spark, dir, Seq("nope" -> lit(1)),
         lit(true)))
@@ -339,12 +341,13 @@ class SnapshotDmlSpec extends SparkSpec {
         Dml.Update(Seq("v" -> lit(-5.0))), col("k") === 506L,
         Dml.Branch("cand")))
     assert(e.getMessage.contains("v_nonneg"))
-    // assigning the partition column is refused on branches too
-    val e2 = intercept[IllegalArgumentException](
-      SnapshotStore.dml(spark, dir,
-        Dml.Update(Seq("p" -> lit("p9"))), col("k") === 506L,
-        Dml.Branch("cand")))
-    assert(e2.getMessage.contains("partition column"))
+    // assigning the partition column moves rows on branches too
+    SnapshotStore.dml(spark, dir,
+      Dml.Update(Seq("p" -> lit("p9"))), col("k") === 506L,
+      Dml.Branch("cand"))
+    assert(SnapshotStore.read(spark, dir, target = Dml.Branch("cand"))
+      .filter(col("p") === "p9").select("k").as[Long].collect().toSeq ==
+      Seq(506L))
     // publish lands the FIXED corpus
     val v = SnapshotStore.publishBranch(spark, dir, "cand")
     val main = SnapshotStore.read(spark, dir)

@@ -823,4 +823,43 @@ class SnapshotStatsSpec extends SparkSpec {
     assert(gens(g2.inputFiles).size == 1,
       "reserved-char bounds must parse back and prune the zz gen")
   }
+
+  test("a sorted store's range-partitioned writes compute their input " +
+    "once: append and a copy-on-write update evaluate a counting UDF " +
+    "once per row, compaction reads each stored row once") {
+    val dir = newDir("sortedonce")
+    def rows(lo: Long, n: Int) =
+      (0 until n).map(i => (lo + i, s"p${i % 2}", (lo + i) * 1.0))
+        .toDF("k", "p", "v")
+    SnapshotStore.write(rows(0L, 40), dir, "p", statsCols = Seq("k"))
+    SnapshotStore.declareSortCols(spark, dir, Seq("k"))
+    val calls = spark.sparkContext.longAccumulator("udf-calls")
+    val tick = udf { (v: Double) => calls.add(1L); v }
+    def evals(body: => Unit): Long = { calls.reset(); body; calls.sum }
+    // a generated input: over a local Seq the optimizer would evaluate
+    // the UDF once on the driver, whatever the plan does
+    val appended = spark.range(100L, 120L).select(col("id").as("k"),
+      concat(lit("p"), (col("id") % 2).cast("string")).as("p"),
+      tick(col("id").cast("double")).as("v"))
+    assert(evals(SnapshotStore.append(appended, dir, "p")) == 20L)
+    assert(evals(SnapshotStore.updateWhere(spark, dir,
+      Seq("v" -> tick(col("v"))), col("k") < 10L)) == 10L)
+    // compaction's input is the store's own files: count the rows its
+    // file scans read (a cached re-read counts one record per batch)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(SnapshotStore.compactPartitions(spark, dir, "p") == 2)
+      jobsLaunchedBy(()) // drains the listener bus
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read.get >= 60L && read.get < 2 * 60L,
+      s"compaction read ${read.get} records for 60 stored rows")
+    assert(SnapshotStore.read(spark, dir).count() == 60L)
+  }
 }
