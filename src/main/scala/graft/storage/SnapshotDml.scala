@@ -3,7 +3,8 @@ package graft.storage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, lit, not,
+  when}
 
 /** The [[SnapshotStore]]'s predicate-DML layer — `DELETE ... WHERE` and
   * `UPDATE ... SET ... WHERE` as store verbs (the Delta/Iceberg
@@ -70,14 +71,16 @@ private[graft] object SnapshotDml {
     * tri-state verdict with needle (bloom) demotion, then the r16
     * per-FILE split of ambiguous multi-file slices. `metadataDrop` is
     * delete's AllMatch-drops-as-metadata rule (update rewrites those
-    * rows instead — their content changes).
+    * rows instead — their content changes). `ambByPart` holds every
+    * path `rewrite` reads, by partition; `dropsIn` the partitions that
+    * lost a field or a file as metadata.
     */
   private case class DmlPlan(removed: Set[String],
       keptByPart: Map[String, Seq[String]],
       fileKept: Map[String, Vector[String]],
       rewrite: Seq[String],
       ambByPart: Map[String, Seq[String]],
-      origCount: Map[String, Int],
+      dropsIn: Set[String],
       dropped: Int, kept: Int, keptFiles: Int, droppedFiles: Int) {
     def touched: Boolean = removed.nonEmpty
     /** The copy-on-write rebuild: the touched partitions' surviving
@@ -118,7 +121,7 @@ private[graft] object SnapshotDml {
     var kept = 0
     val removed = Set.newBuilder[String]
     val keptByPart = Map.newBuilder[String, Seq[String]]
-    val origCount = Map.newBuilder[String, Int]
+    val dropsIn = scala.collection.mutable.Set.empty[String]
     val ambiguous = Seq.newBuilder[(String, String)]
     entries.foreach { case (p, fields) =>
       val vs = fields.map { f =>
@@ -137,7 +140,7 @@ private[graft] object SnapshotDml {
       if (vs.exists(_._2 != NoMatch)) {
         removed += p
         keptByPart += p -> vs.collect { case (f, NoMatch) => f }
-        origCount += p -> fields.size
+        if (vs.exists(_._2 == AllMatch)) dropsIn += p
         ambiguous ++= vs.collect { case (f, MightMatch) => (p, f) }
         dropped += vs.count(_._2 == AllMatch)
         kept += vs.count(_._2 == NoMatch)
@@ -174,15 +177,17 @@ private[graft] object SnapshotDml {
               keptFiles += 1
               fileKept(p) = fileKept.getOrElse(p, Vector.empty) :+
                 blob.map(b => s"$fp$StatsSep$b").getOrElse(fp)
-            case AllMatch if metadataDrop => droppedFiles += 1
-            case _ => rewritePaths += fp
+            case AllMatch if metadataDrop =>
+              droppedFiles += 1
+              dropsIn += p
+            case _ => rewriteWhole(p, fp)
           }
         }
       }
     }
     DmlPlan(removed.result(), keptByPart.result(), fileKept.toMap,
       rewritePaths.result().distinct.sorted,
-      ambByPart.view.mapValues(_.toSeq).toMap, origCount.result(),
+      ambByPart.view.mapValues(_.toSeq).toMap, dropsIn.toSet,
       dropped, kept, keptFiles, droppedFiles)
   }
 
@@ -208,7 +213,9 @@ private[graft] object SnapshotDml {
     * Modes:
     *  - [[Dml.CoW]]: the ambiguous slices — split to FILE grain first —
     *    are read, filtered or updated, and rewritten as one fresh gen
-    *    per partition.
+    *    per partition. A partition whose rewritten rows held no match
+    *    (and that lost nothing as metadata) keeps its manifest fields
+    *    verbatim; the write observes the matching files on the way.
     *  - [[Dml.MoR]] (deletion vectors — the Delta/Iceberg DV concept
     *    re-derived on the store's own manifest): the ambiguous slices are
     *    read ONCE (through any existing DVs), the matching rows'
@@ -242,7 +249,7 @@ private[graft] object SnapshotDml {
     *    the new tip (the branch-append discipline).
     *
     * Nothing changed — the predicate provably touches nothing, an
-    * update's file split proved every ambiguous file NoMatch, or a MoR
+    * update's file split proved every ambiguous file NoMatch, or the
     * scan found no matching row and nothing dropped as metadata —
     * commits NO version and returns the prior version or tip.
     * `beforeCommit` is a test seam: a concurrent committer lands there.
@@ -290,25 +297,22 @@ private[graft] object SnapshotDml {
     def writeRows(df: DataFrame): Map[String, String] =
       writeGen(toPhysical(df, st.renames), path, physPartCol,
         statsCols = statsCols)
-    // apply: (DV sidecar, per-file DV counts, new gen entries)
-    val (dvRel, counts, newEntries) = mode match {
-      case _ if plan.rewrite.isEmpty =>
-        (None, Map.empty[String, Long], Map.empty[String, String])
+    // apply: (DV sidecar, per-file DV counts, new gen entries, touched
+    // partitions the rewrite left unchanged)
+    val (dvRel, counts, newEntries, quiet) = mode match {
+      case _ if plan.rewrite.isEmpty => (None, Map.empty[String, Long],
+        Map.empty[String, String], Set.empty[String])
       case Dml.CoW =>
-        val rows = st.read(plan.rewrite)
-        (None, Map.empty[String, Long], writeRows(op match {
-          case Dml.Delete => rows.filter(not(hit))
-          case Dml.Update(assignments) =>
-            applyAssignments(rows, assignments, pred, st.logicalSchema,
-              spark, path, verb)
-        }))
+        val (entries, quiet) = rewrite(spark, path, st, plan, op, hit,
+          physPartCol, writeRows, verb)
+        (None, Map.empty[String, Long], entries, quiet)
       case Dml.MoR =>
         val hits = applyRenames(readFieldsTagged(spark, path, plan.rewrite,
           Some(st.physSchema)), st.renames).filter(hit)
         op match {
           case Dml.Delete =>
             val (rel, n) = writeDv(spark, path, hits)
-            (rel, n, Map.empty[String, String])
+            (rel, n, Map.empty[String, String], Set.empty[String])
           case Dml.Update(assignments) =>
             hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
@@ -324,20 +328,23 @@ private[graft] object SnapshotDml {
               SnapshotConstraints.enforce(spark, path, images, verb)
               val (rel, n) = writeDv(spark, path, hits)
               (rel, n,
-                if (n.isEmpty) Map.empty[String, String] else writeRows(images))
+                if (n.isEmpty) Map.empty[String, String] else writeRows(images),
+                Set.empty[String])
             } finally hits.unpersist()
         }
     }
-    if (mode == Dml.MoR && plan.dropped == 0 && counts.isEmpty)
-      return DmlReceipt(st.version, 0, 0, plan.kept) // scan refuted the stats
-    // CoW rebuilds every touched partition around its rewrite; MoR only
-    // the partitions something happened to ([[annotate]])
+    // CoW rebuilds every touched partition its rewrite changed around
+    // that rewrite; MoR only the partitions something happened to
+    // ([[annotate]])
     val (removed, rebuilt) = mode match {
-      case Dml.CoW => (plan.removed, plan.rebuild)
+      case Dml.CoW => (plan.removed -- quiet, plan.rebuild -- quiet)
       case Dml.MoR =>
         val annotated = annotate(plan, dvRel, counts)
         (annotated.keySet, annotated)
     }
+    if (removed.isEmpty) // the scan refuted the stats: nothing matched
+      return DmlReceipt(st.version, 0, 0, plan.kept,
+        keptFiles = plan.keptFiles)
     beforeCommit()
     // foldNewEntries: a new gen's key may have MIGRATED eras under an
     // evolved partition spec — merge it into any untouched entry at that
@@ -347,9 +354,81 @@ private[graft] object SnapshotDml {
     st.commit(removedF, addedF, dvRel.toSeq ++ genDirsOf(newEntries),
       st.physSchema, if (isDelete) "delete" else "update")
     DmlReceipt(st.version + 1, plan.dropped,
-      if (mode == Dml.CoW) plan.rewrite.size else newEntries.size,
+      if (mode == Dml.CoW)
+        plan.rewrite.size -
+          quiet.toSeq.map(plan.ambByPart.getOrElse(_, Nil).size).sum
+      else newEntries.size,
       plan.kept, plan.keptFiles, plan.droppedFiles,
       dvDirCount(counts), counts.values.sum)
+  }
+
+  /** The copy-on-write apply: `plan.rewrite` read with each row's
+    * sidecar key, `op` applied, and ONE write of the result, which
+    * observes the files holding a matching row. Returns the new gen's
+    * entries and the QUIET partitions: touched, yet no rewritten row
+    * matched and nothing left as metadata. A quiet partition changed
+    * nothing, so its entry stays byte-identical and its freshly written
+    * slice is deleted — what [[annotate]] gives a merge-on-read scan
+    * that comes back clean. Decided only where every row lands back
+    * under its own key (no assignment moves rows, one spec era) and the
+    * observation ran (the optimizer prunes the observed node of an
+    * input it proves empty).
+    */
+  private def rewrite(spark: SparkSession, path: String, st: Resolved,
+      plan: DmlPlan, op: Dml.Op, hit: Column, physPartCol: String,
+      writeRows: DataFrame => Map[String, String], verb: String)
+      : (Map[String, String], Set[String]) = {
+    val read = applyRenames(readFieldsTagged(spark, path, plan.rewrite,
+      Some(st.physSchema)), st.renames).drop("_gi")
+    val hitCol = Iterator.from(0).map(i => s"_graft_hit$i")
+      .find(n => !read.columns.contains(n)).get
+    // the hit flag is computed BELOW the observation: a delete's filter
+    // above it could otherwise fold to a literal and prune the node
+    val flagged = read.withColumn(hitCol, hit)
+    val rows = op match {
+      case Dml.Delete => flagged
+      case Dml.Update(assignments) => applyAssignments(flagged, hitCol,
+        assignments, st.logicalSchema, spark, path, verb)
+    }
+    val observation = org.apache.spark.sql.Observation()
+    val observed = rows.observe(observation,
+      collect_set(when(col(hitCol), col("_gk"))).as("hits"))
+    val entries = writeRows((op match {
+      case Dml.Delete => observed.filter(not(col(hitCol)))
+      case _: Dml.Update => observed
+    }).drop(hitCol, "_gk"))
+    val moves = op match {
+      case Dml.Update(assignments) =>
+        val partComps = splitPartCols(logicalPartCol(physPartCol, st.renames))
+        assignments.exists { case (c, _) => partComps.contains(c) }
+      case Dml.Delete => false
+    }
+    val hits = observation.get.get("hits")
+      .filter(_ => !moves && allPartSpecs(spark, path).size <= 1)
+      .map(_.asInstanceOf[scala.collection.Seq[String]]
+        .map(k => fileKeyOf(k) -> 1L).toMap)
+    val quiet = hits.fold(Set.empty[String])(h => plan.removed.filter(p =>
+      !plan.dropsIn(p) &&
+        plan.ambByPart.getOrElse(p, Nil).forall(dvCountFor(h, _) == 0L)))
+    if (quiet.nonEmpty) {
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+        spark.sparkContext.hadoopConfiguration)
+      val discard =
+        if ((entries.keySet -- quiet).isEmpty) genDirsOf(entries)
+        else entries.view.filterKeys(quiet).values.map(dirOf).toSeq
+      discard.foreach(d =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
+    }
+    (entries -- quiet, quiet)
+  }
+
+  /** A sidecar key (`<gen>/_p=<frag>/<file>`, the frag URI-encoded as
+    * `_metadata.file_path` spells it) as the manifest's FILE field text.
+    */
+  private def fileKeyOf(gk: String): String = {
+    val segs = gk.split("/", 3)
+    require(segs.length == 3, s"malformed sidecar key '$gk'")
+    s"data/${segs(0)}/${SnapshotStore.pctDecode(segs(1))}/${segs(2)}"
   }
 
   /** Writes `hits`' (file-key, row-index) pairs as ONE deletion-vector
@@ -381,12 +460,7 @@ private[graft] object SnapshotDml {
     // mis-key hits in pre-evolution slices).
     val counts = spark.read.schema(dv.schema).parquet(s"$path/$rel")
       .groupBy(col("_gk")).count()
-      .collect().map { r =>
-        val segs = r.getString(0).split("/", 3)
-        require(segs.length == 3, s"malformed sidecar key '${r.getString(0)}'")
-        s"data/${segs(0)}/${SnapshotStore.pctDecode(segs(1))}/${segs(2)}" ->
-          r.getLong(1)
-      }.toMap
+      .collect().map(r => fileKeyOf(r.getString(0)) -> r.getLong(1)).toMap
     if (counts.isEmpty) {
       org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
         spark.sparkContext.hadoopConfiguration)
@@ -439,11 +513,7 @@ private[graft] object SnapshotDml {
       val kept = plan.keptByPart.getOrElse(p, Nil)
       val amb = plan.ambByPart.getOrElse(p, Nil)
       val hitHere = amb.exists(f => countFor(f) > 0L)
-      // an AllMatch metadata drop shows as "the surviving fields don't
-      // add back up to the original entry"
-      val droppedHere =
-        plan.origCount.getOrElse(p, 0) > kept.size + amb.size
-      if (!hitHere && !droppedHere) None
+      if (!hitHere && !plan.dropsIn(p)) None
       else Some(p -> (kept ++ amb.map { f =>
         countFor(f) match {
           case n if n > 0L =>
@@ -468,34 +538,32 @@ private[graft] object SnapshotDml {
   }
 
   /** One `select` applying all assignments against the PRE-update row
-    * (`SET a = b, b = a` swaps). The hit flag is MATERIALIZED from the
-    * pre-update row before any assignment lands: re-filtering the
-    * post-assignment frame with the user's predicate would re-resolve
-    * it against the assigned values, and a self-referencing update
-    * (SET status='x' WHERE status='y') would drop its own rows out of
-    * the constraint-enforcement set. CHECK constraints gate the rows
-    * the assignments actually modify (the copied-through remainder is
-    * existing, already-conforming data).
+    * (`SET a = b, b = a` swaps) where `base`'s `hitCol` holds. The hit
+    * flag is MATERIALIZED from the pre-update row before any assignment
+    * lands: re-filtering the post-assignment frame with the user's
+    * predicate would re-resolve it against the assigned values, and a
+    * self-referencing update (SET status='x' WHERE status='y') would
+    * drop its own rows out of the constraint-enforcement set. CHECK
+    * constraints gate the rows the assignments actually modify (the
+    * copied-through remainder is existing, already-conforming data).
+    * The result keeps `base`'s columns, `hitCol` included.
     */
-  private def applyAssignments(base: DataFrame,
-      assignments: Seq[(String, Column)], pred: Column,
+  private def applyAssignments(base: DataFrame, hitCol: String,
+      assignments: Seq[(String, Column)],
       logicalSchema: StructType,
       spark: SparkSession, path: String, verb: String): DataFrame = {
-    val hit = coalesce(pred, lit(false))
     val assigned = assignments.toMap
-    val hitCol = Iterator.from(0).map(i => s"_graft_hit$i")
-      .find(n => !base.columns.contains(n)).get
-    val updated = base.withColumn(hitCol, hit).select(
-      (base.columns.map { c =>
-        assigned.get(c) match {
-          case Some(e) =>
-            when(col(hitCol), e.cast(logicalSchema(c).dataType))
-              .otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      } :+ col(hitCol)).toSeq: _*)
+    val updated = base.select(base.columns.toSeq.map { c =>
+      assigned.get(c) match {
+        case Some(e) =>
+          when(col(hitCol), e.cast(logicalSchema(c).dataType))
+            .otherwise(col(c)).as(c)
+        case None => col(c)
+      }
+    }: _*)
     SnapshotConstraints.enforce(spark, path,
-      updated.filter(col(hitCol)).drop(hitCol), verb)
-    updated.drop(hitCol)
+      updated.filter(col(hitCol)).select(logicalSchema.fieldNames.toSeq
+        .map(col): _*), verb)
+    updated
   }
 }

@@ -36,6 +36,15 @@ object PlanGlue {
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
 
+  /** Rebuilds every cached plan that reads the table `name` (catalog,
+    * namespace, table), as Spark's own v2 write commands do once they
+    * commit. By name: a catalog that loads a fresh table object per
+    * statement never matches the cached relation by plan. */
+  def recache(spark: SparkSession, name: Seq[String]): Unit = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    cs.sharedState.cacheManager.recacheTableOrView(cs, name)
+  }
+
   /** Idempotently appends an optimizer rule (imperative twin of
     * `injectOptimizerRule`; runs in the post-hoc user batch). */
   def addOptimization(spark: SparkSession,

@@ -234,6 +234,8 @@ class GraftCatalogSpec extends SparkSpec {
     val postDel = CatalogBridge.priorFields(spark, path, v4,
       Seq("a", "b", "c"))
     assert(!postDel.contains("b"), s"emptied group must drop: $postDel")
+    assert(postDel("a") == postMove("a") && postDel("c") == postMove("c"),
+      "untouched partitions rewritten by the delete")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db7.t").head().getLong(0)
       == 5L)
 
@@ -278,6 +280,8 @@ class GraftCatalogSpec extends SparkSpec {
     val v2 = SnapshotStore.headVersion(spark, path).get
     val after = CatalogBridge.priorFields(spark, path, v2,
       Seq("a", nullKey))
+    assert(after("a") == before("a"),
+      "the non-null partition holds no matches and must stay verbatim")
     assert(after(nullKey) != before(nullKey),
       "the null-keyed partition holds the match and must be rewritten")
     val rows = spark.sql(s"SELECT k, p, v FROM $cat.db8.t ORDER BY k")
@@ -285,8 +289,13 @@ class GraftCatalogSpec extends SparkSpec {
         if (r.isNullAt(1)) null else r.getString(1), r.getDouble(2))).toSeq
     assert(rows == Seq((1L, "a", 1.0), (2L, null, 2.0), (3L, null, 30.0)),
       s"null-partition rows must survive the scoped rewrite, got $rows")
-    // and the inverse: matches only in 'a'
+    // and the inverse: matches only in 'a' — the null group stays put
     spark.sql(s"UPDATE $cat.db8.t SET v = v + 5 WHERE k % 2 = 1 AND k < 2")
+    val v3 = SnapshotStore.headVersion(spark, path).get
+    val post = CatalogBridge.priorFields(spark, path, v3,
+      Seq("a", nullKey))
+    assert(post(nullKey) == after(nullKey),
+      "the null-keyed partition holds no matches and must stay verbatim")
     assert(spark.sql(s"SELECT sum(v) FROM $cat.db8.t").head().getDouble(0)
       == 38.0)
   }
@@ -447,14 +456,38 @@ class GraftCatalogSpec extends SparkSpec {
         "more than one WHEN NOT MATCHED clause",
       s"""$into shape_nop s ON t.k = s.k
         WHEN MATCHED THEN UPDATE SET v = s.v""" ->
-        "without the partition column",
+        "needs the source to carry the partition column",
       s"""$into shape_src s ON t.k = s.k
         WHEN MATCHED THEN UPDATE SET p = 'b'""" ->
-        "partition-column SET inside MERGE")) {
+        "cannot assign the partition column 'p'")) {
       val e = intercept[org.apache.spark.sql.AnalysisException](
         spark.sql(sql))
       assert(e.getMessage.contains(shape), e.getMessage)
     }
     assert(SnapshotStore.headVersion(spark, path).contains(v1))
+  }
+
+  test("a cached table sees the rows a catalog UPDATE, DELETE or MERGE " +
+    "commits") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db14")
+    spark.sql(s"""CREATE TABLE $cat.db14.t (k BIGINT, p STRING, v DOUBLE)
+      PARTITIONED BY (p)""")
+    spark.sql(s"INSERT INTO $cat.db14.t VALUES (1, 'a', 1.0), (2, 'b', 2.0)")
+    spark.sql(s"CACHE TABLE $cat.db14.t")
+    try {
+      def rows = spark.sql(s"SELECT k, v FROM $cat.db14.t ORDER BY k")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(rows == Seq((1L, 1.0), (2L, 2.0)))
+      spark.sql(s"UPDATE $cat.db14.t SET v = v * 10 WHERE k = 1")
+      assert(rows == Seq((1L, 10.0), (2L, 2.0)), s"after UPDATE: $rows")
+      spark.sql(s"DELETE FROM $cat.db14.t WHERE k = 2")
+      assert(rows == Seq((1L, 10.0)), s"after DELETE: $rows")
+      Seq((3L, "a", 3.0)).toDF("k", "p", "v")
+        .createOrReplaceTempView("cache_src")
+      spark.sql(s"""MERGE INTO $cat.db14.t t USING cache_src s ON t.k = s.k
+        WHEN NOT MATCHED THEN INSERT *""")
+      assert(rows == Seq((1L, 10.0), (3L, 3.0)), s"after MERGE: $rows")
+      assert(spark.catalog.isCached(s"$cat.db14.t"))
+    } finally spark.sql(s"UNCACHE TABLE IF EXISTS $cat.db14.t")
   }
 }

@@ -382,4 +382,36 @@ class SnapshotDmlSpec extends SparkSpec {
       col("p") === "a")
     assert(ca == 1 && sa == 0, s"got ($ca, $sa)")
   }
+
+  test("copy-on-write: a partition whose scan finds no match keeps its " +
+    "manifest fields verbatim; a statement that matches nothing commits " +
+    "nothing; rows an update moves into such a partition still land") {
+    import graft.storage.CatalogBridge
+    val dir = newDir("quiet")
+    // no stats: every non-partition predicate is ambiguous everywhere
+    SnapshotStore.write((0L until 6L).map(k => (k, s"p${k % 2}", k * 1.0))
+      .toDF("k", "p", "v"), dir, "p")
+    def fields(v: Int) = CatalogBridge.priorFields(spark, dir, v,
+      Seq("p0", "p1"))
+    def gens = new java.io.File(s"$dir/data").listFiles()
+      .map(_.getName).filter(_.startsWith("gen-")).toSet
+    val before = fields(1)
+    val r = SnapshotStore.dml(spark, dir, Dml.Delete, col("k") === 2L)
+    assert(r.version == 2 && r.rewrittenDirs == 1, s"receipt $r")
+    val after = fields(2)
+    assert(after("p1") == before("p1") && after("p0") != before("p0"),
+      s"$before vs $after")
+    val gensNow = gens
+    val none = SnapshotStore.dml(spark, dir, Dml.Update(Seq("v" -> lit(0.0))),
+      col("k") === 99L)
+    assert(none.version == 2 && SnapshotStore.headVersion(spark, dir)
+      .contains(2), s"nothing matched, nothing commits: $none")
+    assert(gens == gensNow, "the unreferenced rewrite must be deleted")
+    // k = 4 moves from p0 to p1, whose own scan finds no match
+    SnapshotStore.updateWhere(spark, dir, Seq("p" -> lit("p1")),
+      col("k") === 4L)
+    assert(SnapshotStore.read(spark, dir).filter(col("p") === "p1")
+      .select("k").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L, 5L))
+    assert(SnapshotStore.read(spark, dir).count() == 5L)
+  }
 }

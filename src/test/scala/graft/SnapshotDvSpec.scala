@@ -445,4 +445,30 @@ class SnapshotDvSpec extends SparkSpec {
       assert(SnapshotStore.read(spark, dir, Some(2)).count() == 99)
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
+
+  test("MoR update that assigns the partition column moves the rows: " +
+    "read once, from the new partition; the old positions are " +
+    "deletion-vectored; an existing destination keeps its fields") {
+    import graft.storage.CatalogBridge
+    val dir = newDir("move"); quartStore(dir)
+    SnapshotStore.append(Seq((300L, "p2", 300.0)).toDF("k", "p", "v"),
+      dir, "p")
+    val v0 = SnapshotStore.headVersion(spark, dir).get
+    val prior = CatalogBridge.priorFields(spark, dir, v0, Seq("p2"))("p2")
+    // k = 100 and 102 live in p0
+    val r = SnapshotStore.dml(spark, dir, Dml.Update(Seq("p" -> lit("p2"))),
+      col("k") === 100L || col("k") === 102L, mode = Dml.MoR)
+    assert(r.version == v0 + 1 && r.dvRows == 2L, s"receipt $r")
+    val all = SnapshotStore.read(spark, dir)
+    assert(all.count() == 31L)
+    assert(all.groupBy("k").count().filter(col("count") > 1).isEmpty,
+      "a moved row must be read once")
+    assert(all.filter(col("p") === "p2").select("k").as[Long].collect()
+      .sorted.toSeq == Seq(100L, 102L, 300L))
+    assert(all.filter(col("p") === "p0" && col("k").isin(100L, 102L))
+      .isEmpty, "the old positions must be deletion-vectored")
+    val moved = CatalogBridge.priorFields(spark, dir, v0 + 1, Seq("p2"))("p2")
+    assert(moved.startsWith(prior) && moved.size == prior.size + 1,
+      s"the destination's prior fields must stay: $prior vs $moved")
+  }
 }
